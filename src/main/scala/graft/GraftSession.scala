@@ -32,6 +32,10 @@ object GraftSession {
       .config("spark.sql.parquet.fieldId.write.enabled", "true")
       .config("spark.sql.parquet.fieldId.read.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // fork-free local filesystem (graft.util.LocalFs): stock Hadoop
+      // spawns chmod/readlink per file create and per streaming WAL
+      // rename when libhadoop is absent
+      .config(graft.util.LocalFs.sparkConfs)
 
   def local(cpus: String): SparkSession = {
     val s = builder(s"local[$cpus]", cpus.toInt).getOrCreate()

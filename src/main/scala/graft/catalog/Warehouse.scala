@@ -1151,8 +1151,10 @@ final class Warehouse(spark: SparkSession, val root: String,
     // carried meta otherwise flows forward (identity high-waters must
     // NEVER roll back — ids would be reused), but a ledger claiming
     // files whose rows were just rolled away would make the next
-    // copyInto silently skip them. Ledger files are never deleted, so
-    // the restored pointer still resolves.
+    // copyInto silently skip them. Ledger segments survive only while
+    // reachable from a kept version ([[vacuum]]'s sweep); `version` is
+    // still readable here (snapshotAt refuses vacuumed versions), so
+    // its pointer's chain is still on disk and the restore resolves.
     val ledgerAt = commitMeta(ref, version)
       .getOrElse(Warehouse.CopyLedgerMeta, "")
     // the restored version's deletion vectors restore WITH it (its
@@ -2191,14 +2193,19 @@ final class Warehouse(spark: SparkSession, val root: String,
     * middle gear — a re-runnable batch load where a re-run is a no-op
     * and a new crawl shard loads exactly its own rows.
     *
-    * Ledger: `_graft_ingest/ledger-<nanos>.txt` under the table dir,
-    * one `size TAB mtime TAB path` line per loaded file, written
+    * Ledger: `_graft_ingest/ledger-<nanos>.txt` segments under the
+    * table dir, one `size TAB mtime TAB path` line per loaded file.
+    * A segment holds one copy's batch plus a `#parent` header naming
+    * the previous segment; every [[Warehouse.copyLedgerChainCap]]
+    * copies it is written in full instead. Each segment is written
     * whole (tmp + rename) BEFORE the data commit and pointed at by
     * that commit's carried meta ([[Warehouse.CopyLedgerMeta]]) — a
-    * crash in between leaves an orphan file no meta references
-    * (never consulted; superseded ledgers are kept so RESTORE to an
-    * old version also restores its ledger pointer, and the re-runs
-    * after a rollback re-load exactly the rolled-back files).
+    * crash in between leaves an orphan segment no meta references
+    * (never consulted). Segments survive only while reachable from a
+    * kept version's pointer: [[vacuum]] deletes the rest once they are
+    * older than its grace window. So RESTORE to a still-readable
+    * version also restores its ledger pointer, and the re-runs after
+    * a rollback re-load exactly the rolled-back files.
     *
     * An already-loaded path whose (size, mtime) CHANGED refuses
     * loudly — re-loading would double its rows, skipping would
@@ -5489,15 +5496,15 @@ final class Warehouse(spark: SparkSession, val root: String,
   }
 
   /** Point-lookup read: [[splitFilesByValue]]'s kept files (falls back
-    * to a full read without a manifest). The caller's `column = value`
-    * filter still applies — bloom hits are "maybe".
+    * to a full read without a manifest), read like [[readFiles]] —
+    * committed schema, live deletion vectors applied. The caller's
+    * `column = value` filter still applies — bloom hits are "maybe".
     */
   def readPrunedEq(ref: TableRef, column: String, value: Any): DataFrame =
     splitFilesByValue(ref, column, value) match {
       case None => read(ref)
       case Some((kept, _)) if kept.isEmpty => read(ref).limit(0)
-      case Some((kept, _)) =>
-        spark.read.option("basePath", path(ref)).parquet(kept: _*)
+      case Some((kept, _)) => readFiles(ref, kept)
     }
 
   /** Range-pruned read: drop files whose [min, max] interval for
@@ -5506,7 +5513,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     * column) or absent from the manifest are kept, so the result only
     * ever SHRINKS the file list; callers still apply their exact
     * row-level filter on top. Falls back to a full read when the table
-    * has no manifest for `column`.
+    * has no manifest for `column`. Kept files read like [[readFiles]]:
+    * in the committed schema, with live deletion vectors applied.
     *
     * At 100 TB this is the difference between touching every footer and
     * opening only the files a point/range lookup can live in — provided
@@ -5518,8 +5526,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     splitFilesByRange(ref, column, lo, hi) match {
       case None => read(ref)
       case Some((kept, _)) if kept.isEmpty => read(ref).limit(0)
-      case Some((kept, _)) =>
-        spark.read.option("basePath", path(ref)).parquet(kept: _*)
+      case Some((kept, _)) => readFiles(ref, kept)
     }
 
   /** Stale-plan guard shared by [[replaceDataFiles]] and

@@ -33,6 +33,13 @@ final case class IngestSpec(
   def yamlPath: String = s"$metadataDir/${ref.table}/${ref.table}.yml"
 }
 
+object Ingestor {
+  /** Raw-zone formats [[Ingestor.load]] scans; any other format runs
+    * the SQL transform over upstream tables.
+    */
+  val FileFormats: Set[String] = Set("json", "parquet", "csv", "orc", "xml")
+}
+
 /** Full-overwrite ingestion (SURVEY.md §3.1): schema-enforced raw scan
   * (S1/S2) + `loaded_at` audit column + temp view (S6), or SQL transform
   * for non-file formats (S7), then K1 overwrite save. Unlike the
@@ -60,7 +67,7 @@ class Ingestor(spark: SparkSession, warehouse: Warehouse, val spec: IngestSpec) 
     * other formats run the transform against upstream tables.
     */
   def load(): DataFrame = spec.inputFormat match {
-    case "json" | "parquet" | "csv" | "orc" | "xml" =>
+    case f if Ingestor.FileFormats(f) =>
       val reader = spark.read.format(spec.inputFormat).schema(meta.schema)
       // CSV/XML raw zones follow the same bronze convention as JSON —
       // all columns declared string, typing deferred to the transform —
@@ -110,18 +117,26 @@ class IngestorCDC(spark: SparkSession, warehouse: Warehouse, spec: IngestSpec)
 
   def upsert(df: DataFrame): Unit = {
     df.createOrReplaceTempView(s"view_${spec.ref.table}")
+    merge(Transform.sql(spark, openQuery(), upstreamViews()))
+  }
+
+  private def merge(batch: DataFrame): Unit = {
     val m = meta
-    val transformed = Transform.sql(spark, openQuery(), upstreamViews())
     new MergeTable(spark, warehouse, spec.ref, Seq(m.idField), Some(m.tsField))
-      .upsert(transformed)
+      .upsert(batch)
   }
 
   /** Rows here = BATCH rows entering the merge (the merge's first
     * action — the prune-bounds aggregate — completes the observation).
+    * The observed frame must be one the merge executes: a file batch
+    * feeds the transform through its temp view, while a table-sourced
+    * spec's `load()` already IS the transform over the upstream tables
+    * ([[upsert]] would plan it anew and never run the observed frame).
     */
   override def run(): Long = {
     val obs = org.apache.spark.sql.Observation()
-    upsert(load().observe(obs, count(lit(1)).as("rows")))
+    val batch = load().observe(obs, count(lit(1)).as("rows"))
+    if (Ingestor.FileFormats(spec.inputFormat)) upsert(batch) else merge(batch)
     obs.get("rows").asInstanceOf[Long]
   }
 }

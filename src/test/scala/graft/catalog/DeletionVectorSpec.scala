@@ -508,4 +508,62 @@ class DeletionVectorSpec extends SparkSpec {
     assert(q.select("k").as[Long].collect().toSet ===
       (51L to 100L).filterNot(_ % 10 == 3).toSet)
   }
+
+  test("pruned reads apply deletion vectors and the committed schema") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-dv-pruned"))
+    val ref = TableRef("silver", "dv", "pruned")
+    // range-clustered: per-file k intervals are disjoint, so [30, 50]
+    // keeps a strict subset of the files
+    wh.overwrite(ref, (1L to 100L).map(i => (i, s"name$i")).toDF("k", "name")
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      statsColumns = Seq("k"))
+    wh.setDeletionVectors(ref, enabled = true)
+    assert(wh.deleteWhere(ref, col("k") === 42L) === 1L)
+    assert(wh.snapshot(ref).get.dvMap.nonEmpty)
+    wh.addColumns(ref, Seq(org.apache.spark.sql.types.StructField(
+      "note", org.apache.spark.sql.types.StringType)))
+    val (kept, _) = wh.splitFilesByRange(ref, "k", 30L, 50L).get
+    assert(kept.size < wh.dataFiles(ref).size, "the range must prune files")
+
+    val ranged = wh.readPruned(ref, "k", 30L, 50L)
+      .filter(col("k").between(30L, 50L))
+    assert(ranged.select("k").as[Long].collect().sorted.toSeq ===
+      (30L to 50L).filterNot(_ == 42L))
+    assert(ranged.columns.toSeq === Seq("k", "name", "note"))
+    assert(wh.readPrunedEq(ref, "k", 42L).filter(col("k") === 42L).count() === 0L,
+      "a DV-deleted row must not come back through a point lookup")
+    assert(wh.readPrunedEq(ref, "k", 41L).filter(col("k") === 41L)
+      .select("k", "note").as[(Long, Option[String])].collect().toSeq ===
+      Seq((41L, None)))
+  }
+
+  test("pruned reads of a table without deletion vectors run no more jobs than a plain parquet read") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-dv-prunedjobs"))
+    val ref = TableRef("silver", "dv", "prunedjobs")
+    wh.overwrite(ref, (1L to 100L).map(i => (i, s"name$i")).toDF("k", "name")
+      .repartitionByRange(4, col("k")), statsColumns = Seq("k"))
+    val (kept, _) = wh.splitFilesByRange(ref, "k", 30L, 50L).get
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    def jobsOf(df: => org.apache.spark.sql.DataFrame): (Int, Set[Long]) = {
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+      val j0 = jobs
+      val got = df.filter(col("k").between(30L, 50L)).select("k").as[Long].collect().toSet
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+      (jobs - j0, got)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (plainJobs, plain) = jobsOf(
+        spark.read.option("basePath", wh.path(ref)).parquet(kept: _*))
+      val (prunedJobs, pruned) = jobsOf(wh.readPruned(ref, "k", 30L, 50L))
+      assert(pruned === plain && pruned === (30L to 50L).toSet)
+      assert(prunedJobs <= plainJobs, s"readPruned $prunedJobs jobs vs plain $plainJobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -275,4 +275,39 @@ class PipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("1/2 tables failed"))
     assert(wh.exists(TableRef("bronze", "brapi", "good")))
   }
+
+  test("table-sourced CDC run() returns the batch row count instead of blocking") {
+    import spark.implicits._
+    val base = tmpDir("cdc-delta")
+    val wh = new Warehouse(spark, s"$base/warehouse")
+    val bronze = TableRef("bronze", "brapi", "ticks")
+    wh.overwrite(bronze, Seq(("AAA1", "2024-05-01", 1.5), ("AAA1", "2024-05-02", 2.5),
+      ("BBB2", "2024-05-01", 7.0)).toDF("symbol", "day", "px"))
+    write(s"$base/meta/silver/ticks/ticks.yml",
+      """schema:
+        |  - name: 'symbol'
+        |    type: 'string'
+        |    key: true
+        |  - name: 'day'
+        |    type: 'date'
+        |    date_predicate: true
+        |  - name: 'px'
+        |    type: 'double'
+        |""".stripMargin)
+    write(s"$base/meta/silver/ticks/ticks.sql",
+      """SELECT symbol, CAST(day AS DATE) AS day, px
+        |FROM bronze.brapi.ticks
+        |QUALIFY ROW_NUMBER() OVER (PARTITION BY symbol ORDER BY day DESC) = 1""".stripMargin)
+    val ingestor = new IngestorCDC(spark, wh, IngestSpec(
+      TableRef("silver", "brapi", "ticks"), "delta", s"$base/raw", s"$base/meta/silver"))
+    def runWithin(): Long = {
+      val f = scala.concurrent.Future(ingestor.run())(scala.concurrent.ExecutionContext.global)
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(120, "s"))
+    }
+    assert(runWithin() === 2L) // bootstrap: one latest row per symbol
+    wh.append(bronze, Seq(("AAA1", "2024-05-03", 3.5)).toDF("symbol", "day", "px"))
+    assert(runWithin() === 2L) // merge: the transform's output rows
+    assert(wh.read(TableRef("silver", "brapi", "ticks")).select("symbol", "px")
+      .as[(String, Double)].collect().sortBy(_._1).toSeq === Seq(("AAA1", 3.5), ("BBB2", 7.0)))
+  }
 }

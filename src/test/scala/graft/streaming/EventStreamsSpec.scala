@@ -459,4 +459,32 @@ class EventStreamsSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(view() === recomputed)
   }
+
+  test("replay phase credits sum to the wrapper's wall, even when addBatch covers the trigger") {
+    def wallAfter(recorded: Double, credits: Seq[(String, Double)], inBatch: Double) =
+      recorded + credits.map(_._2).sum + inBatch
+    // addBatch >= triggerExecution: no overhead, so no sub-phase may be credited
+    val covered = EventStreams.replayCredits("r", Seq(
+      Map("triggerExecution" -> 1000L, "addBatch" -> 1000L, "queryPlanning" -> 200L,
+        "walCommit" -> 150L, "latestOffset" -> 120L),
+      Map("triggerExecution" -> 500L, "addBatch" -> 520L)), recorded = 3.0, inBatchPhaseSec = 0.0)
+    assert(math.abs(wallAfter(3.0, covered, 0.0) - 3.0) < 1e-9, s"$covered")
+    assert(!covered.exists(_._1.startsWith("r.overhead")))
+    // itemized sub-phases exceeding the overhead are clamped into it
+    val over = EventStreams.replayCredits("r", Seq(
+      Map("triggerExecution" -> 1000L, "addBatch" -> 900L, "queryPlanning" -> 80L,
+        "walCommit" -> 60L, "commitOffsets" -> 20L, "getBatch" -> 70L)),
+      recorded = 2.0, inBatchPhaseSec = 0.25)
+    val m = over.toMap
+    assert(math.abs(wallAfter(2.0, over, 0.25) - 2.0) < 1e-9, s"$over")
+    assert(math.abs(m("r.overhead.plan") - 0.08) < 1e-9)
+    assert(math.abs(m("r.overhead.log") - 0.02) < 1e-9) // 0.1 overhead less plan
+    assert(!m.contains("r.overhead.source"))
+    assert(m("r.overhead") === 0.0)
+    assert(math.abs(m("r.addBatch") - 0.65) < 1e-9)
+    // the wrapper is never pushed below zero by triggers outside its window
+    val early = EventStreams.replayCredits("r", Seq(
+      Map("triggerExecution" -> 2000L, "addBatch" -> 1500L)), recorded = 1.0, inBatchPhaseSec = 0.0)
+    assert(early.toMap.apply("r") === -1.0)
+  }
 }
