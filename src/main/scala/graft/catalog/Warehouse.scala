@@ -748,8 +748,8 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** EFFECTIVE rows of a snapshot file subset with `__gdv_file` /
     * `__gdv_pos` attached and live vectors applied — the per-file
-    * planning read of the DV-aware writers ([[deleteWhereDv]],
-    * [[updateWhere]]): `input_file_name()` is useless once an
+    * planning read of the DV-aware writers ([[deleteWhere]],
+    * [[updateWhere]], [[dvReplace]]): `input_file_name()` is useless once an
     * anti-join sits above the scan, so file attribution rides the
     * captured metadata column instead.
     */
@@ -1983,16 +1983,12 @@ final class Warehouse(spark: SparkSession, val root: String,
         // manifest follows the commit; a crash in between leaves a stale
         // manifest, which pruning tolerates by construction (entries for
         // retired files never match the live list, unknown files are kept)
-        val liveManifest = new Path(target, statsDir)
         if (statsColumns.nonEmpty) {
-          filesystem.delete(liveManifest, true)
-          if (!filesystem.rename(new Path(tmp, statsDir), liveManifest))
-            throw new RuntimeException(s"failed to swap stats manifest for $ref")
-          stagedStats.foreach { case (sch, rows, part) =>
-            seedManifestCache(path(ref), sch, rows, Set(part)) }
+          publishManifest(ref, (new Path(tmp, statsDir), stagedStats))
           registerStatsAt(path(ref))
         } else {
-          filesystem.delete(liveManifest, true) // described retired files only
+          // described retired files only
+          filesystem.delete(new Path(target, statsDir), true)
           TableStatsRegistry.invalidate(path(ref))
         }
         filesystem.delete(new Path(target, txnFile), false)
@@ -2099,12 +2095,8 @@ final class Warehouse(spark: SparkSession, val root: String,
               fileStats(spark.read.parquet(stage.toString),
                 stage.toString, statCols, oldBlooms)
             }
-            val next = unionManifest(old, newStats)
-            val tmp = new Path(tablePath, s"$statsDir.tmp-$nonce")
-            val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-              writeManifestTo(next, tmp, (snap.files.size + rels.size).toLong)
-            }
-            Some((tmp, seeded))
+            Some(stageManifest(ref, unionManifest(old, newStats),
+              (snap.files.size + rels.size).toLong))
           case None if declaredStats.nonEmpty && statCols.nonEmpty
               && rels.nonEmpty =>
             // manifest bootstrap for a createTable-declared layout
@@ -2115,11 +2107,7 @@ final class Warehouse(spark: SparkSession, val root: String,
               fileStats(spark.read.parquet(stage.toString),
                 stage.toString, statCols, blooms)
             }
-            val tmp = new Path(tablePath, s"$statsDir.tmp-$nonce")
-            val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-              writeManifestTo(newStats, tmp, rels.size.toLong)
-            }
-            Some((tmp, seeded))
+            Some(stageManifest(ref, newStats, rels.size.toLong))
           case None => None
         }
       writeTxnJournal(ref, rels, Nil)
@@ -2151,13 +2139,8 @@ final class Warehouse(spark: SparkSession, val root: String,
         if (!registerStatsAt(path(ref)))
           TableStatsRegistry.invalidate(path(ref))
       }
-      manifestTmp.foreach { case (tmp, seeded) =>
-        val live = new Path(tablePath, statsDir)
-        filesystem.delete(live, true)
-        if (!filesystem.rename(tmp, live))
-          throw new RuntimeException(s"failed to swap stats manifest for $ref")
-        seeded.foreach { case (sch, rows, part) =>
-          seedManifestCache(path(ref), sch, rows, Set(part)) }
+      manifestTmp.foreach { staged =>
+        publishManifest(ref, staged)
         if (!registerStatsAt(path(ref)))
           TableStatsRegistry.invalidate(path(ref))
       }
@@ -2856,19 +2839,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     * sensitive sequence the metadata-only schema changes share.
     */
   private def swapManifest(ref: TableRef, next: DataFrame): Unit = {
-    val tablePath = new Path(path(ref))
-    val filesystem = fs(tablePath)
-    val tmp = new Path(tablePath, s"$statsDir.tmp-${System.nanoTime()}")
-    val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-      writeManifestTo(next, tmp,
-        snapshot(ref).map(_.files.size.toLong).getOrElse(Long.MaxValue))
-    }
-    val live = new Path(tablePath, statsDir)
-    filesystem.delete(live, true)
-    if (!filesystem.rename(tmp, live))
-      throw new RuntimeException(s"failed to swap stats manifest for $ref")
-    seeded.foreach { case (sch, rows, part) =>
-      seedManifestCache(path(ref), sch, rows, Set(part)) }
+    publishManifest(ref, stageManifest(ref, next,
+      snapshot(ref).map(_.files.size.toLong).getOrElse(Long.MaxValue)))
     if (!registerStatsAt(path(ref)))
       TableStatsRegistry.invalidate(path(ref))
   }
@@ -3850,19 +3822,9 @@ final class Warehouse(spark: SparkSession, val root: String,
             if (replaceAll) newStats
             else oldManifest.map(unionManifest(_, newStats))
               .getOrElse(newStats)
-          val nonce = System.nanoTime().toString
-          val tmp = new Path(tablePath, s"$statsDir.tmp-$nonce")
-          val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-            writeManifestTo(next, tmp,
-              (if (replaceAll) 0L else snap.files.size.toLong) +
-                stagedRels.size.toLong)
-          }
-          val live = new Path(tablePath, statsDir)
-          filesystem.delete(live, true)
-          if (!filesystem.rename(tmp, live))
-            throw new RuntimeException(s"failed to swap stats manifest for $ref")
-          seeded.foreach { case (sch, rows, part) =>
-            seedManifestCache(path(ref), sch, rows, Set(part)) }
+          publishManifest(ref, stageManifest(ref, next,
+            (if (replaceAll) 0L else snap.files.size.toLong) +
+              stagedRels.size.toLong))
         }
         if (!registerStatsAt(path(ref)))
           TableStatsRegistry.invalidate(path(ref))
@@ -3893,30 +3855,11 @@ final class Warehouse(spark: SparkSession, val root: String,
       case _ => spark.read.parquet(path(ref)).schema
     }
 
-  /** Row-level DELETE (Delta `DELETE FROM ... WHERE` semantics, the
-    * GDPR/compaction primitive the reference's update-insert-only MERGE
-    * lacks): rewrite ONLY the files that contain a matching row — every
-    * other file keeps its bytes and path — and commit a version that
-    * retires the touched ones. Returns the number of rows deleted.
-    *
-    * Scale shape: the planning pass is one predicate-pushed scan
-    * projecting zero data columns (`input_file_name` + count per file
-    * — parquet row-group stats skip non-matching groups), so work is
-    * proportional to the files that COULD match, and the rewrite to
-    * the files that DO. SQL's three-valued logic is honored: rows
-    * where the predicate evaluates NULL are kept, exactly like
-    * `DELETE FROM t WHERE cond`.
-    *
-    * Concurrency: the touched-file plan is computed optimistically;
-    * [[replaceDataFiles]] re-validates it under the writer lock and
-    * throws [[ConcurrentWriteException]] if the table moved — callers
-    * with contention re-run (nothing was touched).
-    */
   /** Row-level mutation and in-place maintenance refuse while FOREIGN
     * (shallow-clone) entries remain — rewriting another table's bytes
     * is never sound; the remedy is one materializing overwrite.
     */
-  private def requireNoForeign(ref: TableRef, action: String): Unit =
+  private[graft] def requireNoForeign(ref: TableRef, action: String): Unit =
     snapshot(ref).foreach { s =>
       require(s.files.forall(!_.startsWith(Warehouse.ForeignPrefix)),
         s"$action on $ref: the table is a SHALLOW clone still " +
@@ -3924,31 +3867,87 @@ final class Warehouse(spark: SparkSession, val root: String,
           "(overwrite(ref, read(ref)), then releasePin on the source)")
     }
 
-  def deleteWhere(ref: TableRef, cond: org.apache.spark.sql.Column): Long = {
+  /** The copy-on-write match planner [[deleteWhere]] and [[updateWhere]]
+    * share: matched-row count per data file (absolute path) off one
+    * predicate-pushed scan projecting zero data columns — parquet
+    * row-group stats skip non-matching groups, so work stays
+    * proportional to the files that COULD match, never the table.
+    * `input_file_name()` attributes rows only while no deletion vector
+    * is live: over a vector the read is an anti-join, so attribution
+    * rides the captured `__gdv_file` column instead.
+    */
+  private def matchesPerFile(ref: TableRef, snap: Option[TableSnapshot],
+                             matched: Column): Seq[(String, Long)] = {
+    val grouped = snap match {
+      case Some(s) if s.dvMap.nonEmpty =>
+        readSubsetWithPos(s, s.files).filter(matched)
+          .groupBy(concat(lit(path(ref) + "/"), col("__gdv_file")))
+      case _ => read(ref).filter(matched).groupBy(input_file_name())
+    }
+    grouped.agg(count(lit(1))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+  }
+
+  /** Row-level DELETE (Delta `DELETE FROM ... WHERE` semantics, the
+    * GDPR/compaction primitive the reference's update-insert-only MERGE
+    * lacks). Returns the number of rows deleted. SQL's three-valued
+    * logic is honored: rows where the predicate evaluates NULL are
+    * kept, exactly like `DELETE FROM t WHERE cond`.
+    *
+    * Copy-on-write (the default): [[matchesPerFile]] plans the touched
+    * files, a file whose EVERY row matches retires as pure metadata
+    * ([[retireDataFiles]] — a predicate aligned with the clustering
+    * drops a 100 TB slice for the cost of one log append), and only
+    * the straddling files are rewritten ([[replaceDataFiles]]); every
+    * other file keeps its bytes and path.
+    *
+    * Merge-on-read (the deletion-vector property is on, or vectors are
+    * live): the matched positions go to [[dvReplace]] with no new rows
+    * — one sidecar, zero data-file churn. The deleted BYTES stay in the
+    * data file until a [[compact]] rewrite plus [[vacuum]] — identical
+    * to Delta's REORG + VACUUM sequence; the GDPR proof query in the
+    * gate suite pins it.
+    *
+    * Change feed: with the CDF property on, the deleted rows land as
+    * change files atomically with the commit (O(deleted rows)) on both
+    * routes — except a pure retirement, whose rows the feed DERIVES
+    * from the retired files themselves.
+    *
+    * Concurrency: the plan is computed optimistically; the commit
+    * re-validates it under the writer lock and throws
+    * [[ConcurrentWriteException]] if the table moved — callers with
+    * contention re-run (nothing was touched).
+    */
+  def deleteWhere(ref: TableRef, cond: Column): Long = {
     requireNoForeign(ref, "deleteWhere")
+    val matched = cond <=> lit(true) // null predicate = not matched
+    val snap = snapshot(ref)
     // merge-on-read routing: the table property asks for it, or live
     // vectors exist (a copy-on-write rewrite of a DV'd file would need
-    // the DV-aware read anyway — one code path owns that composition)
-    if (dvEnabled(ref) || snapshot(ref).exists(_.dvMap.nonEmpty))
-      return deleteWhereDv(ref, cond)
-    val matched = cond <=> lit(true) // null predicate = not matched
-    // planning pass with the predicate PUSHED: parquet row-group stats
-    // skip non-matching groups, so work stays proportional to the files
-    // that COULD match — never the table
-    val perFile = read(ref).filter(matched)
-      .groupBy(input_file_name().as("__file"))
-      .agg(count(lit(1)).as("__n"))
-      .collect()
+    // the DV-aware read anyway — one applier owns that composition)
+    if (dvEnabled(ref) || snap.exists(_.dvMap.nonEmpty)) {
+      val planned = snap.getOrElse(throw new IllegalArgumentException(
+        s"$ref has no committed version — DV deletes need the commit log"))
+      if (planned.files.isEmpty) return 0L
+      // matched rows with positions within `files`, existing vectors
+      // applied — read per subset, so the sidecar and the change rows
+      // scan only the files the delete touches
+      def hits(files: Seq[String]): DataFrame =
+        readSubsetWithPos(planned, files).filter(matched)
+      return dvReplace(ref, planned,
+        hits(_).select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos")),
+        None, Map(Warehouse.OpMeta -> "DELETE"),
+        touched =>
+          if (!cdfEnabled(ref)) None
+          else Some(hits(touched).drop("__gdv_file", "__gdv_pos")
+            .withColumn(Warehouse.ChangeTypeCol, lit("delete"))))
+    }
+    val perFile = matchesPerFile(ref, snap, matched)
     if (perFile.isEmpty) return 0L
-    val touched = perFile.map(_.getString(0)).toSeq
-    // partition-drop fast path: a file whose EVERY row matches retires
-    // as pure metadata — no rewrite, no data movement. A predicate
-    // aligned with the clustering (drop a day, a tenant, a key range)
-    // deletes a 100 TB slice for the cost of one log append; only
-    // straddling files pay the rewrite. Per-file totals come from the
-    // stats manifest when it has them (zero I/O) and otherwise from a
-    // zero-data-column count over ONLY the touched files — the pushed
-    // planning scan above stays untouched either way.
+    val touched = perFile.map(_._1)
+    // per-file totals come from the stats manifest when it has them
+    // (zero I/O) and otherwise from a zero-data-column count over ONLY
+    // the touched files
     val touchedRels = touched.map(relKey(ref))
     val fromManifest: Map[String, Long] = manifestDf(path(ref)) match {
       case Some(m) if m.columns.contains("rows") =>
@@ -3969,18 +3968,14 @@ final class Warehouse(spark: SparkSession, val root: String,
       val n = relKey(ref)(p)
       fromManifest.getOrElse(n, counted(n))
     }
-    val partial = perFile.filter(r => r.getLong(1) < totalOf(r.getString(0)))
-      .map(_.getString(0)).toSeq
+    val partial = perFile.collect { case (f, n) if n < totalOf(f) => f }
     if (partial.isEmpty)
-      // pure retirement: the change feed DERIVES these rows as deletes
-      // from the retired files themselves (still on disk until vacuum)
-      // — the metadata-only partition drop stays metadata-only even
-      // with CDF on
+      // pure retirement: the metadata-only partition drop stays
+      // metadata-only even with CDF on
       retireDataFiles(ref, touched, meta = Map(Warehouse.OpMeta -> "DELETE"))
     else {
-      // mixed rewrite: with CDF on, the deleted rows (from ALL touched
-      // files — the commit marker claims completeness) land as change
-      // files atomically with the commit, O(deleted rows)
+      // mixed rewrite: the deleted rows of ALL touched files (the
+      // commit marker claims completeness) become the change files
       val changes =
         if (!cdfEnabled(ref)) None
         else Some(spark.read.option("basePath", path(ref))
@@ -3992,150 +3987,55 @@ final class Warehouse(spark: SparkSession, val root: String,
           .filter(!matched),
         meta = Map(Warehouse.OpMeta -> "DELETE"), changes = changes)
     }
-    perFile.map(_.getLong(1)).sum
+    perFile.map(_._2).sum
   }
 
-  /** MERGE-ON-READ delete (Delta deletion vectors / Iceberg position
-    * deletes): instead of rewriting every file that contains a match
-    * (copy-on-write — O(files straddling the predicate) data movement,
-    * the 100 TB pain for scattered keys), the commit writes ONE
-    * parquet sidecar of `(file, pos)` row positions — O(matches) — and
-    * maps each touched file to it via `dv` log lines. ZERO data files
-    * are added or retired unless a file's EVERY live row matched, in
-    * which case it retires as pure metadata exactly like the
-    * copy-on-write partition-drop fast path. Reads apply the vectors
-    * as an anti-join on `_metadata.row_index`; [[compact]]
-    * materializes them away; [[vacuum]] sweeps sidecars no surviving
-    * version references. A second delete COMPOSES: its sidecar holds
-    * the union of old and new positions for the files it touches.
+  /** The MERGE-ON-READ applier — the one deletion-vector write path
+    * behind DV-mode DELETE, UPDATE and MERGE (Delta deletion vectors /
+    * Iceberg position deletes). The superseded rows' `(file, pos)`
+    * positions land in ONE parquet sidecar (merged per file with any
+    * carried vector — a second delete COMPOSES) mapped file-by-file by
+    * `dv` log lines; `newRows` (None for a delete) land as a small
+    * APPEND; one commit publishes both. Unmatched bytes never move, so a
+    * scattered-key CDC batch costs O(changed rows), not O(touched files)
+    * of rewrite. A touched file whose EVERY live row is superseded
+    * retires as pure metadata instead of gaining an all-rows vector.
+    * An append with no rows stages no file, and a call that supersedes
+    * nothing and adds nothing commits nothing. Returns the number of
+    * superseded rows.
     *
-    * Change feed: with the CDF property on, the deleted rows land as
-    * change files atomically with the commit (O(deleted rows)), same
-    * contract as the copy-on-write path; the keyed
-    * [[changeFeed]]/[[snapshotDiff]] derive DV deltas without them.
+    * Reads apply the vectors as an anti-join on `_metadata.row_index`;
+    * [[compact]] materializes them away; [[vacuum]] sweeps sidecars no
+    * surviving version references.
     *
-    * Physical erasure contract (GDPR): the deleted BYTES stay in the
-    * data file until a [[compact]] rewrite plus [[vacuum]] — identical
-    * to Delta's REORG + VACUUM sequence; the proof query in the gate
-    * suite pins it.
-    */
-  private def deleteWhereDv(ref: TableRef, cond: org.apache.spark.sql.Column): Long = {
-    val matched = cond <=> lit(true)
-    val planned = snapshot(ref).getOrElse(throw new IllegalArgumentException(
-      s"$ref has no committed version — DV deletes need the commit log"))
-    if (planned.files.isEmpty) return 0L
-    // effective rows WITH positions, existing vectors applied: the
-    // predicate pushes to the scan, so planning work is proportional
-    // to the files that could match
-    def effective(subset: Seq[String]): DataFrame =
-      readSubsetWithPos(planned, subset)
-    val perFile = effective(planned.files).filter(matched)
-      .groupBy(col("__gdv_file")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) return 0L
-    val touched = perFile.keys.toSeq.sorted
-    // live totals over ONLY the touched files (existing vectors
-    // already subtracted): a file whose every live row matched
-    // retires as pure metadata — no sidecar entry needed
-    val liveTotals = effective(touched)
-      .groupBy(col("__gdv_file")).agg(count(lit(1)).as("__t"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (dead, partial) = touched.partition(f => perFile(f) >= liveTotals(f))
-    withWriterLock(ref) {
-      recoverLocked(ref)
-      val snap = ensureLogLocked(ref)
-      if (snap.version != planned.version)
-        throw new ConcurrentWriteException(
-          s"table $ref moved from version ${planned.version} to " +
-            s"${snap.version} since this DV delete was planned — re-run")
-      val tablePath = new Path(path(ref))
-      val filesystem = fs(tablePath)
-      val newDvMap: Map[String, String] =
-        if (partial.isEmpty) snap.dvMap -- dead
-        else {
-          // one sidecar dir for this commit: the touched files' MERGED
-          // positions (previous vector ∪ this delete) — superseded
-          // dirs become garbage for vacuum once no version references
-          // them
-          val dir = dvPath(ref, snap.version + 1)
-          filesystem.delete(dir, true) // a crashed predecessor's orphan
-          val newPositions = effective(partial).filter(matched)
-            .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
-          val carried = partial.filter(snap.dvMap.contains)
-          val merged =
-            if (carried.isEmpty) newPositions
-            else newPositions.unionByName(dvRows(snap, carried))
-          merged.write.parquet(dir.toString)
-          val rel = f"$dvDir/v${snap.version + 1}%08d"
-          (snap.dvMap -- dead) ++ partial.map(_ -> rel)
-        }
-      // CDF: the deleted rows as change files, atomic with the commit
-      val cdcMeta =
-        if (!cdfEnabled(ref)) Map.empty[String, String]
-        else stageCdcLocked(ref, snap.version,
-          effective(touched).filter(matched)
-            .drop("__gdv_file", "__gdv_pos")
-            .withColumn(Warehouse.ChangeTypeCol, lit("delete")))
-      val deadSet = dead.toSet
-      commitLocked(ref, snap.schemaJson,
-        snap.files.filterNot(deadSet.contains),
-        cdcMeta + (Warehouse.OpMeta -> "DELETE"),
-        snap.fileMeta -- dead, dv = Some(newDvMap))
-      // fully-dead files leave the stats manifest like a retirement
-      if (dead.nonEmpty) {
-        val manifest = manifestDf(path(ref))
-        manifest.foreach { old =>
-          val next = old.filter(!col("file").isin(dead: _*))
-          val tmp = new Path(tablePath, s"$statsDir.tmp-${System.nanoTime()}")
-          val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-            writeManifestTo(next, tmp, snap.files.size.toLong)
-          }
-          val live = new Path(tablePath, statsDir)
-          filesystem.delete(live, true)
-          if (!filesystem.rename(tmp, live))
-            throw new RuntimeException(s"failed to swap stats manifest for $ref")
-          seeded.foreach { case (sch, rows, part) =>
-            seedManifestCache(path(ref), sch, rows, Set(part)) }
-        }
-      }
-      // row counts changed shape for the planner either way
-      TableStatsRegistry.invalidate(path(ref))
-    }
-    perFile.values.sum
-  }
-
-  /** MERGE-ON-READ replacement commit — the write-side primitive the
-    * DV-mode UPDATE and MERGE share (Delta's deletion-vector
-    * update/merge): the superseded rows' `(file, pos)` positions land
-    * in ONE sidecar (merged per file with any carried vector), the
-    * new/updated rows land as a small APPEND, and one commit publishes
-    * both — zero rewrite of unmatched bytes. A touched file whose
-    * EVERY live row is superseded retires as pure metadata instead of
-    * gaining an all-rows vector. At 100 TB this turns a scattered-key
-    * CDC upsert from O(touched files) data movement into O(changed
-    * rows) — the same economics [[deleteWhereDv]] bought for deletes.
-    *
-    * `positions` and `newRows`/`changes` MUST derive from one
-    * materialized classification (the callers localCheckpoint their
-    * merge join): this method evaluates them in separate actions, and
-    * un-pinned window tie-breaks could otherwise supersede one row and
-    * append another. CHECK constraints validate the staged new rows;
-    * CDF change files land atomically; the stats manifest drops
-    * retired files and gains the new files' entries.
+    * `positions(files)` is the superseded `(file, pos)` rows within
+    * `files` (table-relative paths of `planned`) and `changes(touched)`
+    * the CDF rows given the touched files: a producer planning from a
+    * scan (DELETE) reads only those files, a producer holding a
+    * materialized classification returns it whole. That classification
+    * MUST be one materialized frame when a join produced it (the merge
+    * and update callers localCheckpoint theirs): this method evaluates
+    * positions, rows and changes in separate actions, and un-pinned
+    * window tie-breaks could otherwise supersede one row and append
+    * another. CHECK constraints
+    * validate the staged new rows; CDF change files land atomically;
+    * the stats manifest drops retired files and gains the new files'
+    * entries; the planner stats are invalidated, since manifest row
+    * counts do not subtract vectors.
     */
   private[graft] def dvReplace(ref: TableRef, planned: TableSnapshot,
-                               positions: DataFrame,
+                               positions: Seq[String] => DataFrame,
                                newRows0: Option[DataFrame],
                                meta: Map[String, String],
-                               changes: Option[DataFrame]): Unit = {
+                               changes: Seq[String] => Option[DataFrame]): Long = {
     val newRows = newRows0.map(withFieldIds(ref, _)) // mapped: field ids
     // superseded-row counts per file (bounded driver action: one row
     // per touched file) drive the metadata-retirement fast path
-    val perFileSup = positions.groupBy(col("file"))
+    val perFileSup = positions(planned.files).groupBy(col("file"))
       .agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val touched = perFileSup.keys.toSeq.sorted
-    if (touched.isEmpty && newRows.isEmpty) return
+    if (touched.isEmpty && newRows.isEmpty) return 0L
     // live totals (existing vectors applied) over ONLY the touched
     // files: a file whose every live row is superseded retires whole
     val liveTotals =
@@ -4162,8 +4062,8 @@ final class Warehouse(spark: SparkSession, val root: String,
         else {
           val dir = dvPath(ref, snap.version + 1)
           filesystem.delete(dir, true) // a crashed predecessor's orphan
-          val newPositions = positions.filter(col("file").isin(partial: _*))
-            .select(col("file"), col("pos"))
+          val newPositions = positions(partial)
+            .filter(col("file").isin(partial: _*)).select(col("file"), col("pos"))
           val carried = partial.filter(snap.dvMap.contains)
           val merged =
             if (carried.isEmpty) newPositions
@@ -4173,12 +4073,11 @@ final class Warehouse(spark: SparkSession, val root: String,
           (snap.dvMap -- dead) ++ partial.map(_ -> rel)
         }
       // stage the new rows (partition layout honored), validate CHECK
-      // constraints over the staged bytes, journal, move in
-      val nonce = System.nanoTime().toString
-      val stage = new Path(path(ref) + s".tmp-dvwrite-$nonce")
-      val (adds, addMeta) = newRows match {
-        case None => (Seq.empty[String], Map.empty[String, (Long, Long)])
-        case Some(df) =>
+      // constraints over the staged bytes, journal, move in; files that
+      // hold no row (Spark writes one for an empty frame) stay behind
+      val stage = new Path(path(ref) + s".tmp-dvwrite-${System.nanoTime()}")
+      try {
+        val staged = newRows.toSeq.flatMap { df =>
           val partCols = Warehouse.partDirCols(snap.files)
           val missingParts = partCols.filterNot(df.columns.contains)
           require(missingParts.isEmpty,
@@ -4189,71 +4088,66 @@ final class Warehouse(spark: SparkSession, val root: String,
           writer.parquet(stage.toString)
           validateConstraintsLocked(ref,
             spark.read.schema(df.schema).parquet(stage.toString))
-          val staged = listDataFileStatuses(stage)
-          val stagedBase = filesystem.makeQualified(stage).toUri.getPath
-          val rels = staged.map(st =>
-            filesystem.makeQualified(st.getPath).toUri.getPath
-              .stripPrefix(stagedBase).stripPrefix("/"))
-          writeTxnJournal(ref, rels, Nil)
-          rels.zip(staged).foreach { case (r, st) =>
+          listDataFileStatuses(stage).filter { st =>
+            val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromStatus(st, hadoopConf))
+            try footer.getRecordCount > 0 finally footer.close()
+          }
+        }
+        val stagedBase = filesystem.makeQualified(stage).toUri.getPath
+        val adds = staged.map(st =>
+          filesystem.makeQualified(st.getPath).toUri.getPath
+            .stripPrefix(stagedBase).stripPrefix("/"))
+        if (touched.nonEmpty || adds.nonEmpty) {
+          if (adds.nonEmpty) writeTxnJournal(ref, adds, Nil)
+          adds.zip(staged).foreach { case (r, st) =>
             val dest = new Path(tablePath, r)
             filesystem.mkdirs(dest.getParent)
             if (!filesystem.rename(st.getPath, dest))
               throw new RuntimeException(s"failed to move $r into $ref")
           }
-          (rels, rels.zip(staged).map { case (r, st) =>
-            r -> (st.getLen, st.getModificationTime)
-          }.toMap)
-      }
-      try {
-        // CDF: atomic with the commit, same contract as every writer
-        val cdcMeta = changes.fold(Map.empty[String, String])(
-          stageCdcLocked(ref, snap.version, _))
-        val deadSet = dead.toSet
-        commitLocked(ref, snap.schemaJson,
-          snap.files.filterNot(deadSet.contains) ++ adds,
-          cdcMeta ++ meta,
-          (snap.fileMeta -- dead) ++ addMeta, dv = Some(newDvMap))
-        filesystem.delete(new Path(tablePath, txnFile), false)
-        // stats manifest: retired files leave; new files' entries join
-        // (post-commit, same crash contract as the append part path —
-        // missing rows only cost an honest fallback)
-        val statCols = statColumns(ref)
-        manifestDf(path(ref)).foreach { old =>
-          val kept = if (dead.isEmpty) old
-            else old.filter(!col("file").isin(dead: _*))
-          val oldBlooms = old.columns.toSeq
-            .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_"))
-          val next =
-            if (adds.isEmpty || statCols.isEmpty) kept
-            else {
-              val newStats = footerOrScan(ref, adds,
-                adds.map(a => new Path(tablePath, a)), statCols, oldBlooms) {
-                fileStats(
-                  spark.read.parquet(adds.map(a =>
+          // CDF: atomic with the commit, same contract as every writer
+          val cdcMeta = changes(touched).fold(Map.empty[String, String])(
+            stageCdcLocked(ref, snap.version, _))
+          val deadSet = dead.toSet
+          commitLocked(ref, snap.schemaJson,
+            snap.files.filterNot(deadSet.contains) ++ adds,
+            cdcMeta ++ meta,
+            (snap.fileMeta -- dead) ++ adds.zip(staged).map { case (r, st) =>
+              r -> (st.getLen, st.getModificationTime)
+            }, dv = Some(newDvMap))
+          filesystem.delete(new Path(tablePath, txnFile), false)
+          // stats manifest: retired files leave; new files' entries join
+          // (post-commit, same crash contract as the append part path —
+          // missing rows only cost an honest fallback)
+          if (dead.nonEmpty || adds.nonEmpty) {
+            val statCols = statColumns(ref)
+            manifestDf(path(ref)).foreach { old =>
+              val kept = if (dead.isEmpty) old
+                else old.filter(!col("file").isin(dead: _*))
+              val oldBlooms = old.columns.toSeq
+                .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_"))
+              val next =
+                if (adds.isEmpty || statCols.isEmpty) kept
+                else unionManifest(kept, footerOrScan(ref, adds,
+                  adds.map(a => new Path(tablePath, a)), statCols, oldBlooms) {
+                  fileStats(spark.read.parquet(adds.map(a =>
                     new Path(tablePath, a).toString): _*),
-                  path(ref), statCols, oldBlooms)
-              }
-              unionManifest(kept, newStats)
+                    path(ref), statCols, oldBlooms)
+                })
+              publishManifest(ref, stageManifest(ref, next,
+                snap.files.size.toLong + adds.size.toLong))
             }
-          val tmp = new Path(tablePath, s"$statsDir.tmp-$nonce")
-          val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-            writeManifestTo(next, tmp,
-              snap.files.size.toLong + adds.size.toLong)
           }
-          val live = new Path(tablePath, statsDir)
-          filesystem.delete(live, true)
-          if (!filesystem.rename(tmp, live))
-            throw new RuntimeException(s"failed to swap stats manifest for $ref")
-          seeded.foreach { case (sch, rows, part) =>
-            seedManifestCache(path(ref), sch, rows, Set(part)) }
+          TableStatsRegistry.invalidate(path(ref))
         }
-        TableStatsRegistry.invalidate(path(ref))
       } finally {
         filesystem.delete(stage, true)
         ()
       }
     }
+    perFileSup.values.sum
   }
 
   /** Row-level UPDATE (Delta `UPDATE ... SET ... WHERE` semantics):
@@ -4262,10 +4156,9 @@ final class Warehouse(spark: SparkSession, val root: String,
     * pass through unchanged, and every untouched file keeps its bytes
     * and path. Returns the number of rows updated.
     *
-    * Same scale shape as [[deleteWhere]]: the planning pass is one
-    * predicate-pushed zero-data-column scan (`input_file_name` +
-    * count), so work is proportional to the files that COULD match,
-    * and the rewrite to the files that DO. SQL's three-valued logic is
+    * Same match planner as [[deleteWhere]] ([[matchesPerFile]]), so
+    * work is proportional to the files that COULD match, and the
+    * rewrite to the files that DO. SQL's three-valued logic is
     * honored — rows where the predicate evaluates NULL are NOT
     * updated. Partitioned layouts rewrite per partition directory
     * (files go back inside their partitions, one commit per touched
@@ -4305,19 +4198,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // DV property on, matched rows supersede by position and the
     // updated rows land as one small append — no touched-file rewrite
     if (dvEnabled(ref)) return updateWhereDv(ref, matched, set, snap)
-    // with live deletion vectors the read is an anti-join, where
-    // input_file_name() no longer attributes — plan off the captured
-    // metadata column instead (same pushed-predicate scan shape)
-    val perFile =
-      if (snap.dvMap.isEmpty)
-        read(ref).filter(matched)
-          .groupBy(input_file_name().as("__file"))
-          .agg(count(lit(1)).as("__n"))
-          .collect()
-      else readSubsetWithPos(snap, snap.files).filter(matched)
-        .groupBy(concat(lit(path(ref) + "/"), col("__gdv_file")).as("__file"))
-        .agg(count(lit(1)).as("__n"))
-        .collect()
+    val perFile = matchesPerFile(ref, Some(snap), matched)
     if (perFile.isEmpty) return 0L
     val setMap = set.toMap
     // generated columns whose expressions read a SET column recompute
@@ -4328,7 +4209,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     val cdfOn = cdfEnabled(ref)
     // rewrite per partition directory so replacement files land back
     // inside their partitions (compact's layout-preserving shape)
-    perFile.map(_.getString(0)).toSeq
+    perFile.map(_._1)
       .groupBy(f => relKey(ref)(f).split('/').dropRight(1).mkString("/"))
       .foreach { case (subdir, files) =>
         // basePath read restores partition columns for the predicate;
@@ -4373,7 +4254,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           subdir = if (subdir.isEmpty) None else Some(subdir),
           meta = Map(Warehouse.OpMeta -> "UPDATE"), changes = changes)
       }
-    perFile.map(_.getLong(1)).sum
+    perFile.map(_._2).sum
   }
 
   /** MERGE-ON-READ update — [[updateWhere]]'s body when the DV
@@ -4417,8 +4298,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // reports. O(matched rows), the same bound mergeOnRead pays.
     val staged = graft.util.Scratch.transientCheckpoint(
       regen.localCheckpoint())
-    val n = staged.count()
-    if (n == 0L) return 0L
+    if (staged.count() == 0L) return 0L
     val positions = staged
       .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
     val newRows = staged.select(cols.map(c => col(s"__post_$c").as(c)): _*)
@@ -4430,9 +4310,8 @@ final class Warehouse(spark: SparkSession, val root: String,
           .unionByName(newRows.withColumn(Warehouse.ChangeTypeCol,
             lit("update_postimage"))))
       }
-    dvReplace(ref, planned, positions, Some(newRows),
-      Map(Warehouse.OpMeta -> "UPDATE"), changes)
-    n
+    dvReplace(ref, planned, _ => positions, Some(newRows),
+      Map(Warehouse.OpMeta -> "UPDATE"), _ => changes)
   }
 
   /** K4 TRUNCATE (lib/checker_handler.py:119): keep the table, drop rows. */
@@ -4734,6 +4613,41 @@ final class Warehouse(spark: SparkSession, val root: String,
         new Path(dir, part))
       Some((manifest.schema, rows, part))
     }
+
+  /** A stats manifest written beside the live one but not yet visible:
+    * its directory, plus the rows to seed the manifest cache with when
+    * [[writeManifestTo]] wrote it from the driver.
+    */
+  private type StagedManifest =
+    (Path, Option[(org.apache.spark.sql.types.StructType, Seq[Row], String)])
+
+  /** Stage `next` as the table's next manifest (under the `wh.manifest`
+    * timer); [[publishManifest]] swaps it in. `expectRows` bounds the
+    * post-commit file count, as for [[writeManifestTo]].
+    */
+  private def stageManifest(ref: TableRef, next: DataFrame,
+                            expectRows: Long): StagedManifest = {
+    val tmp = new Path(path(ref), s"$statsDir.tmp-${System.nanoTime()}")
+    (tmp, graft.util.PhaseTimer.time("wh.manifest")(
+      writeManifestTo(next, tmp, expectRows)))
+  }
+
+  /** Swap a staged manifest in for the live one (delete + rename — the
+    * crash-ordering-sensitive step every manifest writer shares; pruning
+    * tolerates a crash in between, since stale entries never match the
+    * live file list) and seed the manifest cache with its rows.
+    * Registering or invalidating the planner stats stays with the caller.
+    */
+  private def publishManifest(ref: TableRef, staged: StagedManifest): Unit = {
+    val (tmp, seeded) = staged
+    val live = new Path(path(ref), statsDir)
+    val filesystem = fs(live)
+    filesystem.delete(live, true)
+    if (!filesystem.rename(tmp, live))
+      throw new RuntimeException(s"failed to swap stats manifest for $ref")
+    seeded.foreach { case (sch, rows, part) =>
+      seedManifestCache(path(ref), sch, rows, Set(part)) }
+  }
 
   /** Run a commit-scale INTERNAL metadata aggregate (a stats manifest
     * holds one row per data file) without the adaptive-execution job
@@ -5575,22 +5489,12 @@ final class Warehouse(spark: SparkSession, val root: String,
       commitLocked(ref, snap.schemaJson,
         snap.files.filterNot(replacedSet.contains),
         Warehouse.withOp(meta, "REPLACE"), snap.fileMeta)
-      // manifest prune: drop the retired files' stats rows (tmp+rename,
-      // like every manifest swap); pruning tolerates a crash in between
-      // (stale entries never match the live list)
+      // manifest prune: drop the retired files' stats rows
       val manifest = manifestDf(path(ref))
       manifest.foreach { old =>
-        val next = old.filter(!col("file").isin(replacedRels: _*))
-        val tmp = new Path(tablePath, s"$statsDir.tmp-${System.nanoTime()}")
-        val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-          writeManifestTo(next, tmp, snap.files.size.toLong)
-        }
-        val live = new Path(tablePath, statsDir)
-        filesystem.delete(live, true)
-        if (!filesystem.rename(tmp, live))
-          throw new RuntimeException(s"failed to swap stats manifest for $ref")
-        seeded.foreach { case (sch, rows, part) =>
-          seedManifestCache(path(ref), sch, rows, Set(part)) }
+        publishManifest(ref, stageManifest(ref,
+          old.filter(!col("file").isin(replacedRels: _*)),
+          snap.files.size.toLong))
         // fresh registration — and when retirement emptied the table,
         // the zero-row manifest is unregistrable: drop the registry
         // entry rather than keep serving the pre-retire rowcount/NDVs
@@ -5623,15 +5527,13 @@ final class Warehouse(spark: SparkSession, val root: String,
     * consistent, retirement needs no physical action). Re-running the
     * interrupted upsert converges either way (MergeSpec proves both
     * arms).
-    */
-
-  /** @param subdir table-relative destination for the new files (e.g.
+    *
+    * @param subdir table-relative destination for the new files (e.g.
     *               `"bucket=0"`): partition-directory maintenance places
     *               rewritten files back inside their partition so
     *               partition discovery still owns the layout. None =
     *               the table root (flat tables).
-    */
-  /** @param changes row-level change files to commit ATOMICALLY with
+    * @param changes row-level change files to commit ATOMICALLY with
     *                 the replacement (table schema + `_change_type`) —
     *                 the change-data-feed contract when this rewrite
     *                 both adds and retires files; staged under
@@ -5734,14 +5636,10 @@ final class Warehouse(spark: SparkSession, val root: String,
               // pre-rows/ndv manifests, and heals declared-type drift
               unionManifest(kept0, newStats)
             }
-          val tmp = new Path(tablePath, s"$statsDir.tmp-$nonce")
-          val seeded = graft.util.PhaseTimer.time("wh.manifest") {
-            // upper bound on post-commit manifest rows: survivors + adds
-            writeManifestTo(next, tmp,
-              (snap.files.size - replacedRels.size).max(0).toLong +
-                newFiles.size.toLong)
-          }
-          (tmp, seeded)
+          // upper bound on post-commit manifest rows: survivors + adds
+          stageManifest(ref, next,
+            (snap.files.size - replacedRels.size).max(0).toLong +
+              newFiles.size.toLong)
         }
       // CHECK constraints validate the staged replacement before any
       // move — except maintenance rewrites (compact / z-order), which
@@ -5800,13 +5698,8 @@ final class Warehouse(spark: SparkSession, val root: String,
         if (!registerStatsAt(path(ref)))
           TableStatsRegistry.invalidate(path(ref))
       }
-      manifestTmp.foreach { case (tmp, seeded) =>
-        val live = new Path(tablePath, statsDir)
-        filesystem.delete(live, true)
-        if (!filesystem.rename(tmp, live))
-          throw new RuntimeException(s"failed to swap stats manifest for $ref")
-        seeded.foreach { case (sch, rows, part) =>
-          seedManifestCache(path(ref), sch, rows, Set(part)) }
+      manifestTmp.foreach { staged =>
+        publishManifest(ref, staged)
         // same write-path contract as retireDataFiles: an unregistrable
         // swapped manifest must not leave pre-replace stats live
         if (!registerStatsAt(path(ref)))

@@ -37,8 +37,11 @@ object Merge {
   // source-side attributes to this prefix — keep the two in sync
   private[graft] val SRC = "__src_"
   private val PRESENT = "__src_present"
+  private val KIND = "__merge_kind"
+  private val Carry = Seq("__gdv_file", "__gdv_pos")
 
   /** Pure merge on DataFrames: returns the post-merge table contents.
+    * Not materialized — it plans straight into the caller's write.
     *
     * @param keys        equi-join key columns (present in both sides)
     * @param tsField     optional ordering field: adds Delta-J1's
@@ -51,53 +54,10 @@ object Merge {
     */
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String],
             tsField: Option[String]): DataFrame = {
-    require(keys.nonEmpty, "merge requires at least one key column")
-    val cols = target.columns.toSeq
-    require(source.columns.toSeq == cols,
-      s"merge schema mismatch: target ${cols.mkString(",")} vs source ${source.columns.mkString(",")}")
-
-    val tgt = target.withColumn(TID, monotonically_increasing_id())
-    val src = cols.foldLeft(source)((d, c) => d.withColumnRenamed(c, SRC + c))
-      .withColumn(PRESENT, lit(true))
-
-    val keyCond = keys.map(k => col(k) === col(SRC + k)).reduce(_ && _)
-    val cond = tsField match {
-      case Some(ts) => keyCond && col(SRC + ts) >= col(ts)
-      case None => keyCond
-    }
-
-    val joined = tgt.join(src, cond, "full_outer")
-
-    // Unmatched source rows → inserts (includes the stale-row quirk).
-    val inserts = joined.filter(col(TID).isNull)
-      .select(cols.map(c => col(SRC + c).as(c)): _*)
-
-    // Target rows: pick the winning source row per target row (latest ts
-    // first, nulls last), or keep the old values when no source matched.
-    val targetRows = joined.filter(col(TID).isNotNull)
-    val resolved = tsField match {
-      case Some(ts) =>
-        val w = Window.partitionBy(TID)
-          .orderBy(col(SRC + ts).desc_nulls_last)
-        targetRows.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-      case None =>
-        // Pure equi condition (J2): any matching source row carries the
-        // same key tuple; the scorecard upsert's source is an aggregate,
-        // hence unique per key. Resolve arbitrarily-but-deterministically
-        // by the first key's source value ordering.
-        val w = Window.partitionBy(TID)
-          .orderBy(col(SRC + keys.head).asc_nulls_last)
-        targetRows.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-    }
-    val updated = resolved.select(
-      cols.map(c => when(col(PRESENT), col(SRC + c)).otherwise(col(c)).as(c)): _*)
-
-    updated.unionByName(inserts)
+    requireSameSchema(target.columns.toSeq, source, keys)
+    rewrite(target, source, keys, UpsertAll, tsField, wantChanges = false,
+      materialize = false)._1
   }
-
-  private val KIND = "__merge_kind"
 
   /** [[merge]] plus the ROW-LEVEL CHANGE classification — the
     * change-data-feed producer: returns (merged contents, change rows)
@@ -115,44 +75,10 @@ object Merge {
     */
   def mergeWithChanges(target: DataFrame, source: DataFrame, keys: Seq[String],
                        tsField: Option[String]): (DataFrame, DataFrame) = {
-    require(keys.nonEmpty, "merge requires at least one key column")
-    val cols = target.columns.toSeq
-    require(source.columns.toSeq == cols,
-      s"merge schema mismatch: target ${cols.mkString(",")} vs source ${source.columns.mkString(",")}")
-    val tgt = target.withColumn(TID, monotonically_increasing_id())
-    val src = cols.foldLeft(source)((d, c) => d.withColumnRenamed(c, SRC + c))
-      .withColumn(PRESENT, lit(true))
-    val keyCond = keys.map(k => col(k) === col(SRC + k)).reduce(_ && _)
-    val cond = tsField match {
-      case Some(ts) => keyCond && col(SRC + ts) >= col(ts)
-      case None => keyCond
-    }
-    val joined = tgt.join(src, cond, "full_outer")
-    val w = tsField match {
-      case Some(ts) => Window.partitionBy(TID).orderBy(col(SRC + ts).desc_nulls_last)
-      case None => Window.partitionBy(TID).orderBy(col(SRC + keys.head).asc_nulls_last)
-    }
-    val selectCols = cols.map(col) ++ cols.map(c => col(SRC + c)) :+ col(KIND)
-    val classified = joined.filter(col(TID).isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .withColumn(KIND,
-        when(col(PRESENT), lit("update")).otherwise(lit("keep")))
-      .select(selectCols: _*)
-      .unionByName(joined.filter(col(TID).isNull)
-        .withColumn(KIND, lit("insert")).select(selectCols: _*))
-      .localCheckpoint()
-    val merged = classified.select(cols.map(c =>
-      when(col(KIND) =!= "keep", col(SRC + c)).otherwise(col(c)).as(c)): _*)
-    val ct = graft.catalog.Warehouse.ChangeTypeCol
-    val changes = classified.filter(col(KIND) === "insert")
-        .select(cols.map(c => col(SRC + c).as(c)) :+ lit("insert").as(ct): _*)
-      .unionByName(classified.filter(col(KIND) === "update")
-        .select(cols.map(col) :+ lit("update_preimage").as(ct): _*))
-      .unionByName(classified.filter(col(KIND) === "update")
-        .select(cols.map(c => col(SRC + c).as(c)) :+
-          lit("update_postimage").as(ct): _*))
-    (merged, changes)
+    requireSameSchema(target.columns.toSeq, source, keys)
+    val (merged, changes) = rewrite(target, source, keys, UpsertAll, tsField,
+      wantChanges = true, materialize = true)
+    (merged, changes.get)
   }
 
   /** One fully-rendered MERGE clause. Conditions and assignment values
@@ -194,6 +120,21 @@ object Merge {
       c.action != "delete" && c.sets.isEmpty)
   }
 
+  /** Delta-J1's update-all / insert-all as clauses: the shape
+    * [[merge]], [[mergeWithChanges]] and [[mergeOnRead]] apply.
+    */
+  private lazy val UpsertAll = MergeClauses(
+    matched = Seq(Clause(None, "update")), inserts = Seq(Clause(None, "insert")))
+
+  /** J1 sources carry exactly the target's columns, in order. */
+  private def requireSameSchema(cols: Seq[String], source: DataFrame,
+                                keys: Seq[String]): Unit = {
+    require(keys.nonEmpty, "merge requires at least one key column")
+    require(source.columns.toSeq == cols,
+      s"merge schema mismatch: target ${cols.mkString(",")} vs source " +
+        source.columns.mkString(","))
+  }
+
   /** Compatibility constructor from the round-18 tuple shape. */
   private[graft] def clausesOf(matched: Seq[(Option[String], String)],
                                insert: Option[Option[String]],
@@ -202,18 +143,19 @@ object Merge {
       insert.toSeq.map(c => Clause(c, "insert")),
       bySource.map(c => Clause(c, "delete")))
 
-  /** Classified-join plumbing shared by [[applyClauses]] and
-    * [[applyClausesOnRead]]: one full-outer join on the keys, one
-    * window to resolve multi-match, clause order folded into a KIND
-    * tag (`m<i>` matched, `s<i>` by-source, `i<i>` insert, `keep`),
-    * ONE materialization. `carry` columns (merge-on-read file/pos)
-    * ride through untouched. `keepKept=false` drops keep rows before
-    * the checkpoint — merge-on-read never needs them.
+  /** The classified join every merge route shares: one full-outer join
+    * on the keys (plus J1's `source.ts >= target.ts` when `tsField` is
+    * set), one window resolving multi-match per target row (latest ts
+    * first, else the first key's source ordering), and clause order
+    * folded into a KIND tag (`m<i>` matched, `s<i>` by-source, `i<i>`
+    * insert, `keep`). `carry` columns (merge-on-read file/pos) ride
+    * through untouched; `keepKept=false` drops keep rows — merge-on-read
+    * never needs them. NOT materialized: the caller decides.
     */
-  private def classifyClauses(target: DataFrame, source: DataFrame,
-                              keys: Seq[String], cl: MergeClauses,
-                              carry: Seq[String], keepKept: Boolean)
-      : DataFrame = {
+  private def classify(target: DataFrame, source: DataFrame,
+                       keys: Seq[String], cl: MergeClauses,
+                       tsField: Option[String], carry: Seq[String],
+                       keepKept: Boolean): DataFrame = {
     require(keys.nonEmpty, "merge requires at least one key column")
     val cols = target.columns.toSeq.filterNot(carry.contains)
     val missingKeys = keys.filterNot(source.columns.contains)
@@ -229,8 +171,14 @@ object Merge {
     val src = srcCols.foldLeft(source)((d, c) => d.withColumnRenamed(c, SRC + c))
       .withColumn(PRESENT, lit(true))
     val keyCond = keys.map(k => col(k) === col(SRC + k)).reduce(_ && _)
-    val joined = tgt.join(src, keyCond, "full_outer")
-    val w = Window.partitionBy(TID).orderBy(col(SRC + keys.head).asc_nulls_last)
+    val cond = tsField.fold(keyCond)(ts => keyCond && col(SRC + ts) >= col(ts))
+    val joined = tgt.join(src, cond, "full_outer")
+    // the winning source row per target row: latest ts first, nulls
+    // last; without a ts (pure equi, J2) any match carries the same key
+    // tuple, so the first key's source ordering resolves it
+    // arbitrarily-but-deterministically
+    val w = Window.partitionBy(TID).orderBy(tsField.fold(
+      col(SRC + keys.head).asc_nulls_last)(ts => col(SRC + ts).desc_nulls_last))
     def condCol(c: Option[String]): Column =
       c.map(s => expr(s) <=> lit(true)).getOrElse(lit(true))
     def kindChain(clauses: Seq[Clause], tag: String): Column =
@@ -250,26 +198,32 @@ object Merge {
       .withColumn(KIND, insertKind).filter(col(KIND) =!= "keep")
     val selectCols = cols.map(col) ++ srcCols.map(c => col(SRC + c)) ++
       carry.map(col) :+ col(KIND)
-    graft.util.Scratch.transientCheckpoint(
-      targetRows.select(selectCols: _*)
-        .unionByName(insertRows.select(selectCols: _*))
-        .localCheckpoint())
+    targetRows.select(selectCols: _*)
+      .unionByName(insertRows.select(selectCols: _*))
   }
 
-  /** Per-column output value of each clause kind, chained over the
-    * classified frame: star takes the same-named source column;
-    * explicit sets evaluate their expression CAST to the target type;
-    * unassigned columns keep the target value (update) or NULL
-    * (insert). The base of the chain is the keep row's own value.
+  /** Pin a classification so separate downstream actions share its
+    * window tie-breaks (and its nondeterministic clause values).
     */
-  private def postProjection(cols: Seq[String],
-                             types: Map[String, org.apache.spark.sql.types.DataType],
-                             cl: MergeClauses): Seq[Column] = {
+  private def materialized(classified: DataFrame): DataFrame =
+    graft.util.Scratch.transientCheckpoint(classified.localCheckpoint())
+
+  /** The post-clause image of a classification — every output column
+    * plus KIND, each column's value chained over the clause kinds: star
+    * takes the same-named source column; explicit sets evaluate their
+    * expression CAST to the target type; unassigned columns keep the
+    * target value (update) or NULL (insert). The base of the chain is
+    * the keep row's own value.
+    */
+  private def postImage(classified: DataFrame, cols: Seq[String],
+                        cl: MergeClauses): DataFrame = {
+    // classified carries the target columns at their own types
+    val types = classified.schema.map(f => f.name -> f.dataType).toMap
     val tagged: Seq[(String, Clause, Boolean)] =
       cl.matched.zipWithIndex.map { case (c, i) => (s"m$i", c, false) } ++
       cl.bySource.zipWithIndex.map { case (c, i) => (s"s$i", c, false) } ++
       cl.inserts.zipWithIndex.map { case (c, i) => (s"i$i", c, true) }
-    cols.map { c =>
+    classified.select(cols.map { c =>
       tagged.filter(_._2.action != "delete").foldRight(col(c)) {
         case ((kind, clause, isInsert), els) =>
           val v = clause.sets match {
@@ -282,7 +236,7 @@ object Merge {
           }
           when(col(KIND) === kind, v).otherwise(els)
       }.as(c)
-    }
+    } :+ col(KIND): _*)
   }
 
   private def kindsOf(cl: MergeClauses): (Seq[String], Seq[String], Seq[String]) = {
@@ -296,6 +250,68 @@ object Merge {
 
   private def inKinds(kinds: Seq[String]): Column =
     if (kinds.isEmpty) lit(false) else col(KIND).isin(kinds: _*)
+
+  /** CDF change rows of one classification, in Delta's vocabulary:
+    * `insert` and `update_postimage` rows carry post-clause values
+    * (`post`), `update_preimage` and `delete` rows the target's own
+    * (`classified`).
+    */
+  private def changeRows(classified: DataFrame, post: DataFrame,
+                         cols: Seq[String], cl: MergeClauses): DataFrame = {
+    val (updates, deletes, inserts) = kindsOf(cl)
+    def rows(from: DataFrame, kinds: Seq[String], changeType: String) =
+      from.filter(inKinds(kinds)).select(cols.map(col) :+
+        lit(changeType).as(graft.catalog.Warehouse.ChangeTypeCol): _*)
+    Seq(rows(post, inserts, "insert"),
+      rows(classified, updates, "update_preimage"),
+      rows(post, updates, "update_postimage"),
+      rows(classified, deletes, "delete")).reduce(_ unionByName _)
+  }
+
+  /** COPY-ON-WRITE output of one classification: (post-merge rows of
+    * the target slice, CDF change rows when `wantChanges`).
+    */
+  private def rewrite(target: DataFrame, source: DataFrame, keys: Seq[String],
+                      cl: MergeClauses, tsField: Option[String],
+                      wantChanges: Boolean, materialize: Boolean)
+      : (DataFrame, Option[DataFrame]) = {
+    val cols = target.columns.toSeq
+    val classified0 = classify(target, source, keys, cl, tsField,
+      carry = Nil, keepKept = true)
+    val classified =
+      if (materialize) materialized(classified0) else classified0
+    val post = postImage(classified, cols, cl)
+    val merged = post.filter(!inKinds(kindsOf(cl)._2)).drop(KIND)
+    (merged,
+      if (wantChanges) Some(changeRows(classified, post, cols, cl)) else None)
+  }
+
+  /** MERGE-ON-READ output of one classification — the producer for
+    * `Warehouse.dvReplace`: `sup`, the superseded target rows as
+    * `(file, pos)` (every matched row an update OR delete clause
+    * claimed — these positions join the deletion-vector sidecar);
+    * `adds`, the rows to APPEND (each updated row's post-clause values
+    * plus the accepted inserts); `changes`, CDF rows or None. The target
+    * must carry `__gdv_file` / `__gdv_pos`
+    * ([[graft.catalog.Warehouse.readFilesWithPos]]); keep rows drop
+    * before the checkpoint — their bytes never move, which is the point:
+    * a CDC apply costs O(changed rows), not O(touched files) of rewrite.
+    */
+  private def onRead(target: DataFrame, source: DataFrame, keys: Seq[String],
+                     cl: MergeClauses, tsField: Option[String],
+                     wantChanges: Boolean)
+      : (DataFrame, DataFrame, Option[DataFrame]) = {
+    val cols = target.columns.toSeq.filterNot(Carry.contains)
+    val classified = materialized(classify(target, source, keys, cl,
+      tsField, carry = Carry, keepKept = false))
+    val (updateKinds, deleteKinds, insertKinds) = kindsOf(cl)
+    val sup = classified.filter(inKinds(updateKinds ++ deleteKinds))
+      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
+    val post = postImage(classified, cols, cl)
+    val adds = post.filter(inKinds(updateKinds ++ insertKinds)).drop(KIND)
+    (sup, adds,
+      if (wantChanges) Some(changeRows(classified, post, cols, cl)) else None)
+  }
 
   /** General MERGE clause application — the full Delta clause surface:
     *
@@ -320,58 +336,13 @@ object Merge {
     */
   def applyClauses(target: DataFrame, source: DataFrame, keys: Seq[String],
                    cl: MergeClauses, wantChanges: Boolean)
-      : (DataFrame, Option[DataFrame]) = {
-    val cols = target.columns.toSeq
-    val types = target.schema.map(f => f.name -> f.dataType).toMap
-    val classified = classifyClauses(target, source, keys, cl,
-      carry = Nil, keepKept = true)
-    val (updateKinds, deleteKinds, insertKinds) = kindsOf(cl)
-    val post = classified.select(
-      postProjection(cols, types, cl) :+ col(KIND): _*)
-    val merged = post.filter(!inKinds(deleteKinds)).drop(KIND)
-    val ct = graft.catalog.Warehouse.ChangeTypeCol
-    val changes =
-      if (!wantChanges) None
-      else Some(post.filter(inKinds(insertKinds)).drop(KIND)
-          .withColumn(ct, lit("insert"))
-        .unionByName(classified.filter(inKinds(updateKinds))
-          .select(cols.map(col) :+ lit("update_preimage").as(ct): _*))
-        .unionByName(post.filter(inKinds(updateKinds)).drop(KIND)
-          .withColumn(ct, lit("update_postimage")))
-        .unionByName(classified.filter(inKinds(deleteKinds))
-          .select(cols.map(col) :+ lit("delete").as(ct): _*)))
-    (merged, changes)
-  }
+      : (DataFrame, Option[DataFrame]) =
+    rewrite(target, source, keys, cl, None, wantChanges, materialize = true)
 
-  /** Round-18 tuple-shape adapter (star update/delete, one insert,
-    * by-source deletes) over the generalized [[applyClauses]].
-    */
-  def applyClauses(target: DataFrame, source: DataFrame, keys: Seq[String],
-                   matched: Seq[(Option[String], String)],
-                   insert: Option[Option[String]],
-                   bySource: Seq[Option[String]],
-                   wantChanges: Boolean): (DataFrame, Option[DataFrame]) =
-    applyClauses(target, source, keys, clausesOf(matched, insert, bySource),
-      wantChanges)
-
-  /** MERGE-ON-READ clause classification — [[applyClauses]] semantics
-    * with [[mergeOnRead]] economics: instead of the post-merge table
-    * contents it returns, off ONE materialized classification,
-    *
-    *  - `sup` — superseded target rows as `(file, pos)`: every matched
-    *    row an update OR delete clause claimed (these positions join
-    *    the deletion-vector sidecar);
-    *  - `adds` — rows to APPEND: each updated row's post-clause values
-    *    plus the accepted inserts (deletes append nothing);
-    *  - `changes` — CDF rows, or None.
-    *
-    * By-source clauses are REJECTED here — they can touch any target
-    * row, so they pay the copy-on-write rewrite (the caller routes).
-    * Target must carry `__gdv_file` / `__gdv_pos`
-    * ([[graft.catalog.Warehouse.readFilesWithPos]]); keep rows drop
-    * before the checkpoint — their bytes never move, which is the
-    * point: a clause-shaped CDC apply costs O(changed rows), not
-    * O(touched files) of rewrite.
+  /** MERGE-ON-READ clause application — [[applyClauses]] semantics,
+    * returning `(sup, adds, changes)` for `Warehouse.dvReplace`. By-source
+    * clauses are REJECTED here — they can touch any target row, so they
+    * pay the copy-on-write rewrite (the caller routes).
     */
   def applyClausesOnRead(target: DataFrame, source: DataFrame,
                          keys: Seq[String], cl: MergeClauses,
@@ -380,100 +351,19 @@ object Merge {
     require(cl.bySource.isEmpty,
       "by-source clauses can touch any target row — merge-on-read cannot " +
         "route them; use the copy-on-write path")
-    val carry = Seq("__gdv_file", "__gdv_pos")
-    val cols = target.columns.toSeq.filterNot(carry.contains)
-    val types = target.schema.map(f => f.name -> f.dataType).toMap
-    val classified = classifyClauses(target, source, keys, cl,
-      carry = carry, keepKept = false)
-    val (updateKinds, deleteKinds, insertKinds) = kindsOf(cl)
-    val sup = classified.filter(inKinds(updateKinds ++ deleteKinds))
-      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
-    val post = classified.select(
-      postProjection(cols, types, cl) :+ col(KIND): _*)
-    val adds = post.filter(inKinds(updateKinds ++ insertKinds)).drop(KIND)
-    val ct = graft.catalog.Warehouse.ChangeTypeCol
-    val changes =
-      if (!wantChanges) None
-      else Some(post.filter(inKinds(insertKinds)).drop(KIND)
-          .withColumn(ct, lit("insert"))
-        .unionByName(classified.filter(inKinds(updateKinds))
-          .select(cols.map(col) :+ lit("update_preimage").as(ct): _*))
-        .unionByName(post.filter(inKinds(updateKinds)).drop(KIND)
-          .withColumn(ct, lit("update_postimage")))
-        .unionByName(classified.filter(inKinds(deleteKinds))
-          .select(cols.map(col) :+ lit("delete").as(ct): _*)))
-    (sup, adds, changes)
+    onRead(target, source, keys, cl, None, wantChanges)
   }
 
-  /** MERGE-ON-READ classification — the DV-mode merge's producer: same
-    * semantics as [[merge]]/[[mergeWithChanges]], but instead of the
-    * post-merge table contents it returns, off ONE materialized
-    * classification (localCheckpoint — separate downstream actions
-    * must share the window's tie-breaks):
-    *
-    *  - `sup` — the superseded target rows as `(file, pos)`: every
-    *    target row a source row replaced (these positions join the
-    *    deletion-vector sidecar);
-    *  - `adds` — the rows to APPEND: each replaced row's new values
-    *    plus the unmatched-source inserts (incl. the stale-row quirk);
-    *  - `changes` — CDF rows (insert / update_pre+postimage), or None.
-    *
-    * Target must carry `__gdv_file` / `__gdv_pos`
-    * ([[graft.catalog.Warehouse.readFilesWithPos]]). Unmatched target
-    * rows appear in NEITHER output — their bytes never move, which is
-    * the point: a scattered-key CDC batch costs O(changed rows), not
-    * O(touched files) of rewrite.
+  /** MERGE-ON-READ upsert — the DV-mode merge's producer: [[merge]] /
+    * [[mergeWithChanges]] semantics, returning `(sup, adds, changes)`
+    * for `Warehouse.dvReplace` off ONE materialized classification.
+    * Unmatched target rows appear in NEITHER output.
     */
   def mergeOnRead(target: DataFrame, source: DataFrame, keys: Seq[String],
                   tsField: Option[String], wantChanges: Boolean)
       : (DataFrame, DataFrame, Option[DataFrame]) = {
-    require(keys.nonEmpty, "merge requires at least one key column")
-    val carry = Seq("__gdv_file", "__gdv_pos")
-    val cols = target.columns.toSeq.filterNot(carry.contains)
-    require(source.columns.toSeq == cols,
-      s"merge schema mismatch: target ${cols.mkString(",")} vs source " +
-        source.columns.mkString(","))
-    val tgt = target.withColumn(TID, monotonically_increasing_id())
-    val src = cols.foldLeft(source)((d, c) => d.withColumnRenamed(c, SRC + c))
-      .withColumn(PRESENT, lit(true))
-    val keyCond = keys.map(k => col(k) === col(SRC + k)).reduce(_ && _)
-    val cond = tsField match {
-      case Some(ts) => keyCond && col(SRC + ts) >= col(ts)
-      case None => keyCond
-    }
-    val joined = tgt.join(src, cond, "full_outer")
-    val w = tsField match {
-      case Some(ts) =>
-        Window.partitionBy(TID).orderBy(col(SRC + ts).desc_nulls_last)
-      case None =>
-        Window.partitionBy(TID).orderBy(col(SRC + keys.head).asc_nulls_last)
-    }
-    val selectCols = cols.map(col) ++ cols.map(c => col(SRC + c)) ++
-      carry.map(col) :+ col(KIND)
-    // KEEP rows (target rows no source row won against) drop up front:
-    // their bytes never move, so they need no classification at all
-    val classified = joined.filter(col(TID).isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(PRESENT))
-      .withColumn(KIND, lit("update"))
-      .select(selectCols: _*)
-      .unionByName(joined.filter(col(TID).isNull)
-        .withColumn(KIND, lit("insert")).select(selectCols: _*))
-      .localCheckpoint()
-    val sup = classified.filter(col(KIND) === "update")
-      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
-    val adds = classified.select(cols.map(c => col(SRC + c).as(c)): _*)
-    val ct = graft.catalog.Warehouse.ChangeTypeCol
-    val changes =
-      if (!wantChanges) None
-      else Some(classified.filter(col(KIND) === "insert")
-          .select(cols.map(c => col(SRC + c).as(c)) :+ lit("insert").as(ct): _*)
-        .unionByName(classified.filter(col(KIND) === "update")
-          .select(cols.map(col) :+ lit("update_preimage").as(ct): _*))
-        .unionByName(classified.filter(col(KIND) === "update")
-          .select(cols.map(c => col(SRC + c).as(c)) :+
-            lit("update_postimage").as(ct): _*)))
-    (sup, adds, changes)
+    requireSameSchema(target.columns.toSeq.filterNot(Carry.contains), source, keys)
+    onRead(target, source, keys, UpsertAll, tsField, wantChanges)
   }
 }
 
@@ -504,8 +394,7 @@ object Merge {
   *                     targets (e.g. a scorecard aggregate of a few
   *                     rows) where the stats jobs cost more than the
   *                     full rewrite they would avoid.
-  */
-/** @param evolveSchema accept batches whose column set differs from the
+  * @param evolveSchema accept batches whose column set differs from the
   *                      target (Delta `mergeSchema` semantics): new
   *                      columns appear null-backfilled on historical
   *                      rows, dropped columns stay null on new rows.
@@ -524,6 +413,47 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
 
   private val pruneKey = keys.head
   private def bootstrapStats: Seq[String] = if (collectStats) Seq(pruneKey) else Nil
+
+  /** Stats columns of a full rewrite: the table's, plus the prune key
+    * when this target collects stats — so the next batch can prune.
+    */
+  private def statCols: Seq[String] =
+    if (collectStats) (warehouse.statColumns(ref) :+ pruneKey).distinct
+    else warehouse.statColumns(ref)
+
+  /** The full read-merge-overwrite every merge route falls back to
+    * (no manifest, every file may overlap, by-source clauses, schema
+    * evolution). It keeps the committed partition layout (`k=v` path
+    * components — a fallback that dropped it would silently FLATTEN
+    * the table: values intact, partition pruning gone), the stats and
+    * bloom columns, and CASes on `baseVersion`, the version the merge
+    * computed against — a concurrent commit in the read→overwrite
+    * window conflicts loudly (and the retry loop re-plans) instead of
+    * being silently lost.
+    */
+  private def rewriteAll(merged: DataFrame, baseVersion: Option[Long],
+                         meta: Map[String, String],
+                         changes: Option[DataFrame]): Unit = {
+    val sc = statCols.filter(merged.columns.contains)
+    warehouse.overwrite(ref, merged,
+      partitionBy = warehouse.snapshot(ref).toSeq
+        .flatMap(s => Warehouse.partDirCols(s.files))
+        .filter(merged.columns.contains),
+      statsColumns = sc,
+      bloomColumns = warehouse.bloomColumns(ref).filter(sc.contains),
+      expectedVersion = baseVersion, meta = meta, changes = changes)
+  }
+
+  /** Update-all / insert-all over `target`, with the change rows when
+    * the table's change data feed is on.
+    */
+  private def upsertAll(target: DataFrame, source: DataFrame,
+                        cdfOn: Boolean): (DataFrame, Option[DataFrame]) =
+    if (!cdfOn) (Merge.merge(target, source, keys, tsField), None)
+    else {
+      val (merged, changes) = Merge.mergeWithChanges(target, source, keys, tsField)
+      (merged, Some(changes))
+    }
 
   /** Widen `df` with null columns so its column set becomes the ordered
     * union of its own and `other`'s; rejects same-name type conflicts.
@@ -589,16 +519,6 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
                     bySource: Seq[Option[String]] = Nil): Unit =
     upsertClauses(source, Merge.clausesOf(matched, insert, bySource))
 
-  /** Extend explicit-assignment clauses with GENERATED-column
-    * recomputes: an UPDATE whose SET touches a generation's source
-    * recomputes the derived value over the post-assignment image
-    * (assigned references substituted textually — unassigned bare
-    * names already evaluate to the kept target value, or to NULL on
-    * insert rows, which is exactly the committed image); an explicit
-    * INSERT computes every omitted generation (compute-on-omit, the
-    * same contract as append/overwrite). Star clauses copy the
-    * source's generated values verbatim — those validate instead.
-    */
   /** Merges cannot target IDENTITY tables: a star clause would copy
     * forged source values into an engine-assigned column, and an
     * insert clause would mint rows without ids — Delta's original
@@ -634,6 +554,16 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
     cl.copy(inserts = cl.inserts.map(fill))
   }
 
+  /** Extend explicit-assignment clauses with GENERATED-column
+    * recomputes: an UPDATE whose SET touches a generation's source
+    * recomputes the derived value over the post-assignment image
+    * (assigned references substituted textually — unassigned bare
+    * names already evaluate to the kept target value, or to NULL on
+    * insert rows, which is exactly the committed image); an explicit
+    * INSERT computes every omitted generation (compute-on-omit, the
+    * same contract as append/overwrite). Star clauses copy the
+    * source's generated values verbatim — those validate instead.
+    */
   private def withGeneratedRecomputes(cl: Merge.MergeClauses)
       : Merge.MergeClauses = {
     val gens = warehouse.generatedColumns(ref)
@@ -674,10 +604,7 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
     warehouse.recover(ref)
     val snap = warehouse.snapshot(ref).getOrElse(throw new
         IllegalArgumentException(s"$ref has no committed version"))
-    require(snap.files.forall(!_.startsWith(Warehouse.ForeignPrefix)),
-      s"clause merge on $ref: the table is a SHALLOW clone still " +
-        "referencing its source's files — materialize it first " +
-        "(overwrite(ref, read(ref)), then releasePin on the source)")
+    warehouse.requireNoForeign(ref, "clause merge")
     val baseVersion = warehouse.currentVersion(ref)
     // star clauses copy source columns VERBATIM, so every target
     // column must arrive at the target's type; explicit-assignment
@@ -693,19 +620,10 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
         s"target ${tsig.mkString(",")} vs source ${source.schema.map(f =>
           (f.name, f.dataType)).mkString(",")}")
     val cdfOn = warehouse.cdfEnabled(ref)
-    val partCols: Seq[String] = Warehouse.partDirCols(snap.files)
-    val statCols =
-      if (collectStats) (warehouse.statColumns(ref) :+ pruneKey).distinct
-      else warehouse.statColumns(ref)
     def fullRewrite(): Unit = {
       val (merged, changes) = Merge.applyClauses(warehouse.read(ref),
         source, keys, cl, cdfOn)
-      val sc = statCols.filter(merged.columns.contains)
-      warehouse.overwrite(ref, merged,
-        partitionBy = partCols.filter(merged.columns.contains),
-        statsColumns = sc,
-        bloomColumns = warehouse.bloomColumns(ref).filter(sc.contains),
-        expectedVersion = baseVersion, meta = meta, changes = changes)
+      rewriteAll(merged, baseVersion, meta, changes)
     }
     if (cl.bySource.nonEmpty) { fullRewrite(); return }
     val bounds = source
@@ -726,7 +644,7 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
         val (sup, adds, changes) = Merge.applyClausesOnRead(
           warehouse.readFilesWithPos(ref, touched), source, keys, cl,
           wantChanges = cdfOn)
-        warehouse.dvReplace(ref, snap, sup, Some(adds), meta, changes)
+        warehouse.dvReplace(ref, snap, _ => sup, Some(adds), meta, _ => changes)
       case Some((touched, untouched)) if untouched.nonEmpty =>
         val (merged, changes) = Merge.applyClauses(readTouched(touched),
           source, keys, cl, cdfOn)
@@ -846,17 +764,9 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
           changes = changesFor(touchedDf.map(keepAffected)
             .getOrElse(replacement.limit(0))))
       case _ =>
-        // no manifest (or every file may overlap): full rewrite — and
-        // write key stats so the next refresh can prune
-        val statCols =
-          if (collectStats) (warehouse.statColumns(ref) :+ pruneKey).distinct
-          else warehouse.statColumns(ref)
-        warehouse.overwrite(ref,
-          dropAffected(warehouse.read(ref)).unionByName(replacement),
-          statsColumns = statCols,
-          bloomColumns = warehouse.bloomColumns(ref).filter(statCols.contains),
-          expectedVersion = baseVersion, meta = meta,
-          changes = changesFor(keepAffected(warehouse.read(ref))))
+        // no manifest (or every file may overlap): full rewrite
+        rewriteAll(dropAffected(warehouse.read(ref)).unionByName(replacement),
+          baseVersion, meta, changesFor(keepAffected(warehouse.read(ref))))
     }
   }
 
@@ -879,29 +789,22 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
 
   private def upsertOnce(source: DataFrame): Unit = {
     requireNoIdentity()
+    val meta = Map(Warehouse.OpMeta -> "MERGE")
     if (!warehouse.exists(ref)) {
       // onlyIfAbsent: if another writer bootstraps between the exists
       // check and our lock acquisition, this throws (nothing written)
       // and the retry loop re-enters through the merge path
       warehouse.overwrite(ref, source, statsColumns = bootstrapStats,
-        onlyIfAbsent = true, meta = Map(Warehouse.OpMeta -> "MERGE"))
+        onlyIfAbsent = true, meta = meta)
       return
     }
     // heal any interrupted prior replacement BEFORE reading the target —
     // a crashed add-new leaves duplicate rows that a plain re-merge
     // would keep (unmatched target duplicates survive Merge.merge)
     warehouse.recover(ref)
-    // pin the version this merge computes against: every full-rewrite
-    // below passes it as an optimistic CAS, so a concurrent commit in
-    // the read→overwrite window conflicts loudly (and the retry loop
-    // re-plans) instead of being silently lost
+    // the version this merge computes against: the CAS of every full
+    // rewrite below ([[rewriteAll]])
     val baseVersion = warehouse.currentVersion(ref)
-    // committed partition layout (`k=v` path components): full rewrites
-    // re-route partitionBy through it, or a merge falling back to the
-    // rewrite path would silently FLATTEN the table — values intact but
-    // partition pruning gone, the quiet 100 TB regression
-    val partCols: Seq[String] = warehouse.snapshot(ref).toSeq
-      .flatMap(s => Warehouse.partDirCols(s.files))
     if (evolveSchema) {
       val target = warehouse.read(ref)
       // trigger on name+type signature, not names alone — a same-name
@@ -912,24 +815,12 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
         require(source.columns.contains(pruneKey),
           s"evolved batch must keep the merge key '$pruneKey'")
         if (source.isEmpty) return
-        val statCols =
-          if (collectStats) (warehouse.statColumns(ref) :+ pruneKey).distinct
-          else warehouse.statColumns(ref)
         val wTarget = widen(target, source)
         val wSource = widen(source, target)
           .select(wTarget.columns.map(col).toIndexedSeq: _*)
         val (merged, changes) =
-          if (warehouse.cdfEnabled(ref)) {
-            val (m, c) = Merge.mergeWithChanges(wTarget, wSource, keys, tsField)
-            (m, Some(c))
-          } else (Merge.merge(wTarget, wSource, keys, tsField), None)
-        val sc = statCols.filter(merged.columns.contains)
-        warehouse.overwrite(ref, merged,
-          partitionBy = partCols.filter(merged.columns.contains),
-          statsColumns = sc,
-          bloomColumns = warehouse.bloomColumns(ref).filter(sc.contains),
-          expectedVersion = baseVersion,
-          meta = Map(Warehouse.OpMeta -> "MERGE"), changes = changes)
+          upsertAll(wTarget, wSource, warehouse.cdfEnabled(ref))
+        rewriteAll(merged, baseVersion, meta, changes)
         return
       }
     }
@@ -964,50 +855,28 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
           require(ssig == tsig,
             s"merge schema mismatch: target ${tsig.mkString(",")} vs " +
               s"source ${ssig.mkString(",")}")
-          warehouse.replaceDataFiles(ref, touched, source,
-            meta = Map(Warehouse.OpMeta -> "MERGE"))
+          warehouse.replaceDataFiles(ref, touched, source, meta = meta)
         } else if (warehouse.dvEnabled(ref)) {
           // MERGE-ON-READ (the DV write path): superseded target rows
           // commit as sidecar positions, replacement values + inserts
           // land as one small append — unmatched bytes in the touched
-          // files never move. The same economics deleteWhere's DV path
-          // bought for deletes, here for the scattered-key CDC upsert.
+          // files never move
           val planned = warehouse.snapshot(ref).getOrElse(
             throw new IllegalStateException(s"$ref vanished mid-merge"))
           val (sup, adds, changes) = Merge.mergeOnRead(
             warehouse.readFilesWithPos(ref, touched), source, keys, tsField,
             wantChanges = cdfOn)
-          warehouse.dvReplace(ref, planned, sup, Some(adds),
-            Map(Warehouse.OpMeta -> "MERGE"), changes)
-        } else if (cdfOn) {
-          val (merged, changes) = Merge.mergeWithChanges(
-            readTouched(touched), source, keys, tsField)
-          warehouse.replaceDataFiles(ref, touched, merged,
-            meta = Map(Warehouse.OpMeta -> "MERGE"), changes = Some(changes))
-        } else
-          warehouse.replaceDataFiles(ref, touched,
-            Merge.merge(readTouched(touched), source, keys, tsField),
-            meta = Map(Warehouse.OpMeta -> "MERGE"))
+          warehouse.dvReplace(ref, planned, _ => sup, Some(adds), meta,
+            _ => changes)
+        } else {
+          val (merged, changes) = upsertAll(readTouched(touched), source, cdfOn)
+          warehouse.replaceDataFiles(ref, touched, merged, meta = meta,
+            changes = changes)
+        }
       case _ =>
-        // no manifest, or every file may overlap: full rewrite — and
-        // write key stats (preserving any existing stat columns) so
-        // the next batch can prune
-        val statCols =
-          if (collectStats) (warehouse.statColumns(ref) :+ pruneKey).distinct
-          else warehouse.statColumns(ref)
-        val (merged, changes) =
-          if (cdfOn) {
-            val (m, c) = Merge.mergeWithChanges(warehouse.read(ref), source,
-              keys, tsField)
-            (m, Some(c))
-          } else
-            (Merge.merge(warehouse.read(ref), source, keys, tsField), None)
-        warehouse.overwrite(ref, merged,
-          partitionBy = partCols.filter(merged.columns.contains),
-          statsColumns = statCols,
-          bloomColumns = warehouse.bloomColumns(ref).filter(statCols.contains),
-          expectedVersion = baseVersion,
-          meta = Map(Warehouse.OpMeta -> "MERGE"), changes = changes)
+        // no manifest, or every file may overlap: full rewrite
+        val (merged, changes) = upsertAll(warehouse.read(ref), source, cdfOn)
+        rewriteAll(merged, baseVersion, meta, changes)
     }
   }
 }

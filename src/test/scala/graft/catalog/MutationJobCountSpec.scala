@@ -1,0 +1,87 @@
+package graft.catalog
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+import graft.sinks.{Merge, MergeTable}
+
+/** Spark job counts of every row-level mutation route, pinned: DELETE
+  * (partial and whole-file), UPDATE, upsert and clause MERGE, each in
+  * the four write configurations (copy-on-write / deletion vectors ×
+  * change data feed off / on). The routes share one match planner and
+  * one applier per configuration, so a refactor that adds a pass to any
+  * of them shows up here as a changed count. The table is 300 rows in
+  * 6 range files on local[4]; the routes run in the listed order on one
+  * table per configuration.
+  */
+class MutationJobCountSpec extends SparkSpec {
+
+  private val routes =
+    Seq("delete partial", "delete whole file", "update", "upsert", "clause merge")
+
+  private def routeJobs(dv: Boolean, cdf: Boolean): Seq[Int] = {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-mutjobs"))
+    val ref = TableRef("silver", "mut", s"dv${dv}_cdf$cdf")
+    wh.overwrite(ref,
+      spark.range(1, 301).select(col("id").as("k"), (col("id") * 10).as("v"))
+        .repartitionByRange(6, col("k")),
+      statsColumns = Seq("k"))
+    if (dv) wh.setDeletionVectors(ref, enabled = true)
+    if (cdf) wh.setChangeDataFeed(ref, enabled = true)
+    // the key range of the file holding the largest keys: deleting it
+    // retires exactly that file
+    val lastLo = wh.read(ref).groupBy(input_file_name())
+      .agg(min("k"), max("k")).as[(String, Long, Long)].collect()
+      .maxBy(_._3)._2
+    val mt = new MergeTable(spark, wh, ref, Seq("k"), None)
+    var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+      val j0 = jobs
+      body
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+      jobs - j0
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Seq(
+      jobsOf(wh.deleteWhere(ref, col("k") === 7L)),
+      jobsOf(wh.deleteWhere(ref, col("k") >= lastLo)),
+      jobsOf(wh.updateWhere(ref, col("k") === 100L, Seq("v" -> lit(-1L)))),
+      jobsOf(mt.upsert(Seq((120L, 1L), (130L, 2L), (400L, 3L)).toDF("k", "v"))),
+      jobsOf(mt.upsertClauses(
+        Seq((140L, 0L), (150L, 5L), (401L, 6L)).toDF("k", "v"),
+        Merge.MergeClauses(
+          matched = Seq(Merge.Clause(Some("__src_v = 0"), "delete"),
+            Merge.Clause(None, "update")),
+          inserts = Seq(Merge.Clause(None, "insert"))))))
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def check(dv: Boolean, cdf: Boolean, expected: Seq[Int]): Unit = {
+    val got = routeJobs(dv, cdf)
+    val report = routes.zip(got).map { case (r, n) => s"$r=$n" }.mkString(", ")
+    info(report)
+    assert(got === expected, s"job counts changed: $report")
+  }
+
+  test("copy-on-write, change feed off: pinned job counts per route") {
+    check(dv = false, cdf = false, Seq(5, 2, 4, 8, 9))
+  }
+
+  test("copy-on-write, change feed on: pinned job counts per route") {
+    check(dv = false, cdf = true, Seq(7, 2, 5, 10, 10))
+  }
+
+  test("deletion vectors, change feed off: pinned job counts per route") {
+    check(dv = true, cdf = false, Seq(5, 7, 13, 14, 22))
+  }
+
+  test("deletion vectors, change feed on: pinned job counts per route") {
+    check(dv = true, cdf = true, Seq(6, 8, 14, 15, 23))
+  }
+}

@@ -403,6 +403,23 @@ class MergeClausesSpec extends SparkSpec {
     assert(wh.read(ref).count() === 1L)
   }
 
+  test("DV-mode clause merge that claims and inserts nothing commits nothing") {
+    import spark.implicits._
+    val (wh, ref, mt) = fresh("dvnoop")
+    wh.setDeletionVectors(ref, enabled = true)
+    val v0 = wh.currentVersion(ref)
+    val files0 = wh.dataFiles(ref)
+    mt.upsertClauses(Seq((3L, "x", 0.0), (99L, "y", 1.0)).toDF("k", "name", "v"),
+      Merge.MergeClauses(
+        matched = Seq(Merge.Clause(Some("1 = 0"), "update")),
+        inserts = Seq(Merge.Clause(Some("1 = 0"), "insert"))))
+    assert(wh.currentVersion(ref) === v0,
+      "a merge that changes no row must not commit a version")
+    assert(wh.dataFiles(ref) === files0,
+      "a merge that inserts nothing must not add a data file")
+    assert(wh.read(ref).count() === 30L)
+  }
+
   test("SQL MERGE with conditional, delete, and by-source clauses routes to the engine") {
     import spark.implicits._
     val root = tmpDir("wh-clauses-sql")
