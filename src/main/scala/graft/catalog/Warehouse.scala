@@ -950,14 +950,14 @@ final class Warehouse(spark: SparkSession, val root: String,
     * later readers can plan without listing the filesystem; files
     * absent from the map (inherited from a pre-size log) write the
     * two-field legacy line and those readers degrade to listing.
-    */
-  /** @param dv the new version's COMPLETE deletion-vector map, or None
+    *
+    * @param dv the new version's COMPLETE deletion-vector map, or None
     *        to CARRY the parent's forward (restricted to files still
     *        committed — a retired or replaced file's vector dies with
-    *        it). Only the DV writers ([[deleteWhere]]'s merge-on-read
-    *        path, [[restore]]) pass Some; every other commit inherits,
-    *        so an append or stream epoch can never silently resurrect
-    *        deleted rows by dropping the map.
+    *        it). Only the DV writers ([[dvReplace]], [[restore]]) pass
+    *        Some; every other commit inherits, so an append or stream
+    *        epoch can never silently resurrect deleted rows by dropping
+    *        the map.
     */
   private def commitLocked(ref: TableRef, schemaJson: String,
                            files: Seq[String],
@@ -1211,14 +1211,16 @@ final class Warehouse(spark: SparkSession, val root: String,
         "overwrite/append directly")
     val id = java.util.UUID.randomUUID().toString.take(12)
     val tmp = new Path(path(ref) + s".stage-$id")
-    // the data write runs FIRST, into a sibling dir no reader lists: a
-    // failed write must leave zero trace — in particular it must NOT
-    // have bootstrapped a previously nonexistent table (readers that
-    // saw 'no table' would suddenly see an empty one as the side
-    // effect of a stage that never succeeded)
-    withFieldIds(ref, df).write.mode("overwrite").parquet(tmp.toString)
     var bootstrappedEmpty = false
     try {
+      // the data write (and its validation) runs FIRST, into a sibling
+      // dir no reader lists: a failed write must leave zero trace — in
+      // particular it must NOT have bootstrapped a previously
+      // nonexistent table (readers that saw 'no table' would suddenly
+      // see an empty one as the side effect of a stage that never
+      // succeeded)
+      val (staged, _) = stageFrame(ref, df, tmp, None, Nil,
+        rewrite = false, validate = true)
       // a logless dir's readers list the directory physically — commit
       // the current listing (or empty) so they resolve the log while
       // the staged files sit in the table directory
@@ -1226,22 +1228,12 @@ final class Warehouse(spark: SparkSession, val root: String,
         val existing = listDataFiles(target)
         if (existing.nonEmpty) ensureLogLocked(ref)
         else {
-          commitLocked(ref, df.schema.json, Nil,
+          commitLocked(ref, staged.schema.json, Nil,
             Map(Warehouse.OpMeta -> "WAP_BOOTSTRAP"))
           bootstrappedEmpty = true
         }
       }
-      val stagedStatuses = listDataFileStatuses(tmp)
-      val staged = stagedStatuses.map(_.getPath)
-      val stagedBase = filesystem.makeQualified(tmp).toUri.getPath
-      val rels = staged.map(p => filesystem.makeQualified(p).toUri.getPath
-        .stripPrefix(stagedBase).stripPrefix("/"))
-      rels.zip(staged).foreach { case (r, f) =>
-        val dest = new Path(target, r)
-        filesystem.mkdirs(dest.getParent)
-        if (!filesystem.rename(f, dest))
-          throw new RuntimeException(s"failed to move staged file $r into $ref")
-      }
+      moveIn(ref, staged)
       // manifest LAST, via tmp + rename like every other log write: a
       // crash before the rename leaves only unreferenced stragglers —
       // never a torn manifest a later publish would trust. Sized file
@@ -1251,9 +1243,9 @@ final class Warehouse(spark: SparkSession, val root: String,
       val mtmp = new Path(mp.getParent, s".${mp.getName}.tmp")
       val out = filesystem.create(mtmp, true)
       try out.write(
-        (s"schema\t${df.schema.json}\n" +
-          rels.zip(stagedStatuses).map { case (f, st) =>
-            s"file\t$f\t${st.getLen}\t${st.getModificationTime}\n"
+        (s"schema\t${staged.schema.json}\n" +
+          staged.fileMeta.toSeq.sorted.map { case (f, (len, mtime)) =>
+            s"file\t$f\t$len\t$mtime\n"
           }.mkString)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
@@ -1449,8 +1441,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     * anchor and the horizon survive as unreadable metadata — a few KB
     * — so surviving deltas always resolve; data deletion itself stays
     * exact (GDPR: retired bytes are gone regardless of log shape).
-    */
-  /** @param dryRun report how many data files a real run WOULD delete
+    *
+    * @param dryRun report how many data files a real run WOULD delete
     *        (same retention/pin/staged math, computed under the writer
     *        lock) and change NOTHING — no horizon, no deletions, no
     *        log pruning. Delta's `VACUUM ... DRY RUN`: the operator's
@@ -1782,23 +1774,320 @@ final class Warehouse(spark: SparkSession, val root: String,
     }
   }
 
-  /** K1 full overwrite (lib/ingestors.py:92-96), committed through the
-    * log: stage to `<path>.tmp-<nonce>`, move the uniquely-named part
-    * files into the table directory, then commit a version listing ONLY
-    * them. The commit (an atomic rename in `_graft_log`) is the switch:
-    * readers resolve the old complete version or the new one, never a
-    * mix — and a reader mid-scan on the old version keeps its files,
-    * which are retired, not deleted (see class doc / [[vacuum]]).
-    *
-    * `staticPartitions` writes the frame into a fixed
-    * `key=value/...` subtree instead of routing rows through Spark's
-    * dynamic-partition writer — for loads where the partition values
-    * are known driver-side constants (e.g. a daily run_date): same
-    * on-disk layout and partition pruning, none of the per-row
-    * partition sort/routing. The named columns must NOT be in `df`
-    * (partition discovery restores them at read time).
+  // ---------------------------------------------------------------------
+  // THE FILE-ADDING COMMIT PATH. Every writer that adds data files —
+  // overwrite, append, WAP staging, streaming epochs, file replacement
+  // and the deletion-vector applier — runs the same steps under the
+  // writer lock: [[stageFrame]] (or [[stagedFiles]], for files the
+  // streaming sink's executors wrote) turns its rows into validated
+  // files beside the table, and [[land]] journals, moves and commits
+  // them, with [[planManifest]] deciding the stats manifest before
+  // anything moves.
+  // ---------------------------------------------------------------------
+
+  import Warehouse.{AppendPart, DropManifest, KeepManifest, ManifestStep,
+    Staged, StagedManifest, SwapManifest}
+
+  /** The staged rows, read with the write's schema — or, `withSchema`
+    * false, with the footer-inferred one: the stats scan's read, whose
+    * inference job DevWriteProfile's pinned counts include.
     */
-  /** @param onlyIfAbsent bootstrap guard: fail with
+  private def stagedRows(staged: Staged, withSchema: Boolean): DataFrame =
+    if (staged.files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), staged.schema)
+    else {
+      val reader = if (withSchema) spark.read.schema(staged.schema) else spark.read
+      if (staged.listed) reader.parquet(staged.dir.toString)
+      else reader.option("basePath", staged.dir.toString)
+        .parquet(staged.files.map(_.getPath.toString): _*)
+    }
+
+  /** Partition columns of the committed layout: the ordered `k=v`
+    * directory components of the files, or the CREATE TABLE declared
+    * layout ([[Warehouse.PartitionByMeta]]) while the table has none.
+    */
+  private def layoutOf(ref: TableRef, snap: TableSnapshot): Seq[String] =
+    if (snap.files.nonEmpty) Warehouse.partDirCols(snap.files)
+    else metaColumns(ref, Warehouse.PartitionByMeta)
+
+  /** Run `body` with a fresh staging directory beside the table (".tmp-"
+    * keeps [[listTables]] skipping it), removed afterwards either way.
+    */
+  private def withStage[T](ref: TableRef, kind: String)(body: Path => T): T = {
+    val stage = new Path(path(ref) + s".tmp-$kind-${System.nanoTime()}")
+    try body(stage)
+    finally { fs(stage).delete(stage, true); () }
+  }
+
+  /** THE stager (writer lock held): write `df0` for a commit on `ref`
+    * as parquet under `dir` — inside `subdir` (`k=v/…`: static
+    * partitions, or a rewrite scoped to one partition directory) when
+    * given — with rows routed through `partitionBy`. Unless `rewrite`
+    * (an internal rewrite whose frame is already the committed truth:
+    * a renamed-away column must not resurrect, supplied identity values
+    * carry through), omitted DEFAULT columns materialize, then omitted
+    * GENERATED columns compute (a generation may read a defaulted
+    * column), then IDENTITY columns assign — inside the lock, since the
+    * high-water read and its advance ride this commit. Mapped tables
+    * get their declared field ids ([[withFieldIds]]). The data write
+    * runs under `wh.data`. Returns the staged files ([[stagedFiles]])
+    * and the identity high-water meta the commit must carry.
+    */
+  private def stageFrame(ref: TableRef, df0: DataFrame, dir: Path,
+                         subdir: Option[String], partitionBy: Seq[String],
+                         rewrite: Boolean, validate: Boolean)
+      : (Staged, Map[String, String]) = {
+    val df = if (rewrite) df0 else applyGenerated(ref, applyDefaults(ref, df0))
+    // partition values live in directory names: a routed column must be
+    // in the frame, a directory-encoded one must not
+    val encoded = subdir.toSeq.flatMap(_.split('/').toSeq)
+      .filter(_.contains('=')).map(_.takeWhile(_ != '='))
+    require(partitionBy.forall(df.columns.contains) &&
+      !encoded.exists(df.columns.contains),
+      s"write to $ref needs partition column(s) ${partitionBy.mkString(",")} " +
+        s"in the frame and directory-encoded column(s) ${encoded.mkString(",")} " +
+        s"dropped from it; the frame has ${df.columns.mkString(",")}")
+    val (dfI, hwMeta, idCleanup) =
+      applyIdentityLocked(ref, df, allowSupplied = rewrite)
+    try {
+      val dfF = withFieldIds(ref, dfI)
+      val writer =
+        if (partitionBy.isEmpty) dfF.write else dfF.write.partitionBy(partitionBy: _*)
+      graft.util.PhaseTimer.time("wh.data") {
+        writer.mode("overwrite").parquet(subdir.fold(dir)(new Path(dir, _)).toString)
+      }
+      (stagedFiles(ref, dir, None, dfF.schema, validate), hwMeta)
+    } finally idCleanup()
+  }
+
+  /** The files under `dir` as [[land]] commits them: each file's
+    * `dir`-relative path and status, files that hold no row deleted (a
+    * version never lists one — Spark writes a file even for an empty
+    * frame), then CHECK constraints and supplied GENERATED values
+    * validated over the staged bytes before anything moves — unless not
+    * `validate` (maintenance rewrites move rows that already passed).
+    * `adopt` names the files when `dir` may hold others (a streaming
+    * epoch's dead task attempts); None takes the whole listing.
+    */
+  private def stagedFiles(ref: TableRef, dir: Path, adopt: Option[Seq[String]],
+                          schema: org.apache.spark.sql.types.StructType,
+                          validate: Boolean): Staged = {
+    val filesystem = fs(dir)
+    val all = adopt match {
+      case Some(rels) => rels.map(r => filesystem.getFileStatus(new Path(dir, r)))
+      case None => listDataFileStatuses(dir)
+    }
+    val (files, empty) = all.partition { st =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hadoopConf))
+      try footer.getRecordCount > 0 finally footer.close()
+    }
+    empty.foreach(st => filesystem.delete(st.getPath, false))
+    val base = filesystem.makeQualified(dir).toUri.getPath
+    val staged = Staged(dir, schema,
+      files.map(st => filesystem.makeQualified(st.getPath).toUri.getPath
+        .stripPrefix(base).stripPrefix("/")),
+      files, listed = adopt.isEmpty)
+    if (validate) validateConstraintsLocked(ref, stagedRows(staged, withSchema = true))
+    staged
+  }
+
+  /** Move staged files to their relative paths in the table directory. */
+  private def moveIn(ref: TableRef, staged: Staged): Unit = {
+    val table = new Path(path(ref))
+    val filesystem = fs(table)
+    staged.rels.zip(staged.files).foreach { case (r, st) =>
+      val dest = new Path(table, r)
+      filesystem.mkdirs(dest.getParent)
+      if (!filesystem.rename(st.getPath, dest))
+        throw new RuntimeException(s"failed to move $r into $ref")
+    }
+  }
+
+  /** THE manifest step for a commit keeping `keep` of `parent`'s files
+    * and adding `staged`'s. A full replace (`fresh` = its stats, bloom
+    * and NDV columns) writes a fresh manifest, or drops it when it
+    * declares no stats column. Bloom presence is a durable table
+    * property: a full replace carries every prior bloom column still in
+    * the schema into both its stats and bloom sets, so equality
+    * skipping never lapses silently — only a column leaving the schema
+    * ends its bloom, and that is warned.
+    *
+    * Every other commit keeps the live manifest's stats and bloom
+    * columns: retired files leave it and new files join it — as ONE
+    * appended part when nothing retires ([[canAppendManifestPart]] and
+    * [[manifestTypesMatch]] permitting: O(new files), the point of an
+    * append commit), otherwise rewritten as a union. A manifestless
+    * table still without files starts one from its CREATE TABLE
+    * declared stats columns ([[Warehouse.StatsColumnsMeta]]).
+    *
+    * New-file stats are derived once, from the staged files
+    * ([[footerOrScan]]); a part appended after the commit is
+    * materialized now, since the staged paths are gone by then. A
+    * rewrite stages in `staged.dir` until [[land]] publishes it.
+    */
+  private def planManifest(ref: TableRef, parent: Option[TableSnapshot],
+                           keep: Seq[String], staged: Staged,
+                           fresh: Option[(Seq[String], Seq[String], Seq[String])])
+      : ManifestStep = {
+    lazy val old = manifestDf(path(ref))
+    lazy val oldBlooms = old.toSeq.flatMap(_.columns
+      .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
+    val dataCols = staged.schema.fieldNames.toSeq
+    val retired = parent.toSeq.flatMap(_.files).filterNot(keep.toSet)
+    def newStats(cols: Seq[String], blooms: Seq[String],
+                 ndv: Seq[String]): DataFrame =
+      graft.util.PhaseTimer.time("wh.stats") {
+        footerOrScan(ref, staged.rels, staged.files.map(_.getPath), cols,
+            blooms, ndv) {
+          val data = stagedRows(staged, withSchema = false)
+          val missing = cols.filterNot(data.columns.contains)
+          require(missing.isEmpty,
+            s"stats column(s) not in table: ${missing.mkString(",")} " +
+              "(partition columns carry no file stats — prune on the partition instead)")
+          fileStats(data, staged.dir.toString, cols, blooms)
+        }
+      }
+    def swap(next: DataFrame): ManifestStep = SwapManifest(stageManifest(ref,
+      next, (keep.size + staged.rels.size).toLong, new Path(staged.dir, statsDir)))
+    fresh match {
+      case Some((stats, _, _)) if stats.isEmpty => DropManifest
+      case Some((stats, blooms, ndv)) =>
+        val (carry, lapsed) = oldBlooms.partition(dataCols.contains)
+        if (lapsed.nonEmpty)
+          Warehouse.log.warn(s"$ref: bloom column(s) " +
+            s"${lapsed.mkString(",")} left the schema; their equality " +
+            "skipping lapses with this overwrite")
+        swap(newStats((stats ++ carry).distinct, (blooms ++ carry).distinct, ndv))
+      case None =>
+        val declared =
+          if (old.nonEmpty || parent.exists(_.files.nonEmpty)) Nil
+          else metaColumns(ref, Warehouse.StatsColumnsMeta)
+        val statCols = (old.toSeq.flatMap(_.columns).collect {
+          case c if c.startsWith("min_") => c.stripPrefix("min_")
+        } ++ declared).distinct.filter(dataCols.contains)
+        old match {
+          case Some(_) if retired.isEmpty && staged.rels.isEmpty => KeepManifest
+          case Some(m) if retired.isEmpty &&
+              canAppendManifestPart(new Path(path(ref)), m.columns.toSeq,
+                statsColumnsOf(statCols, oldBlooms)) &&
+              manifestTypesMatch(m, staged.schema, statCols) =>
+            val part = newStats(statCols, oldBlooms, Nil)
+            AppendPart(spark.createDataFrame(
+              java.util.Arrays.asList(metaFrame(part).collect(): _*), part.schema))
+          case Some(m) =>
+            val kept =
+              if (retired.isEmpty) m else m.filter(!col("file").isin(retired: _*))
+            swap(if (staged.rels.isEmpty || statCols.isEmpty) kept
+              else unionManifest(kept, newStats(statCols, oldBlooms, Nil)))
+          case None if statCols.nonEmpty && staged.rels.nonEmpty =>
+            swap(newStats(statCols, metaColumns(ref, Warehouse.BloomColumnsMeta)
+              .filter(statCols.contains), Nil))
+          case None => KeepManifest
+        }
+    }
+  }
+
+  /** THE lander (writer lock held): commit `parent`'s `keep` files plus
+    * the staged ones, with `meta`, and with `dv` as the version's
+    * complete deletion-vector map when given (see [[commitLocked]]).
+    * Change files ([[stageCdcLocked]]) land first, then the intent
+    * journal, then the moves: a crash anywhere before the commit leaves
+    * only unreferenced stragglers, which the next writer's recovery (or
+    * vacuum) removes — readers never saw them. The commit is the
+    * switch: readers resolve the old complete version or the new one,
+    * and a reader mid-scan on the old version keeps its files, which
+    * are retired, not deleted. A full replace (`fresh`, see
+    * [[planManifest]]) commits the staged schema, every other commit
+    * the parent's.
+    *
+    * The [[planManifest]] step follows the commit; a crash in between
+    * leaves a stale manifest, which pruning tolerates by construction
+    * (entries for retired files never match the live list, unknown
+    * files are kept). Then the planner stats: invalidated while
+    * deletion vectors are live (manifest row counts do not subtract
+    * them), else re-registered — and invalidated when that fails, so
+    * the registry never keeps serving the pre-commit numbers.
+    *
+    * `parent` None is a BOOTSTRAP (first-ever overwrite, nothing
+    * committed and no data): no snapshot exists for a concurrent read
+    * to resolve, so it falls back to a plain directory read — moving
+    * files in one by one would expose a partial subset. The whole
+    * staged directory, manifest included, renames into place instead:
+    * a reader sees no table, or the complete data. Returns the
+    * committed version.
+    */
+  private def land(ref: TableRef, parent: Option[TableSnapshot],
+                   keep: Seq[String], staged: Staged,
+                   fresh: Option[(Seq[String], Seq[String], Seq[String])],
+                   meta: Map[String, String], changes: Option[DataFrame],
+                   dv: Option[Map[String, String]]): Long = {
+    val table = new Path(path(ref))
+    val filesystem = fs(table)
+    val step = planManifest(ref, parent, keep, staged, fresh)
+    val schemaJson = parent.filter(_ => fresh.isEmpty)
+      .fold(staged.schema.json)(_.schemaJson)
+    val v = parent match {
+      case None =>
+        require(changes.isEmpty,
+          s"overwrite($ref) with change files needs an existing committed " +
+            "table — a bootstrap IS the feed's base (derived as inserts)")
+        // drop metadata-only leftovers (a crashed writer's journal, an
+        // empty partition skeleton) so the rename lands cleanly; no
+        // data files exist, so nothing readable is lost
+        if (filesystem.exists(table)) filesystem.delete(table, true)
+        if (!filesystem.rename(staged.dir, table))
+          throw new RuntimeException(s"failed to move staged bootstrap into $ref")
+        // crash between rename and commit leaves a COMPLETE logless
+        // dir: plain reads see all rows, the next writer adopts it
+        commitLocked(ref, schemaJson, staged.rels, meta, staged.fileMeta)
+      case Some(snap) =>
+        // the changes frame may read the files being retired — they
+        // are still in place
+        val cdcMeta = changes.fold(Map.empty[String, String])(
+          stageCdcLocked(ref, snap.version, _))
+        if (staged.rels.nonEmpty)
+          writeTxnJournal(ref, staged.rels, snap.files.filterNot(keep.toSet))
+        moveIn(ref, staged)
+        commitLocked(ref, schemaJson, keep ++ staged.rels, meta ++ cdcMeta,
+          snap.fileMeta ++ staged.fileMeta, dv)
+    }
+    step match {
+      case KeepManifest => ()
+      case DropManifest => filesystem.delete(new Path(table, statsDir), true)
+      case AppendPart(stats) => appendManifestPart(table, stats)
+      case SwapManifest((tmp, seeded)) => publishManifest(ref,
+        (if (parent.isEmpty) new Path(table, statsDir) else tmp, seeded))
+    }
+    val liveDv = dv.getOrElse(parent.fold(Map.empty[String, String])(_.dvMap))
+    if (keep.exists(liveDv.contains) || !registerStatsAt(path(ref)))
+      TableStatsRegistry.invalidate(path(ref))
+    filesystem.delete(new Path(table, txnFile), false)
+    v
+  }
+
+  /** K1 full overwrite (lib/ingestors.py:92-96), committed through the
+    * log: the frame stages beside the table ([[stageFrame]]) and
+    * [[land]]s as a version listing ONLY its files — the old version's
+    * files retire (time travel until [[vacuum]]). The first-ever
+    * overwrite of a table is a bootstrap (see [[land]]); a logless
+    * directory that already HAS data is adopted into the log first, so
+    * its readers resolve the old complete version during the swap
+    * window instead of a mixed listing.
+    *
+    * @param statsColumns per-file min/max (plus null count and rows)
+    *        collected into the stats manifest; empty = no manifest
+    * @param bloomColumns equality-skipping blooms, a subset of
+    *        `statsColumns`; durable once requested (see [[planManifest]])
+    * @param staticPartitions writes the frame into a fixed
+    *        `key=value/...` subtree instead of routing rows through
+    *        Spark's dynamic-partition writer — for loads where the
+    *        partition values are known driver-side constants (e.g. a
+    *        daily run_date): same on-disk layout and partition pruning,
+    *        none of the per-row partition sort/routing. The named
+    *        columns must NOT be in `df` (partition discovery restores
+    *        them at read time).
+    * @param onlyIfAbsent bootstrap guard: fail with
     *        [[ConcurrentWriteException]] (nothing touched) when the
     *        table already has a committed version or data — closes the
     *        check-then-create race where two writers both believe they
@@ -1811,6 +2100,17 @@ final class Warehouse(spark: SparkSession, val root: String,
     *        computed from — otherwise a concurrent commit in the window
     *        between the caller's read and this write would be silently
     *        lost. None = unconditional replace (plain loads).
+    * @param changes precise change files (when the caller computed them
+    *        — e.g. a merge falling back to a full rewrite); without them
+    *        a full replace still derives as delete+insert
+    * @param internalRewrite for INTERNAL full rewrites (renameColumn,
+    *        subquery DML) whose frame is already the complete committed
+    *        truth: no compute-on-omit, supplied identity values carry
+    *        through ([[stageFrame]]'s `rewrite`) — constraint and
+    *        generation VALIDATION still runs
+    * @param ndvColumns per-file NDV declaration; rides the commit as
+    *        carried meta, so every later stats commit keeps collecting
+    *        it (the scan job) for the table's life — see [[ndvStatsLive]]
     */
   def overwrite(ref: TableRef, df0: DataFrame, partitionBy: Seq[String] = Nil,
                 statsColumns: Seq[String] = Nil,
@@ -1822,28 +2122,12 @@ final class Warehouse(spark: SparkSession, val root: String,
                 changes: Option[DataFrame] = None,
                 internalRewrite: Boolean = false,
                 ndvColumns: Seq[String] = Nil): Unit = {
-    // DEFAULT columns materialize, then GENERATED columns compute,
-    // when the caller omits them (the write contract of Delta's
-    // GENERATED ALWAYS AS); supplied values validate in the staged
-    // constraint pass like any CHECK. `internalRewrite` is for
-    // INTERNAL full rewrites (renameColumn, subquery DML) whose frame
-    // is already the complete committed truth: compute-on-omit skips
-    // (a renamed-away column must not resurrect under its old name)
-    // and supplied identity values carry through instead of refusing —
-    // constraint/generation VALIDATION still runs either way.
-    val df =
-      if (internalRewrite) df0
-      else applyGenerated(ref, applyDefaults(ref, df0))
     require(partitionBy.isEmpty || staticPartitions.isEmpty,
       "partitionBy and staticPartitions are mutually exclusive")
     require(bloomColumns.forall(statsColumns.contains),
       s"bloomColumns must be a subset of statsColumns: " +
         s"${bloomColumns.filterNot(statsColumns.contains).mkString(",")} " +
         "has no stats manifest entry to ride on")
-    staticPartitions.foreach { case (k, _) =>
-      require(!df.columns.contains(k),
-        s"static partition column '$k' must be dropped from the frame")
-    }
     withWriterLock(ref) {
     val target = new Path(path(ref))
     val filesystem = fs(target)
@@ -1861,297 +2145,59 @@ final class Warehouse(spark: SparkSession, val root: String,
       throw new ConcurrentWriteException(
         s"table $ref advanced past version ${expectedVersion.get} since " +
           "this rewrite was planned — re-read the table and re-plan")
-    // BOOTSTRAP (first-ever overwrite, nothing committed and no data):
-    // no snapshot exists for a concurrent read() to resolve, so it
-    // falls back to a plain directory read — moving staged files in
-    // one-by-one would expose a partial subset (or a dir holding only
-    // metadata). The whole staged DIRECTORY is renamed into place
-    // instead: a reader sees no table, or the complete data. A logless
-    // dir that already HAS data is adopted into the log first for the
-    // same reason — its readers then resolve the old complete version
-    // during the swap window instead of a mixed listing.
     val bootstrap = currentVersion(ref).isEmpty &&
       (!filesystem.exists(target) || listDataFiles(target).isEmpty)
-    if (!bootstrap && currentVersion(ref).isEmpty) ensureLogLocked(ref)
-    // IDENTITY columns assign inside the lock: the high-water read and
-    // its advance ride THIS commit's meta line (no-op on bootstrap —
-    // nothing is committed yet, so no declaration can exist)
-    val (dfI0, hwMeta, idCleanup) = applyIdentityLocked(ref, df,
-      allowSupplied = internalRewrite)
+    val parent = if (bootstrap) None else Some(ensureLogLocked(ref))
+    // a full replace writes every physical file fresh from df's
+    // declared schema: dropped-column tombstones clear — the bytes
+    // they guarded are gone, the names are safe to re-add
+    val clearDropped = parent.toSeq.flatMap(s => commitMeta(ref, s.version).keys)
+      .filter(_.startsWith(Warehouse.DroppedMetaPrefix)).map(_ -> "").toMap
+    val ndvMeta =
+      if (ndvColumns.isEmpty) Map.empty[String, String]
+      else Map(Warehouse.NdvColumnsMeta -> ndvColumns.mkString(","))
     // COLUMN MAPPING: a full replace may reshape the schema — declared
     // names keep their field ids, new columns mint fresh ones, and the
     // id high-water advances in this commit
-    val (dfI, mapMeta0) = fieldIdsForReplace(ref, dfI0)
-    // NDV declaration rides the commit as carried meta: one overwrite
-    // declaring it keeps every later stats commit collecting per-file
-    // NDV (the scan job) for the table's life — see [[ndvStatsLive]]
-    val mapMeta =
-      if (ndvColumns.isEmpty) mapMeta0
-      else mapMeta0 + (Warehouse.NdvColumnsMeta -> ndvColumns.mkString(","))
-    val nonce = System.nanoTime().toString
-    val tmp = new Path(path(ref) + s".tmp-$nonce")
-    val writeDir =
-      if (staticPartitions.isEmpty) tmp
-      else new Path(tmp,
-        staticPartitions.map { case (k, v) => s"$k=$v" }.mkString("/"))
-    val writer = if (partitionBy.isEmpty) dfI.write else dfI.write.partitionBy(partitionBy: _*)
-    graft.util.PhaseTimer.time("wh.data") {
-      writer.mode("overwrite").parquet(writeDir.toString)
-    }
-    try {
-      // bloom presence is a durable table property: requested once via
-      // bloomColumns, preserved by every later stats-maintaining write
-      // (full rewrites here read the pre-swap manifest; incremental
-      // replaceDataFiles mirrors the manifest schema the same way).
-      // Durability includes statsColumns NARROWING: a prior bloom
-      // column missing from this write's stats set is auto-extended
-      // into it (blooms ride on min/max rows), so equality skipping
-      // never lapses silently — only a column leaving the SCHEMA ends
-      // its bloom, and that is warned.
-      val stagedStats = if (statsColumns.isEmpty) None else {
-        val priorBlooms = manifestDf(path(ref)).toSeq.flatMap(
-          _.columns.filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
-        val (carryable, lapsed) = priorBlooms.partition(dfI.columns.contains)
-        if (lapsed.nonEmpty)
-          Warehouse.log.warn(s"$ref: bloom column(s) " +
-            s"${lapsed.mkString(",")} left the schema; their equality " +
-            "skipping lapses with this overwrite")
-        writeStats(ref, tmp.toString, (statsColumns ++ carryable).distinct,
-          (bloomColumns ++ carryable).distinct, ndvColumns)
-      }
-      // CHECK constraints validate the staged files before anything
-      // moves (partition dirs under tmp restore their columns; the
-      // declared schema keeps an empty TRUNCATE stage readable); a
-      // bootstrap has no committed meta, so no constraints can exist
-      validateConstraintsLocked(ref,
-        spark.read.schema(dfI.schema).parquet(tmp.toString))
-      val stagedStatuses = listDataFileStatuses(tmp)
-      val staged = stagedStatuses.map(_.getPath)
-      val stagedBase = filesystem.makeQualified(tmp).toUri.getPath
-      val rels = staged.map(p => filesystem.makeQualified(p).toUri.getPath
-        .stripPrefix(stagedBase).stripPrefix("/"))
-      // (bytes, mtime) from the staging listing; rename preserves both
-      val relMeta = rels.zip(stagedStatuses).map { case (r, st) =>
-        r -> (st.getLen, st.getModificationTime)
-      }.toMap
-      if (bootstrap) {
-        require(changes.isEmpty,
-          s"overwrite($ref) with change files needs an existing committed " +
-            "table — a bootstrap IS the feed's base (derived as inserts)")
-        // drop metadata-only leftovers (a crashed writer's journal, an
-        // empty partition skeleton) so the rename lands cleanly; no
-        // data files exist, so nothing readable is lost
-        if (filesystem.exists(target)) filesystem.delete(target, true)
-        if (!filesystem.rename(tmp, target))
-          throw new RuntimeException(s"failed to move staged bootstrap into $ref")
-        // crash between rename and commit leaves a COMPLETE logless
-        // dir: plain reads see all rows, the next writer adopts it
-        commitLocked(ref, dfI.schema.json, rels,
-          Warehouse.withOp(meta ++ hwMeta ++ mapMeta, "OVERWRITE"), relMeta)
-        if (statsColumns.nonEmpty) {
-          stagedStats.foreach { case (sch, rows, part) =>
-            seedManifestCache(path(ref), sch, rows, Set(part)) }
-          registerStatsAt(path(ref))
-        } else TableStatsRegistry.invalidate(path(ref))
-      } else {
-        // precise change files (when the caller computed them — e.g. a
-        // merge falling back to a full rewrite) land before the moves;
-        // without them a full replace still derives as delete+insert
-        val cdcMeta = changes.fold(Map.empty[String, String])(
-          stageCdcLocked(ref, currentVersion(ref).getOrElse(0L), _))
-        // intent journal BEFORE any file lands: a crash pre-commit leaves
-        // only unreferenced stragglers, which the next writer's recovery
-        // (or vacuum) removes — readers never saw them
-        writeTxnJournal(ref, rels, Nil)
-        rels.zip(staged).foreach { case (r, f) =>
-          val dest = new Path(target, r)
-          filesystem.mkdirs(dest.getParent)
-          if (!filesystem.rename(f, dest))
-            throw new RuntimeException(s"failed to move $r into $ref")
-        }
-        // a full replace writes every physical file fresh from df's
-        // declared schema: dropped-column tombstones clear — the bytes
-        // they guarded are gone, the names are safe to re-add
-        val clearDropped = currentVersion(ref)
-          .map(v => commitMeta(ref, v).keys
-            .filter(_.startsWith(Warehouse.DroppedMetaPrefix))
-            .map(_ -> "").toMap)
-          .getOrElse(Map.empty[String, String])
-        commitLocked(ref, dfI.schema.json, rels,
-          clearDropped ++ Warehouse.withOp(meta ++ hwMeta ++ mapMeta ++ cdcMeta, "OVERWRITE"),
-          relMeta)
-        // manifest follows the commit; a crash in between leaves a stale
-        // manifest, which pruning tolerates by construction (entries for
-        // retired files never match the live list, unknown files are kept)
-        if (statsColumns.nonEmpty) {
-          publishManifest(ref, (new Path(tmp, statsDir), stagedStats))
-          registerStatsAt(path(ref))
-        } else {
-          // described retired files only
-          filesystem.delete(new Path(target, statsDir), true)
-          TableStatsRegistry.invalidate(path(ref))
-        }
-        filesystem.delete(new Path(target, txnFile), false)
-      }
-    } finally {
-      idCleanup()
-      filesystem.delete(tmp, true)
-      ()
+    val (df, mapMeta) = fieldIdsForReplace(ref, df0)
+    withStage(ref, "overwrite") { stage =>
+      val (staged, hwMeta) = stageFrame(ref, df, stage,
+        if (staticPartitions.isEmpty) None
+        else Some(staticPartitions.map { case (k, v) => s"$k=$v" }.mkString("/")),
+        partitionBy, rewrite = internalRewrite, validate = true)
+      land(ref, parent, Nil, staged, Some((statsColumns, bloomColumns, ndvColumns)),
+        clearDropped ++ Warehouse.withOp(meta ++ hwMeta ++ mapMeta ++ ndvMeta, "OVERWRITE"),
+        changes, None)
     }
     }
+    ()
   }
 
   /** APPEND commit — `INSERT INTO` semantics, the write shape the SQL
-    * catalog's `SupportsWrite` routes through: stage `df`'s files,
-    * move them into the table, and commit a version listing the
-    * previous files PLUS the new ones. Nothing is retired, so under
-    * delta encoding a small insert into a huge table writes O(insert)
-    * log bytes. Same protocol as every other write: writer lock,
-    * crash recovery first, intent journal before any file lands, the
-    * log append as the atomic commit point, stats manifest maintained
-    * (new-file rows appended, table bloom property mirrored).
+    * catalog's `SupportsWrite` routes through: stage `df`'s files and
+    * [[land]] a version listing the previous files PLUS the new ones.
+    * Nothing is retired, so under delta encoding a small insert into a
+    * huge table writes O(insert) log bytes, and the stats manifest
+    * grows by one part (see [[planManifest]]).
     *
-    * Partitioned layouts are honored: the committed file list's
-    * `k=v/` directory components name the partition columns, and the
-    * staged write routes rows through `partitionBy` on them — an
-    * insert into a date-partitioned table lands inside its partitions
-    * and partition pruning keeps working. `df` must carry the
-    * partition columns (the SQL table schema exposes them, so a SQL
-    * INSERT always does). Returns the committed version.
+    * Partitioned layouts are honored: rows route through `partitionBy`
+    * on the committed layout ([[layoutOf]]), so an insert into a
+    * date-partitioned table lands inside its partitions and partition
+    * pruning keeps working. `df` must carry the partition columns (the
+    * SQL table schema exposes them, so a SQL INSERT always does).
+    * Returns the committed version.
     */
   def append(ref: TableRef, df0: DataFrame,
              meta: Map[String, String] = Map.empty): Long = withWriterLock(ref) {
-    // omitted DEFAULT columns materialize, then omitted GENERATED
-    // columns compute (a generation may read a defaulted column)
-    val df = applyGenerated(ref, applyDefaults(ref, df0))
     recoverLocked(ref)
     require(exists(ref) || currentVersion(ref).nonEmpty,
       s"$ref does not exist — append needs a committed table (overwrite creates)")
     val snap = ensureLogLocked(ref)
-    val tablePath = new Path(path(ref))
-    val filesystem = fs(tablePath)
-    // partition columns from the committed layout: ordered k=v
-    // directory components of any file's relative path — files-first,
-    // with the CREATE TABLE declared layout ([[PartitionByMeta]]) as
-    // the authority only while the table is still empty (a fileless
-    // createTable commit has no paths to derive from)
-    val partCols: Seq[String] =
-      if (snap.files.nonEmpty) Warehouse.partDirCols(snap.files)
-      else metaColumns(ref, Warehouse.PartitionByMeta)
-    val missingParts = partCols.filterNot(df.columns.contains)
-    require(missingParts.isEmpty,
-      s"append to $ref needs partition column(s) ${missingParts.mkString(",")} " +
-        "in the frame (the table is directory-partitioned on them)")
-    // IDENTITY columns assign here, inside the lock: the high-water
-    // read and its advance ride THIS commit's meta line
-    val (dfI0, hwMeta, idCleanup) =
-      applyIdentityLocked(ref, df, allowSupplied = false)
-    val dfI = withFieldIds(ref, dfI0) // mapped tables write field ids
-    val nonce = System.nanoTime().toString
-    val stage = new Path(path(ref) + s".tmp-append-$nonce")
-    try {
-      val writer =
-        if (partCols.isEmpty) dfI.write else dfI.write.partitionBy(partCols: _*)
-      graft.util.PhaseTimer.time("wh.data") {
-        writer.parquet(stage.toString)
-      }
-      // CHECK constraints validate the staged batch before any move
-      validateConstraintsLocked(ref,
-        spark.read.schema(dfI.schema).parquet(stage.toString))
-      val stagedStatuses = listDataFileStatuses(stage)
-      val stagedBase = filesystem.makeQualified(stage).toUri.getPath
-      val rels = stagedStatuses.map(st =>
-        filesystem.makeQualified(st.getPath).toUri.getPath
-          .stripPrefix(stagedBase).stripPrefix("/"))
-      // manifest maintenance: the append-part fast path extends the
-      // manifest with ONE new part post-commit (O(insert), the whole
-      // point of an append commit); schema drift or too many parts
-      // fall back to the pre-built rewrite, swapped in post-commit
-      // declared stats columns (CREATE TABLE TBLPROPERTIES) engage only
-      // while the table is empty and manifestless: the first append
-      // BOOTSTRAPS the manifest; thereafter the manifest is the
-      // authority, exactly as for overwrite-created tables
-      val declaredStats =
-        if (snap.files.nonEmpty) Nil
-        else metaColumns(ref, Warehouse.StatsColumnsMeta)
-      val statCols = (statColumns(ref) ++ declaredStats).distinct
-        .filter(dfI.columns.contains)
-      val oldManifest =
-        if (statCols.isEmpty || rels.isEmpty) None else manifestDf(path(ref))
-      val oldBlooms = oldManifest.toSeq.flatMap(_.columns
-        .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
-      val appendPart = oldManifest.exists(old =>
-        canAppendManifestPart(tablePath, old.columns.toSeq,
-          statsColumnsOf(statCols, oldBlooms)) &&
-          manifestTypesMatch(old, dfI.schema, statCols))
-      val manifestTmp =
-        if (appendPart) None
-        else oldManifest match {
-          case Some(old) =>
-            // staged rel paths (partitionBy subdirs included) equal the
-            // committed rel paths — the move preserves them
-            val newStats = footerOrScan(ref, rels,
-              stagedStatuses.map(_.getPath), statCols, oldBlooms) {
-              fileStats(spark.read.parquet(stage.toString),
-                stage.toString, statCols, oldBlooms)
-            }
-            Some(stageManifest(ref, unionManifest(old, newStats),
-              (snap.files.size + rels.size).toLong))
-          case None if declaredStats.nonEmpty && statCols.nonEmpty
-              && rels.nonEmpty =>
-            // manifest bootstrap for a createTable-declared layout
-            val blooms = metaColumns(ref, Warehouse.BloomColumnsMeta)
-              .filter(statCols.contains)
-            val newStats = footerOrScan(ref, rels,
-              stagedStatuses.map(_.getPath), statCols, blooms) {
-              fileStats(spark.read.parquet(stage.toString),
-                stage.toString, statCols, blooms)
-            }
-            Some(stageManifest(ref, newStats, rels.size.toLong))
-          case None => None
-        }
-      writeTxnJournal(ref, rels, Nil)
-      rels.zip(stagedStatuses).foreach { case (r, st) =>
-        val dest = new Path(tablePath, r)
-        filesystem.mkdirs(dest.getParent)
-        if (!filesystem.rename(st.getPath, dest))
-          throw new RuntimeException(s"failed to move $r into $ref")
-      }
-      val v = commitLocked(ref, snap.schemaJson, snap.files ++ rels,
-        Warehouse.withOp(meta ++ hwMeta, "APPEND"),
-        snap.fileMeta ++ rels.zip(stagedStatuses).map { case (r, st) =>
-          r -> (st.getLen, st.getModificationTime)
-        })
-      if (appendPart) {
-        // stats over the files at their FINAL rel paths; a crash
-        // before this write leaves missing rows, which consumers
-        // treat conservatively (keep-the-file / scan fallback)
-        val finalStats = footerOrScan(ref, rels,
-          rels.map(r => new Path(tablePath, r)), statCols, oldBlooms) {
-          fileStats(
-            spark.read.parquet(rels.map(r =>
-              new Path(tablePath, r).toString): _*),
-            path(ref), statCols, oldBlooms)
-        }
-        graft.util.PhaseTimer.time("wh.manifest") {
-          appendManifestPart(tablePath, finalStats)
-        }
-        if (!registerStatsAt(path(ref)))
-          TableStatsRegistry.invalidate(path(ref))
-      }
-      manifestTmp.foreach { staged =>
-        publishManifest(ref, staged)
-        if (!registerStatsAt(path(ref)))
-          TableStatsRegistry.invalidate(path(ref))
-      }
-      if (!appendPart && manifestTmp.isEmpty)
-        TableStatsRegistry.invalidate(path(ref))
-      filesystem.delete(new Path(tablePath, txnFile), false)
-      v
-    } finally {
-      idCleanup()
-      filesystem.delete(stage, true)
-      ()
+    withStage(ref, "append") { stage =>
+      val (staged, hwMeta) = stageFrame(ref, df0, stage, None,
+        layoutOf(ref, snap), rewrite = false, validate = true)
+      land(ref, Some(snap), snap.files, staged, None,
+        Warehouse.withOp(meta ++ hwMeta, "APPEND"), None, None)
     }
   }
 
@@ -2166,6 +2212,9 @@ final class Warehouse(spark: SparkSession, val root: String,
           .map(r => r.getString(0) -> r.getLong(1)).toMap
       case _ => Map.empty
     }
+
+  /** Test-only interleave hook for [[copyInto]] — see the seam inside. */
+  private[catalog] var copyIntoInterleave: () => Unit = () => ()
 
   /** Idempotent FILE-LEVEL batch ingestion (Delta's `COPY INTO`): load
     * from `sourceDir` only the files no previous [[copyInto]] into
@@ -2201,9 +2250,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     * atomically with the data. Returns (filesLoaded, rowsLoaded,
     * version).
     */
-  /** Test-only interleave hook for [[copyInto]] — see the seam inside. */
-  private[catalog] var copyIntoInterleave: () => Unit = () => ()
-
   def copyInto(ref: TableRef, sourceDir: String,
                format: String = "parquet",
                options: Map[String, String] = Map.empty,
@@ -2840,7 +2886,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   private def swapManifest(ref: TableRef, next: DataFrame): Unit = {
     publishManifest(ref, stageManifest(ref, next,
-      snapshot(ref).map(_.files.size.toLong).getOrElse(Long.MaxValue)))
+      snapshot(ref).map(_.files.size.toLong).getOrElse(Long.MaxValue),
+      new Path(path(ref), s"$statsDir.tmp-${System.nanoTime()}")))
     if (!registerStatsAt(path(ref)))
       TableStatsRegistry.invalidate(path(ref))
   }
@@ -3716,7 +3763,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * after a checkpoint-recovery restart) sees `committed >= epochId`,
     * applies nothing, and just sweeps its re-staged files — the Delta
     * sink's idempotent-txn protocol. Everything else is the append
-    * protocol verbatim: writer lock (a streaming epoch and a Scala
+    * protocol ([[land]]): writer lock (a streaming epoch and a Scala
     * merge serialize), crash recovery, intent journal before any file
     * lands, delta-encoded O(batch) log append, stats-manifest part
     * extension. `stagedRels` MUST be the rel paths from the COMMITTED
@@ -3762,84 +3809,23 @@ final class Warehouse(spark: SparkSession, val root: String,
       snap.version
     } else try {
       sweepStaleStages()
-      // CHECK constraints validate exactly the committed tasks' staged
-      // files (never a dead attempt's partial) before any move
-      validateConstraintsLocked(ref, spark.read
-        .schema(org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .option("basePath", stage.toString)
-        .parquet(stagedRels.map(r => new Path(stage, r).toString): _*))
-      writeTxnJournal(ref, stagedRels, Nil)
-      stagedRels.foreach { r =>
-        val dest = new Path(tablePath, r)
-        filesystem.mkdirs(dest.getParent)
-        if (!filesystem.rename(new Path(stage, r), dest))
-          throw new RuntimeException(
-            s"failed to move staged stream file $r into $ref")
-      }
-      val destMeta = stagedRels.map { r =>
-        val st = filesystem.getFileStatus(new Path(tablePath, r))
-        r -> (st.getLen, st.getModificationTime)
-      }
-      val statCols = statColumns(ref)
-        .filter(snapSchemaFieldNames(snap).contains)
-      val oldManifest =
-        if (statCols.isEmpty) None else manifestDf(path(ref))
-      val oldBlooms = oldManifest.toSeq.flatMap(_.columns
-        .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
-      val v =
-        if (replaceAll)
-          commitLocked(ref, snap.schemaJson, stagedRels,
-            Warehouse.withOp(Map(txnKey -> epochId.toString), "STREAM"),
-            destMeta.toMap)
-        else
-          commitLocked(ref, snap.schemaJson, snap.files ++ stagedRels,
-            Warehouse.withOp(Map(txnKey -> epochId.toString), "STREAM"),
-            snap.fileMeta ++ destMeta)
-      // stats manifest follows the commit (crash in between leaves
-      // missing rows — consumers degrade conservatively): append-part
-      // fast path when schema-compatible, else a rewrite mirroring
-      // append's; a replace swaps in a fresh manifest
-      if (statCols.nonEmpty && stagedRels.nonEmpty) {
-        val newStats = footerOrScan(ref, stagedRels,
-          stagedRels.map(r => new Path(tablePath, r)), statCols, oldBlooms) {
-          fileStats(spark.read.parquet(stagedRels.map(r =>
-            new Path(tablePath, r).toString): _*),
-            path(ref), statCols, oldBlooms)
-        }
-        // type check against the manifest frame itself (min_ types ==
-        // the staged data's column types on both derivation paths) —
-        // avoids materializing a read just for its schema
-        val appendPart = !replaceAll && oldManifest.exists(old =>
-          canAppendManifestPart(tablePath, old.columns.toSeq,
-            statsColumnsOf(statCols, oldBlooms)) &&
-            statCols.forall(c => !old.columns.contains(s"min_$c") ||
-              newStats.schema(s"min_$c").dataType ==
-                old.schema(s"min_$c").dataType))
-        if (appendPart) appendManifestPart(tablePath, newStats)
-        else {
-          val next =
-            if (replaceAll) newStats
-            else oldManifest.map(unionManifest(_, newStats))
-              .getOrElse(newStats)
-          publishManifest(ref, stageManifest(ref, next,
-            (if (replaceAll) 0L else snap.files.size.toLong) +
-              stagedRels.size.toLong))
-        }
-        if (!registerStatsAt(path(ref)))
-          TableStatsRegistry.invalidate(path(ref))
-      } else TableStatsRegistry.invalidate(path(ref))
-      filesystem.delete(new Path(tablePath, txnFile), false)
-      v
+      // adopt exactly the committed tasks' files (never a dead
+      // attempt's partial): validated, then landed
+      val staged = stagedFiles(ref, stage, Some(stagedRels),
+        committedSchema(snap), validate = true)
+      land(ref, Some(snap), if (replaceAll) Nil else snap.files, staged,
+        if (!replaceAll) None
+        else Some((statColumns(ref).filter(staged.schema.fieldNames.contains), Nil, Nil)),
+        Warehouse.withOp(Map(txnKey -> epochId.toString), "STREAM"), None, None)
     } finally {
       filesystem.delete(stage, true)
       ()
     }
   }
 
-  private def snapSchemaFieldNames(snap: TableSnapshot): Set[String] =
+  private def committedSchema(snap: TableSnapshot): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** Current table schema WITHOUT opening data files: the committed
     * snapshot carries the schema as JSON, so logged tables answer from
@@ -4017,18 +4003,15 @@ final class Warehouse(spark: SparkSession, val root: String,
     * and update callers localCheckpoint theirs): this method evaluates
     * positions, rows and changes in separate actions, and un-pinned
     * window tie-breaks could otherwise supersede one row and append
-    * another. CHECK constraints
-    * validate the staged new rows; CDF change files land atomically;
-    * the stats manifest drops retired files and gains the new files'
-    * entries; the planner stats are invalidated, since manifest row
-    * counts do not subtract vectors.
+    * another. The new rows stage and [[land]] like every added file
+    * (validated, journaled, manifest maintained), with the commit
+    * carrying the version's complete vector map.
     */
   private[graft] def dvReplace(ref: TableRef, planned: TableSnapshot,
                                positions: Seq[String] => DataFrame,
-                               newRows0: Option[DataFrame],
+                               newRows: Option[DataFrame],
                                meta: Map[String, String],
                                changes: Seq[String] => Option[DataFrame]): Long = {
-    val newRows = newRows0.map(withFieldIds(ref, _)) // mapped: field ids
     // superseded-row counts per file (bounded driver action: one row
     // per touched file) drive the metadata-retirement fast path
     val perFileSup = positions(planned.files).groupBy(col("file"))
@@ -4072,79 +4055,14 @@ final class Warehouse(spark: SparkSession, val root: String,
           val rel = f"$dvDir/v${snap.version + 1}%08d"
           (snap.dvMap -- dead) ++ partial.map(_ -> rel)
         }
-      // stage the new rows (partition layout honored), validate CHECK
-      // constraints over the staged bytes, journal, move in; files that
-      // hold no row (Spark writes one for an empty frame) stay behind
-      val stage = new Path(path(ref) + s".tmp-dvwrite-${System.nanoTime()}")
-      try {
-        val staged = newRows.toSeq.flatMap { df =>
-          val partCols = Warehouse.partDirCols(snap.files)
-          val missingParts = partCols.filterNot(df.columns.contains)
-          require(missingParts.isEmpty,
-            s"DV write to $ref needs partition column(s) " +
-              s"${missingParts.mkString(",")} in the new rows")
-          val writer =
-            if (partCols.isEmpty) df.write else df.write.partitionBy(partCols: _*)
-          writer.parquet(stage.toString)
-          validateConstraintsLocked(ref,
-            spark.read.schema(df.schema).parquet(stage.toString))
-          listDataFileStatuses(stage).filter { st =>
-            val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st, hadoopConf))
-            try footer.getRecordCount > 0 finally footer.close()
-          }
-        }
-        val stagedBase = filesystem.makeQualified(stage).toUri.getPath
-        val adds = staged.map(st =>
-          filesystem.makeQualified(st.getPath).toUri.getPath
-            .stripPrefix(stagedBase).stripPrefix("/"))
-        if (touched.nonEmpty || adds.nonEmpty) {
-          if (adds.nonEmpty) writeTxnJournal(ref, adds, Nil)
-          adds.zip(staged).foreach { case (r, st) =>
-            val dest = new Path(tablePath, r)
-            filesystem.mkdirs(dest.getParent)
-            if (!filesystem.rename(st.getPath, dest))
-              throw new RuntimeException(s"failed to move $r into $ref")
-          }
-          // CDF: atomic with the commit, same contract as every writer
-          val cdcMeta = changes(touched).fold(Map.empty[String, String])(
-            stageCdcLocked(ref, snap.version, _))
-          val deadSet = dead.toSet
-          commitLocked(ref, snap.schemaJson,
-            snap.files.filterNot(deadSet.contains) ++ adds,
-            cdcMeta ++ meta,
-            (snap.fileMeta -- dead) ++ adds.zip(staged).map { case (r, st) =>
-              r -> (st.getLen, st.getModificationTime)
-            }, dv = Some(newDvMap))
-          filesystem.delete(new Path(tablePath, txnFile), false)
-          // stats manifest: retired files leave; new files' entries join
-          // (post-commit, same crash contract as the append part path —
-          // missing rows only cost an honest fallback)
-          if (dead.nonEmpty || adds.nonEmpty) {
-            val statCols = statColumns(ref)
-            manifestDf(path(ref)).foreach { old =>
-              val kept = if (dead.isEmpty) old
-                else old.filter(!col("file").isin(dead: _*))
-              val oldBlooms = old.columns.toSeq
-                .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_"))
-              val next =
-                if (adds.isEmpty || statCols.isEmpty) kept
-                else unionManifest(kept, footerOrScan(ref, adds,
-                  adds.map(a => new Path(tablePath, a)), statCols, oldBlooms) {
-                  fileStats(spark.read.parquet(adds.map(a =>
-                    new Path(tablePath, a).toString): _*),
-                    path(ref), statCols, oldBlooms)
-                })
-              publishManifest(ref, stageManifest(ref, next,
-                snap.files.size.toLong + adds.size.toLong))
-            }
-          }
-          TableStatsRegistry.invalidate(path(ref))
-        }
-      } finally {
-        filesystem.delete(stage, true)
-        ()
+      withStage(ref, "dvwrite") { stage =>
+        val staged = newRows.fold(stagedFiles(ref, stage, Some(Nil),
+            committedSchema(snap), validate = false))(
+          stageFrame(ref, _, stage, None, layoutOf(ref, snap), rewrite = true,
+            validate = true)._1)
+        if (touched.nonEmpty || staged.rels.nonEmpty)
+          land(ref, Some(snap), snap.files.filterNot(dead.toSet), staged, None,
+            meta, changes(touched), Some(newDvMap))
       }
     }
     perFileSup.values.sum
@@ -4314,9 +4232,15 @@ final class Warehouse(spark: SparkSession, val root: String,
       Map(Warehouse.OpMeta -> "UPDATE"), _ => changes)
   }
 
-  /** K4 TRUNCATE (lib/checker_handler.py:119): keep the table, drop rows. */
+  /** K4 TRUNCATE (lib/checker_handler.py:119): keep the table, drop
+    * rows. Stats and bloom columns are table properties and stay: the
+    * empty version keeps an empty manifest over the same columns, so
+    * file skipping (and the incremental MERGE it enables) resumes with
+    * the next write.
+    */
   def truncate(ref: TableRef): Unit =
     if (exists(ref)) overwrite(ref, read(ref).limit(0),
+      statsColumns = statColumns(ref), bloomColumns = bloomColumns(ref),
       meta = Map(Warehouse.OpMeta -> "TRUNCATE"))
 
   def drop(ref: TableRef): Unit = {
@@ -4485,52 +4409,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   private val statsDir = "_graft_stats"
 
-  /** Collect per-file min/max for `statsColumns` over freshly written
-    * data and persist them as a typed parquet manifest inside the table
-    * directory (written pre-swap, so manifest and data move atomically).
-    *
-    * The collection pass reads ONLY the stat columns (column-pruned
-    * parquet scan — IO proportional to the indexed columns, not the
-    * table) and aggregates per input file: the same write-time stats
-    * discipline Delta/Iceberg use, kept engine-native. Keyed by the
-    * file's TABLE-RELATIVE PATH (which the rename swap preserves):
-    * `partitionBy` layouts reuse one task's part-file basename across
-    * partition directories, so a basename key would silently merge
-    * distinct files into one row — killing per-file pruning and the
-    * metadata-aggregate provability exactly on partitioned tables.
-    */
-  /** Compute per-file stats for the staged files under `dir` and write
-    * the manifest into `dir/_graft_stats`. Returns the manifest
-    * (schema, rows) when it was produced through the driver-local
-    * write path, so the caller can seed the manifest cache post-commit
-    * instead of paying a read-back job; None when the distributed
-    * fallback wrote it (oversized commit).
-    */
-  private def writeStats(ref: TableRef, dir: String, statsColumns: Seq[String],
-                         bloomColumns: Seq[String],
-                         ndvColumns: Seq[String] = Nil)
-      : Option[(org.apache.spark.sql.types.StructType, Seq[Row], String)] =
-    graft.util.PhaseTimer.time("wh.stats") {
-      val statuses = listDataFileStatuses(new Path(dir))
-      val basePath = new Path(dir)
-      val base = fs(basePath).makeQualified(basePath).toUri.getPath
-        .stripSuffix("/")
-      val keys = statuses.map(st =>
-        fs(st.getPath).makeQualified(st.getPath).toUri.getPath
-          .stripPrefix(base).stripPrefix("/"))
-      val manifest = footerOrScan(ref, keys, statuses.map(_.getPath),
-        statsColumns, bloomColumns, ndvColumns) {
-        val data = spark.read.parquet(dir)
-        val missing = statsColumns.filterNot(data.columns.contains)
-        require(missing.isEmpty,
-          s"stats column(s) not in table: ${missing.mkString(",")} " +
-            "(partition columns carry no file stats — prune on the partition instead)")
-        fileStats(data, dir, statsColumns, bloomColumns)
-      }
-      writeManifestTo(manifest, new Path(s"$dir/$statsDir"),
-        expectRows = statuses.size.toLong)
-    }
-
   /** Per-file stats for freshly written files: derived DRIVER-SIDE from
     * their parquet footers ([[FooterStats]] — zero Spark jobs) when the
     * commit qualifies, else the column-pruned `scan` job as before.
@@ -4546,7 +4424,7 @@ final class Warehouse(spark: SparkSession, val root: String,
   private def footerOrScan(ref: TableRef, keys: Seq[String],
                            absPaths: Seq[Path], statsColumns: Seq[String],
                            bloomColumns: Seq[String],
-                           ndvColumns: Seq[String] = Nil)
+                           ndvColumns: Seq[String])
                           (scan: => DataFrame): DataFrame = {
     val footer =
       if (bloomColumns.nonEmpty || ndvColumns.nonEmpty || keys.isEmpty ||
@@ -4614,37 +4492,32 @@ final class Warehouse(spark: SparkSession, val root: String,
       Some((manifest.schema, rows, part))
     }
 
-  /** A stats manifest written beside the live one but not yet visible:
-    * its directory, plus the rows to seed the manifest cache with when
-    * [[writeManifestTo]] wrote it from the driver.
-    */
-  private type StagedManifest =
-    (Path, Option[(org.apache.spark.sql.types.StructType, Seq[Row], String)])
-
-  /** Stage `next` as the table's next manifest (under the `wh.manifest`
-    * timer); [[publishManifest]] swaps it in. `expectRows` bounds the
-    * post-commit file count, as for [[writeManifestTo]].
+  /** Stage `next` in `tmp` as the table's next manifest (under the
+    * `wh.manifest` timer); [[publishManifest]] swaps it in. `expectRows`
+    * bounds the post-commit file count, as for [[writeManifestTo]].
     */
   private def stageManifest(ref: TableRef, next: DataFrame,
-                            expectRows: Long): StagedManifest = {
-    val tmp = new Path(path(ref), s"$statsDir.tmp-${System.nanoTime()}")
+                            expectRows: Long, tmp: Path): StagedManifest =
     (tmp, graft.util.PhaseTimer.time("wh.manifest")(
       writeManifestTo(next, tmp, expectRows)))
-  }
 
   /** Swap a staged manifest in for the live one (delete + rename — the
     * crash-ordering-sensitive step every manifest writer shares; pruning
     * tolerates a crash in between, since stale entries never match the
-    * live file list) and seed the manifest cache with its rows.
-    * Registering or invalidating the planner stats stays with the caller.
+    * live file list) and seed the manifest cache with its rows. A
+    * manifest staged at the live path (a bootstrap's, renamed in with
+    * its directory) only seeds. Registering or invalidating the planner
+    * stats stays with the caller.
     */
   private def publishManifest(ref: TableRef, staged: StagedManifest): Unit = {
     val (tmp, seeded) = staged
     val live = new Path(path(ref), statsDir)
     val filesystem = fs(live)
-    filesystem.delete(live, true)
-    if (!filesystem.rename(tmp, live))
-      throw new RuntimeException(s"failed to swap stats manifest for $ref")
+    if (tmp != live) {
+      filesystem.delete(live, true)
+      if (!filesystem.rename(tmp, live))
+        throw new RuntimeException(s"failed to swap stats manifest for $ref")
+    }
     seeded.foreach { case (sch, rows, part) =>
       seedManifestCache(path(ref), sch, rows, Set(part)) }
   }
@@ -4690,11 +4563,15 @@ final class Warehouse(spark: SparkSession, val root: String,
   private val bloomWords = 64
   private val bloomBits = bloomWords * 64
 
-  /** Per-file stats rows (file key = path RELATIVE to `baseDir`, with
-    * `relPrefix` prepended when the staged flat files land inside a
-    * partition subdir; row count, min_c/max_c/ndv_c columns, plus
-    * bloom_c word arrays for `bloomColumns`) for the given frame — a
-    * column-pruned scan of only the stat columns. The approximate
+  /** Per-file stats rows (file key = path RELATIVE to `baseDir`, the
+    * staging directory whose layout the move preserves; row count,
+    * min_c/max_c/ndv_c columns, plus bloom_c word arrays for
+    * `bloomColumns`) for the given frame — a column-pruned scan of only
+    * the stat columns. Keyed by the RELATIVE PATH, never the basename:
+    * `partitionBy` layouts reuse one task's part-file basename across
+    * partition directories, so a basename key would silently merge
+    * distinct files into one row — killing per-file pruning and the
+    * metadata-aggregate provability exactly on partitioned tables. The approximate
     * per-file distinct count feeds the [[TableStatsRegistry]]
     * cardinality signal; the bloom word array feeds equality skipping
     * ([[readPrunedEq]]). A file whose URI unexpectedly escapes the
@@ -4711,8 +4588,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   private def fileStats(data: DataFrame, baseDir: String,
                         statsColumns: Seq[String],
-                        bloomColumns: Seq[String] = Nil,
-                        relPrefix: Option[String] = None): DataFrame = {
+                        bloomColumns: Seq[String]): DataFrame = {
     // per column: one word-array bloom built as `bloomWords` bit_or
     // aggregates (elementwise-OR of arrays has no native aggregate);
     // NULL values contribute no bits — equality lookup is non-null by
@@ -4734,11 +4610,9 @@ final class Warehouse(spark: SparkSession, val root: String,
       .stripSuffix("/")
     val noScheme = org.apache.spark.sql.functions.regexp_replace(
       input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-    val relRaw = when(noScheme.startsWith(base + "/"),
+    val rel = when(noScheme.startsWith(base + "/"),
         noScheme.substr(lit(base.length + 2), lit(Int.MaxValue)))
       .otherwise(element_at(split(noScheme, "/"), -1))
-    val rel = relPrefix.fold(relRaw)(d =>
-      org.apache.spark.sql.functions.concat(lit(d + "/"), relRaw))
     val probed = blooms.foldLeft(
         data.withColumn("__file", rel)) { (df, c) =>
       val h = s"xxhash64(`$c`)"
@@ -5443,96 +5317,84 @@ final class Warehouse(spark: SparkSession, val root: String,
       case Some((kept, _)) => readFiles(ref, kept)
     }
 
-  /** Stale-plan guard shared by [[replaceDataFiles]] and
-    * [[retireDataFiles]]: membership in the CURRENT version is the
-    * staleness witness (mere existence no longer is — retired files
-    * stay on disk for snapshot readers). A plan touching a file that
-    * left the version is provably computed from a superseded table
-    * state; failing loudly here is what turns a lost update into a
-    * retryable conflict.
+  /** Table-relative paths of `paths` (absolute), refusing a stale plan
+    * — the guard [[replaceDataFiles]] and [[retireDataFiles]] share:
+    * membership in the CURRENT version is the staleness witness (mere
+    * existence no longer is — retired files stay on disk for snapshot
+    * readers). A plan touching a file that left the version is provably
+    * computed from a superseded table state; failing loudly here, inside
+    * the lock and before any staging, is what turns a lost update into
+    * a retryable conflict.
     */
-  private def requireCurrentFiles(ref: TableRef, snap: TableSnapshot,
-                                  rels: Seq[String], action: String): Unit = {
-    val currentRels = snap.files.toSet
-    val staleMissing = rels.filterNot(currentRels.contains)
+  private def currentRels(ref: TableRef, snap: TableSnapshot,
+                          paths: Seq[String], action: String): Set[String] = {
+    val tablePath = new Path(path(ref))
+    val tableBase = fs(tablePath).makeQualified(tablePath).toUri.getPath
+    val rels = paths.map(p =>
+      new Path(p).toUri.getPath.stripPrefix(tableBase).stripPrefix("/"))
+    val staleMissing = rels.filterNot(snap.files.toSet)
     if (staleMissing.nonEmpty)
       throw new ConcurrentWriteException(
         s"table $ref changed since this $action was planned: " +
           s"${staleMissing.size} of ${rels.size} files are no longer part " +
           s"of version ${snap.version} (e.g. ${staleMissing.head}) — " +
           "re-read the table and re-plan")
+    rels.toSet
   }
 
   /** Retire files with NO replacement — the metadata-only half of
-    * [[replaceDataFiles]] for whole-file deletes (partition drop):
-    * no staging, no task launch, no data movement; one log append plus
-    * a manifest prune. (The replace path cannot express this: Spark
-    * writes one empty part file even for a zero-partition frame, which
-    * would turn a pure-metadata drop into a stray data file.) Same
-    * stale-plan guard as the replace path; crash-safe without a
-    * journal because retirement needs no physical action — the commit
-    * either landed or it didn't.
+    * [[replaceDataFiles]] for whole-file deletes (partition drop): no
+    * staging, no task launch, no data movement; one log append plus a
+    * manifest prune. Same stale-plan guard as the replace path;
+    * crash-safe without a journal because retirement needs no physical
+    * action — the commit either landed or it didn't.
     */
   def retireDataFiles(ref: TableRef, replaced: Seq[String],
                       meta: Map[String, String] = Map.empty): Unit =
     withWriterLock(ref) {
       recoverLocked(ref)
-      val tablePath = new Path(path(ref))
-      val filesystem = fs(tablePath)
       val snap = ensureLogLocked(ref)
-      val tableBase = filesystem.makeQualified(tablePath).toUri.getPath
-      def relOf(p: String): String =
-        new Path(p).toUri.getPath.stripPrefix(tableBase).stripPrefix("/")
-      val replacedRels = replaced.map(relOf)
-      requireCurrentFiles(ref, snap, replacedRels, "retirement")
-      val replacedSet = replacedRels.toSet
-      commitLocked(ref, snap.schemaJson,
-        snap.files.filterNot(replacedSet.contains),
-        Warehouse.withOp(meta, "REPLACE"), snap.fileMeta)
-      // manifest prune: drop the retired files' stats rows
-      val manifest = manifestDf(path(ref))
-      manifest.foreach { old =>
-        publishManifest(ref, stageManifest(ref,
-          old.filter(!col("file").isin(replacedRels: _*)),
-          snap.files.size.toLong))
-        // fresh registration — and when retirement emptied the table,
-        // the zero-row manifest is unregistrable: drop the registry
-        // entry rather than keep serving the pre-retire rowcount/NDVs
-        // JVM-wide until the next write
-        if (!registerStatsAt(path(ref)))
-          TableStatsRegistry.invalidate(path(ref))
+      val retired = currentRels(ref, snap, replaced, "retirement")
+      withStage(ref, "retire") { stage =>
+        land(ref, Some(snap), snap.files.filterNot(retired), stagedFiles(ref,
+          stage, Some(Nil), committedSchema(snap), validate = false), None,
+          Warehouse.withOp(meta, "REPLACE"), None, None)
       }
-      // registerStatsAt XOR invalidate, like every other write path
-      if (manifest.isEmpty) TableStatsRegistry.invalidate(path(ref))
+      ()
     }
 
   /** File-level replacement — the physical primitive behind incremental
     * MERGE (the behavior Delta's transaction log gives `MERGE INTO`:
     * rewrite only touched files, /root/reference/lib/ingestors.py:113-126):
-    * stage `replacement` as new data files, move them into the table,
-    * and commit a version that RETIRES `replaced` — every other file
-    * keeps its bytes and path, and the retired files stay on disk for
-    * snapshot readers until [[vacuum]]. The stats manifest is maintained
-    * (replaced entries dropped, new-file entries appended) so subsequent
-    * pruned reads and merges stay correct.
+    * stage `replacement` as new data files and [[land]] a version that
+    * RETIRES `replaced` — every other file keeps its bytes and path, and
+    * the retired files stay on disk for snapshot readers until
+    * [[vacuum]]. The stats manifest follows (replaced entries dropped,
+    * new-file entries added) so subsequent pruned reads and merges stay
+    * correct. Partitioned layouts route the replacement through
+    * `partitionBy` on the committed layout (an insert-only merge batch
+    * staged FLAT into a partition-dir table produced a mixed layout
+    * whose root-level rows partition discovery silently dropped); CHECK
+    * constraints validate it — except maintenance rewrites (compact /
+    * z-order), which only move rows that already passed.
     *
     * Crash contract: the log append IS the commit point. A crash before
     * it leaves only uncommitted stragglers — no version references them,
     * so readers never see a torn state (no duplicate rows, unlike the
     * pre-log design where add-new-then-crash exposed both old and new
-    * rows until healed). The write-ahead intent journal (`_graft_txn`,
-    * written atomically before the moves) lets [[recover]] delete those
-    * stragglers eagerly rather than waiting for vacuum; after a
-    * post-commit crash it simply drops the journal (the data is already
-    * consistent, retirement needs no physical action). Re-running the
-    * interrupted upsert converges either way (MergeSpec proves both
-    * arms).
+    * rows until healed). The write-ahead intent journal lets [[recover]]
+    * delete those stragglers eagerly rather than waiting for vacuum;
+    * after a post-commit crash it simply drops the journal (the data is
+    * already consistent, retirement needs no physical action).
+    * Re-running the interrupted upsert converges either way (MergeSpec
+    * proves both arms).
     *
     * @param subdir table-relative destination for the new files (e.g.
     *               `"bucket=0"`): partition-directory maintenance places
     *               rewritten files back inside their partition so
-    *               partition discovery still owns the layout. None =
-    *               the table root (flat tables).
+    *               partition discovery still owns the layout; the
+    *               replacement then carries no partition column. None =
+    *               routed by the committed layout.
     * @param changes row-level change files to commit ATOMICALLY with
     *                 the replacement (table schema + `_change_type`) —
     *                 the change-data-feed contract when this rewrite
@@ -5541,175 +5403,22 @@ final class Warehouse(spark: SparkSession, val root: String,
     *                 by `graft.cdc=1` on the commit.
     */
   def replaceDataFiles(ref: TableRef, replaced: Seq[String],
-                       replacement0: DataFrame,
+                       replacement: DataFrame,
                        subdir: Option[String] = None,
                        meta: Map[String, String] = Map.empty,
                        changes: Option[DataFrame] = None): Unit = withWriterLock(ref) {
     recoverLocked(ref)
-    val replacement = withFieldIds(ref, replacement0) // mapped: field ids
-    val tablePath = new Path(path(ref))
-    val destDir = subdir.fold(tablePath)(d => new Path(tablePath, d))
-    val filesystem = fs(tablePath)
     val snap = ensureLogLocked(ref)
-    val tableBase = filesystem.makeQualified(tablePath).toUri.getPath
-    def relOf(p: String): String =
-      new Path(p).toUri.getPath.stripPrefix(tableBase).stripPrefix("/")
-    val replacedRels = replaced.map(relOf)
-    // stale-plan guard inside the lock, before any staging (the lock
-    // serializes write WINDOWS, not plan freshness)
-    requireCurrentFiles(ref, snap, replacedRels, "replacement")
-    val nonce = System.nanoTime().toString
-    // SIBLING staging dir (same convention as overwrite's tmp): outside
-    // the table dir so concurrent scans never list it, yet not
-    // hidden-named, so it stays directly readable — a dot/underscore
-    // name inside the table would be filtered by Spark's own reads too
-    // (".tmp-" in the name keeps listTables skipping it)
-    val stage = new Path(path(ref) + s".tmp-merge-$nonce")
-    // partitioned layouts route the replacement through partitionBy
-    // (an insert-only merge batch staged FLAT into a partition-dir
-    // table produced a mixed layout whose root-level rows partition
-    // discovery silently dropped — the r16 rename spec caught it);
-    // subdir callers (per-partition-directory rewrites, band tables)
-    // are already scoped below the partition level and stay flat
-    val partCols: Seq[String] =
-      if (subdir.nonEmpty) Nil
-      else Warehouse.partDirCols(snap.files)
-    val missingParts = partCols.filterNot(replacement.columns.contains)
-    require(missingParts.isEmpty,
-      s"replaceDataFiles on $ref needs partition column(s) " +
-        s"${missingParts.mkString(",")} in the replacement (the table is " +
-        "directory-partitioned on them)")
-    try {
-      val writer =
-        if (partCols.isEmpty) replacement.write
-        else replacement.write.partitionBy(partCols: _*)
-      graft.util.PhaseTimer.time("wh.data") {
-        writer.parquet(stage.toString)
-      }
-      val newStatuses = listDataFileStatuses(stage)
-      val newFiles = newStatuses.map(_.getPath)
-      val stagedBase = filesystem.makeQualified(stage).toUri.getPath
-      // staged rel paths (partitionBy subdirs included) equal the
-      // committed rel paths — the move preserves them
-      def stagedRel(p: Path): String =
-        filesystem.makeQualified(p).toUri.getPath
-          .stripPrefix(stagedBase).stripPrefix("/")
-      // build the next manifest BEFORE touching data files (it reads
-      // the old manifest); swap it in last — see contract above.
-      // EXCEPT insert-only commits (a pure-append merge batch, the
-      // streaming-CDC hot path): nothing retires, so the manifest can
-      // be EXTENDED by appending one part file post-commit — O(new
-      // files) instead of an O(table) rewrite per insert.
-      val statCols = statColumns(ref).filter(replacement.columns.contains)
-      val oldManifest = if (statCols.isEmpty) None else manifestDf(path(ref))
-      // mirror the table's bloom property: new-file entries carry
-      // blooms exactly for the columns the old manifest blooms (an
-      // intersection below would silently drop the table's blooms)
-      val oldBlooms = oldManifest.toSeq.flatMap(_.columns
-        .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
-      val appendPart = replacedRels.isEmpty && newFiles.nonEmpty &&
-        oldManifest.exists(old => canAppendManifestPart(tablePath,
-          old.columns.toSeq, statsColumnsOf(statCols, oldBlooms)) &&
-          manifestTypesMatch(old, replacement.schema, statCols))
-      val manifestTmp =
-        if (appendPart) None
-        else oldManifest.map { old =>
-          val kept0 = if (replacedRels.isEmpty) old
-            else old.filter(!col("file").isin(replacedRels: _*))
-          // a retire-only replacement (e.g. deleteWhere dropping whole
-          // files) stages ZERO new files — there is nothing to stat and
-          // an empty-dir parquet read would fail schema inference
-          val next =
-            if (newFiles.isEmpty) kept0
-            else {
-              // staged files sit flat; their committed rel paths gain
-              // the partition subdir, and the manifest key must match
-              val keys = newFiles.map(f =>
-                subdir.fold(stagedRel(f))(d => s"$d/${stagedRel(f)}"))
-              val newStats = footerOrScan(ref, keys, newFiles,
-                statCols, oldBlooms) {
-                fileStats(spark.read.parquet(stage.toString),
-                  stage.toString, statCols, oldBlooms, relPrefix = subdir)
-              }
-              // unionManifest keeps only columns the new stats also
-              // carry (dropped stat columns fall away), null-backfills
-              // pre-rows/ndv manifests, and heals declared-type drift
-              unionManifest(kept0, newStats)
-            }
-          // upper bound on post-commit manifest rows: survivors + adds
-          stageManifest(ref, next,
-            (snap.files.size - replacedRels.size).max(0).toLong +
-              newFiles.size.toLong)
-        }
-      // CHECK constraints validate the staged replacement before any
-      // move — except maintenance rewrites (compact / z-order), which
-      // only move rows that already passed
-      val op = meta.getOrElse(Warehouse.OpMeta, "")
-      if (op != "COMPACT" && op != "ZORDER" && newFiles.nonEmpty)
-        validateConstraintsLocked(ref,
-          spark.read.schema(replacement.schema).parquet(stage.toString))
-      // change files land BEFORE the journal and the moves: a crash
-      // here leaves an unmarked orphan cdc dir (ignored by readers,
-      // clobbered by the version's eventual writer) and an untouched
-      // table. The changes frame may read the files being replaced —
-      // they are still in place.
-      val cdcMeta = changes.fold(Map.empty[String, String])(
-        stageCdcLocked(ref, snap.version, _))
-      // intent journal FIRST: table-relative add/del entries, atomic
-      // create — from here a crash anywhere is recoverable
-      val adds = newFiles.map { f =>
-        val rel = stagedRel(f)
-        subdir.fold(rel)(d => s"$d/$rel")
-      }
-      writeTxnJournal(ref, adds, replacedRels)
-      filesystem.mkdirs(destDir)
-      newFiles.foreach { f =>
-        val dest = new Path(destDir, stagedRel(f))
-        filesystem.mkdirs(dest.getParent)
-        if (!filesystem.rename(f, dest))
-          throw new RuntimeException(s"failed to move ${f.getName} into $ref")
-      }
-      // THE commit: survivors + adds. The replaced files are retired
-      // from the log but stay on disk — a reader that planned its scan
-      // against the previous version keeps every file it needs until
-      // vacuum. Schema carried forward: file replacement never changes it.
-      val replacedSet = replacedRels.toSet
-      commitLocked(ref, snap.schemaJson,
-        snap.files.filterNot(replacedSet.contains) ++ adds,
-        Warehouse.withOp(meta ++ cdcMeta, "REPLACE"),
-        // survivors keep their recorded sizes; adds record theirs from
-        // the staging listing (rename into the table preserves both)
-        snap.fileMeta ++ adds.zip(newStatuses).map { case (a, st) =>
-          a -> (st.getLen, st.getModificationTime)
-        })
-      if (appendPart) {
-        // stats over the files at their FINAL paths (the stage is
-        // gone); rel keys derive from the table base directly. A crash
-        // before this write leaves missing manifest rows — consumers
-        // keep unknown files and metadata aggregates fall back.
-        val finalStats = footerOrScan(ref, adds,
-          adds.map(a => new Path(tablePath, a)), statCols, oldBlooms) {
-          fileStats(
-            spark.read.parquet(adds.map(a =>
-              new Path(tablePath, a).toString): _*),
-            path(ref), statCols, oldBlooms)
-        }
-        appendManifestPart(tablePath, finalStats)
-        if (!registerStatsAt(path(ref)))
-          TableStatsRegistry.invalidate(path(ref))
-      }
-      manifestTmp.foreach { staged =>
-        publishManifest(ref, staged)
-        // same write-path contract as retireDataFiles: an unregistrable
-        // swapped manifest must not leave pre-replace stats live
-        if (!registerStatsAt(path(ref)))
-          TableStatsRegistry.invalidate(path(ref))
-      }
-      filesystem.delete(new Path(tablePath, txnFile), false)
-    } finally {
-      filesystem.delete(stage, true)
-      ()
+    val retired = currentRels(ref, snap, replaced, "replacement")
+    val op = meta.getOrElse(Warehouse.OpMeta, "")
+    withStage(ref, "merge") { stage =>
+      val (staged, _) = stageFrame(ref, replacement, stage, subdir,
+        if (subdir.nonEmpty) Nil else layoutOf(ref, snap), rewrite = true,
+        validate = op != "COMPACT" && op != "ZORDER")
+      land(ref, Some(snap), snap.files.filterNot(retired), staged, None,
+        Warehouse.withOp(meta, "REPLACE"), changes, None)
     }
+    ()
   }
 
   /** Whether an INSERT-ONLY commit may extend the stats manifest by
@@ -5789,10 +5498,6 @@ final class Warehouse(spark: SparkSession, val root: String,
           .forall(f => f.dataType == old.schema(s"min_$c").dataType)
     }
 
-  private def appendManifestPart(tablePath: Path, newStats: DataFrame): Unit =
-    graft.util.PhaseTimer.time("wh.manifest")(
-      appendManifestPartImpl(tablePath, newStats))
-
   /** Extend the manifest with one new part. When the existing manifest
     * is driver-local (the common, small case) the part is collected
     * and written from the driver — no Spark job — made visible
@@ -5800,7 +5505,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     * so the post-commit registry read needs no job either. Oversized
     * manifests keep the distributed append write.
     */
-  private def appendManifestPartImpl(tablePath: Path, newStats: DataFrame): Unit = {
+  private def appendManifestPart(tablePath: Path, newStats: DataFrame): Unit =
+    graft.util.PhaseTimer.time("wh.manifest") {
     val tp = tablePath.toString
     val dir = new Path(tablePath, statsDir)
     manifestLocalDf(tp) match {
@@ -5838,10 +5544,11 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   private val txnFile = "_graft_txn"
 
-  /** Write the [[replaceDataFiles]] intent journal atomically (tmp +
-    * rename): table-relative `add`/`del` entries describing the file
-    * replacement about to happen. Package-visible so the crash-recovery
-    * spec can fabricate the exact mid-sequence layouts.
+  /** Write the intent journal of a commit about to add files ([[land]],
+    * the one writer) atomically (tmp + rename): table-relative `add`
+    * entries for the files about to move in, `del` entries for the
+    * files the commit retires. Package-visible so the crash-recovery
+    * specs can fabricate the exact mid-sequence layouts.
     */
   private[graft] def writeTxnJournal(ref: TableRef, adds: Seq[String],
                                      dels: Seq[String]): Unit = {
@@ -5867,8 +5574,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * design, so nothing else needs touching. Logless directories keep
     * the legacy arms: roll FORWARD if every add landed (finish the
     * deletes) or BACK otherwise. Idempotent; called automatically by
-    * [[overwrite]], [[replaceDataFiles]], incremental MERGE, compaction
-    * and [[vacuum]]. The post-recovery stats manifest may be stale,
+    * every writer, by compaction and by [[vacuum]]. The post-recovery stats manifest may be stale,
     * which pruning tolerates by construction (unknown files are kept,
     * entries for dead files never match the current list). Returns
     * true when a journal was found and resolved.
@@ -5888,7 +5594,7 @@ final class Warehouse(spark: SparkSession, val root: String,
   }
 
   /** [[recover]] body for callers that ALREADY hold the writer lock
-    * (replaceDataFiles) — the lock is not reentrant.
+    * (every writer, before it plans) — the lock is not reentrant.
     */
   private def recoverLocked(ref: TableRef): Boolean = {
     val tablePath = new Path(path(ref))
@@ -5959,8 +5665,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     * the lexicographic range: every z-ordered column keeps pruning
     * after maintenance, where a linear sort only preserves its leading
     * column's selectivity.
-    */
-  /** @param partitionFilter `OPTIMIZE ... WHERE` (Delta's
+    *
+    * @param partitionFilter `OPTIMIZE ... WHERE` (Delta's
     *        partition-scoped compaction): a SQL predicate over
     *        PARTITION columns only — whole directories match or don't,
     *        so scoping is exact and zero-scan. At 100 TB this is the
@@ -5969,20 +5675,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     *        table. Non-partition references refuse loudly (a data
     *        predicate cannot scope whole files).
     */
-  /** REORG ... APPLY (PURGE) (Delta's DV-materialization verb):
-    * rewrite ONLY the files carrying live deletion vectors — deleted
-    * rows drop physically, the vectors clear, and every healthy file
-    * keeps its bytes untouched regardless of size. The GDPR closer: a
-    * merge-on-read erasure leaves the "deleted" bytes inside live
-    * files until this (or a compact) rewrites them and [[vacuum]]
-    * reclaims. Scoped like OPTIMIZE via `partitionFilter`. Implemented
-    * as [[compact]] with the small-file threshold floored: DV'd files
-    * rewrite unconditionally there, so a 1-byte threshold selects
-    * exactly them.
-    */
-  def reorgPurge(ref: TableRef, partitionFilter: Option[String] = None): Int =
-    compact(ref, smallFileBytes = 1L, partitionFilter = partitionFilter)
-
   def compact(ref: TableRef, smallFileBytes: Long = 32L << 20,
               targetFileBytes: Long = 128L << 20,
               clusterBy: Option[Seq[String]] = None,
@@ -6096,6 +5788,20 @@ final class Warehouse(spark: SparkSession, val root: String,
     compacted
   }
 
+  /** REORG ... APPLY (PURGE) (Delta's DV-materialization verb):
+    * rewrite ONLY the files carrying live deletion vectors — deleted
+    * rows drop physically, the vectors clear, and every healthy file
+    * keeps its bytes untouched regardless of size. The GDPR closer: a
+    * merge-on-read erasure leaves the "deleted" bytes inside live
+    * files until this (or a compact) rewrites them and [[vacuum]]
+    * reclaims. Scoped like OPTIMIZE via `partitionFilter`. Implemented
+    * as [[compact]] with the small-file threshold floored: DV'd files
+    * rewrite unconditionally there, so a 1-byte threshold selects
+    * exactly them.
+    */
+  def reorgPurge(ref: TableRef, partitionFilter: Option[String] = None): Int =
+    compact(ref, smallFileBytes = 1L, partitionFilter = partitionFilter)
+
   /** All parquet data files under a table dir (recursive, skipping
     * underscore/dot-hidden entries such as the stats manifest), with
     * their listing statuses — write paths record (bytes, mtime) into
@@ -6118,6 +5824,38 @@ final class Warehouse(spark: SparkSession, val root: String,
 object Warehouse {
   private[catalog] val log =
     org.slf4j.LoggerFactory.getLogger(classOf[Warehouse])
+
+  /** Data files staged under `dir`, a sibling of the table directory no
+    * reader lists: their table-relative paths (the move preserves them)
+    * and listing statuses, whose (bytes, mtime) the commit records —
+    * rename keeps both. `listed`: `dir` holds exactly these files.
+    */
+  private[catalog] final case class Staged(dir: Path,
+                                           schema: org.apache.spark.sql.types.StructType,
+                                           rels: Seq[String],
+                                           files: Seq[org.apache.hadoop.fs.FileStatus],
+                                           listed: Boolean) {
+    def fileMeta: Map[String, (Long, Long)] = rels.zip(files).map {
+      case (r, st) => r -> (st.getLen, st.getModificationTime)
+    }.toMap
+  }
+
+  /** A stats manifest written beside the live one but not yet visible:
+    * its directory, plus the rows to seed the manifest cache with when
+    * [[writeManifestTo]] wrote it from the driver.
+    */
+  private[catalog] type StagedManifest =
+    (Path, Option[(org.apache.spark.sql.types.StructType, Seq[Row], String)])
+
+  /** What a commit does to the stats manifest: decided by
+    * [[planManifest]] before any file moves, applied by [[land]] after
+    * the commit.
+    */
+  private[catalog] sealed trait ManifestStep
+  private[catalog] case object KeepManifest extends ManifestStep
+  private[catalog] case object DropManifest extends ManifestStep
+  private[catalog] final case class AppendPart(stats: DataFrame) extends ManifestStep
+  private[catalog] final case class SwapManifest(staged: StagedManifest) extends ManifestStep
 
   /** One parsed log-format file (version commit or staged manifest).
     * For CHECKPOINT files `files` is the complete list; for DELTA files

@@ -77,6 +77,24 @@ class ConstraintSpec extends SparkSpec {
     assert(wh.checkConstraints(ref) === Map.empty)
   }
 
+  test("a WAP stage validates constraints; a violating batch stages nothing") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-check-wap"))
+    val ref = TableRef("silver", "g", "checked_wap")
+    wh.overwrite(ref, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    wh.setCheckConstraint(ref, "v_pos", "v > 0")
+    val v0 = wh.currentVersion(ref)
+    val e = intercept[IllegalStateException] {
+      wh.stageOverwrite(ref, Seq((3L, -7L)).toDF("k", "v"))
+    }
+    assert(e.getMessage.contains("v_pos"))
+    assert(wh.stagedIds(ref).isEmpty)
+    assert(wh.currentVersion(ref) === v0)
+    // a passing batch stages and publishes as before
+    wh.publishStaged(ref, wh.stageOverwrite(ref, Seq((3L, 7L)).toDF("k", "v")))
+    assert(wh.read(ref).as[(Long, Long)].collect().toSeq === Seq((3L, 7L)))
+  }
+
   test("native ANSI constraint DDL: inline CHECK at CREATE, ADD/DROP CONSTRAINT, unenforced kinds refuse") {
     import spark.implicits._
     val root = tmpDir("wh-check-ansi")

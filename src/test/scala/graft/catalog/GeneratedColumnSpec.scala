@@ -44,6 +44,21 @@ class GeneratedColumnSpec extends SparkSpec {
     assert(wh.read(ref).count() === 2L)
   }
 
+  test("a WAP stage computes omitted generations and refuses wrong ones") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-gen-wap"))
+    val ref = TableRef("silver", "g", "gen_wap")
+    wh.overwrite(ref, Seq((1L, 10L)).toDF("k", "v"))
+    wh.setGeneratedColumn(ref, "v", "k * 10")
+    wh.publishStaged(ref, wh.stageOverwrite(ref, Seq(4L).toDF("k")))
+    assert(wh.schemaOf(ref).fieldNames.toSeq === Seq("k", "v"))
+    assert(wh.read(ref).as[(Long, Long)].collect().toSeq === Seq((4L, 40L)))
+    val e = intercept[IllegalStateException](
+      wh.stageOverwrite(ref, Seq((5L, 1L)).toDF("k", "v")))
+    assert(e.getMessage.contains("GENERATED column"))
+    assert(wh.stagedIds(ref).isEmpty)
+  }
+
   test("UPDATE recomputes generations whose source changed: copy-on-write, DV, clause-merge paths") {
     import spark.implicits._
     val wh = new Warehouse(spark, tmpDir("wh-gen-upd"))

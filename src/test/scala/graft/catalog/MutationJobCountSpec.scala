@@ -6,19 +6,24 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sinks.{Merge, MergeTable}
 
-/** Spark job counts of every row-level mutation route, pinned: DELETE
-  * (partial and whole-file), UPDATE, upsert and clause MERGE, each in
-  * the four write configurations (copy-on-write / deletion vectors ×
-  * change data feed off / on). The routes share one match planner and
-  * one applier per configuration, so a refactor that adds a pass to any
-  * of them shows up here as a changed count. The table is 300 rows in
-  * 6 range files on local[4]; the routes run in the listed order on one
-  * table per configuration.
+/** Spark job counts of every row-level mutation route and every
+  * file-adding route, pinned: DELETE (partial and whole-file), UPDATE,
+  * upsert, clause MERGE, append, insert-only upsert, full overwrite and
+  * a streaming-sink epoch commit, each in the four write configurations
+  * (copy-on-write / deletion vectors × change data feed off / on). The
+  * routes share one match planner, one applier per configuration and
+  * one stage/land/manifest commit path, so a refactor that adds a pass
+  * to any of them shows up here as a changed count. The table is 300
+  * rows in 6 range files on local[4]; the routes run in the listed
+  * order on one table per configuration. After every route the stats
+  * manifest describes exactly the version's files, and on copy-on-write
+  * its row counts sum to the table's.
   */
 class MutationJobCountSpec extends SparkSpec {
 
   private val routes =
-    Seq("delete partial", "delete whole file", "update", "upsert", "clause merge")
+    Seq("delete partial", "delete whole file", "update", "upsert", "clause merge",
+      "append", "insert-only upsert", "overwrite (replace)", "stream epoch")
 
   private def routeJobs(dv: Boolean, cdf: Boolean): Seq[Int] = {
     import spark.implicits._
@@ -45,7 +50,19 @@ class MutationJobCountSpec extends SparkSpec {
       val j0 = jobs
       body
       org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
-      jobs - j0
+      val n = jobs - j0
+      val counts = wh.fileRowCounts(ref)
+      assert(counts.keySet === wh.snapshot(ref).get.files.toSet,
+        "the stats manifest must describe exactly the version's files")
+      if (!dv) assert(counts.values.sum === wh.read(ref).count())
+      n
+    }
+    // the streaming sink's executors stage an epoch's files before the
+    // driver commits them: only the commit is counted
+    def stagedEpoch(rows: Seq[(Long, Long)]): Seq[String] = {
+      val stage = wh.streamStageDir(ref, "q", 0L)
+      rows.toDF("k", "v").coalesce(1).write.parquet(stage.toString)
+      new java.io.File(stage.toUri.getPath).list().toSeq.filter(_.endsWith(".parquet"))
     }
     spark.sparkContext.addSparkListener(listener)
     try Seq(
@@ -58,7 +75,16 @@ class MutationJobCountSpec extends SparkSpec {
         Merge.MergeClauses(
           matched = Seq(Merge.Clause(Some("__src_v = 0"), "delete"),
             Merge.Clause(None, "update")),
-          inserts = Seq(Merge.Clause(None, "insert"))))))
+          inserts = Seq(Merge.Clause(None, "insert"))))),
+      jobsOf(wh.append(ref, Seq((500L, 1L), (501L, 2L)).toDF("k", "v"))),
+      jobsOf(mt.upsert(Seq((600L, 1L), (601L, 2L)).toDF("k", "v"))),
+      jobsOf(wh.overwrite(ref,
+        spark.range(1, 301).select(col("id").as("k"), (col("id") * 20).as("v"))
+          .repartitionByRange(6, col("k")),
+        statsColumns = Seq("k"))), {
+        val rels = stagedEpoch(Seq((700L, 1L), (701L, 2L)))
+        jobsOf(wh.commitStreamEpoch(ref, "q", 0L, rels))
+      })
     finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -70,18 +96,18 @@ class MutationJobCountSpec extends SparkSpec {
   }
 
   test("copy-on-write, change feed off: pinned job counts per route") {
-    check(dv = false, cdf = false, Seq(5, 2, 4, 8, 9))
+    check(dv = false, cdf = false, Seq(5, 2, 4, 8, 9, 1, 3, 3, 0))
   }
 
   test("copy-on-write, change feed on: pinned job counts per route") {
-    check(dv = false, cdf = true, Seq(7, 2, 5, 10, 10))
+    check(dv = false, cdf = true, Seq(7, 2, 5, 10, 10, 1, 3, 3, 0))
   }
 
   test("deletion vectors, change feed off: pinned job counts per route") {
-    check(dv = true, cdf = false, Seq(5, 7, 13, 14, 22))
+    check(dv = true, cdf = false, Seq(5, 7, 12, 13, 21, 1, 3, 3, 0))
   }
 
   test("deletion vectors, change feed on: pinned job counts per route") {
-    check(dv = true, cdf = true, Seq(6, 8, 14, 15, 23))
+    check(dv = true, cdf = true, Seq(6, 8, 13, 14, 22, 1, 3, 3, 0))
   }
 }

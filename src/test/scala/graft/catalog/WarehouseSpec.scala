@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.functions.{concat, lit}
+import org.apache.spark.sql.functions.{concat, input_file_name, lit}
 
 import graft.SparkSpec
 
@@ -1050,5 +1050,80 @@ class WarehouseSpec extends SparkSpec {
     wh.overwrite(ref, df.select($"grp", $"v").limit(100),
       statsColumns = Seq("grp"))
     assert(wh.statColumns(ref).toSet === Set("grp"))
+  }
+
+  test("no write route commits a data file that holds no row") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-zero-row"))
+    def zeroRowFiles(ref: TableRef): Seq[String] = wh.dataFiles(ref).filter { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+      try reader.getRecordCount == 0L finally reader.close()
+    }
+    def fresh(name: String): (TableRef, Seq[Long]) = {
+      val ref = TableRef("silver", "zero", name)
+      wh.overwrite(ref, (1L to 20L).map(i => (i, i * 10L)).toDF("k", "v")
+        .repartitionByRange(4, $"k"), statsColumns = Seq("k"))
+      // every key of the file holding the smallest keys
+      val first = wh.read(ref).groupBy(input_file_name().as("f"))
+        .agg(org.apache.spark.sql.functions.min("k").as("lo"))
+        .orderBy("lo").head().getString(0)
+      (ref, wh.read(ref).filter(input_file_name() === first)
+        .select("k").as[Long].collect().toSeq)
+    }
+
+    // a copy-on-write clause merge whose DELETE claims every row of a file
+    val (merged, firstKeys) = fresh("merged")
+    new graft.sinks.MergeTable(spark, wh, merged, Seq("k"), None).upsertClauses(
+      firstKeys.map(k => (k, 0L)).toDF("k", "v"),
+      graft.sinks.Merge.MergeClauses(
+        matched = Seq(graft.sinks.Merge.Clause(None, "delete")), inserts = Nil))
+    assert(wh.read(merged).count() === 20L - firstKeys.size)
+    assert(zeroRowFiles(merged).isEmpty, "clause merge committed a 0-row file")
+
+    // replacePartitions emptying the partitions of one file
+    val (replaced, replacedKeys) = fresh("replaced")
+    new graft.sinks.MergeTable(spark, wh, replaced, Seq("k"), None)
+      .replacePartitions(replacedKeys.toDF("k"), wh.read(replaced).limit(0))
+    assert(wh.read(replaced).count() === 20L - replacedKeys.size)
+    assert(zeroRowFiles(replaced).isEmpty, "replacePartitions committed a 0-row file")
+
+    // an empty append still commits its version (its meta may matter)
+    val (appended, _) = fresh("appended")
+    val before = wh.dataFiles(appended).toSet
+    val v = wh.append(appended, Seq.empty[(Long, Long)].toDF("k", "v"))
+    assert(wh.currentVersion(appended) === Some(v))
+    assert(wh.dataFiles(appended).toSet === before, "empty append added a file")
+
+    // truncate commits no file and reads back with the committed schema
+    val (truncated, _) = fresh("truncated")
+    wh.truncate(truncated)
+    assert(wh.dataFiles(truncated).isEmpty, "truncate committed a 0-row file")
+    assert(wh.read(truncated).columns.toSeq === Seq("k", "v"))
+    assert(wh.read(truncated).count() === 0L)
+  }
+
+  test("truncate keeps the stats and bloom columns; a later upsert rewrites only overlapping files") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-truncate-stats"))
+    val ref = TableRef("silver", "g", "truncated")
+    wh.overwrite(ref, (1L to 40L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartitionByRange(4, $"k"), statsColumns = Seq("k"), bloomColumns = Seq("k"))
+    wh.truncate(ref)
+    assert(wh.statColumns(ref) === Seq("k"))
+    assert(wh.bloomColumns(ref) === Seq("k"))
+    wh.append(ref, (1L to 10L).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1))
+    wh.append(ref, (101L to 110L).map(i => (i, s"b$i")).toDF("k", "v").coalesce(1))
+    assert(wh.fileRowCounts(ref).values.sum === 20L)
+    val high = wh.snapshot(ref).get.files.filter(f =>
+      spark.read.parquet(s"${wh.path(ref)}/$f").filter($"k" > 100L).count() > 0L)
+    assert(high.size === 1)
+    new graft.sinks.MergeTable(spark, wh, ref, Seq("k"), None)
+      .upsert(Seq((5L, "x")).toDF("k", "v"))
+    assert(wh.snapshot(ref).get.files.contains(high.head),
+      "an upsert into the low range rewrote the disjoint high-range file")
+    assert(wh.read(ref).filter($"k" === 5L).select("v").as[String].head() === "x")
+    assert(wh.read(ref).count() === 20L)
   }
 }
