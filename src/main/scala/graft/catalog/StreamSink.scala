@@ -76,14 +76,10 @@ private[catalog] final class GraftStreamingWrite(spark: SparkSession,
     Option(options.get("compactAtFiles")).map(_.toInt)
 
   /** Partition columns from the committed layout — ordered `k=v`
-    * directory components of any committed file's relative path (the
-    * same rule as [[Warehouse.append]]: the log, not a catalog entry,
-    * is the source of truth for layout).
+    * directory components of the committed files (the log, not a
+    * catalog entry, is the source of truth for layout).
     */
-  private val partCols: Seq[String] = snap.files.headOption.toSeq.flatMap { f =>
-    f.split('/').dropRight(1).toSeq
-      .takeWhile(_.contains('=')).map(_.takeWhile(_ != '='))
-  }
+  private val partCols: Seq[String] = Warehouse.partDirCols(snap.files)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
