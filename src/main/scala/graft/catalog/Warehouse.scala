@@ -1810,8 +1810,11 @@ final class Warehouse(spark: SparkSession, val root: String,
     if (snap.files.nonEmpty) Warehouse.partDirCols(snap.files)
     else metaColumns(ref, Warehouse.PartitionByMeta)
 
-  /** Run `body` with a fresh staging directory beside the table (".tmp-"
-    * keeps [[listTables]] skipping it), removed afterwards either way.
+  /** Run `body` with a fresh staging directory, removed afterwards
+    * either way. A SIBLING of the table directory, so concurrent scans
+    * never list it, yet not hidden-named, so it stays directly readable
+    * (a dot/underscore name would be filtered by Spark's own reads too);
+    * ".tmp-" keeps [[listTables]] skipping it.
     */
   private def withStage[T](ref: TableRef, kind: String)(body: Path => T): T = {
     val stage = new Path(path(ref) + s".tmp-$kind-${System.nanoTime()}")
@@ -1907,7 +1910,8 @@ final class Warehouse(spark: SparkSession, val root: String,
   /** THE manifest step for a commit keeping `keep` of `parent`'s files
     * and adding `staged`'s. A full replace (`fresh` = its stats, bloom
     * and NDV columns) writes a fresh manifest, or drops it when it
-    * declares no stats column. Bloom presence is a durable table
+    * declares no stats column (it would describe retired files only).
+    * Bloom presence is a durable table
     * property: a full replace carries every prior bloom column still in
     * the schema into both its stats and bloom sets, so equality
     * skipping never lapses silently — only a column leaving the schema
@@ -1948,6 +1952,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           fileStats(data, staged.dir.toString, cols, blooms)
         }
       }
+    // the post-commit file count bounds the manifest's rows
     def swap(next: DataFrame): ManifestStep = SwapManifest(stageManifest(ref,
       next, (keep.size + staged.rels.size).toLong, new Path(staged.dir, statsDir)))
     fresh match {
