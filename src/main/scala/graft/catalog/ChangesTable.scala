@@ -2,13 +2,13 @@ package graft.catalog
 
 import java.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, LocalScan, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -50,12 +50,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    one-row update would fan out to thousands of phantom pairs).
   *
   * Batch reads take `option("startingVersion"/"endingVersion", v)`
-  * (inclusive; default = every surviving commit). Streams follow the
-  * row-stream source's contract: default starts at the earliest
-  * surviving version (its full state as `insert` — the feed's base),
-  * `startingVersion`/`startingTimestamp` tail from a point, offsets
-  * checkpoint exactly like [[GraftMicroBatchStream]], and vacuumed
-  * ranges fail loudly.
+  * (inclusive; default = every surviving commit). Streams run on the
+  * commit-tailing core both graft sources share ([[GraftCommitStream]]:
+  * offsets, start resolution, AvailableNow pin, read limits): default
+  * starts at the earliest surviving version (its full state as
+  * `insert` — the feed's base), `startingVersion`/`startingTimestamp`
+  * tail from a point, and vacuumed ranges fail loudly.
   */
 private[catalog] final class GraftChangesTable(spark: SparkSession,
                                                wh: Warehouse,
@@ -115,162 +115,138 @@ private[catalog] final class GraftChangesScanBuilder(spark: SparkSession,
       requiredBase, options)
 }
 
-/** `graft.<c>.<s>.<t>.history` — the operation ledger as a SQL-
-  * readable metadata table ([[Warehouse.history]]'s columns: version,
-  * operation, n_files, commit_ms; newest first). Rows materialize at
-  * plan time from the commit log alone (bounded by vacuum retention),
-  * a LocalScan — zero tasks, zero data files.
+/** A metadata table whose rows materialize at plan time from the log
+  * and manifest: a LocalScan — zero tasks, zero data files.
   */
-private[catalog] final class GraftHistoryTable(spark: SparkSession,
-                                               wh: Warehouse,
-                                               ref: TableRef)
+private final class GraftLocalTable(tableName: String,
+                                    tableSchema: StructType,
+                                    materialize: () => Seq[InternalRow])
     extends Table with SupportsRead {
 
-  private val historySchema = StructType(Seq(
-    StructField("version", LongType),
-    StructField("operation", StringType),
-    StructField("n_files", org.apache.spark.sql.types.IntegerType),
-    StructField("commit_ms", LongType)))
-
-  override def name(): String = s"$ref.history"
-  override def schema(): StructType = historySchema
+  override def name(): String = tableName
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = historySchema
-      override def rows(): Array[InternalRow] =
-        wh.history(ref).collect().map { r =>
-          InternalRow.fromSeq(r.toSeq.zip(historySchema.fields).map {
-            case (v, f) => org.apache.spark.sql.catalyst
-              .CatalystTypeConverters.createToCatalystConverter(f.dataType)(v)
-          })
-        }
-      override def description(): String = s"GraftHistoryScan($ref)"
+    () => new LocalScan {
+      override def readSchema(): StructType = tableSchema
+      override def rows(): Array[InternalRow] = materialize().toArray
+      override def description(): String = s"GraftLocalScan($tableName)"
     }
 }
 
-/** `graft.<c>.<s>.<t>.detail` — one-row table summary (Delta's
-  * `DESCRIBE DETAIL`): current version, live file count and recorded
-  * bytes, partition/stats layout, governed properties (CDF, DV,
-  * constraints, generated columns), deletion-vector'd and foreign
-  * (shallow-clone) file counts, and live retention pins — the
-  * operator's one-stop "what IS this table" answer, metadata-only.
-  */
-private[catalog] final class GraftDetailTable(spark: SparkSession,
-                                              wh: Warehouse,
-                                              snap: TableSnapshot)
-    extends Table with SupportsRead {
+private[catalog] object GraftMetadataTables {
 
-  private val detailSchema = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("num_files", LongType, nullable = false),
-    StructField("size_bytes", LongType),
-    StructField("partition_columns", StringType),
-    StructField("stats_columns", StringType),
-    StructField("num_dv_files", LongType, nullable = false),
-    StructField("num_foreign_files", LongType, nullable = false),
-    StructField("cdf_enabled", org.apache.spark.sql.types.BooleanType,
-      nullable = false),
-    StructField("dv_enabled", org.apache.spark.sql.types.BooleanType,
-      nullable = false),
-    StructField("constraints", StringType),
-    StructField("generated_columns", StringType),
-    StructField("pinned_by", StringType),
-    StructField("identity_columns", StringType),
-    StructField("default_columns", StringType)))
+  /** `graft.<c>.<s>.<t>.history` — the operation ledger as a SQL-
+    * readable metadata table ([[Warehouse.history]]'s columns: version,
+    * operation, n_files, commit_ms; newest first), bounded by vacuum
+    * retention.
+    */
+  def history(wh: Warehouse, ref: TableRef): Table = {
+    val historySchema = StructType(Seq(
+      StructField("version", LongType),
+      StructField("operation", StringType),
+      StructField("n_files", org.apache.spark.sql.types.IntegerType),
+      StructField("commit_ms", LongType)))
+    new GraftLocalTable(s"$ref.history", historySchema, () =>
+      wh.history(ref).collect().toSeq.map { r =>
+        InternalRow.fromSeq(r.toSeq.zip(historySchema.fields).map {
+          case (v, f) => org.apache.spark.sql.catalyst
+            .CatalystTypeConverters.createToCatalystConverter(f.dataType)(v)
+        })
+      })
+  }
 
-  override def name(): String = s"${snap.ref}.detail"
-  override def schema(): StructType = detailSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
+  /** `graft.<c>.<s>.<t>.detail` — one-row table summary (Delta's
+    * `DESCRIBE DETAIL`): current version, live file count and recorded
+    * bytes, partition/stats layout, governed properties (CDF, DV,
+    * constraints, generated columns), deletion-vector'd and foreign
+    * (shallow-clone) file counts, and live retention pins — the
+    * operator's one-stop "what IS this table" answer, metadata-only.
+    */
+  def detail(wh: Warehouse, snap: TableSnapshot): Table = {
+    val detailSchema = StructType(Seq(
+      StructField("name", StringType, nullable = false),
+      StructField("version", LongType, nullable = false),
+      StructField("num_files", LongType, nullable = false),
+      StructField("size_bytes", LongType),
+      StructField("partition_columns", StringType),
+      StructField("stats_columns", StringType),
+      StructField("num_dv_files", LongType, nullable = false),
+      StructField("num_foreign_files", LongType, nullable = false),
+      StructField("cdf_enabled", org.apache.spark.sql.types.BooleanType,
+        nullable = false),
+      StructField("dv_enabled", org.apache.spark.sql.types.BooleanType,
+        nullable = false),
+      StructField("constraints", StringType),
+      StructField("generated_columns", StringType),
+      StructField("pinned_by", StringType),
+      StructField("identity_columns", StringType),
+      StructField("default_columns", StringType)))
+    new GraftLocalTable(s"${snap.ref}.detail", detailSchema, () => {
+      val ref = snap.ref
+      val sizes = snap.files.flatMap(f => snap.fileMeta.get(f).map(_._1))
+      def csvOrNull(xs: Iterable[String]): Any =
+        if (xs.isEmpty) null
+        else UTF8String.fromString(xs.toSeq.sorted.mkString(","))
+      Seq(InternalRow.fromSeq(Seq(
+        UTF8String.fromString(ref.toString),
+        snap.version,
+        snap.files.size.toLong,
+        // recorded bytes only: a pre-sized-log file has no entry and
+        // a partial sum would read as the whole truth
+        if (sizes.size == snap.files.size) sizes.sum else null,
+        csvOrNull(Warehouse.partDirCols(snap.files)),
+        csvOrNull(wh.statColumns(ref)),
+        snap.dvMap.size.toLong,
+        snap.files.count(_.startsWith(Warehouse.ForeignPrefix)).toLong,
+        wh.cdfEnabled(ref),
+        wh.dvEnabled(ref),
+        csvOrNull(wh.checkConstraints(ref).keys),
+        csvOrNull(wh.generatedColumns(ref)
+          .map { case (c, e) => s"$c AS ($e)" }),
+        csvOrNull(wh.pinnedVersions(ref)
+          .map { case (c, v) => s"$c@v$v" }),
+        csvOrNull(wh.identityColumns(ref)
+          .map { case (c, (st, sp)) => s"$c IDENTITY($st,$sp)" }),
+        csvOrNull(wh.columnDefaults(ref)
+          .map { case (c, e) => s"$c DEFAULT ($e)" }))))
+    })
+  }
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = detailSchema
-      override def rows(): Array[InternalRow] = {
-        val ref = snap.ref
-        val sizes = snap.files.flatMap(f => snap.fileMeta.get(f).map(_._1))
-        def csvOrNull(xs: Iterable[String]): Any =
-          if (xs.isEmpty) null
-          else org.apache.spark.unsafe.types.UTF8String
-            .fromString(xs.toSeq.sorted.mkString(","))
-        Array(InternalRow.fromSeq(Seq(
-          org.apache.spark.unsafe.types.UTF8String.fromString(ref.toString),
-          snap.version,
-          snap.files.size.toLong,
-          // recorded bytes only: a pre-sized-log file has no entry and
-          // a partial sum would read as the whole truth
-          if (sizes.size == snap.files.size) sizes.sum else null,
-          csvOrNull(Warehouse.partDirCols(snap.files)),
-          csvOrNull(wh.statColumns(ref)),
-          snap.dvMap.size.toLong,
-          snap.files.count(_.startsWith(Warehouse.ForeignPrefix)).toLong,
-          wh.cdfEnabled(ref),
-          wh.dvEnabled(ref),
-          csvOrNull(wh.checkConstraints(ref).keys),
-          csvOrNull(wh.generatedColumns(ref)
-            .map { case (c, e) => s"$c AS ($e)" }),
-          csvOrNull(wh.pinnedVersions(ref)
-            .map { case (c, v) => s"$c@v$v" }),
-          csvOrNull(wh.identityColumns(ref)
-            .map { case (c, (st, sp)) => s"$c IDENTITY($st,$sp)" }),
-          csvOrNull(wh.columnDefaults(ref)
-            .map { case (c, e) => s"$c DEFAULT ($e)" }))))
+  /** `graft.<c>.<s>.<t>.files` — the committed snapshot's FILE-LEVEL
+    * layout as a SQL-readable metadata table (Iceberg's `files` table):
+    * per live data file, its table-relative path, recorded size/mtime
+    * (from the sized commit log — zero filesystem calls), and the stats
+    * manifest's row count when the table keeps one (null otherwise).
+    * The layout-debugging surface a 100 TB table needs — "which
+    * partitions are small-file-sick", "how skewed are my file sizes" —
+    * as plain SQL.
+    */
+  def files(wh: Warehouse, snap: TableSnapshot): Table = {
+    val filesSchema = StructType(Seq(
+      StructField("file", StringType, nullable = false),
+      StructField("bytes", LongType),
+      StructField("mtime_ms", LongType),
+      StructField("rows", LongType),
+      // deletion-vector sidecar directory, null when the file is clean
+      // (`rows` stays the PHYSICAL count — live rows = rows minus the
+      // sidecar's positions for this file)
+      StructField("dv", StringType)))
+    new GraftLocalTable(s"${snap.ref}.files", filesSchema, () => {
+      val rowCounts = wh.fileRowCounts(snap.ref)
+      snap.files.map { f =>
+        val (bytes, mtime) = snap.fileMeta.get(f)
+          .map { case (b, m) => (b: java.lang.Long, m: java.lang.Long) }
+          .getOrElse((null, null))
+        InternalRow.fromSeq(Seq(
+          UTF8String.fromString(f), bytes, mtime,
+          rowCounts.get(f).map(Long.box).orNull,
+          snap.dvMap.get(f).map(UTF8String.fromString).orNull))
       }
-      override def description(): String = s"GraftDetailScan(${snap.ref})"
-    }
-}
-
-/** `graft.<c>.<s>.<t>.files` — the committed snapshot's FILE-LEVEL
-  * layout as a SQL-readable metadata table (Iceberg's `files` table):
-  * per live data file, its table-relative path, recorded size/mtime
-  * (from the sized commit log — zero filesystem calls), and the stats
-  * manifest's row count when the table keeps one (null otherwise).
-  * The layout-debugging surface a 100 TB table needs — "which
-  * partitions are small-file-sick", "how skewed are my file sizes" —
-  * as plain SQL over a LocalScan.
-  */
-private[catalog] final class GraftFilesTable(spark: SparkSession,
-                                             wh: Warehouse,
-                                             snap: TableSnapshot)
-    extends Table with SupportsRead {
-
-  private val filesSchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("bytes", LongType),
-    StructField("mtime_ms", LongType),
-    StructField("rows", LongType),
-    // deletion-vector sidecar directory, null when the file is clean
-    // (`rows` stays the PHYSICAL count — live rows = rows minus the
-    // sidecar's positions for this file)
-    StructField("dv", StringType)))
-
-  override def name(): String = s"${snap.ref}.files"
-  override def schema(): StructType = filesSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = filesSchema
-      override def rows(): Array[InternalRow] = {
-        val rowCounts = wh.fileRowCounts(snap.ref)
-        snap.files.map { f =>
-          val (bytes, mtime) = snap.fileMeta.get(f)
-            .map { case (b, m) => (b: java.lang.Long, m: java.lang.Long) }
-            .getOrElse((null, null))
-          InternalRow.fromSeq(Seq(
-            UTF8String.fromString(f), bytes, mtime,
-            rowCounts.get(f).map(Long.box).orNull,
-            snap.dvMap.get(f).map(UTF8String.fromString).orNull))
-        }.toArray
-      }
-      override def description(): String =
-        s"GraftFilesScan(${snap.ref}@v${snap.version})"
-    }
+    })
+  }
 }
 
 /** The feed's scan: batch plans every requested commit's partitions in
@@ -300,20 +276,16 @@ private[catalog] final class GraftChangesScan(spark: SparkSession,
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val ref = snap.ref
-      def exclusive(a: String, b: String): Unit =
-        require(options.get(a) == null || options.get(b) == null,
-          s"change feed on $ref: $a and $b are mutually exclusive")
-      exclusive("startingVersion", "startingTimestamp")
-      exclusive("endingVersion", "endingTimestamp")
-      val from = Option(options.get("startingVersion")).map(_.toLong)
-        .orElse(Option(options.get("startingTimestamp")).map(t =>
-          // first commit at-or-after the instant (the stream's contract)
-          wh.versionSince(ref, GraftCdfMicroBatchStream.parseTimestamp(t))))
+      require(options.get("endingVersion") == null ||
+          options.get("endingTimestamp") == null,
+        s"change feed on $ref: endingVersion and endingTimestamp are " +
+          "mutually exclusive")
+      val from = GraftCommitStream.startingVersion(wh, ref, options)
         .orElse(wh.earliestVersion(ref)).getOrElse(1L)
       val to = Option(options.get("endingVersion")).map(_.toLong)
         .orElse(Option(options.get("endingTimestamp")).map(t =>
           // latest commit at-or-before the instant
-          wh.versionAsOf(ref, GraftCdfMicroBatchStream.parseTimestamp(t))))
+          wh.versionAsOf(ref, GraftCommitStream.parseTimestamp(t))))
         .getOrElse(snap.version)
       (from to to).toArray.flatMap(v =>
         resolver.versionPartitions(v, replayFull = false))
@@ -323,7 +295,7 @@ private[catalog] final class GraftChangesScan(spark: SparkSession,
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftCdfMicroBatchStream(spark, wh, snap, resolver, options)
+    new GraftCdfMicroBatchStream(wh, snap.ref, resolver, options)
 }
 
 /** Shared per-commit resolution: which file scans (with which constant
@@ -370,14 +342,18 @@ private[catalog] final class GraftCdfResolver(spark: SparkSession,
       b.build().toBatch.planInputPartitions()
     }
 
-  /** Cdc-shape scan over one commit's persisted change files. */
-  private def cdcScanPartitions(v: Long): Array[InputPartition] = {
+  /** One commit's persisted change files (none without a directory). */
+  def cdcFiles(v: Long): Seq[FileStatus] = {
     val dir = wh.cdcPath(ref, v)
     val filesystem = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (!filesystem.exists(dir)) Seq.empty
-      else filesystem.listStatus(dir).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    if (!filesystem.exists(dir)) Seq.empty
+    else filesystem.listStatus(dir).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** Cdc-shape scan over one commit's persisted change files. */
+  private def cdcScanPartitions(v: Long): Array[InputPartition] = {
+    val files = cdcFiles(v).map(_.getPath)
     if (files.isEmpty) Array.empty[InputPartition]
     else {
       val idx = new InMemoryFileIndex(spark, files, Map.empty, Some(cdcSchema))
@@ -494,101 +470,25 @@ private[catalog] final class GraftCdfReaderFactory(
   }
 }
 
-/** The feed as a STREAM: offsets are commit versions, exactly the row
-  * stream's contract ([[GraftStreamOffset]] — checkpointable,
-  * deterministic ranges, AvailableNow pinning), with each batch's rows
-  * resolved by [[GraftCdfResolver]] instead of added-files-only.
+/** The feed as a STREAM on the commit-tailing core
+  * ([[GraftCommitStream]]: offsets, start resolution, AvailableNow
+  * pin, read limits), with each batch's rows resolved by
+  * [[GraftCdfResolver]] instead of added-files-only.
   */
-private[catalog] final class GraftCdfMicroBatchStream(spark: SparkSession,
-                                                      wh: Warehouse,
-                                                      snap: TableSnapshot,
+private[catalog] final class GraftCdfMicroBatchStream(wh: Warehouse,
+                                                      tableRef: TableRef,
                                                       resolver: GraftCdfResolver,
                                                       options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends GraftCommitStream(wh, tableRef, options) {
 
-  private val ref = snap.ref
-
-  override def initialOffset(): Offset = {
-    val startingVersion = Option(options.get("startingVersion")).map(_.toLong)
-    val startingTs = Option(options.get("startingTimestamp"))
-    require(startingVersion.isEmpty || startingTs.isEmpty,
-      s"change-feed stream on $ref: startingVersion and startingTimestamp " +
-        "are mutually exclusive")
-    startingVersion.orElse(
-        startingTs.map(t => wh.versionSince(ref, GraftCdfMicroBatchStream
-          .parseTimestamp(t)))) match {
-      case Some(v) => GraftStreamOffset(v - 1)
-      case None =>
-        wh.earliestVersion(ref) match {
-          case Some(e) if e > 1 => GraftStreamOffset(e - 1, replay = true)
-          case _ => GraftStreamOffset(0L)
-        }
-    }
-  }
-
-  override def latestOffset(): Offset =
-    GraftStreamOffset(availableNowTarget
-      .getOrElse(wh.currentVersion(ref).getOrElse(0L)))
-
-  /** Rate limiting, the row stream's contract: `maxFilesPerTrigger` /
-    * `maxBytesPerTrigger` admit WHOLE COMMITS from the feed backlog
-    * until the budget fills, always at least one (progress guarantee)
-    * — a month-long feed backfill becomes many bounded micro-batches.
-    * A commit's load counts its derived file scans (adds + retired,
-    * sizes off the log) or its persisted change files (one listing,
-    * only for marked commits); maintenance commits count zero.
+  /** One commit's feed load toward the read limits: its derived file
+    * scans (adds + retired, sizes off the log) or its persisted change
+    * files (one listing, only for marked commits); maintenance commits
+    * count zero.
     */
-  override def getDefaultReadLimit: org.apache.spark.sql.connector.read.streaming.ReadLimit = {
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val maxBytes = Option(options.get("maxBytesPerTrigger")).map(_.toLong)
-    (maxFiles, maxBytes) match {
-      case (Some(f), Some(b)) =>
-        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
-      case (Some(f), None) => ReadLimit.maxFiles(f)
-      case (None, Some(b)) => ReadLimit.maxBytes(b)
-      case _ => ReadLimit.allAvailable()
-    }
-  }
-
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
-    import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadAllAvailable, ReadMaxBytes, ReadMaxFiles}
-    def caps(l: org.apache.spark.sql.connector.read.streaming.ReadLimit): (Option[Int], Option[Long]) = l match {
-      case f: ReadMaxFiles => (Some(f.maxFiles()), None)
-      case b: ReadMaxBytes => (None, Some(b.maxBytes()))
-      case c: CompositeReadLimit =>
-        c.getReadLimits.map(caps).foldLeft((Option.empty[Int], Option.empty[Long])) {
-          case ((f1, b1), (f2, b2)) => (f1.orElse(f2), b1.orElse(b2))
-        }
-      case _: ReadAllAvailable => (None, None)
-      case _ => (None, None)
-    }
-    val s = start.asInstanceOf[GraftStreamOffset]
-    val target = availableNowTarget
-      .getOrElse(wh.currentVersion(ref).getOrElse(0L))
-    val (fileCap, byteCap) = caps(limit)
-    if (fileCap.isEmpty && byteCap.isEmpty || s.version >= target)
-      return GraftStreamOffset(target)
-    var files = 0L
-    var bytes = 0L
-    var admitted = s.version
-    var v = s.version + 1
-    while (v <= target) {
-      val (f, b) = commitLoad(v, replay = s.replay && v == s.version + 1)
-      files += f
-      bytes += b
-      val overflow = fileCap.exists(files > _) || byteCap.exists(bytes > _)
-      if (admitted == s.version || !overflow) admitted = v
-      if (overflow) return GraftStreamOffset(admitted)
-      v += 1
-    }
-    GraftStreamOffset(admitted)
-  }
-
-  /** One commit's feed load: (scanned files, recorded bytes). */
-  private def commitLoad(v: Long, replay: Boolean): (Long, Long) = {
-    if (replay) {
+  override protected def commitLoad(start: GraftStreamOffset,
+                                    v: Long): (Long, Long) = {
+    if (start.replays(v)) {
       val s = wh.snapshotAt(ref, v)
       return (s.files.size.toLong, s.fileMeta.values.map(_._1).sum)
     }
@@ -598,15 +498,8 @@ private[catalog] final class GraftCdfMicroBatchStream(spark: SparkSession,
         val op = cc.meta.getOrElse(Warehouse.OpMeta, "")
         if (op == "COMPACT" || op == "ZORDER") (0L, 0L)
         else if (cc.meta.get(Warehouse.CdcMeta).contains("1")) {
-          val dir = wh.cdcPath(ref, v)
-          val filesystem =
-            dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!filesystem.exists(dir)) (0L, 0L)
-          else {
-            val sts = filesystem.listStatus(dir)
-              .filter(_.getPath.getName.endsWith(".parquet"))
-            (sts.length.toLong, sts.map(_.getLen).sum)
-          }
+          val sts = resolver.cdcFiles(v)
+          (sts.size.toLong, sts.map(_.getLen).sum)
         } else
           ((cc.adds.size + cc.retired.size).toLong,
             cc.addMeta.values.map(_._1).sum +
@@ -614,41 +507,11 @@ private[catalog] final class GraftCdfMicroBatchStream(spark: SparkSession,
     }
   }
 
-  private var availableNowTarget: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(wh.currentVersion(ref).getOrElse(0L))
-
-  override def deserializeOffset(json: String): Offset =
-    GraftStreamOffset.parse(json)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftStreamOffset]
-    val e = end.asInstanceOf[GraftStreamOffset].version
-    if (e <= s.version) Array.empty
-    else ((s.version + 1) to e).toArray.flatMap(v =>
-      resolver.versionPartitions(v,
-        replayFull = s.replay && v == s.version + 1))
-  }
+  override protected def rangePartitions(start: GraftStreamOffset,
+                                         endV: Long): Array[InputPartition] =
+    ((start.version + 1) to endV).toArray.flatMap(v =>
+      resolver.versionPartitions(v, replayFull = start.replays(v)))
 
   override def createReaderFactory(): PartitionReaderFactory =
     resolver.readerFactory()
-}
-
-private[catalog] object GraftCdfMicroBatchStream {
-  /** Same literal forms as the row stream's `startingTimestamp`. */
-  def parseTimestamp(s: String): Long = {
-    val t = s.trim
-    t.toLongOption.getOrElse {
-      try java.time.Instant.parse(t).toEpochMilli
-      catch {
-        case _: java.time.format.DateTimeParseException =>
-          java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      }
-    }
-  }
 }

@@ -56,29 +56,6 @@ private[catalog] object GraftProcedures {
       case _ => None
     }
 
-  /** Accepts ISO-8601 instants (`2026-08-16T05:00:00Z`), the SQL
-    * `yyyy-MM-dd HH:mm:ss[.SSS]` form (read as UTC — the commit clock
-    * is UTC wall time), and bare dates (UTC midnight).
-    */
-  private def parseTimestampMillis(s: String): Long = {
-    val t = s.trim
-    try java.time.Instant.parse(t).toEpochMilli
-    catch { case _: java.time.format.DateTimeParseException =>
-      try java.time.LocalDateTime
-        .parse(t.replace(' ', 'T'))
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      catch { case _: java.time.format.DateTimeParseException =>
-        try java.time.LocalDate.parse(t).atStartOfDay
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        catch { case _: java.time.format.DateTimeParseException =>
-          throw new IllegalArgumentException(
-            s"timestamp => '$s' is not ISO-8601, 'yyyy-MM-dd HH:mm:ss', " +
-              "or 'yyyy-MM-dd'")
-        }
-      }
-    }
-  }
-
   private def param(name: String, dt: DataType): ProcedureParameter =
     ProcedureParameter.in(name, dt).build()
 
@@ -226,7 +203,7 @@ private[catalog] object GraftProcedures {
       require(ver.isDefined != ts.isDefined,
         "restore takes exactly ONE of version => N or timestamp => '...'")
       val target = ver.getOrElse(
-        wh.versionAsOf(ref, parseTimestampMillis(ts.get)))
+        wh.versionAsOf(ref, GraftCommitStream.parseTimestamp(ts.get)))
       val newVersion = wh.restore(ref, target)
       single(
         StructType(Seq(StructField("table", StringType),

@@ -111,9 +111,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       val snap = wh.snapshot(base).getOrElse(throw new NoSuchTableException(ident))
       return ident.name() match {
         case "changes" => new GraftChangesTable(SparkSession.active, wh, snap)
-        case "history" => new GraftHistoryTable(SparkSession.active, wh, base)
-        case "detail" => new GraftDetailTable(SparkSession.active, wh, snap)
-        case _ => new GraftFilesTable(SparkSession.active, wh, snap)
+        case "history" => GraftMetadataTables.history(wh, base)
+        case "detail" => GraftMetadataTables.detail(wh, snap)
+        case _ => GraftMetadataTables.files(wh, snap)
       }
     }
     val ref = refOf(ident)
@@ -173,18 +173,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     "graft SQL catalog does not support this DDL verb: namespaces are " +
       "implicit in the catalog/schema directory layout")
 
-  /** `CREATE TABLE` (and the metadata half of CTAS) through the commit
-    * protocol ([[Warehouse.createTable]] — round-15 verdict, next #3):
-    * version 1 is an empty-file-list commit carrying the declared
-    * schema, `PARTITIONED BY` columns (identity transforms only — the
-    * directory layout IS the partitioning) and any
-    * TBLPROPERTIES-declared stats/bloom manifest columns
-    * (`graft.stats_columns` / `graft.bloom_columns`) as carried meta;
-    * the CTAS data write then arrives as a normal `SupportsWrite`
-    * append, which routes partitioning and bootstraps the manifest
-    * from those keys. `LOCATION`/`EXTERNAL` are refused — the
-    * warehouse owns the physical layout.
-    */
   /** Spark 4 native column syntax — `id BIGINT GENERATED ALWAYS AS
     * IDENTITY (START WITH s INCREMENT BY k)`, `c STRING DEFAULT
     * '<const>'`, `g BIGINT GENERATED ALWAYS AS (expr)` — declared
@@ -279,6 +267,18 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     loadTable(ident)
   }
 
+  /** `CREATE TABLE` (and the metadata half of CTAS) through the commit
+    * protocol ([[Warehouse.createTable]] — round-15 verdict, next #3):
+    * version 1 is an empty-file-list commit carrying the declared
+    * schema, `PARTITIONED BY` columns (identity transforms only — the
+    * directory layout IS the partitioning) and any
+    * TBLPROPERTIES-declared stats/bloom manifest columns
+    * (`graft.stats_columns` / `graft.bloom_columns`) as carried meta;
+    * the CTAS data write then arrives as a normal `SupportsWrite`
+    * append, which routes partitioning and bootstraps the manifest
+    * from those keys. `LOCATION`/`EXTERNAL` are refused — the
+    * warehouse owns the physical layout.
+    */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
                            properties: util.Map[String, String]): Table = {

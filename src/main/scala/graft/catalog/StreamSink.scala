@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, In
 
 /** The STREAMING SINK half of the commit-log table — `df.writeStream
   * .toTable("graft.<cat>.<schema>.<table>")`, the write counterpart of
-  * [[GraftMicroBatchStream]]'s source (a graft table can now sit on
+  * the commit-tailing sources ([[GraftCommitStream]]; a graft table can sit on
   * BOTH ends of a Structured Streaming pipeline: `readStream.table` →
   * transform → `writeStream.toTable`, catalog-to-catalog).
   *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Lit
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, LocalScan, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -540,6 +540,11 @@ private[catalog] final case class GraftStreamOffset(version: Long,
   override def json(): String =
     if (replay) s"""{"version":$version,"replay":true}"""
     else s"""{"version":$version}"""
+
+  /** Whether version `v` is this offset's replay base: the first
+    * version walked from a replay-flagged fresh start.
+    */
+  def replays(v: Long): Boolean = replay && v == version + 1
 }
 
 private[catalog] object GraftStreamOffset {
@@ -552,9 +557,181 @@ private[catalog] object GraftStreamOffset {
   }
 }
 
+/** The contract every stream that tails a table's COMMIT LOG keeps —
+  * the row stream ([[GraftMicroBatchStream]]) and the change feed
+  * ([[GraftCdfMicroBatchStream]]) — written once. Offsets are commit
+  * versions ([[GraftStreamOffset]]): checkpointable, and a replayed
+  * range re-plans the same partitions. A source supplies only what one
+  * commit weighs toward the read limits ([[commitLoad]]) and how a
+  * version range plans its partitions ([[rangePartitions]]), plus its
+  * schema-driven reader factory.
+  *
+  *  - Start: `startingVersion` → just before it, so version v's own
+  *    changes are the first batch (loud failure when v predates
+  *    retention, like Delta); `startingTimestamp` → the earliest
+  *    version committed at or after it ([[Warehouse.versionSince]],
+  *    Delta's inclusive contract); default → just before the EARLIEST
+  *    SURVIVING version, replay-flagged: the first batch emits the
+  *    table's full state as of retention, then tails deltas — a fresh
+  *    stream on a table whose v1 was vacuumed (keepVersions=1 is the
+  *    default!) must not walk into the hole below the horizon.
+  *  - Trigger.AvailableNow pins the target version at query start, so
+  *    the run drains exactly the commits that existed then and stops,
+  *    whatever lands concurrently.
+  *  - Rate limiting (`maxFilesPerTrigger` / `maxBytesPerTrigger`, the
+  *    Delta source's knobs): a trigger admits WHOLE COMMITS from the
+  *    backlog until the limit fills — a 10k-commit backfill becomes
+  *    many bounded micro-batches instead of one giant plan. At least
+  *    one commit always admits (progress guarantee: a single commit
+  *    larger than the limit must still drain), matching Delta. Sizes
+  *    ride the log's recorded per-file bytes; pre-size log entries
+  *    count 0 toward a byte limit (degrade to file-count limiting).
+  *    Composes with AvailableNow: the pinned target bounds the walk,
+  *    the limit paces it, the runner loops until the target drains.
+  */
+private[catalog] abstract class GraftCommitStream(wh: Warehouse,
+                                                  protected val ref: TableRef,
+                                                  options: CaseInsensitiveStringMap)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  /** What version `v`, walked from `start`, weighs toward the read
+    * limits: (files it scans, their recorded bytes).
+    */
+  protected def commitLoad(start: GraftStreamOffset, v: Long): (Long, Long)
+
+  /** The partitions of the non-empty version range `(start, endV]`. */
+  protected def rangePartitions(start: GraftStreamOffset,
+                                endV: Long): Array[InputPartition]
+
+  override def initialOffset(): Offset =
+    GraftCommitStream.startingVersion(wh, ref, options) match {
+      case Some(v) => GraftStreamOffset(v - 1)
+      case None =>
+        wh.earliestVersion(ref) match {
+          case Some(e) if e > 1 => GraftStreamOffset(e - 1, replay = true)
+          case _ => GraftStreamOffset(0L)
+        }
+    }
+
+  private var availableNowTarget: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowTarget = Some(wh.currentVersion(ref).getOrElse(0L))
+
+  private def targetVersion: Long =
+    availableNowTarget.getOrElse(wh.currentVersion(ref).getOrElse(0L))
+
+  override def latestOffset(): Offset = GraftStreamOffset(targetVersion)
+
+  override def reportLatestOffset(): Offset = latestOffset()
+
+  override def getDefaultReadLimit: ReadLimit = {
+    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
+    val maxBytes = Option(options.get("maxBytesPerTrigger")).map(_.toLong)
+    (maxFiles, maxBytes) match {
+      case (Some(f), Some(b)) =>
+        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
+      case (Some(f), None) => ReadLimit.maxFiles(f)
+      case (None, Some(b)) => ReadLimit.maxBytes(b)
+      case _ => ReadLimit.allAvailable()
+    }
+  }
+
+  /** The last version this trigger admits: walk `(start, target]`
+    * commit by commit, accumulating each commit's [[commitLoad]], and
+    * stop BEFORE the commit that would push past every active limit —
+    * always admitting at least one.
+    */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val s = start.asInstanceOf[GraftStreamOffset]
+    val target = targetVersion
+    val (fileCap, byteCap) = GraftCommitStream.caps(limit)
+    if (fileCap.isEmpty && byteCap.isEmpty || s.version >= target)
+      return GraftStreamOffset(target)
+    var files = 0L
+    var bytes = 0L
+    var admitted = s.version
+    var v = s.version + 1
+    while (v <= target) {
+      val (f, b) = commitLoad(s, v)
+      files += f
+      bytes += b
+      // the first commit always admits; later commits admit only while
+      // every active cap still holds
+      val overflow = fileCap.exists(files > _) || byteCap.exists(bytes > _)
+      if (admitted == s.version || !overflow) admitted = v
+      if (overflow) return GraftStreamOffset(admitted)
+      v += 1
+    }
+    GraftStreamOffset(admitted)
+  }
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val s = start.asInstanceOf[GraftStreamOffset]
+    val e = end.asInstanceOf[GraftStreamOffset].version
+    if (e <= s.version) Array.empty else rangePartitions(s, e)
+  }
+
+  override def deserializeOffset(json: String): Offset =
+    GraftStreamOffset.parse(json)
+
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
+private[catalog] object GraftCommitStream {
+
+  /** An explicit `startingVersion` or `startingTimestamp` (mutually
+    * exclusive) resolved to the first version to read; None when
+    * neither is given. Streams and the batch `.changes` read share it.
+    */
+  def startingVersion(wh: Warehouse, ref: TableRef,
+                      options: CaseInsensitiveStringMap): Option[Long] = {
+    val version = Option(options.get("startingVersion")).map(_.toLong)
+    val ts = Option(options.get("startingTimestamp"))
+    require(version.isEmpty || ts.isEmpty,
+      s"$ref: startingVersion and startingTimestamp are mutually exclusive")
+    version.orElse(ts.map(t => wh.versionSince(ref, parseTimestamp(t))))
+  }
+
+  /** A commit-instant literal → epoch millis: raw epoch millis, an
+    * ISO-8601 instant (`2024-01-05T00:00:00Z`), an unzoned
+    * `yyyy-MM-dd HH:mm:ss[.SSS]` read as UTC (the commit clock is UTC
+    * wall time), or a bare `yyyy-MM-dd` at UTC midnight.
+    */
+  def parseTimestamp(s: String): Long = {
+    import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+    import scala.util.Try
+    val t = s.trim
+    t.toLongOption
+      .orElse(Try(Instant.parse(t).toEpochMilli).toOption)
+      .orElse(Try(LocalDateTime.parse(t.replace(' ', 'T'))
+        .toInstant(ZoneOffset.UTC).toEpochMilli).toOption)
+      .orElse(Try(LocalDate.parse(t).atStartOfDay
+        .toInstant(ZoneOffset.UTC).toEpochMilli).toOption)
+      .getOrElse(throw new IllegalArgumentException(
+        s"timestamp '$s' is not epoch millis, ISO-8601, " +
+          "'yyyy-MM-dd HH:mm:ss[.SSS]' or 'yyyy-MM-dd'"))
+  }
+
+  /** The (file, byte) caps a read limit carries; a composite folds its
+    * parts.
+    */
+  private def caps(l: ReadLimit): (Option[Int], Option[Long]) = l match {
+    case f: ReadMaxFiles => (Some(f.maxFiles()), None)
+    case b: ReadMaxBytes => (None, Some(b.maxBytes()))
+    case c: CompositeReadLimit =>
+      c.getReadLimits.map(caps).foldLeft((Option.empty[Int], Option.empty[Long])) {
+        case ((f1, b1), (f2, b2)) => (f1.orElse(f2), b1.orElse(b2))
+      }
+    case _ => (None, None)
+  }
+}
+
 /** `spark.readStream` over a warehouse table: TABLE TAILING off the
   * commit log — the counterpart of Delta's streaming source, with the
-  * same contract:
+  * same contract ([[GraftCommitStream]] holds the start, AvailableNow
+  * and rate-limit halves):
   *
   *  - micro-batch `(start, end]` scans the files that FIRST APPEARED
   *    in commit versions `start+1 .. end` (file-level diff of adjacent
@@ -596,9 +773,7 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
                                                    dataFields: StructType,
                                                    requiredSchema: StructType,
                                                    options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  private val ref = snap.ref
+    extends GraftCommitStream(wh, snap.ref, options) {
 
   /** Delta's `skipChangeCommits`: commits that RETIRED files (merge
     * updates, deletes, compaction rewrites) emit NOTHING — only pure
@@ -610,96 +785,6 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
   private val skipChangeCommits =
     Option(options.get("skipChangeCommits")).exists(_.toBoolean)
 
-  /** Where a new stream starts:
-    *
-    *  - `startingVersion` option → just before it, so version v's own
-    *    changes are the first batch (loud-fail when v predates
-    *    retention, like Delta);
-    *  - `startingTimestamp` option → the earliest version committed
-    *    at or after it ([[Warehouse.versionSince]], Delta's inclusive
-    *    contract; epoch millis or an ISO/SQL timestamp literal);
-    *  - default → just before the EARLIEST SURVIVING version, with the
-    *    replay flag: the first batch emits the table's full state as
-    *    of retention, then tails deltas — a fresh stream on a table
-    *    whose v1 was vacuumed (keepVersions=1 is the default!) must
-    *    not walk into the hole below the horizon.
-    */
-  override def initialOffset(): Offset = {
-    val startingVersion = Option(options.get("startingVersion")).map(_.toLong)
-    val startingTs = Option(options.get("startingTimestamp"))
-    require(startingVersion.isEmpty || startingTs.isEmpty,
-      s"stream on $ref: startingVersion and startingTimestamp are " +
-        "mutually exclusive")
-    startingVersion.orElse(
-        startingTs.map(t => wh.versionSince(ref, parseTimestamp(t)))) match {
-      case Some(v) => GraftStreamOffset(v - 1)
-      case None =>
-        wh.earliestVersion(ref) match {
-          case Some(e) if e > 1 => GraftStreamOffset(e - 1, replay = true)
-          case _ => GraftStreamOffset(0L)
-        }
-    }
-  }
-
-  /** `startingTimestamp` literal → epoch millis: raw epoch millis, ISO
-    * instant (`2024-01-05T00:00:00Z`), or an unzoned SQL timestamp
-    * (`2024-01-05 00:00:00[.SSS]`) interpreted in UTC — the session
-    * timezone the engine pins everywhere else.
-    */
-  private def parseTimestamp(s: String): Long = {
-    val t = s.trim
-    t.toLongOption.getOrElse {
-      try java.time.Instant.parse(t).toEpochMilli
-      catch {
-        case _: java.time.format.DateTimeParseException =>
-          java.time.LocalDateTime
-            .parse(t.replace(' ', 'T'))
-            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      }
-    }
-  }
-
-  override def latestOffset(): Offset =
-    GraftStreamOffset(wh.currentVersion(ref).getOrElse(0L))
-
-  // -- Trigger.AvailableNow: pin the target version at query start so
-  // the run drains exactly the commits that existed then and stops,
-  // whatever lands concurrently (SupportsAdmissionControl surface)
-  private var availableNowTarget: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(wh.currentVersion(ref).getOrElse(0L))
-
-  /** Rate limiting (`maxFilesPerTrigger` / `maxBytesPerTrigger`, the
-    * Delta source's knobs): a trigger admits WHOLE COMMITS from the
-    * backlog until the limit fills — a 10k-commit backfill becomes
-    * many bounded micro-batches instead of one giant plan. At least
-    * one commit always admits (progress guarantee: a single commit
-    * larger than the limit must still drain), matching Delta. Sizes
-    * ride the log's recorded per-file bytes; pre-size log entries
-    * count 0 toward a byte limit (degrade to file-count limiting).
-    * Composes with AvailableNow: the pinned target bounds the walk,
-    * the limit paces it, the runner loops until the target drains.
-    */
-  override def getDefaultReadLimit: ReadLimit = {
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val maxBytes = Option(options.get("maxBytesPerTrigger")).map(_.toLong)
-    (maxFiles, maxBytes) match {
-      case (Some(f), Some(b)) =>
-        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
-      case (Some(f), None) => ReadLimit.maxFiles(f)
-      case (None, Some(b)) => ReadLimit.maxBytes(b)
-      case _ => ReadLimit.allAvailable()
-    }
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val target = availableNowTarget
-      .getOrElse(wh.currentVersion(ref).getOrElse(0L))
-    GraftStreamOffset(
-      admittedEnd(start.asInstanceOf[GraftStreamOffset], target, limit))
-  }
-
   /** One version's newly-appeared files + recorded sizes for a walk
     * that started at `start` — O(that commit's churn) off the raw log
     * file ([[Warehouse.versionChanges]]): a delta commit's `add` lines
@@ -710,7 +795,7 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
     */
   private def changesFor(start: GraftStreamOffset,
                          v: Long): (Seq[String], Map[String, (Long, Long)]) = {
-    if (start.replay && v == start.version + 1) {
+    if (start.replays(v)) {
       val s = wh.snapshotAt(ref, v)
       require(s.dvMap.isEmpty,
         s"stream on $ref: the replay base (version $v) carries live " +
@@ -750,52 +835,11 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
           "start replays the surviving history)"))
   }
 
-  /** The last version this trigger admits: walk `(startV, targetV]`
-    * commit by commit, accumulating each commit's NEWLY-APPEARED files
-    * (count + recorded bytes), and stop BEFORE the commit that would
-    * push past every active limit — always admitting at least one.
-    */
-  private def admittedEnd(start: GraftStreamOffset, targetV: Long,
-                          limit: ReadLimit): Long = {
-    import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadAllAvailable, ReadMaxBytes, ReadMaxFiles}
-    def caps(l: ReadLimit): (Option[Int], Option[Long]) = l match {
-      case f: ReadMaxFiles => (Some(f.maxFiles()), None)
-      case b: ReadMaxBytes => (None, Some(b.maxBytes()))
-      case c: CompositeReadLimit =>
-        c.getReadLimits.map(caps).foldLeft((Option.empty[Int], Option.empty[Long])) {
-          case ((f1, b1), (f2, b2)) => (f1.orElse(f2), b1.orElse(b2))
-        }
-      case _: ReadAllAvailable => (None, None)
-      case _ => (None, None)
-    }
-    val (fileCap, byteCap) = caps(limit)
-    val startV = start.version
-    if (fileCap.isEmpty && byteCap.isEmpty || startV >= targetV) return targetV
-    var files = 0L
-    var bytes = 0L
-    var admitted = startV
-    var v = startV + 1
-    while (v <= targetV) {
-      val (added, meta) = changesFor(start, v)
-      files += added.size
-      bytes += added.flatMap(meta.get).map(_._1).sum
-      // the first commit always admits; later commits admit only while
-      // every active cap still holds
-      val overflow = fileCap.exists(files > _) || byteCap.exists(bytes > _)
-      if (admitted == startV || !overflow) admitted = v
-      if (overflow) return admitted
-      v += 1
-    }
-    admitted
+  override protected def commitLoad(start: GraftStreamOffset,
+                                    v: Long): (Long, Long) = {
+    val (added, meta) = changesFor(start, v)
+    (added.size.toLong, added.flatMap(meta.get).map(_._1).sum)
   }
-
-  override def reportLatestOffset(): Offset = latestOffset()
-
-  override def deserializeOffset(json: String): Offset =
-    GraftStreamOffset.parse(json)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 
   /** Files first appearing in versions `(start, endV]`, with their
     * recorded sizes — one pseudo-snapshot the stock parquet machinery
@@ -825,12 +869,9 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
     b.build()
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftStreamOffset]
-    val e = end.asInstanceOf[GraftStreamOffset].version
-    if (e <= s.version) Array.empty
-    else scanFor(addedSnapshot(s, e)).toBatch.planInputPartitions()
-  }
+  override protected def rangePartitions(start: GraftStreamOffset,
+                                         endV: Long): Array[InputPartition] =
+    scanFor(addedSnapshot(start, endV)).toBatch.planInputPartitions()
 
   /** Schema-driven, not file-driven — the factory from a scan over the
     * CURRENT snapshot reads any batch's file partitions (same session,

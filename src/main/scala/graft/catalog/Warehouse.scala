@@ -296,44 +296,27 @@ final class Warehouse(spark: SparkSession, val root: String,
   /** The files that first APPEARED in commit `v`, with their recorded
     * (bytes, mtime) — the streaming source's per-trigger unit, O(that
     * commit's churn): a delta file's `add` lines answer directly with
-    * NO parent resolution; a checkpoint diffs against a READABLE
-    * predecessor (an overwrite's adds are its whole list anyway), and
-    * falls back to its full resolved list when the predecessor is
-    * below retention — the replay anchor a fresh stream starts from.
-    * Also reports how many files the commit RETIRED (0 for a pure
-    * append — what `skipChangeCommits` filters on). None when version
-    * `v` itself is unreadable (never committed, or vacuumed).
+    * NO parent resolution; a checkpoint takes [[versionChangesFull]]'s
+    * diff against a readable predecessor (an overwrite's adds are its
+    * whole list anyway), whose full-list fallback when the predecessor
+    * is gone is the replay anchor a fresh stream starts from. Also
+    * reports how many files the commit RETIRED (0 for a pure append —
+    * what `skipChangeCommits` filters on). None when version `v`
+    * itself is unreadable (never committed, or vacuumed).
     */
   private[catalog] def versionChanges(ref: TableRef, v: Long):
       Option[(Seq[String], Map[String, (Long, Long)], Int)] = {
     if (v < horizonOf(ref)) return None
-    rawVersion(ref, v).map { c =>
+    rawVersion(ref, v).flatMap { c =>
       // deletion-vector churn counts as CHANGE: a merge-on-read delete
       // retires nothing, but its commit modified live rows — the row
       // stream's skipChangeCommits contract must see it
       if (c.isDelta)
-        (c.files, c.fileMeta,
-          c.retires.size + c.dvAdds.size + c.dvDrops.size)
-      else {
-        // diff whenever the v-1 log file is PHYSICALLY present — chain
-        // anchors below the horizon still resolve, so an explicit
-        // startingVersion at the earliest survivor gets that commit's
-        // actual churn, not a full-table re-emission; the full-list
-        // fallback is reserved for predecessors vacuum truly deleted
-        val parent = if (v >= 2) resolvedVersion(ref, v - 1) else None
-        parent match {
-          case Some(p) =>
-            val prevSet = p.files.toSet
-            val fileSet = c.files.toSet
-            val adds = c.files.filterNot(prevSet)
-            val addSet = adds.toSet
-            val dvChanged = c.files.count(f =>
-              prevSet.contains(f) && p.dvMap.get(f) != c.dvAdds.get(f))
-            (adds, c.fileMeta.filter { case (f, _) => addSet.contains(f) },
-              p.files.count(f => !fileSet.contains(f)) + dvChanged)
-          case None => (c.files, c.fileMeta, 0)
-        }
-      }
+        Some((c.files, c.fileMeta,
+          c.retires.size + c.dvAdds.size + c.dvDrops.size))
+      else
+        versionChangesFull(ref, v).map(cc =>
+          (cc.adds, cc.addMeta, cc.retired.size + cc.dvChanged.size))
     }
   }
 
@@ -377,6 +360,11 @@ final class Warehouse(spark: SparkSession, val root: String,
           retiredWithDv = parent.map(_.dvMap.keySet).getOrElse(Set.empty)
             .intersect(retiredSet).toSeq.sorted)
       } else {
+        // diff whenever the v-1 log file is PHYSICALLY present — chain
+        // anchors below the horizon still resolve, so an explicit
+        // startingVersion at the earliest survivor gets that commit's
+        // actual churn, not a full-table re-emission; the full-list
+        // fallback is reserved for predecessors vacuum truly deleted
         val parent = if (v >= 2) resolvedVersion(ref, v - 1) else None
         parent match {
           case Some(p) =>
@@ -4656,10 +4644,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     * rows/ndv columns (or with partially-null rows from a mixed-era
     * incremental merge) — the registry only ever holds sums it can
     * fully account for.
-    */
-  def registerStats(ref: TableRef): Unit = registerStatsAt(path(ref))
-
-  /** Returns whether stats were actually registered — false when the
+    *
+    * Returns whether stats were actually registered — false when the
     * manifest is absent, predates the rows column, or (e.g. after a
     * retirement that emptied the table) holds zero accountable files.
     * Callers on a write path must invalidate on false or the registry
@@ -4854,16 +4840,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     * when the table has no manifest for `column` (caller decides the
     * fallback).
     */
-  /** [[splitFilesByRange]] with OPTIONAL bounds — the form SQL filter
-    * pushdown needs (`c > 5` has no upper bound). None on a side means
-    * unbounded; both-None keeps every file. Same conservative
-    * exclusion-list contract: null-stats and manifest-absent files
-    * survive.
-    */
-  def splitFilesByBounds(ref: TableRef, column: String, lo: Option[Any],
-                         hi: Option[Any]): Option[(Seq[String], Seq[String])] =
-    excludedByBounds(ref, column, lo, hi).map(partitionCurrent(ref, _))
-
   def splitFilesByRange(ref: TableRef, column: String, lo: Any,
                         hi: Any): Option[(Seq[String], Seq[String])] =
     excludedByBounds(ref, column, Some(lo), Some(hi))
@@ -6013,20 +5989,17 @@ object Warehouse {
     */
   private[catalog] val manifestLocalWriteRows = 10000
 
-  /** (sessionId:tablePath) → (part-file fingerprint, LocalRelation
-    * manifest). See [[Warehouse]].manifestDf. Flushed whole when it
-    * reaches [[manifestCacheMax]] entries so long-lived drivers (and
-    * test JVMs cycling hundreds of temp tables) stay bounded.
-    */
   /** One isolated session per underlying session for internal
     * commit-scale metadata aggregates ([[Warehouse.metaFrame]]): AQE
     * off (its per-stage re-optimization jobs are pure overhead on
-    * ≤10k-row frames) and a fixed data-derived shuffle width. Keyed by
-    * the session object; sessions live for the JVM's life in this
-    * engine, so entries are bounded by session count.
+    * ≤10k-row frames) and a fixed data-derived shuffle width. Keyed
+    * WEAKLY by the session object (identity equality, SparkSession's
+    * own): one driver hosting many user sessions must not keep a
+    * dropped session — and its SessionState — alive through its meta
+    * session.
     */
-  private val metaSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private val metaSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
 
   private[catalog] def metaSessionFor(spark: SparkSession): SparkSession =
     metaSessions.computeIfAbsent(spark, s => {
@@ -6036,6 +6009,11 @@ object Warehouse {
       m
     })
 
+  /** (sessionId:tablePath) → (part-file fingerprint, LocalRelation
+    * manifest). See [[Warehouse]].manifestDf. Flushed whole when it
+    * reaches [[manifestCacheMax]] entries so long-lived drivers (and
+    * test JVMs cycling hundreds of temp tables) stay bounded.
+    */
   private val manifestCache =
     scala.collection.concurrent.TrieMap[String, (String, DataFrame)]()
 

@@ -707,7 +707,8 @@ object StreamingQueries {
     * next #3): `spark.readStream.table` through [[graft.catalog.GraftCatalog]]
     * TAILS THE COMMIT LOG — each micro-batch scans the files added by a
     * commit-version range, planned metadata-only from the sized log
-    * ([[graft.catalog.GraftMicroBatchStream]]), the Delta streaming-
+    * ([[graft.catalog.GraftMicroBatchStream]] on the commit-tailing core
+    * [[graft.catalog.GraftCommitStream]]), the Delta streaming-
     * source counterpart. Fixture: an orders slice loaded as v1 then
     * grown by two range-disjoint INSERT-ONLY merges (provably append-
     * only via the key-stats manifest, so no rewrite re-emission); the

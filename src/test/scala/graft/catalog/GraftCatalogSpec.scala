@@ -57,7 +57,7 @@ class GraftCatalogSpec extends SparkSpec {
     // ...and the stats manifest pruned files BEFORE task scheduling
     assert(plannedFiles(q).size < total,
       s"range pushdown never pruned: ${plannedFiles(q).size}/$total files")
-    // one-sided bound prunes too (splitFilesByBounds path)
+    // one-sided bound prunes too (excludedByBounds path)
     assert(plannedFiles(spark.sql(
       "SELECT k FROM graftsql.silver.g.facts WHERE k > 900")).size < total)
     // unfiltered read sees every row

@@ -5,7 +5,8 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 
 /** The DSv2 streaming source over warehouse tables
-  * ([[GraftMicroBatchStream]]): `spark.readStream.table` tails the
+  * ([[GraftMicroBatchStream]] on the commit-tailing core
+  * [[GraftCommitStream]]): `spark.readStream.table` tails the
   * commit log — per-batch file diffs, checkpointed offsets, loud
   * failure past vacuum retention.
   */

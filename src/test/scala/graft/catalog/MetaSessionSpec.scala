@@ -68,4 +68,27 @@ class MetaSessionSpec extends SparkSpec {
     val viaMeta = wh.metaFrame(df).collect().map(_.toSeq).toSet
     assert(viaMeta === direct)
   }
+
+  /** A session that ran one meta-session collect, then was dropped:
+    * only the returned weak reference still points at it.
+    */
+  private def usedAndDropped(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+    val s = spark.newSession()
+    val wh = new Warehouse(s, tmpDir("wh-meta-leak"))
+    val df = s.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
+    assert(wh.metaFrame(df).collect().length === 7)
+    new java.lang.ref.WeakReference(s)
+  }
+
+  test("a dropped parent session is collected: the meta-session map holds it weakly") {
+    val ref = usedAndDropped()
+    var tries = 0
+    while (ref.get != null && tries < 30) {
+      System.gc()
+      Thread.sleep(100)
+      tries += 1
+    }
+    assert(ref.get == null,
+      s"the parent session survived $tries GC cycles after its last use")
+  }
 }
