@@ -186,7 +186,6 @@ private[catalog] object GraftMetadataTables {
       StructField("default_columns", StringType)))
     new GraftLocalTable(s"${snap.ref}.detail", detailSchema, () => {
       val ref = snap.ref
-      val sizes = snap.files.flatMap(f => snap.fileMeta.get(f).map(_._1))
       def csvOrNull(xs: Iterable[String]): Any =
         if (xs.isEmpty) null
         else UTF8String.fromString(xs.toSeq.sorted.mkString(","))
@@ -194,9 +193,8 @@ private[catalog] object GraftMetadataTables {
         UTF8String.fromString(ref.toString),
         snap.version,
         snap.files.size.toLong,
-        // recorded bytes only: a pre-sized-log file has no entry and
-        // a partial sum would read as the whole truth
-        if (sizes.size == snap.files.size) sizes.sum else null,
+        // recorded bytes: every committed file has its entry
+        snap.files.map(snap.fileMeta(_)._1).sum,
         csvOrNull(Warehouse.partDirCols(snap.files)),
         csvOrNull(wh.statColumns(ref)),
         snap.dvMap.size.toLong,
@@ -378,7 +376,7 @@ private[catalog] final class GraftCdfResolver(spark: SparkSession,
       return rowScanPartitions(s.files, s.fileMeta, v)
         .map(GraftCdfInputPartition(_, Some("insert"), v, cdcShape = false))
     }
-    val cc = wh.versionChangesFull(ref, v).getOrElse(
+    val cc = wh.txnLog.changesFull(ref, v).getOrElse(
       throw new IllegalStateException(
         s"change feed on $ref needs version $v, which was never committed " +
           "or fell below vacuum retention"))
@@ -492,7 +490,7 @@ private[catalog] final class GraftCdfMicroBatchStream(wh: Warehouse,
       val s = wh.snapshotAt(ref, v)
       return (s.files.size.toLong, s.fileMeta.values.map(_._1).sum)
     }
-    wh.versionChangesFull(ref, v) match {
+    wh.txnLog.changesFull(ref, v) match {
       case None => (0L, 0L) // planInputPartitions fails loudly later
       case Some(cc) =>
         val op = cc.meta.getOrElse(Warehouse.OpMeta, "")

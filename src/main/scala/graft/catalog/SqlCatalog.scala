@@ -976,14 +976,12 @@ private[catalog] object GraftSqlTable {
   * to keep-the-file — pruning is an optimization, never a filter (the
   * retained filters still run on the scanned rows).
   *
-  * Scale note: resolution is METADATA-ONLY when the commit log
-  * recorded per-file (bytes, mtime) — every write path does since the
-  * sized-log format landed. The listing statuses are reconstructed
-  * from [[TableSnapshot.fileMeta]] and pre-seeded into the index's
-  * FileStatusCache, so planning a million-file table costs one log
-  * read and ZERO filesystem calls (the Delta/Iceberg planning model);
-  * pre-size logs miss the cache and degrade to InMemoryFileIndex's
-  * per-file listing.
+  * Scale note: resolution is METADATA-ONLY — every `file`/`add` log
+  * line records the file's (bytes, mtime). The listing statuses are
+  * reconstructed from [[TableSnapshot.fileMeta]] and pre-seeded into
+  * the index's FileStatusCache, so planning a million-file table costs
+  * one log read and ZERO filesystem calls (the Delta/Iceberg planning
+  * model).
   */
 private[catalog] final class GraftFileIndex(spark: SparkSession,
                                             wh: Warehouse,
@@ -1290,24 +1288,19 @@ private[catalog] object GraftFileIndex {
   /** A FileStatusCache whose entries are reconstructed from the commit
     * log's recorded per-file (bytes, mtime) — InMemoryFileIndex
     * consults the cache per root path BEFORE touching the filesystem,
-    * so full coverage makes index construction zero-RPC: at a million
-    * files, one log read replaces a million `getFileStatus` calls.
-    * Seeded ONLY when the log covers every snapshot file (all-or-
-    * nothing keeps cached and listed statuses from mixing path
-    * namespaces); pre-size logs get an empty cache and list normally.
+    * so index construction is zero-RPC: at a million files, one log
+    * read replaces a million `getFileStatus` calls. A logless
+    * directory's synthesized snapshot records nothing and lists.
     */
   private def logBackedCache(spark: SparkSession, wh: Warehouse,
                              snap: TableSnapshot): FileStatusCache = {
     val qBase = qualifiedBase(spark, wh, snap)
-    val complete = snap.files.nonEmpty && snap.files.forall(snap.fileMeta.contains)
     val statuses: Map[Path, org.apache.hadoop.fs.FileStatus] =
-      if (!complete) Map.empty
-      else snap.files.map { f =>
-        val (bytes, mtime) = snap.fileMeta(f)
+      snap.fileMeta.map { case (f, (bytes, mtime)) =>
         val p = new Path(qBase, f)
         p -> new org.apache.hadoop.fs.FileStatus(
           bytes, false, 1, 128L << 20, mtime, p)
-      }.toMap
+      }
     new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[org.apache.hadoop.fs.FileStatus]] =
         statuses.get(path).map(Array(_))

@@ -584,8 +584,8 @@ private[catalog] object GraftStreamOffset {
   *    many bounded micro-batches instead of one giant plan. At least
   *    one commit always admits (progress guarantee: a single commit
   *    larger than the limit must still drain), matching Delta. Sizes
-  *    ride the log's recorded per-file bytes; pre-size log entries
-  *    count 0 toward a byte limit (degrade to file-count limiting).
+  *    ride the log's recorded per-file bytes, which every `file`/`add`
+  *    line carries.
   *    Composes with AvailableNow: the pinned target bounds the walk,
   *    the limit paces it, the runner loops until the target drains.
   */
@@ -787,7 +787,7 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
 
   /** One version's newly-appeared files + recorded sizes for a walk
     * that started at `start` — O(that commit's churn) off the raw log
-    * file ([[Warehouse.versionChanges]]): a delta commit's `add` lines
+    * file ([[TxnLog.changes]]): a delta commit's `add` lines
     * answer with no parent resolution, and the replay-flagged first
     * version emits its full resolved state (the fresh-stream base).
     * Loud failure when the version fell below vacuum retention, like
@@ -807,7 +807,7 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
           "SHALLOW clone's foreign files — materialize the clone first")
       (s.files, s.fileMeta)
     } else
-      wh.versionChanges(ref, v).map { case (adds, meta, retired) =>
+      wh.txnLog.changes(ref, v).map { case (adds, meta, retired) =>
         // a commit that retired files is a CHANGE commit (update /
         // delete / rewrite): under skipChangeCommits it contributes
         // nothing — only pure appends flow
@@ -838,7 +838,7 @@ private[catalog] final class GraftMicroBatchStream(spark: SparkSession,
   override protected def commitLoad(start: GraftStreamOffset,
                                     v: Long): (Long, Long) = {
     val (added, meta) = changesFor(start, v)
-    (added.size.toLong, added.flatMap(meta.get).map(_._1).sum)
+    (added.size.toLong, added.map(meta(_)._1).sum)
   }
 
   /** Files first appearing in versions `(start, endV]`, with their

@@ -38,12 +38,10 @@ final class ConcurrentWriteException(msg: String) extends IllegalStateException(
   * compaction.
   */
 /** @param fileMeta per-file (bytes, mtimeMillis) recorded by the commit
-  *        at write time — when it covers every file, readers can plan
-  *        scans from the log alone, no filesystem listing (the
-  *        Delta/Iceberg metadata-only planning model;
-  *        [[graft.catalog.GraftCatalog]] rides this). Logs written
-  *        before sizes existed parse with an empty map and degrade to
-  *        listing.
+  *        at write time, one entry for every file of a committed
+  *        version — readers plan scans from the log alone, no
+  *        filesystem listing (the Delta/Iceberg metadata-only planning
+  *        model; [[graft.catalog.GraftCatalog]] rides this).
   */
 /** @param dvMap deletion-vector sidecars: data-file rel path → sidecar
   *        directory rel path (parquet of (file, pos) row positions).
@@ -76,13 +74,13 @@ final case class TableSnapshot(ref: TableRef, version: Long,
   *
   * The log is DELTA-ENCODED (Delta/Iceberg-style): most commits record
   * only their add/retire churn against version v-1 (O(churn) per
-  * commit, not O(files)), every [[Warehouse.checkpointEvery]]-th
+  * commit, not O(files)), every [[TxnLog.checkpointEvery]]-th
   * version writes a full-file-list CHECKPOINT bounding chain depth, and
   * snapshot resolution walks checkpoint + tail with a fingerprinted
   * cache — a 1M-file table committing hourly writes O(churn)/commit,
-  * not ~GB/day of repeated file lists. Directories without a log
-  * (e.g. bucketed saveAsTable layouts) fall back to plain directory
-  * reads.
+  * not ~GB/day of repeated file lists. [[TxnLog]] owns the log files
+  * and the writer lock. Directories without a log (e.g. bucketed
+  * saveAsTable layouts) fall back to plain directory reads.
   *
   * A second IN-FLIGHT writer is DETECTED, not merged: every mutating
   * path ([[overwrite]], [[replaceDataFiles]] and everything built on
@@ -110,173 +108,17 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   // ------------------------------------------------ versioned commit log
 
-  /** Log directory name — underscore-prefixed like the stats manifest,
-    * so plain directory scans never see it as data.
+  /** The tables' commit log: versions, resolution, the vacuum horizon
+    * and the writer lock ([[TxnLog]]).
     */
-  private val logDir = "_graft_log"
+  private[catalog] val txnLog = new TxnLog(hadoopConf, path, writerLeaseMs)
 
-  private def logDirPath(ref: TableRef) = new Path(new Path(path(ref)), logDir)
-
-  private def versionFilePath(ref: TableRef, v: Long) =
-    new Path(logDirPath(ref), f"v$v%08d")
-
-  private val horizonMarker = "_horizon"
-
-  /** Version numbers with a log file PRESENT, ascending — including
-    * delta-chain anchors below the vacuum horizon, which survive for
-    * resolution but are not readable. Public readers go through
-    * [[listVersions]] instead.
-    */
-  private def listVersionFiles(ref: TableRef): Seq[Long] = {
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    if (!filesystem.exists(dir)) Seq.empty
-    else filesystem.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.length == 9 && n.startsWith("v") &&
-        n.drop(1).forall(_.isDigit) => n.drop(1).toLong }
-      .toSeq.sorted
-  }
-
-  /** READABLE committed versions, ascending: version files present AND
-    * at or above the vacuum horizon (the single owner of the `v%08d`
-    * convention — history/vacuum/currentVersion all resolve through
-    * here). One directory listing; horizon markers, when present,
-    * resolve from their NAMES ([[horizonFrom]]) — no file reads.
-    */
-  private def listVersions(ref: TableRef): Seq[Long] = {
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    if (!filesystem.exists(dir)) return Seq.empty
-    val statuses = filesystem.listStatus(dir)
-    val all = statuses.map(_.getPath.getName)
-      .collect { case n if n.length == 9 && n.startsWith("v") &&
-        n.drop(1).forall(_.isDigit) => n.drop(1).toLong }
-      .toSeq.sorted
-    val h = horizonFrom(statuses)
-    all.filter(_ >= h)
-  }
-
-  def currentVersion(ref: TableRef): Option[Long] = listVersions(ref).lastOption
+  def currentVersion(ref: TableRef): Option[Long] = txnLog.versions(ref).lastOption
 
   /** Earliest version still readable (above the vacuum horizon) — what
     * a fresh stream's default start resolves against.
     */
-  def earliestVersion(ref: TableRef): Option[Long] = listVersions(ref).headOption
-
-  /** The vacuum retention horizon: versions below it are unreadable
-    * even when their log files survive as delta-chain anchors. 0 when
-    * the table was never horizon-pruned.
-    */
-  private def horizonOf(ref: TableRef): Long = {
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    val statuses =
-      try filesystem.listStatus(dir)
-      catch { case _: java.io.FileNotFoundException => return 0L }
-    horizonFrom(statuses)
-  }
-
-  /** The horizon a log-directory listing establishes: the MAX over
-    * every surviving marker. Markers are uniquely named
-    * `_horizon.<h>` (value in the name — zero reads), written by
-    * [[writeHorizon]] new-before-old so a crash between the write and
-    * the sweep leaves TWO markers whose max is still correct — never
-    * a window where versions a previous vacuum already stripped of
-    * data resolve as readable. The legacy unsuffixed `_horizon`
-    * (value inside the file) still reads through the fingerprint
-    * cache for tables vacuumed by earlier builds.
-    */
-  private def horizonFrom(statuses: Array[org.apache.hadoop.fs.FileStatus]): Long =
-    statuses.foldLeft(0L) { (acc, st) =>
-      val n = st.getPath.getName
-      val h =
-        if (n == horizonMarker) horizonValue(st)
-        else if (n.startsWith(horizonMarker + "."))
-          n.drop(horizonMarker.length + 1).toLongOption.getOrElse(0L)
-        else 0L
-      math.max(acc, h)
-    }
-
-  private def horizonValue(st: org.apache.hadoop.fs.FileStatus): Long = {
-    val key = st.getPath.toString
-    val fp = s"${st.getLen}:${st.getModificationTime}"
-    Warehouse.cachedHorizon(key, fp).getOrElse {
-      val in = fs(st.getPath).open(st.getPath)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .toLongOption.getOrElse(0L)
-        finally in.close()
-      Warehouse.cacheHorizon(key, fp, v)
-      v
-    }
-  }
-
-  private def versionStatus(ref: TableRef, v: Long): Option[org.apache.hadoop.fs.FileStatus] = {
-    val p = versionFilePath(ref, v)
-    try Some(fs(p).getFileStatus(p))
-    catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  private def fpOf(st: org.apache.hadoop.fs.FileStatus): String =
-    s"${st.getLen}:${st.getModificationTime}"
-
-  /** Parsed (NOT resolved) content of one version file, through the
-    * fingerprint cache — a delta file's `files` are its ADDS only.
-    * None when the version file is absent.
-    */
-  private[catalog] def rawVersion(ref: TableRef, v: Long): Option[Warehouse.LogContent] =
-    versionStatus(ref, v).map(rawVersionSt)
-
-  private def rawVersionSt(st: org.apache.hadoop.fs.FileStatus): Warehouse.LogContent = {
-    val key = st.getPath.toString
-    val fp = fpOf(st)
-    Warehouse.cachedRaw(key, fp).getOrElse {
-      val c = parseLog(st.getPath)
-      Warehouse.cacheRaw(key, fp, c)
-      c
-    }
-  }
-
-  /** Fully resolved content of one version — delta chains applied
-    * against the predecessor, memoized per version file (fingerprint-
-    * validated, so a dropped-and-recreated table never serves stale
-    * content). Chain depth is bounded by [[Warehouse.checkpointEvery]].
-    * Internal: does NOT apply the vacuum horizon (chain anchors below
-    * it must still resolve); readable-version checks live in
-    * [[snapshotAt]].
-    */
-  private def resolvedVersion(ref: TableRef, v: Long): Option[Warehouse.ResolvedVersion] =
-    versionStatus(ref, v).map { st =>
-      val key = st.getPath.toString
-      val fp = fpOf(st)
-      Warehouse.cachedResolved(key, fp).getOrElse {
-        val c = rawVersionSt(st)
-        val r =
-          if (!c.isDelta)
-            Warehouse.ResolvedVersion(c.schemaJson, c.files, c.fileMeta,
-              c.meta, c.dvAdds)
-          else {
-            val parent = resolvedVersion(ref, v - 1).getOrElse(
-              throw new IllegalStateException(
-                s"$ref: version $v is a delta commit but its base " +
-                  s"${v - 1} log file is missing — log corrupted or " +
-                  "manually pruned"))
-            val retired = c.retires.toSet
-            // a delta's add may RE-ADD a carried path (meta-only
-            // change: same file, new recorded bytes/mtime) — the
-            // parent's copy drops so the list never duplicates
-            val readded = c.files.toSet
-            Warehouse.ResolvedVersion(c.schemaJson,
-              parent.files.filterNot(f => retired(f) || readded(f)) ++ c.files,
-              (parent.fileMeta -- retired) ++ c.fileMeta, c.meta,
-              // dv resolution mirrors fileMeta: a retired file's vector
-              // dies with it, tombstones clear a live file's vector,
-              // adds override
-              (parent.dvMap -- retired -- c.dvDrops) ++ c.dvAdds)
-          }
-        Warehouse.cacheResolved(key, fp, r)
-        r
-      }
-    }
+  def earliestVersion(ref: TableRef): Option[Long] = txnLog.versions(ref).headOption
 
   /** The snapshot a given version committed. Throws when the version was
     * never committed or has been vacuumed away (below the retention
@@ -285,191 +127,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   def snapshotAt(ref: TableRef, version: Long): TableSnapshot = {
     val r =
-      if (version < horizonOf(ref)) None else resolvedVersion(ref, version)
+      if (version < txnLog.horizon(ref)) None else txnLog.resolved(ref, version)
     require(r.nonEmpty,
       s"$ref has no version $version (never committed, or vacuumed); " +
         s"current = ${currentVersion(ref).getOrElse("none")}")
     TableSnapshot(ref, version, r.get.schemaJson, r.get.files, r.get.fileMeta,
       r.get.dvMap)
-  }
-
-  /** The files that first APPEARED in commit `v`, with their recorded
-    * (bytes, mtime) — the streaming source's per-trigger unit, O(that
-    * commit's churn): a delta file's `add` lines answer directly with
-    * NO parent resolution; a checkpoint takes [[versionChangesFull]]'s
-    * diff against a readable predecessor (an overwrite's adds are its
-    * whole list anyway), whose full-list fallback when the predecessor
-    * is gone is the replay anchor a fresh stream starts from. Also
-    * reports how many files the commit RETIRED (0 for a pure append —
-    * what `skipChangeCommits` filters on). None when version `v`
-    * itself is unreadable (never committed, or vacuumed).
-    */
-  private[catalog] def versionChanges(ref: TableRef, v: Long):
-      Option[(Seq[String], Map[String, (Long, Long)], Int)] = {
-    if (v < horizonOf(ref)) return None
-    rawVersion(ref, v).flatMap { c =>
-      // deletion-vector churn counts as CHANGE: a merge-on-read delete
-      // retires nothing, but its commit modified live rows — the row
-      // stream's skipChangeCommits contract must see it
-      if (c.isDelta)
-        Some((c.files, c.fileMeta,
-          c.retires.size + c.dvAdds.size + c.dvDrops.size))
-      else
-        versionChangesFull(ref, v).map(cc =>
-          (cc.adds, cc.addMeta, cc.retired.size + cc.dvChanged.size))
-    }
-  }
-
-  /** Full change resolution of one commit for the CHANGE DATA FEED
-    * reader ([[GraftChangesTable]]): the files that appeared AND the
-    * files that retired, with recorded sizes for both (retired sizes
-    * from the parent's resolution — cached), whether the commit was a
-    * FULL replace (every parent file retired — overwrite semantics,
-    * derivable as delete-all + insert-all without change files), and
-    * the commit meta (the `graft.op` / `graft.cdc` the reader's
-    * resolution rules dispatch on). O(churn) off the raw log for delta
-    * commits; checkpoints diff cached resolutions. None when `v` fell
-    * below vacuum retention.
-    */
-  private[catalog] def versionChangesFull(ref: TableRef, v: Long):
-      Option[Warehouse.CommitChanges] = {
-    if (v < horizonOf(ref)) return None
-    rawVersion(ref, v).map { c =>
-      if (c.isDelta) {
-        val retiredSet = c.retires.toSet
-        val parent = resolvedVersion(ref, v - 1)
-        val parentFiles = parent.map(_.files.toSet).getOrElse(Set.empty)
-        val parentMeta =
-          if (c.retires.isEmpty) Map.empty[String, (Long, Long)]
-          else parent.map(_.fileMeta)
-            .getOrElse(Map.empty).view.filterKeys(retiredSet).toMap
-        // a delta `add` can be a META-ONLY re-add of a carried path
-        // (recorded size changed, rows did not): the feed must not
-        // re-emit its rows as inserts — only genuinely NEW paths count
-        val adds = c.files.filterNot(parentFiles.contains)
-        val addSet = adds.toSet
-        // a full replace never delta-encodes (adds+retires >= files
-        // writes a checkpoint), so fullReplace is structurally false
-        Warehouse.CommitChanges(adds,
-          c.fileMeta.view.filterKeys(addSet).toMap, c.retires, parentMeta,
-          fullReplace = false, c.meta,
-          // live files whose vector changed this commit (adds override,
-          // tombstones clear): the merge-on-read delete footprint
-          dvChanged = (c.dvAdds.keys.filterNot(retiredSet) ++
-            c.dvDrops.filterNot(retiredSet)).toSeq.distinct.sorted,
-          retiredWithDv = parent.map(_.dvMap.keySet).getOrElse(Set.empty)
-            .intersect(retiredSet).toSeq.sorted)
-      } else {
-        // diff whenever the v-1 log file is PHYSICALLY present — chain
-        // anchors below the horizon still resolve, so an explicit
-        // startingVersion at the earliest survivor gets that commit's
-        // actual churn, not a full-table re-emission; the full-list
-        // fallback is reserved for predecessors vacuum truly deleted
-        val parent = if (v >= 2) resolvedVersion(ref, v - 1) else None
-        parent match {
-          case Some(p) =>
-            val prevSet = p.files.toSet
-            val fileSet = c.files.toSet
-            val adds = c.files.filterNot(prevSet)
-            val addSet = adds.toSet
-            val retired = p.files.filterNot(fileSet)
-            val retiredSet = retired.toSet
-            Warehouse.CommitChanges(adds,
-              c.fileMeta.view.filterKeys(addSet).toMap,
-              retired, p.fileMeta.view.filterKeys(retiredSet).toMap,
-              fullReplace = retired.nonEmpty && retired.size == p.files.size,
-              c.meta,
-              dvChanged = c.files.filter(f => prevSet.contains(f) &&
-                p.dvMap.get(f) != c.dvAdds.get(f)).sorted,
-              retiredWithDv = p.dvMap.keySet.intersect(retiredSet)
-                .toSeq.sorted)
-          case None =>
-            // no readable predecessor (v1, or vacuum took it): the full
-            // list is the feed's base — inserts, like a fresh stream
-            Warehouse.CommitChanges(c.files, c.fileMeta, Nil, Map.empty,
-              fullReplace = false, c.meta)
-        }
-      }
-    }
-  }
-
-  import Warehouse.LogContent
-
-  /** Parse one log-format file: `schema\t<json>` +
-    * `file\t<rel>[\t<bytes>\t<mtimeMs>]` (the size/mtime fields are
-    * written since metadata-only planning landed; two-field lines from
-    * older logs parse fine with no fileMeta entry) + `meta\tk=v` +
-    * the delta-commit kinds `base\t<v>` / `add\t<rel>\t<bytes>\t<mtime>`
-    * / `retire\t<rel>`; unknown kinds ignored for forward
-    * compatibility.
-    *
-    * Splitting is KIND-FIRST with per-kind limits: `schema` and `meta`
-    * payloads take the whole remainder of the line (a schema JSON or a
-    * carried meta VALUE containing a tab must not shear into a
-    * dropped-key unknown-kind line), while `file`/`add` re-split their
-    * remainder for the size fields (path components are filesystem
-    * names, which cannot contain tabs).
-    */
-  private def parseLog(p: Path): LogContent = {
-    val in = fs(p).open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    Warehouse.LogIO.reads.incrementAndGet()
-    Warehouse.LogIO.bytes.addAndGet(text.length.toLong)
-    var schemaJson = ""
-    var baseVersion: Option[Long] = None
-    val files = Seq.newBuilder[String]
-    val retires = Seq.newBuilder[String]
-    val meta = Map.newBuilder[String, String]
-    val fileMeta = Map.newBuilder[String, (Long, Long)]
-    val dvAdds = Map.newBuilder[String, String]
-    val dvDrops = Seq.newBuilder[String]
-    var isDelta = false
-    def sizedLine(rest: String, into: (String, Option[(Long, Long)]) => Unit): Unit =
-      rest.split("\t") match {
-        case Array(f) => into(f, None)
-        case Array(f, bytes, mtime) =>
-          into(f, for (b <- bytes.toLongOption; m <- mtime.toLongOption)
-            yield (b, m))
-        case _ => // malformed sized line: skip (conservative)
-      }
-    text.linesIterator.filter(_.nonEmpty).foreach { l =>
-      val cut = l.indexOf('\t')
-      val kind = if (cut < 0) l else l.substring(0, cut)
-      val rest = if (cut < 0) "" else l.substring(cut + 1)
-      kind match {
-        case "schema" => schemaJson = rest
-        case "file" => sizedLine(rest, (f, m) => {
-          files += f; m.foreach(fileMeta += f -> _)
-        })
-        case "add" =>
-          isDelta = true
-          sizedLine(rest, (f, m) => {
-            files += f; m.foreach(fileMeta += f -> _)
-          })
-        case "retire" =>
-          isDelta = true
-          retires += rest
-        case "dv" =>
-          // `dv\t<file>\t<sidecarDir>` — NOT a delta marker (checkpoints
-          // carry the complete map as dv lines too)
-          val i = rest.indexOf('\t')
-          if (i > 0) dvAdds += rest.take(i) -> rest.drop(i + 1)
-        case "dvdrop" =>
-          isDelta = true
-          dvDrops += rest
-        case "base" =>
-          isDelta = true
-          baseVersion = rest.toLongOption
-        case "meta" =>
-          val i = rest.indexOf('=')
-          if (i > 0) meta += rest.take(i) -> rest.drop(i + 1)
-        case _ => // forward-compat: unknown entry kinds are ignored
-      }
-    }
-    LogContent(schemaJson, files.result(), meta.result(), fileMeta.result(),
-      isDelta, baseVersion, retires.result(), dvAdds.result(),
-      dvDrops.result())
   }
 
   /** DESCRIBE HISTORY: one row per SURVIVING version ([[vacuum]] prunes
@@ -483,10 +146,10 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   def history(ref: TableRef): DataFrame = {
     import spark.implicits._
-    listVersions(ref).reverse.map { v =>
+    txnLog.versions(ref).reverse.map { v =>
       // cached resolution: files and meta come out together, and the
       // shared delta chain parses once across the whole listing
-      val c = resolvedVersion(ref, v).getOrElse(
+      val c = txnLog.resolved(ref, v).getOrElse(
         throw new IllegalStateException(s"$ref: version $v vanished mid-history"))
       (v, c.meta.getOrElse(Warehouse.OpMeta, "UNKNOWN"), c.files.size,
         // the stamped commit instant (epoch ms); null for pre-stamp logs
@@ -759,17 +422,14 @@ final class Warehouse(spark: SparkSession, val root: String,
     * wall-clock each commit stamps into its own meta line
     * ([[Warehouse.TsMeta]]) — DURABLE: a filesystem-level copy/restore
     * of the log directory rewrites mtimes but not file contents, so
-    * stamped logs resolve identically after migration. Versions
-    * written before stamping existed fall back to the version FILE's
-    * modification time (the rename that committed it — Delta's default
-    * clock, with Delta's caveat). One `listStatus` of the log
-    * directory covers every fallback; stamped versions cost one small
-    * meta-file read each, O(surviving versions) ≤ vacuum retention.
-    * Fails loudly when the table predates nothing (every commit is
-    * after `tsMillis`) or has no committed log.
+    * logs resolve identically after migration ([[TxnLog.commitClocks]]:
+    * one small meta-file read per surviving version, O(surviving
+    * versions) ≤ vacuum retention). Fails loudly when the table
+    * predates nothing (every commit is after `tsMillis`), has no
+    * committed log, or holds a version without its stamp.
     */
   def versionAsOf(ref: TableRef, tsMillis: Long): Long = {
-    val clocks = commitClocks(ref)
+    val clocks = txnLog.commitClocks(ref)
     if (clocks.isEmpty)
       throw new IllegalArgumentException(s"$ref has no committed version")
     clocks.filter(_._2 <= tsMillis).lastOption.map(_._1)
@@ -787,7 +447,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * error, not an empty stream — Delta's behavior).
     */
   def versionSince(ref: TableRef, tsMillis: Long): Long = {
-    val clocks = commitClocks(ref)
+    val clocks = txnLog.commitClocks(ref)
     if (clocks.isEmpty)
       throw new IllegalArgumentException(s"$ref has no committed version")
     clocks.find(_._2 >= tsMillis).map(_._1)
@@ -795,39 +455,6 @@ final class Warehouse(spark: SparkSession, val root: String,
         s"$ref has no version committed at or after " +
           s"${java.time.Instant.ofEpochMilli(tsMillis)} (latest commit: " +
           s"${java.time.Instant.ofEpochMilli(clocks.last._2)})"))
-  }
-
-  /** (version, effective commit clock) for every READABLE version,
-    * ascending — the shared resolver behind `TIMESTAMP AS OF` and
-    * `startingTimestamp`. One directory listing supplies names AND
-    * fallback mtimes — no per-version getFileStatus round-trips on
-    * object stores (stamped versions read their meta through the
-    * fingerprint cache). Effective clocks are forced MONOTONIC
-    * (Delta's in-commit-timestamp rule): a pre-stamp version whose
-    * mtime a filesystem copy pushed forward, or a wall-clock step-back
-    * between stamped commits, must never make version N resolvable
-    * while N-1 is not.
-    */
-  private def commitClocks(ref: TableRef): Seq[(Long, Long)] = {
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    val listing =
-      if (!filesystem.exists(dir)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else filesystem.listStatus(dir)
-    val h = horizonFrom(listing)
-    val versionStatuses = listing.filter { st =>
-      val n = st.getPath.getName
-      n.length == 9 && n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-        n.drop(1).toLong >= h
-    }.sortBy(_.getPath.getName)
-    def rawTime(st: org.apache.hadoop.fs.FileStatus): Long =
-      rawVersionSt(st).meta.get(Warehouse.TsMeta)
-        .flatMap(_.toLongOption).getOrElse(st.getModificationTime)
-    val effective = versionStatuses.scanLeft(0L) { (prev, st) =>
-      math.max(prev, rawTime(st))
-    }.tail
-    versionStatuses.map(_.getPath.getName.drop(1).toLong).toSeq
-      .zip(effective)
   }
 
   /** Delta-CDF-style change feed: row-level changes between two
@@ -930,117 +557,14 @@ final class Warehouse(spark: SparkSession, val root: String,
         col("__img").getField("t").as("_change_type"): _*)
   }
 
-  /** Append the next version (caller MUST hold the writer lock — the
-    * lock serializes version numbering). Atomic appearance via tmp +
-    * rename: readers see the previous complete version or this one.
-    *
-    * `fileMeta` (rel → (bytes, mtimeMs)) rides each `file` line so
-    * later readers can plan without listing the filesystem; files
-    * absent from the map (inherited from a pre-size log) write the
-    * two-field legacy line and those readers degrade to listing.
-    *
-    * @param dv the new version's COMPLETE deletion-vector map, or None
-    *        to CARRY the parent's forward (restricted to files still
-    *        committed — a retired or replaced file's vector dies with
-    *        it). Only the DV writers ([[dvReplace]], [[restore]]) pass
-    *        Some; every other commit inherits, so an append or stream
-    *        epoch can never silently resurrect deleted rows by dropping
-    *        the map.
-    */
+  /** [[TxnLog.commit]] under the `wh.commit` timer (writer lock held). */
   private def commitLocked(ref: TableRef, schemaJson: String,
                            files: Seq[String],
                            meta: Map[String, String] = Map.empty,
                            fileMeta: Map[String, (Long, Long)] = Map.empty,
                            dv: Option[Map[String, String]] = None): Long =
-    graft.util.PhaseTimer.time("wh.commit") {
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    filesystem.mkdirs(dir)
-    meta.foreach { case (k, v) =>
-      require(!k.exists(c => c == '\t' || c == '\n' || c == '=') &&
-        !v.exists(c => c == '\t' || c == '\n'),
-        s"commit meta keys/values must be single-line, '=':free key: $k=$v")
-    }
-    val prev = currentVersion(ref)
-    val next = prev.getOrElse(0L) + 1L
-    val prevResolved = prev.flatMap(v => resolvedVersion(ref, v))
-    // application meta is CARRIED FORWARD through every commit (explicit
-    // keys override): without this, a meta-less maintenance commit
-    // (compact, z-order) followed by vacuum's version pruning would
-    // delete the only log file holding a marker like mv.base_version —
-    // killing the streaming MV loop that depends on reading it back
-    // graft.op / graft.ts describe ONE commit (its writer, its
-    // instant), never its successors — the two meta keys excluded
-    // from the carry. The wall-clock stamp lands after the carry so
-    // a caller can't accidentally forward an old instant either.
-    val allMeta = (prevResolved.map(_.meta).getOrElse(Map.empty)
-      - Warehouse.OpMeta - Warehouse.TsMeta - Warehouse.CdcMeta) ++ meta +
-      (Warehouse.TsMeta -> System.currentTimeMillis().toString)
-    val tmp = new Path(dir, f".v$next%08d.tmp")
-    val out = filesystem.create(tmp, true)
-    def sized(kind: String, f: String): String = fileMeta.get(f) match {
-      case Some((bytes, mtime)) => s"$kind\t$f\t$bytes\t$mtime\n"
-      case None => s"$kind\t$f\n"
-    }
-    // DELTA-ENCODED COMMITS: when the churn (adds + retires vs the
-    // previous version) is smaller than the full list, the version file
-    // records only `add`/`retire` lines against `base` — a tiny merge
-    // on a 10M-file table writes O(churn) bytes, not O(files). Every
-    // [[Warehouse.checkpointEvery]]-th version is a full CHECKPOINT
-    // regardless, bounding resolution chains; overwrites/restores whose
-    // churn rivals the list write checkpoints outright. Readers resolve
-    // either shape identically through [[resolvedVersion]].
-    val delta: Option[(Seq[String], Seq[String])] = prevResolved.flatMap { pr =>
-      if (next % Warehouse.checkpointEvery == 0) None
-      else {
-        val prevSet = pr.files.toSet
-        val fileSet = files.toSet
-        // carried-over paths whose recorded (bytes, mtime) CHANGED are
-        // re-added (resolution drops the parent's copy): keying the
-        // delta on path churn alone would silently inherit the stale
-        // entry into planning sizes and maxBytesPerTrigger accounting
-        val adds = files.filter(f => !prevSet.contains(f) ||
-          fileMeta.get(f).exists(m => !pr.fileMeta.get(f).contains(m)))
-        val retires = pr.files.filterNot(fileSet)
-        if (adds.size + retires.size >= files.size) None
-        else Some((adds, retires))
-      }
-    }
-    // the committed dv map: explicit, or the parent's carried forward
-    // restricted to still-committed files
-    val fileSet0 = files.toSet
-    val parentDv = prevResolved.map(_.dvMap).getOrElse(Map.empty)
-    val effectiveDv = dv.getOrElse(parentDv).view
-      .filterKeys(fileSet0).toMap
-    val body = delta match {
-      case Some((adds, retires)) =>
-        // dv delta lines: changed/new mappings, plus tombstones for
-        // mappings cleared while their file stays live (a retired
-        // file's mapping dies in resolution without a line)
-        val dvAdds = effectiveDv.toSeq.sortBy(_._1).filter { case (f, d) =>
-          !parentDv.get(f).contains(d)
-        }
-        val dvDrops = parentDv.keys.toSeq.sorted.filter(f =>
-          fileSet0.contains(f) && !effectiveDv.contains(f))
-        s"schema\t$schemaJson\n" + s"base\t${prev.get}\n" +
-          adds.map(sized("add", _)).mkString +
-          retires.map(r => s"retire\t$r\n").mkString +
-          dvAdds.map { case (f, d) => s"dv\t$f\t$d\n" }.mkString +
-          dvDrops.map(f => s"dvdrop\t$f\n").mkString +
-          allMeta.toSeq.sorted.map { case (k, v) => s"meta\t$k=$v\n" }.mkString
-      case None =>
-        s"schema\t$schemaJson\n" + files.map(sized("file", _)).mkString +
-          effectiveDv.toSeq.sorted
-            .map { case (f, d) => s"dv\t$f\t$d\n" }.mkString +
-          allMeta.toSeq.sorted.map { case (k, v) => s"meta\t$k=$v\n" }.mkString
-    }
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val live = versionFilePath(ref, next)
-    if (!filesystem.rename(tmp, live))
-      throw new RuntimeException(s"failed to commit version $next for $ref")
-    next
-    }
+    graft.util.PhaseTimer.time("wh.commit")(
+      txnLog.commit(ref, schemaJson, files, meta, fileMeta, dv))
 
   /** Application metadata carried by a version commit (`meta\tk=v`
     * lines — e.g. an MV refresher records the base version its output
@@ -1049,7 +573,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * ignore the lines (unknown log entry kinds are skipped).
     */
   def commitMeta(ref: TableRef, version: Long): Map[String, String] =
-    rawVersion(ref, version).map(_.meta).getOrElse(
+    txnLog.raw(ref, version).map(_.meta).getOrElse(
       throw new java.io.FileNotFoundException(
         s"$ref has no log file for version $version"))
 
@@ -1061,7 +585,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * diffs a bounded version range instead of an ever-growing one.
     */
   def commitMetaOnly(ref: TableRef, meta: Map[String, String]): Long =
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
         s"$ref has no committed version to re-commit meta onto"))
@@ -1076,7 +600,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * under vacuum's version pruning.
     */
   def latestCommitMeta(ref: TableRef, key: String): Option[String] =
-    listVersions(ref).reverseIterator
+    txnLog.versions(ref).reverseIterator
       .map(v => commitMeta(ref, v).get(key))
       .collectFirst { case Some(v) => v }
 
@@ -1132,7 +656,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * the change feed sees the restore as a regular commit whose diff is
     * the inverse of what it undoes. Returns the new version number.
     */
-  def restore(ref: TableRef, version: Long): Long = withWriterLock(ref) {
+  def restore(ref: TableRef, version: Long): Long = txnLog.withLock(ref) {
     recoverLocked(ref) // never re-commit files of a half-healed replacement
     val snap = snapshotAt(ref, version)
     // the copyInto loaded-files ledger rolls back WITH the data:
@@ -1173,9 +697,6 @@ final class Warehouse(spark: SparkSession, val root: String,
   // sweeps as usual.
   // ---------------------------------------------------------------------
 
-  private def stagedManifestPath(ref: TableRef, id: String) =
-    new Path(logDirPath(ref), s"staged-$id")
-
   /** Stage an overwrite for audit: writes `df`'s files into the table
     * directory and a staged manifest beside the log, commits NOTHING —
     * concurrent readers keep resolving the current version. Returns the
@@ -1184,7 +705,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * staged files), so WAP-bootstrapped tables exist-but-empty during
     * their first audit.
     */
-  def stageOverwrite(ref: TableRef, df: DataFrame): String = withWriterLock(ref) {
+  def stageOverwrite(ref: TableRef, df: DataFrame): String = txnLog.withLock(ref) {
     val target = new Path(path(ref))
     val filesystem = fs(target)
     filesystem.mkdirs(target)
@@ -1222,23 +743,12 @@ final class Warehouse(spark: SparkSession, val root: String,
         }
       }
       moveIn(ref, staged)
-      // manifest LAST, via tmp + rename like every other log write: a
-      // crash before the rename leaves only unreferenced stragglers —
-      // never a torn manifest a later publish would trust. Sized file
-      // lines so the eventual publish commits metadata-only-plannable
-      // versions like every direct write.
-      val mp = stagedManifestPath(ref, id)
-      val mtmp = new Path(mp.getParent, s".${mp.getName}.tmp")
-      val out = filesystem.create(mtmp, true)
-      try out.write(
-        (s"schema\t${staged.schema.json}\n" +
-          staged.fileMeta.toSeq.sorted.map { case (f, (len, mtime)) =>
-            s"file\t$f\t$len\t$mtime\n"
-          }.mkString)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!filesystem.rename(mtmp, mp))
-        throw new RuntimeException(s"failed to finalize staged manifest for $ref")
+      // manifest LAST, through the durable write like every log file:
+      // a crash before it lands leaves only unreferenced stragglers —
+      // never a torn manifest a later publish would trust
+      txnLog.writeText(txnLog.stagedPath(ref, id), TxnLog.render(
+        TxnLog.LogContent(staged.schema.json, staged.rels.sorted, Map.empty,
+          staged.fileMeta)))
       id
     } catch {
       case e: Throwable =>
@@ -1260,24 +770,17 @@ final class Warehouse(spark: SparkSession, val root: String,
   }
 
   /** The staged ids currently awaiting audit/publish for a table. */
-  def stagedIds(ref: TableRef): Seq[String] = {
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    if (!filesystem.exists(dir)) Seq.empty
-    else filesystem.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("staged-") => n.stripPrefix("staged-") }
-      .toSeq.sorted
-  }
+  def stagedIds(ref: TableRef): Seq[String] = txnLog.stagedIds(ref)
 
   /** Read the exact bytes a staged batch would publish — the audit's
     * input. Throws if the id is unknown (already published/discarded).
     */
   def readStaged(ref: TableRef, id: String): DataFrame = {
-    val mp = stagedManifestPath(ref, id)
+    val mp = txnLog.stagedPath(ref, id)
     require(fs(mp).exists(mp),
       s"$ref has no staged batch '$id' (published or discarded?); " +
         s"staged = ${stagedIds(ref).mkString(",")}")
-    val c = parseLog(mp)
+    val c = txnLog.readLog(mp)
     readSnapshot(TableSnapshot(ref, -1L, c.schemaJson, c.files))
   }
 
@@ -1286,13 +789,13 @@ final class Warehouse(spark: SparkSession, val root: String,
     * metadata: the staged files are already in place. The previous
     * version's files retire normally (time travel until vacuum).
     */
-  def publishStaged(ref: TableRef, id: String): Long = withWriterLock(ref) {
+  def publishStaged(ref: TableRef, id: String): Long = txnLog.withLock(ref) {
     recoverLocked(ref)
-    val mp = stagedManifestPath(ref, id)
+    val mp = txnLog.stagedPath(ref, id)
     require(fs(mp).exists(mp),
       s"$ref has no staged batch '$id' (published or discarded?); " +
         s"staged = ${stagedIds(ref).mkString(",")}")
-    val c = parseLog(mp)
+    val c = txnLog.readLog(mp)
     val v = commitLocked(ref, c.schemaJson, c.files,
       Map(Warehouse.OpMeta -> "WAP_PUBLISH"), c.fileMeta)
     fs(mp).delete(mp, false)
@@ -1303,12 +806,12 @@ final class Warehouse(spark: SparkSession, val root: String,
   /** Delete a failed staged batch — its files (never referenced by any
     * version) and its manifest. Returns the number of files removed.
     */
-  def discardStaged(ref: TableRef, id: String): Int = withWriterLock(ref) {
-    val mp = stagedManifestPath(ref, id)
+  def discardStaged(ref: TableRef, id: String): Int = txnLog.withLock(ref) {
+    val mp = txnLog.stagedPath(ref, id)
     require(fs(mp).exists(mp),
       s"$ref has no staged batch '$id' (published or discarded?); " +
         s"staged = ${stagedIds(ref).mkString(",")}")
-    val files = parseLog(mp).files
+    val files = txnLog.readLog(mp).files
     val target = new Path(path(ref))
     val filesystem = fs(target)
     // only files NO live log version references may be deleted. A fresh
@@ -1318,8 +821,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     // time-travelable) version owns; protecting only the CURRENT
     // version would let this cleanup delete an older version's data.
     val referenced: Set[String] =
-      listVersionFiles(ref) // horizon-agnostic: protect EVERY logged version
-        .flatMap(v => resolvedVersion(ref, v).map(_.files).getOrElse(Nil))
+      txnLog.versionFiles(ref) // horizon-agnostic: protect EVERY logged version
+        .flatMap(v => txnLog.resolved(ref, v).map(_.files).getOrElse(Nil))
         .toSet
     val removed = files.filterNot(referenced.contains).count { f =>
       filesystem.delete(new Path(target, f), false)
@@ -1346,24 +849,16 @@ final class Warehouse(spark: SparkSession, val root: String,
     // published by a crashed attempt of this journal' — so it must
     // mean something different BEFORE: validate loudly now
     entries.foreach { case (ref, id) =>
-      val mp = stagedManifestPath(ref, id)
+      val mp = txnLog.stagedPath(ref, id)
       require(fs(mp).exists(mp),
         s"$ref has no staged batch '$id' (published or discarded?); " +
           s"staged = ${stagedIds(ref).mkString(",")}")
     }
     recoverStagedPublishes() // heal any predecessor's crashed publish first
-    val dir = publishWalDir
-    val filesystem = fs(dir)
-    filesystem.mkdirs(dir)
-    val id = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(dir, s".publish-$id.tmp")
-    val out = filesystem.create(tmp, true)
-    try out.write(entries.map { case (r, sid) => s"entry\t$r\t$sid\n" }
-      .mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val live = new Path(dir, s"publish-$id")
-    if (!filesystem.rename(tmp, live))
-      throw new RuntimeException(s"failed to journal atomic publish $id")
+    val live = new Path(publishWalDir,
+      s"publish-${java.util.UUID.randomUUID().toString.take(12)}")
+    txnLog.writeText(live,
+      entries.map { case (r, sid) => s"entry\t$r\t$sid\n" }.mkString)
     // the journal IS the commit point: from here the publish completes,
     // in this call or in whichever recovery runs after a crash
     rollForwardPublish(live)
@@ -1389,14 +884,11 @@ final class Warehouse(spark: SparkSession, val root: String,
   private def rollForwardPublish(journal: Path): Unit = {
     val filesystem = fs(journal)
     if (!filesystem.exists(journal)) return // raced another recoverer
-    val in = filesystem.open(journal)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.linesIterator.filter(_.nonEmpty).foreach { l =>
+    txnLog.readText(journal).linesIterator.filter(_.nonEmpty).foreach { l =>
       l.split("\t", 3) match {
         case Array("entry", refStr, sid) =>
           val ref = TableRef.parse(refStr)
-          val mp = stagedManifestPath(ref, sid)
+          val mp = txnLog.stagedPath(ref, sid)
           if (filesystem.exists(mp))
             try publishStaged(ref, sid)
             catch {
@@ -1458,20 +950,20 @@ final class Warehouse(spark: SparkSession, val root: String,
   private def vacuumCore(ref: TableRef, keepVersions: Int,
                          retainMs: Option[Long], dryRun: Boolean): Int = {
     require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       val tablePath = new Path(path(ref))
       val filesystem = fs(tablePath)
-      val dir = logDirPath(ref)
+      val dir = txnLog.dir(ref)
       if (!filesystem.exists(dir)) 0
       else {
-        val versions = listVersions(ref)
+        val versions = txnLog.versions(ref)
         // time-based retention resolves to a version count UNDER the
         // lock (the commit clock is monotonic, so the in-window
         // versions are exactly a suffix)
         val byTime = retainMs.fold(0) { ms =>
           val cutoff = System.currentTimeMillis() - ms
-          commitClocks(ref).count(_._2 >= cutoff)
+          txnLog.commitClocks(ref).count(_._2 >= cutoff)
         }
         val keep = versions.takeRight(math.max(keepVersions, byTime))
         // staged (write-audit-publish) batches are live state awaiting
@@ -1482,7 +974,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         // inspects it (readStaged) and publishes or discards it.
         val stagedStaleMs = 7L * 24 * 3600 * 1000
         val stagedLive = stagedIds(ref).flatMap { id =>
-          val mp = stagedManifestPath(ref, id)
+          val mp = txnLog.stagedPath(ref, id)
           val ageMs = System.currentTimeMillis() -
             filesystem.getFileStatus(mp).getModificationTime
           if (ageMs > stagedStaleMs)
@@ -1490,7 +982,7 @@ final class Warehouse(spark: SparkSession, val root: String,
               s"'$id' has awaited audit for ${ageMs / 86400000L} days and " +
               "pins its files against maintenance — publishStaged or " +
               "discardStaged it")
-          parseLog(mp).files
+          txnLog.readLog(mp).files
         }
         // shallow-clone pins: every pinned version's files (and below,
         // its log chain and dv sidecars) survive however far retention
@@ -1499,7 +991,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         // pinned version may already sit below it.
         val pins = pinnedVersions(ref).values.toSeq.distinct.sorted
         val pinnedFiles = pins.flatMap { pv =>
-          resolvedVersion(ref, pv) match {
+          txnLog.resolved(ref, pv) match {
             case Some(r) => r.files
             case None =>
               System.err.println(s"[warehouse] vacuum($ref): pinned " +
@@ -1523,7 +1015,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         // so the data deletions below never produce a readable version
         // whose files are partially gone (a crash in between leaves
         // only unreadable-but-present log files — harmless)
-        keep.headOption.foreach(writeHorizon(ref, _))
+        keep.headOption.foreach(txnLog.raiseHorizon(ref, _))
         dead.foreach(p => filesystem.delete(p, false))
         // version files strictly below the earliest kept version's
         // delta-chain anchor can go; [anchor, horizon) survives
@@ -1531,11 +1023,11 @@ final class Warehouse(spark: SparkSession, val root: String,
         // pinned version's own chain [anchor(pin), pin] survives so
         // the NEXT vacuum can still resolve its file list
         keep.headOption.foreach { earliest =>
-          val anchor = chainAnchor(ref, earliest)
-          val pinRanges = pins.map(pv => (chainAnchor(ref, pv), pv))
-          listVersionFiles(ref).filter(v => v < anchor &&
+          val anchor = txnLog.chainAnchor(ref, earliest)
+          val pinRanges = pins.map(pv => (txnLog.chainAnchor(ref, pv), pv))
+          txnLog.versionFiles(ref).filter(v => v < anchor &&
               !pinRanges.exists { case (a, p) => v >= a && v <= p })
-            .foreach(v => filesystem.delete(versionFilePath(ref, v), false))
+            .foreach(v => filesystem.delete(txnLog.versionPath(ref, v), false))
         }
         // change-file dirs of versions below the horizon can go too
         // (the feed refuses those versions anyway); crashed writers'
@@ -1557,7 +1049,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         // the physical-erasure tail: after compact retired a DV'd
         // file, this sweep erases the position record too.
         val keptDvDirs = (keep.flatMap(v => snapshotAt(ref, v).dvMap.values) ++
-          pins.flatMap(pv => resolvedVersion(ref, pv).toSeq
+          pins.flatMap(pv => txnLog.resolved(ref, pv).toSeq
             .flatMap(_.dvMap.values))).toSet
         val dvRoot = new Path(tablePath, dvDir)
         if (filesystem.exists(dvRoot))
@@ -1575,7 +1067,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         val ingestRoot = new Path(tablePath, Warehouse.IngestDir)
         if (filesystem.exists(ingestRoot)) {
           val pointers = (keep ++ pins).distinct.flatMap(v =>
-            rawVersion(ref, v).flatMap(_.meta.get(Warehouse.CopyLedgerMeta)))
+            txnLog.raw(ref, v).flatMap(_.meta.get(Warehouse.CopyLedgerMeta)))
             .filter(_.nonEmpty)
           val reachable = scala.collection.mutable.Set[String]()
           pointers.foreach { head =>
@@ -1595,153 +1087,6 @@ final class Warehouse(spark: SparkSession, val root: String,
         dead.size
       }
     }
-  }
-
-  /** Nearest checkpoint at or below `v` — the version file anchoring
-    * `v`'s delta-resolution chain.
-    */
-  private def chainAnchor(ref: TableRef, v: Long): Long = {
-    var x = v
-    while (rawVersion(ref, x).exists(_.isDelta)) x -= 1
-    x
-  }
-
-  /** Raise the retention horizon (never lowers). NEW MARKER FIRST:
-    * the value lands as a uniquely-named `_horizon.<h>` file (atomic
-    * tmp + rename onto a name nothing else writes), and only then are
-    * superseded markers swept. Readers take the MAX over surviving
-    * markers ([[horizonFrom]]), so a crash anywhere in this sequence
-    * leaves the horizon at max(old, new) — versions whose data a
-    * previous vacuum already deleted can NEVER become readable again,
-    * the exact dangling-read window the old delete-then-rename single
-    * marker had between its two operations.
-    */
-  private def writeHorizon(ref: TableRef, h: Long): Unit = {
-    if (h <= horizonOf(ref)) return
-    val dir = logDirPath(ref)
-    val filesystem = fs(dir)
-    val live = new Path(dir, s"$horizonMarker.$h")
-    val tmp = new Path(dir, s".$horizonMarker.$h.tmp")
-    val out = filesystem.create(tmp, true)
-    try out.write(s"$h\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!filesystem.rename(tmp, live))
-      throw new RuntimeException(s"failed to write vacuum horizon for $ref")
-    // sweep strictly-superseded markers (the legacy unsuffixed one
-    // included) — pure garbage collection once the new max is durable
-    filesystem.listStatus(dir).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val stale = n == horizonMarker ||
-        (n.startsWith(horizonMarker + ".") &&
-          n.drop(horizonMarker.length + 1).toLongOption.exists(_ < h))
-      if (stale) filesystem.delete(p, false)
-    }
-  }
-
-  /** Acquire the per-table writer lock for the duration of `body`.
-    *
-    * The lock is a SIBLING file of the table directory (`<table>.lock`)
-    * so it exists independently of the table and is never listed by
-    * scans. Acquisition is an atomic create-if-absent; the content
-    * (`pid@host` + epoch millis) identifies the holder for the error
-    * message. A conflict throws [[ConcurrentWriteException]] — the
-    * caller's write has NOT touched the table. A lock whose modification
-    * time is older than `writerLeaseMs` belongs to a crashed writer
-    * (nothing can release it) and is broken once.
-    *
-    * Two races are closed explicitly; both closures are BEST-EFFORT on
-    * filesystems without a compare-and-swap primitive (LocalFileSystem's
-    * `create(overwrite=false)` is itself exists-then-create, so "atomic"
-    * here means "the narrowest window the FS API allows"):
-    *
-    *  1. Lease break: two contenders can both observe the same expired
-    *     lock. Breaking is re-stat → compare against the first
-    *     observation (mtime+length) → atomic RENAME to a unique sibling
-    *     → delete the sibling. The re-stat+compare refuses to break a
-    *     lock that changed since it was observed stale (a fresh holder
-    *     replaced it), and the rename means at most ONE breaker wins —
-    *     the loser's rename fails on the missing source and it falls
-    *     through to the conflict error instead of deleting a live lock.
-    *
-    *  2. Release: if `body` outlives the lease and another writer broke
-    *     it and acquired, an unconditional delete in `finally` would
-    *     remove the NEW holder's lock. The lock content is a unique
-    *     per-acquisition token; release reads it back and skips the
-    *     delete when it is no longer this writer's.
-    */
-  private def withWriterLock[T](ref: TableRef)(body: => T): T = {
-    val lock = new Path(path(ref) + ".lock")
-    val filesystem = fs(lock)
-    filesystem.mkdirs(lock.getParent)
-    // Same-JVM writers serialize on a process-local mutex FIRST: the
-    // file lease below is create-if-absent on filesystems without a
-    // CAS primitive, and two THREADS of one JVM can both slip through
-    // its exists-then-create window (observed under the MergeSpec
-    // contention test). In-process, a real mutex is exact; the file
-    // lease remains the (best-effort) cross-process guard.
-    val jvmLock = Warehouse.jvmLocks.computeIfAbsent(
-      TableStatsRegistry.normalize(lock.toString),
-      _ => new java.util.concurrent.locks.ReentrantLock())
-    jvmLock.lock()
-    try {
-    val token = java.lang.management.ManagementFactory.getRuntimeMXBean.getName +
-      s"\t${System.currentTimeMillis()}\t${java.util.UUID.randomUUID()}"
-    def tryAcquire(): Boolean =
-      try {
-        val out = filesystem.create(lock, false)
-        try out.write((token + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    def stat(p: Path): Option[org.apache.hadoop.fs.FileStatus] =
-      try Some(filesystem.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    def breakStaleLease(): Unit = {
-      val observed = stat(lock)
-      val expired = observed.exists(_.getModificationTime <=
-        System.currentTimeMillis() - writerLeaseMs)
-      if (expired) {
-        val current = stat(lock)
-        val unchanged = current.zip(observed).exists { case (c, o) =>
-          c.getModificationTime == o.getModificationTime && c.getLen == o.getLen
-        }
-        if (unchanged) {
-          val broken = new Path(lock.toString + ".broken-" +
-            java.util.UUID.randomUUID().toString)
-          val won = try filesystem.rename(lock, broken)
-            catch { case _: java.io.IOException => false }
-          if (won) filesystem.delete(broken, false)
-        }
-      }
-    }
-    if (!tryAcquire()) {
-      breakStaleLease()
-      if (!tryAcquire()) {
-        val holder =
-          try {
-            val in = filesystem.open(lock)
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          } catch { case scala.util.control.NonFatal(_) => "<unreadable>" }
-        throw new ConcurrentWriteException(
-          s"table $ref has another in-flight writer (lock held by: $holder); " +
-            "concurrent writes would corrupt the table silently — " +
-            "serialize writers, or break the lease if the holder crashed " +
-            s"(auto-breaks after ${writerLeaseMs / 1000}s)")
-      }
-    }
-    try body
-    finally {
-      val stillMine =
-        try {
-          val in = filesystem.open(lock)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim == token
-          finally in.close()
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (stillMine) filesystem.delete(lock, false)
-      ()
-    }
-    } finally jvmLock.unlock()
   }
 
   /** Read the table's CURRENT version. Snapshot-isolated for logged
@@ -2121,7 +1466,7 @@ final class Warehouse(spark: SparkSession, val root: String,
       s"bloomColumns must be a subset of statsColumns: " +
         s"${bloomColumns.filterNot(statsColumns.contains).mkString(",")} " +
         "has no stats manifest entry to ride on")
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
     val target = new Path(path(ref))
     val filesystem = fs(target)
     // parent only: the table dir itself must not appear (→ exists(ref))
@@ -2181,7 +1526,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * Returns the committed version.
     */
   def append(ref: TableRef, df0: DataFrame,
-             meta: Map[String, String] = Map.empty): Long = withWriterLock(ref) {
+             meta: Map[String, String] = Map.empty): Long = txnLog.withLock(ref) {
     recoverLocked(ref)
     require(exists(ref) || currentVersion(ref).nonEmpty,
       s"$ref does not exist — append needs a committed table (overwrite creates)")
@@ -2325,7 +1670,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // loaded-row count from the COMMITTED files' parquet footers (a
     // metadata read) — counting the source frame up front would scan
     // (and for json/csv, parse) every fresh byte a second time
-    val rows = versionChanges(ref, v).map { case (adds2, _, _) =>
+    val rows = txnLog.changes(ref, v).map { case (adds2, _, _) =>
       if (adds2.isEmpty) 0L
       else spark.read.parquet(
         adds2.map(r => s"${path(ref)}/$r"): _*).count()
@@ -2393,10 +1738,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     val filesystem = fs(f)
     if (!filesystem.exists(f)) (Map.empty, None)
     else {
-      val in = filesystem.open(f)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
+      val lines = txnLog.readText(f).linesIterator.filter(_.nonEmpty).toList
       val parent = lines.collectFirst {
         case l if l.startsWith(Warehouse.CopyLedgerParentHeader) =>
           l.stripPrefix(Warehouse.CopyLedgerParentHeader)
@@ -2431,18 +1773,10 @@ final class Warehouse(spark: SparkSession, val root: String,
   private def writeCopyLedger(ref: TableRef, name: String,
                               entries: Map[String, (Long, Long)],
                               parent: Option[String] = None): Unit = {
-    val ingestPath = new Path(path(ref), Warehouse.IngestDir)
-    val tfs = fs(ingestPath)
-    tfs.mkdirs(ingestPath)
-    val tmp = new Path(ingestPath, s".$name.tmp")
-    val out = tfs.create(tmp, true)
-    try out.write((
+    txnLog.writeText(new Path(new Path(path(ref), Warehouse.IngestDir), name),
       parent.map(p => s"${Warehouse.CopyLedgerParentHeader}$p\n").getOrElse("") +
-      entries.toSeq.sortBy(_._1).map { case (p, (sz, mt)) =>
-        s"$sz\t$mt\t$p\n" }.mkString).getBytes("UTF-8"))
-    finally out.close()
-    if (!tfs.rename(tmp, new Path(ingestPath, name)))
-      throw new RuntimeException(s"copyInto $ref: ledger write failed")
+        entries.toSeq.sortBy(_._1).map { case (p, (sz, mt)) =>
+          s"$sz\t$mt\t$p\n" }.mkString)
   }
 
   /** CREATE TABLE without data — the SQL catalog's DDL entry (plain
@@ -2475,7 +1809,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         "has no stats manifest entry to ride on")
     require(partitionBy.size < schema.size,
       s"createTable $ref: partitioning on every column leaves no data columns")
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       val target = new Path(path(ref))
       fs(target).mkdirs(target.getParent)
       recoverLocked(ref)
@@ -2535,7 +1869,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   def widenColumnType(ref: TableRef, column: String,
                       newType: org.apache.spark.sql.types.DataType): Long =
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
         s"$ref has no committed version — widenColumnType alters an existing table"))
@@ -2603,7 +1937,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   def addColumns(ref: TableRef,
                  fields: Seq[org.apache.spark.sql.types.StructField]): Long =
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       require(fields.nonEmpty, "addColumns needs at least one field")
       val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
@@ -2666,7 +2000,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * unresolved).
     */
   def dropColumns(ref: TableRef, names: Seq[String]): Long =
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       require(names.nonEmpty, "dropColumns needs at least one column")
       val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
@@ -2781,7 +2115,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * refuse them loudly — rather than silently null-fill, enabling on
     * a non-empty table refuses with the rewrite recipe.
     */
-  def enableColumnMapping(ref: TableRef): Long = withWriterLock(ref) {
+  def enableColumnMapping(ref: TableRef): Long = txnLog.withLock(ref) {
     recoverLocked(ref)
     val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
       s"$ref has no committed version — create the table first"))
@@ -2993,7 +2327,7 @@ final class Warehouse(spark: SparkSession, val root: String,
       val layoutMeta = followMeta(Warehouse.StatsColumnsMeta) ++
         followMeta(Warehouse.BloomColumnsMeta) ++
         followMeta(Warehouse.PartitionByMeta)
-      return withWriterLock(ref) {
+      return txnLog.withLock(ref) {
         recoverLocked(ref)
         val cur = snapshot(ref).get
         require(cur.version == snap.version,
@@ -3132,7 +2466,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // PIN FIRST: from this commit on, source vacuum keeps the pinned
     // version's files — the clone can then never observe a torn source
     commitMetaOnly(ref, Map(Warehouse.pinMetaKey(dst) -> snap.version.toString))
-    withWriterLock(dst) {
+    txnLog.withLock(dst) {
       require(snapshot(dst).isEmpty && !exists(dst),
         s"cloneTable: destination $dst already exists")
       commitLocked(dst, snap.schemaJson, snap.files.map(prefix + _),
@@ -3180,8 +2514,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     // deterministic lock order prevents rename-swap deadlock
     val (first, second) =
       if (path(src) < path(dst)) (src, dst) else (dst, src)
-    withWriterLock(first) {
-      withWriterLock(second) {
+    txnLog.withLock(first) {
+      txnLog.withLock(second) {
         recoverLocked(src)
         require(exists(src) && snapshot(src).nonEmpty,
           s"renameTable: $src has no committed table")
@@ -3768,7 +3102,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   def commitStreamEpoch(ref: TableRef, queryId: String, epochId: Long,
                         stagedRels: Seq[String],
-                        replaceAll: Boolean = false): Long = withWriterLock(ref) {
+                        replaceAll: Boolean = false): Long = txnLog.withLock(ref) {
     recoverLocked(ref)
     require(currentVersion(ref).nonEmpty || exists(ref),
       s"$ref does not exist — a streaming sink needs a committed table " +
@@ -4021,7 +3355,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val (dead, partial) = touched.partition(f =>
       perFileSup(f) >= liveTotals(f))
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       val snap = ensureLogLocked(ref)
       if (snap.version != planned.version)
@@ -4338,7 +3672,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // bucketed layouts are directory-defined (saveAsTable owns the dir);
     // a stale commit log from a previous logged layout must not shadow
     // the files saveAsTable writes
-    fs(logDirPath(ref)).delete(logDirPath(ref), true)
+    fs(txnLog.dir(ref)).delete(txnLog.dir(ref), true)
     // co-partition with the bucket function BEFORE the write: without
     // this every input task writes up to numBuckets files (tasks ×
     // buckets small files — the classic bucketed-write explosion);
@@ -4351,12 +3685,8 @@ final class Warehouse(spark: SparkSession, val root: String,
       .option("path", path(ref))
       .mode("overwrite")
       .saveAsTable(name)
-    val spec = new Path(new Path(path(ref), bucketDir), "spec")
-    val filesystem = fs(spec)
-    val out = filesystem.create(spec, true)
-    try out.write(s"numBuckets=$numBuckets\nbucketCols=${bucketCols.mkString(",")}\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    txnLog.writeText(new Path(new Path(path(ref), bucketDir), "spec"),
+      s"numBuckets=$numBuckets\nbucketCols=${bucketCols.mkString(",")}\n")
   }
 
   /** Read a bucketed table THROUGH the catalog — a plain path read
@@ -4378,10 +3708,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     val filesystem = fs(spec)
     require(filesystem.exists(spec),
       s"$ref has no bucket manifest — write it with overwriteBucketed first")
-    val in = filesystem.open(spec)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val fields = text.linesIterator.filter(_.contains("="))
+    val fields = txnLog.readText(spec).linesIterator.filter(_.contains("="))
       .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
     val numBuckets = fields("numBuckets").toInt
     val bucketCols = fields("bucketCols").split(",").toSeq
@@ -5332,7 +4659,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   def retireDataFiles(ref: TableRef, replaced: Seq[String],
                       meta: Map[String, String] = Map.empty): Unit =
-    withWriterLock(ref) {
+    txnLog.withLock(ref) {
       recoverLocked(ref)
       val snap = ensureLogLocked(ref)
       val retired = currentRels(ref, snap, replaced, "retirement")
@@ -5387,7 +4714,7 @@ final class Warehouse(spark: SparkSession, val root: String,
                        replacement: DataFrame,
                        subdir: Option[String] = None,
                        meta: Map[String, String] = Map.empty,
-                       changes: Option[DataFrame] = None): Unit = withWriterLock(ref) {
+                       changes: Option[DataFrame] = None): Unit = txnLog.withLock(ref) {
     recoverLocked(ref)
     val snap = ensureLogLocked(ref)
     val retired = currentRels(ref, snap, replaced, "replacement")
@@ -5526,39 +4853,30 @@ final class Warehouse(spark: SparkSession, val root: String,
   private val txnFile = "_graft_txn"
 
   /** Write the intent journal of a commit about to add files ([[land]],
-    * the one writer) atomically (tmp + rename): table-relative `add`
-    * entries for the files about to move in, `del` entries for the
-    * files the commit retires. Package-visible so the crash-recovery
-    * specs can fabricate the exact mid-sequence layouts.
+    * the one writer, always under a committed parent) through the
+    * durable write: table-relative `add` entries for the files about to
+    * move in, `del` entries for the files the commit retires.
+    * Package-visible so the crash-recovery specs can fabricate the
+    * exact mid-sequence layouts.
     */
   private[graft] def writeTxnJournal(ref: TableRef, adds: Seq[String],
-                                     dels: Seq[String]): Unit = {
-    val tablePath = new Path(path(ref))
-    val filesystem = fs(tablePath)
-    val tmp = new Path(tablePath, s".$txnFile.tmp")
-    val out = filesystem.create(tmp, true)
-    try out.write(
-      (adds.map("add\t" + _) ++ dels.map("del\t" + _)).mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val live = new Path(tablePath, txnFile)
-    filesystem.delete(live, false)
-    if (!filesystem.rename(tmp, live))
-      throw new RuntimeException(s"failed to commit txn journal for $ref")
-  }
+                                     dels: Seq[String]): Unit =
+    txnLog.writeText(new Path(new Path(path(ref)), txnFile),
+      (adds.map("add\t" + _) ++ dels.map("del\t" + _)).mkString("", "\n", "\n"))
 
   /** Heal an interrupted write: when an intent journal is present,
     * delete any journaled adds the current version does NOT reference
-    * (a pre-commit crash's stragglers — invisible to every reader) and
-    * drop the journal; adds the version references are live data (the
-    * crash happened after the commit) and retired files are retained by
-    * design, so nothing else needs touching. Logless directories keep
-    * the legacy arms: roll FORWARD if every add landed (finish the
-    * deletes) or BACK otherwise. Idempotent; called automatically by
-    * every writer, by compaction and by [[vacuum]]. The post-recovery stats manifest may be stale,
-    * which pruning tolerates by construction (unknown files are kept,
-    * entries for dead files never match the current list). Returns
-    * true when a journal was found and resolved.
+    * (a pre-commit crash's stragglers — invisible to every reader; a
+    * table with no version references none) and drop the journal. Adds
+    * the version references are live data (the crash happened after
+    * the commit: the commit lands only after ALL moves, so membership
+    * is all-or-nothing) and retired files are retained by design, so
+    * nothing else needs touching. Idempotent; called automatically by
+    * every writer, by compaction and by [[vacuum]]. The post-recovery
+    * stats manifest may be stale, which pruning tolerates by
+    * construction (unknown files are kept, entries for dead files never
+    * match the current list). Returns true when a journal was found and
+    * resolved.
     */
   def recover(ref: TableRef): Boolean = {
     val tablePath = new Path(path(ref))
@@ -5571,7 +4889,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // a journal exists: healing deletes files, which must never race a
     // lock-holding writer mid-replacement — a second process "healing"
     // a live writer's journal would roll back its half-applied adds
-    withWriterLock(ref)(recoverLocked(ref))
+    txnLog.withLock(ref)(recoverLocked(ref))
   }
 
   /** [[recover]] body for callers that ALREADY hold the writer lock
@@ -5582,30 +4900,10 @@ final class Warehouse(spark: SparkSession, val root: String,
     val filesystem = fs(tablePath)
     val j = new Path(tablePath, txnFile)
     if (!filesystem.exists(j)) return false
-    val in = filesystem.open(j)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val entries = text.linesIterator.filter(_.nonEmpty).map(_.split("\t", 2)).toSeq
-    val adds = entries.collect { case Array("add", p) => p }
-    val dels = entries.collect { case Array("del", p) => p }
-    snapshot(ref) match {
-      case Some(s) =>
-        // log mode: committed ⟺ the version references the adds (the
-        // commit happens only after ALL moves, so membership is
-        // all-or-nothing). Uncommitted adds are invisible stragglers —
-        // remove them; retired files need no action (retention).
-        val current = s.files.toSet
-        adds.filterNot(current.contains)
-          .foreach(p => filesystem.delete(new Path(tablePath, p), false))
-      case None =>
-        // legacy directory-defined table: forward if every add landed
-        // (finish the deletes), back otherwise (remove partial adds)
-        if (adds.forall(p => filesystem.exists(new Path(tablePath, p))))
-          dels.foreach(p => filesystem.delete(new Path(tablePath, p), false))
-        else
-          adds.foreach(p => filesystem.delete(new Path(tablePath, p), false))
-    }
+    val current = snapshot(ref).fold(Set.empty[String])(_.files.toSet)
+    txnLog.readText(j).linesIterator.map(_.split("\t", 2)).collect {
+      case Array("add", p) if !current.contains(p) => p
+    }.foreach(p => filesystem.delete(new Path(tablePath, p), false))
     filesystem.delete(j, false)
     TableStatsRegistry.invalidate(path(ref))
     true
@@ -5838,114 +5136,23 @@ object Warehouse {
   private[catalog] final case class AppendPart(stats: DataFrame) extends ManifestStep
   private[catalog] final case class SwapManifest(staged: StagedManifest) extends ManifestStep
 
-  /** One parsed log-format file (version commit or staged manifest).
-    * For CHECKPOINT files `files` is the complete list; for DELTA files
-    * (`isDelta`) `files`/`fileMeta` hold only the commit's ADDED files,
-    * `retires` the files it retired, and `baseVersion` the version the
-    * delta applies to (always its predecessor).
-    */
-  /** @param dvAdds deletion-vector mappings this file declares
-    *        (`dv\t<file>\t<sidecarDir>` lines): for a CHECKPOINT the
-    *        complete map, for a DELTA the added/changed mappings.
-    * @param dvDrops delta-only tombstones (`dvdrop\t<file>`): the
-    *        file stays live but its deletion vector is gone.
-    */
-  private[catalog] final case class LogContent(
-      schemaJson: String, files: Seq[String], meta: Map[String, String],
-      fileMeta: Map[String, (Long, Long)],
-      isDelta: Boolean = false, baseVersion: Option[Long] = None,
-      retires: Seq[String] = Nil,
-      dvAdds: Map[String, String] = Map.empty,
-      dvDrops: Seq[String] = Nil)
-
-  /** Fully resolved content of one version: complete file list +
-    * per-file meta (delta chains applied), plus the version's own
-    * commit meta.
-    */
-  private[catalog] final case class ResolvedVersion(
-      schemaJson: String, files: Seq[String],
-      fileMeta: Map[String, (Long, Long)], meta: Map[String, String],
-      dvMap: Map[String, String] = Map.empty)
-
-  /** Commit-log I/O counters (JVM-wide): every [[Warehouse]].parseLog
-    * call — an actual version-file read, cache misses only — bumps
-    * these. The O(churn) specs assert on them: a rate-limited stream
-    * drain or a change feed over N commits must cost O(N) small reads,
-    * not O(N × files) bytes re-parsed per trigger.
-    */
-  private[graft] object LogIO {
-    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    def snapshot(): (Long, Long) = (reads.get(), bytes.get())
-  }
-
-  /** (version-file path) → (len:mtime fingerprint, parsed content).
-    * Version files are immutable once committed — the fingerprint
-    * guards the one mutation class left: a table dropped and recreated
-    * reusing version numbers. Clear-on-overflow keeps long-lived
-    * drivers bounded.
-    */
-  private val rawLogCache =
-    scala.collection.concurrent.TrieMap[String, (String, LogContent)]()
-
-  /** (version-file path) → (fingerprint, resolved full content). */
-  private val resolvedCache =
-    scala.collection.concurrent.TrieMap[String, (String, ResolvedVersion)]()
-
-  private val logCacheMax = 4096
-
-  private[catalog] def cacheRaw(key: String, fp: String, c: LogContent): Unit = {
-    if (rawLogCache.size >= logCacheMax) rawLogCache.clear()
-    rawLogCache.put(key, (fp, c))
-    ()
-  }
-  private[catalog] def cachedRaw(key: String, fp: String): Option[LogContent] =
-    rawLogCache.get(key).collect { case (f, c) if f == fp => c }
-
-  private[catalog] def cacheResolved(key: String, fp: String,
-                                     r: ResolvedVersion): Unit = {
-    if (resolvedCache.size >= logCacheMax) resolvedCache.clear()
-    resolvedCache.put(key, (fp, r))
-    ()
-  }
-  private[catalog] def cachedResolved(key: String, fp: String): Option[ResolvedVersion] =
-    resolvedCache.get(key).collect { case (f, c) if f == fp => c }
-
-  /** (horizon-marker path) → (fingerprint, horizon version). */
-  private val horizonCache =
-    scala.collection.concurrent.TrieMap[String, (String, Long)]()
-
-  private[catalog] def cacheHorizon(key: String, fp: String, h: Long): Unit = {
-    if (horizonCache.size >= logCacheMax) horizonCache.clear()
-    horizonCache.put(key, (fp, h))
-    ()
-  }
-  private[catalog] def cachedHorizon(key: String, fp: String): Option[Long] =
-    horizonCache.get(key).collect { case (f, h) if f == fp => h }
+  /** The commit-log read counters ([[TxnLog.LogIO]]). */
+  private[graft] val LogIO: TxnLog.LogIO.type = TxnLog.LogIO
 
   /** Evict every cached log/manifest entry under a table path —
     * [[Warehouse.drop]]'s same-JVM staleness guard. Cache keys are
     * qualified file-path strings (or `session:tablePath` for the
     * manifest cache), so a scheme-insensitive normalized substring
-    * match covers all four maps.
+    * match covers all three maps.
     */
   private[catalog] def purgeCaches(tablePath: String): Unit = {
     // substring on the normalized path: qualified keys embed it with a
     // scheme prefix, manifest keys with a session prefix. Over-matching
     // a sibling prefix table only evicts a rebuildable cache entry.
     val needle = TableStatsRegistry.normalize(tablePath)
-    def hit(key: String): Boolean = key.contains(needle)
-    rawLogCache.keys.filter(hit).foreach(rawLogCache.remove)
-    resolvedCache.keys.filter(hit).foreach(resolvedCache.remove)
-    horizonCache.keys.filter(hit).foreach(horizonCache.remove)
-    manifestCache.keys.filter(hit).foreach(manifestCache.remove)
+    TxnLog.purgeCaches(needle)
+    manifestCache.keys.filter(_.contains(needle)).foreach(manifestCache.remove)
   }
-
-  /** Every Nth version is a full checkpoint even when the commit's
-    * churn is small — bounds delta-resolution chains (and the log
-    * files vacuum must retain as chain anchors) at N version files.
-    */
-  private[catalog] val checkpointEvery = 16L
 
   /** Insert-only commits append manifest PART files up to this count;
     * the next one (or any commit with retirements) rewrites the whole
@@ -6019,13 +5226,8 @@ object Warehouse {
 
   private val manifestCacheMax = 256
 
-  /** Commit-meta key naming the operation that produced a version
-    * (OVERWRITE / MERGE / REPLACE / DELETE / COMPACT / ZORDER /
-    * TRUNCATE / RESTORE / META / ADOPT / WAP_BOOTSTRAP / WAP_PUBLISH).
-    * Unlike application meta it is NOT carried forward across commits —
-    * each version describes its own writer ([[Warehouse.history]]).
-    */
-  val OpMeta = "graft.op"
+  /** The operation a version's commit performed ([[TxnLog.OpMeta]]). */
+  val OpMeta: String = TxnLog.OpMeta
 
   /** Carried-meta toggle of COLUMN MAPPING (`'id'` = enabled, empty =
     * off — Delta's `delta.columnMapping.mode`). Mapped tables write
@@ -6062,19 +5264,14 @@ object Warehouse {
   /** Chain length at which a copy writes a FULL segment instead of a
     * delta: bounds resolution to ≤ cap+1 small file reads per copy —
     * the same anchor/checkpoint discipline as the version log's
-    * [[checkpointEvery]].
+    * [[TxnLog.checkpointEvery]].
     */
   private[catalog] val copyLedgerChainCap = 16
 
-  /** Commit-meta key holding the commit's wall-clock (epoch millis),
-    * stamped by [[Warehouse]].commitLocked at write time. `TIMESTAMP
-    * AS OF` prefers this over the version file's modification time, so
-    * time travel survives filesystem-level log copies/restores (which
-    * rewrite mtimes — the Delta default-clock caveat); pre-stamp logs
-    * fall back to mtime. Like [[OpMeta]], never carried forward: each
-    * version records its own commit instant.
+  /** The commit clock every version stamps ([[TxnLog.TsMeta]]) —
+    * what `TIMESTAMP AS OF` resolves by.
     */
-  val TsMeta = "graft.ts"
+  val TsMeta: String = TxnLog.TsMeta
 
   /** Stamp `op` unless the caller already set one (a higher-level
     * composition like MERGE wins over the REPLACE primitive under it).
@@ -6088,11 +5285,10 @@ object Warehouse {
     */
   def txnMetaKey(queryId: String): String = s"graft.txn.$queryId"
 
-  /** Commit-meta marker: THIS commit wrote complete row-level change
-    * files under `_graft_cdc/` ([[Warehouse]].stageCdcLocked). Like
-    * [[OpMeta]], never carried forward — it describes one commit.
+  /** The marker of a commit that wrote complete change files under
+    * `_graft_cdc/` ([[Warehouse]].stageCdcLocked; [[TxnLog.CdcMeta]]).
     */
-  val CdcMeta = "graft.cdc"
+  val CdcMeta: String = TxnLog.CdcMeta
 
   /** CARRIED table property: change-data-feed enabled
     * ([[Warehouse.setChangeDataFeed]] — Delta's
@@ -6333,34 +5529,4 @@ object Warehouse {
 
   /** The commit-version column the `.changes` surface stamps per row. */
   val CommitVersionCol = "_commit_version"
-
-  /** One commit's file-level changes, resolved for the change-data-feed
-    * reader ([[Warehouse]].versionChangesFull).
-    */
-  /** @param dvChanged files whose deletion-vector mapping CHANGED in
-    *        this commit while the file itself stayed live — a
-    *        merge-on-read delete's footprint (no adds, no retires);
-    *        the feed reader must not render such a commit as "nothing
-    *        happened".
-    */
-  private[catalog] final case class CommitChanges(
-      adds: Seq[String], addMeta: Map[String, (Long, Long)],
-      retired: Seq[String], retiredMeta: Map[String, (Long, Long)],
-      fullReplace: Boolean, meta: Map[String, String],
-      dvChanged: Seq[String] = Nil,
-      /** retired files that carried a deletion vector in the parent —
-        * their whole-file delete derivation would double-report the
-        * already-dead positions, so the feed refuses without change
-        * files.
-        */
-      retiredWithDv: Seq[String] = Nil)
-
-  /** Process-local writer mutexes keyed by the normalized lock path
-    * (JVM-wide, so two [[Warehouse]] instances over one root still
-    * serialize) — the exact in-process half of `withWriterLock`'s
-    * two-level locking; the lease FILE covers cross-process.
-    */
-  private[catalog] val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.locks.ReentrantLock]()
 }

@@ -221,7 +221,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(wh.earliestVersion(ref).contains(6L))
   }
 
-  test("the vacuum horizon takes the max over surviving markers (crash-safe raise; legacy marker honored)") {
+  test("the vacuum horizon takes the max over surviving markers (crash-safe raise)") {
     import spark.implicits._
     val root = tmpDir("wh-hmarker")
     val wh = new Warehouse(spark, root)
@@ -252,11 +252,43 @@ class DeltaLogSpec extends SparkSpec {
       !Files.exists(logDir.resolve("_horizon.3")),
       "superseded markers are swept once the new max is durable")
     assert(wh.read(ref).count() === 43L)
-    // legacy unsuffixed marker (tables vacuumed by earlier builds)
-    // still reads — and max() composes it with suffixed ones
-    Files.delete(logDir.resolve("_horizon.4"))
-    Files.write(logDir.resolve("_horizon"), "3\n".getBytes("UTF-8"))
-    assert(wh.earliestVersion(ref).contains(3L))
+  }
+
+  test("a malformed line of a known kind fails the read and names the version file") {
+    import spark.implicits._
+    val root = tmpDir("wh-badline")
+    val wh = new Warehouse(spark, root)
+    val ref = TableRef("silver", "g", "badline")
+    wh.overwrite(ref, (1L to 40L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartition(2))                                                   // v1
+    val logDir = Paths.get(s"$root/silver/g/badline/_graft_log")
+    val v1 = logDir.resolve("v00000001")
+    val good = new String(Files.readAllBytes(v1), "UTF-8")
+    // each edit is one known kind written wrong; skipping such a line
+    // would drop a file from the snapshot, or (for `dv`) bring deleted
+    // rows back
+    val edits: Seq[String => String] = Seq(
+      _.replaceFirst("(?m)^(file\t[^\t\n]+)\t[0-9]+\t[0-9]+$", "$1"),
+      _.replaceFirst("(?m)^(file\t[^\t\n]+\t)[0-9]+", "$1x"),
+      _ + "dv\tpart-ghost.parquet\n",
+      _ + "meta\tno-equals-sign\n",
+      _ + "base\tone\n")
+    edits.zipWithIndex.foreach { case (edit, i) =>
+      val bad = edit(good)
+      assert(bad != good, s"edit $i must change the file")
+      Files.write(v1, bad.getBytes("UTF-8"))
+      // a raw rewrite invalidates the checksum sidecar — drop it
+      Files.deleteIfExists(logDir.resolve(".v00000001.crc"))
+      val fresh = new Warehouse(spark, root)
+      val e = intercept[Exception](fresh.snapshotAt(ref, 1))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("v00000001"))),
+        s"edit $i: the failure must name the version file, got: $e")
+    }
+    // unknown kinds stay forward-compatible
+    Files.write(v1, (good + "someday\tnew-kind\n").getBytes("UTF-8"))
+    Files.deleteIfExists(logDir.resolve(".v00000001.crc"))
+    assert(new Warehouse(spark, root).read(ref).count() === 40L)
   }
 
   test("drop + recreate sharing (len, mtime) on the log file reads the NEW data, not the cached list") {

@@ -336,7 +336,7 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[Exception](q.collect())
   }
 
-  test("pre-size logs (legacy file lines) degrade to listing and still read through SQL") {
+  test("a two-field (pre-size) file line fails loudly instead of degrading to listing") {
     import spark.implicits._
     val root = tmpDir("wh-sqlcat-legacy")
     val wh = new Warehouse(spark, root)
@@ -344,7 +344,7 @@ class GraftCatalogSpec extends SparkSpec {
     wh.overwrite(ref, (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v")
       .repartition(2))
     // rewrite every version file's `file\trel\tbytes\tmtime` lines to
-    // the two-field legacy form (and drop the checksum sidecars)
+    // the two-field form (and drop the checksum sidecars)
     val logDir = new java.io.File(s"$root/silver/g/legacy/_graft_log")
     logDir.listFiles().filter(_.getName.startsWith("v")).foreach { f =>
       val stripped = scala.io.Source.fromFile(f).getLines().map { l =>
@@ -355,9 +355,11 @@ class GraftCatalogSpec extends SparkSpec {
     }
     spark.conf.set("spark.sql.catalog.graftsqll", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graftsqll.root", root)
-    assert(spark.sql("SELECT count(*) AS n FROM graftsqll.silver.g.legacy")
-      .head().getLong(0) === 50L)
-    assert(wh.snapshot(ref).exists(_.fileMeta.isEmpty))
+    val e = intercept[Exception](
+      spark.sql("SELECT count(*) AS n FROM graftsqll.silver.g.legacy").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("v00000001"))),
+      s"the failure must name the version file, got: $e")
   }
 
   test("metadata-only aggregates answer from the manifest: zero file access, exact extrema, honest fallbacks") {

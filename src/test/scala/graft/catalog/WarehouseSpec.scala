@@ -1010,20 +1010,17 @@ class WarehouseSpec extends SparkSpec {
     logDir.listFiles().foreach(f => f.setLastModified(System.currentTimeMillis()))
     assert(wh.versionAsOf(ref, betweenMs) === 1L)
 
-    // pre-stamp logs (graft.ts absent) fall back to the mtime clock:
-    // strip the meta line from every version file, then resolution at
-    // NOW still finds the latest version via mtimes
-    logDir.listFiles().filter(_.getName.startsWith("v")).foreach { f =>
-      val kept = scala.io.Source.fromFile(f).getLines()
-        .filterNot(_.startsWith("meta\tgraft.ts=")).mkString("", "\n", "\n")
-      val w = new java.io.FileWriter(f); w.write(kept); w.close()
-      // raw rewrite invalidates Hadoop LocalFileSystem's checksum
-      // sidecar — drop it (a real pre-stamp log has a matching crc)
-      new java.io.File(logDir, s".${f.getName}.crc").delete()
-    }
-    assert(wh.versionAsOf(ref, System.currentTimeMillis()) === 2L)
-    // ...and a pre-mtime instant has nothing to resolve: loud failure
-    intercept[IllegalArgumentException](wh.versionAsOf(ref, 1000L))
+    // every commit stamps graft.ts: a version without the stamp has no
+    // commit clock, so resolution fails loudly and names the version
+    val v2 = new java.io.File(logDir, "v00000002")
+    val kept = scala.io.Source.fromFile(v2).getLines()
+      .filterNot(_.startsWith("meta\tgraft.ts=")).mkString("", "\n", "\n")
+    val w = new java.io.FileWriter(v2); w.write(kept); w.close()
+    // raw rewrite invalidates Hadoop LocalFileSystem's checksum sidecar
+    new java.io.File(logDir, ".v00000002.crc").delete()
+    val e = intercept[IllegalStateException](
+      wh.versionAsOf(ref, System.currentTimeMillis()))
+    assert(e.getMessage.contains("version 2") && e.getMessage.contains("graft.ts"))
   }
 
   test("blooms survive an overwrite that narrows statsColumns; lapse loudly when the column leaves") {
