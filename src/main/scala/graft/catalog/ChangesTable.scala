@@ -228,16 +228,14 @@ private[catalog] object GraftMetadataTables {
       StructField("bytes", LongType),
       StructField("mtime_ms", LongType),
       StructField("rows", LongType),
-      // deletion-vector sidecar directory, null when the file is clean
+      // deletion-vector sidecar file, null when the file is clean
       // (`rows` stays the PHYSICAL count — live rows = rows minus the
-      // sidecar's positions for this file)
+      // cardinality of this file's bitmap in the sidecar)
       StructField("dv", StringType)))
     new GraftLocalTable(s"${snap.ref}.files", filesSchema, () => {
       val rowCounts = wh.fileRowCounts(snap.ref)
       snap.files.map { f =>
-        val (bytes, mtime) = snap.fileMeta.get(f)
-          .map { case (b, m) => (b: java.lang.Long, m: java.lang.Long) }
-          .getOrElse((null, null))
+        val (bytes, mtime) = snap.fileMeta(f)
         InternalRow.fromSeq(Seq(
           UTF8String.fromString(f), bytes, mtime,
           rowCounts.get(f).map(Long.box).orNull,
@@ -392,7 +390,7 @@ private[catalog] final class GraftCdfResolver(spark: SparkSession,
         .map(GraftCdfInputPartition(_, None, v, cdcShape = true))
     else if (cc.dvChanged.nonEmpty)
       // a merge-on-read delete adds and retires NOTHING — its row-level
-      // deletes exist only as position sidecars, which this join-free
+      // deletes exist only as deletion vectors, which this file-level
       // reader cannot render; with the CDF property on the delete
       // stages change files and lands in the marked arm above
       throw new IllegalStateException(

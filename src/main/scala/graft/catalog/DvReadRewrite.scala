@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** SQL reads of tables with LIVE deletion vectors: rewrite the DSv2
   * relation into the warehouse's DV-applying read plan (clean-file
-  * scan unioned with the dv'd-file scan anti-joined against its
-  * position sidecars — exactly [[Warehouse.readSnapshot]]), so
+  * scan unioned with the dv'd-file scan under its bitmap keep-filter
+  * — exactly [[Warehouse.readSnapshot]]), so
   * `SELECT * FROM graft...` agrees with the Scala surface while
   * vectors are unmaterialized. Registered by
   * `graft.plans.GraftOptimizations`; sessions without the extensions

@@ -167,7 +167,7 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
     case Some((schema, rows)) => new GraftMetaAggScan(snap, schema, rows)
     case None =>
       // DELETION-VECTOR reader gating (Delta's reader-protocol-version
-      // refusal): this file-level scan cannot apply position sidecars.
+      // refusal): this file-level scan cannot apply deletion vectors.
       // Sessions with graft.plans.GraftOptimizations never get here —
       // DvReadRewrite rewrites the relation into the DV-applying plan
       // before scan planning; a bare session must refuse rather than

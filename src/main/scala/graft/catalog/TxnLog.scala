@@ -233,9 +233,7 @@ private[catalog] final class TxnLog(conf: Configuration,
     val l = listing(ref)
     val h = horizonFrom(l)
     val stamped = versionStatuses(l).filter(_._1 >= h).map { case (v, st) =>
-      v -> rawSt(st).meta.get(TsMeta).flatMap(_.toLongOption).getOrElse(
-        throw new IllegalStateException(s"$ref: version $v (${st.getPath}) " +
-          s"carries no $TsMeta commit stamp — its commit clock is unknown"))
+      v -> stampOf(ref, v, rawSt(st).meta)
     }
     stamped.map(_._1).zip(
       stamped.scanLeft(0L)((prev, vt) => math.max(prev, vt._2)).tail)
@@ -546,6 +544,14 @@ private[graft] object TxnLog {
     * contents). Never carried forward.
     */
   val TsMeta = "graft.ts"
+
+  /** Version `v`'s commit stamp (epoch ms) from its `meta`: a version
+    * without one fails loudly and names itself.
+    */
+  def stampOf(ref: TableRef, v: Long, meta: Map[String, String]): Long =
+    meta.get(TsMeta).flatMap(_.toLongOption).getOrElse(
+      throw new IllegalStateException(s"$ref: version $v carries no " +
+        s"$TsMeta commit stamp — its commit clock is unknown"))
 
   /** Commit-meta marker: THIS commit wrote complete row-level change
     * files under `_graft_cdc/`. Never carried forward.

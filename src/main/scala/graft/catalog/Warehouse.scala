@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{approx_count_distinct, array, col, concat, count, countDistinct, element_at, expr, input_file_name, lit, max, min, monotonically_increasing_id, spark_partition_id, split, substring, sum, when, xxhash64}
+import org.apache.spark.sql.functions.{approx_count_distinct, array, col, count, countDistinct, element_at, expr, input_file_name, lit, max, min, monotonically_increasing_id, spark_partition_id, split, substring, sum, typedLit, when, xxhash64}
 
 /** Three-level table reference, mirroring the reference's
   * `catalog.schema.table` namespace (/root/reference/lib/ingestors.py:95,
@@ -44,10 +44,11 @@ final class ConcurrentWriteException(msg: String) extends IllegalStateException(
   *        model; [[graft.catalog.GraftCatalog]] rides this).
   */
 /** @param dvMap deletion-vector sidecars: data-file rel path → sidecar
-  *        directory rel path (parquet of (file, pos) row positions).
-  *        A mapped file's listed rows MINUS its positions are its live
-  *        rows — [[Warehouse.readSnapshot]] applies this as an
-  *        anti-join on `_metadata.row_index`. Empty for tables that
+  *        file rel path (per-file roaring bitmaps of deleted row
+  *        positions, [[DeletionVectors]]). A mapped file's listed rows
+  *        MINUS its positions are its live rows —
+  *        [[Warehouse.readSnapshot]] applies this as a bitmap filter on
+  *        `_metadata.row_index` in the scan. Empty for tables that
   *        never merge-on-read-deleted (the common case).
   */
 final case class TableSnapshot(ref: TableRef, version: Long,
@@ -152,8 +153,8 @@ final class Warehouse(spark: SparkSession, val root: String,
       val c = txnLog.resolved(ref, v).getOrElse(
         throw new IllegalStateException(s"$ref: version $v vanished mid-history"))
       (v, c.meta.getOrElse(Warehouse.OpMeta, "UNKNOWN"), c.files.size,
-        // the stamped commit instant (epoch ms); null for pre-stamp logs
-        c.meta.get(Warehouse.TsMeta).flatMap(_.toLongOption))
+        // the stamped commit instant (epoch ms) — the clock versionAsOf reads
+        TxnLog.stampOf(ref, v, c.meta))
     }.toDF("version", "operation", "n_files", "commit_ms")
   }
 
@@ -163,34 +164,26 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** Read a pinned snapshot: exactly its file list, immune to concurrent
     * writers (their commits retire files without deleting them). Files
-    * with a deletion vector read MERGE-ON-READ: their sidecar
-    * positions anti-join out on `_metadata.row_index`, clean files
-    * scan untouched — cost is O(clean scan + dv'd scan + positions),
-    * never a rewrite.
+    * with a deletion vector read MERGE-ON-READ ([[readFileSubset]]).
     */
-  def readSnapshot(s: TableSnapshot): DataFrame =
-    if (s.dvMap.isEmpty) readFileSubset(s, s.files)
-    else {
-      val (dvd, clean) = s.files.partition(s.dvMap.contains)
-      val cleanDf = readFileSubset(s, clean)
-      if (dvd.isEmpty) cleanDf
-      else {
-        val applied = applyDv(s, readFileSubset(s, dvd, withPos = true), dvd)
-        if (clean.isEmpty) applied.select(cleanDf.columns.map(col).toIndexedSeq: _*)
-        else cleanDf.unionByName(
-          applied.select(cleanDf.columns.map(col).toIndexedSeq: _*))
-      }
-    }
+  def readSnapshot(s: TableSnapshot): DataFrame = readFileSubset(s, s.files)
 
-  /** One snapshot-consistent scan over a subset of the snapshot's
-    * files (the whole list for DV-free tables) — the declared-schema /
-    * inference-arm logic [[readSnapshot]] documents. `withPos` captures
-    * `__gdv_file` (table-rel path) and `__gdv_pos` (row index) straight
-    * off the scan — `_metadata` resolves only against the file
-    * relation itself, before any projection.
+  /** The one snapshot-consistent reader: a scan over a subset of the
+    * snapshot's files, declared schema or inference arm as documented
+    * inline. Files with a deletion vector scan under a bitmap filter on
+    * `_metadata.row_index` (the snapshot's vectors, broadcast once per
+    * read); clean files scan with no per-row cost — cost is O(clean
+    * scan + dv'd scan), never a rewrite, and no join sits above the
+    * scan, so `input_file_name()` still attributes rows. `withPos`
+    * captures `__gdv_file` (the file URI `_metadata.file_path` reports,
+    * percent-encoded) and `__gdv_pos` (row index)
+    * straight off the scan, for the DV-aware writers — `_metadata`
+    * resolves only against the file relation itself, before any
+    * projection.
     */
   private def readFileSubset(s: TableSnapshot, subset: Seq[String],
-                             withPos: Boolean = false): DataFrame =
+                             withPos: Boolean = false): DataFrame = {
+    val (dvd, clean) = subset.partition(s.dvMap.contains)
     if (subset.isEmpty) {
       val schema = org.apache.spark.sql.types.DataType.fromJson(s.schemaJson)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -213,7 +206,9 @@ final class Warehouse(spark: SparkSession, val root: String,
       } ++ (if (local.isEmpty) Nil
             else Seq(readFileSubset(s.copy(files = local), local, withPos)))
       reads.reduce(_ unionByName _)
-    } else {
+    } else if (dvd.nonEmpty && clean.nonEmpty)
+      readFileSubset(s, clean, withPos).unionByName(readFileSubset(s, dvd, withPos))
+    else {
       val base = path(s.ref)
       val paths = subset.map(f => s"$base/$f")
       val pathParts = subset.headOption.toSeq.flatMap { f =>
@@ -224,10 +219,14 @@ final class Warehouse(spark: SparkSession, val root: String,
         if (s.schemaJson.isEmpty) None
         else Some(org.apache.spark.sql.types.DataType.fromJson(s.schemaJson)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
-      // position capture must happen directly over the file relation
-      // (metadata columns do not survive a later projection)
-      def pos(df: DataFrame): DataFrame =
-        if (!withPos) df else capturePos(s.ref, df)
+      // the keep-filter and position capture must sit directly over the
+      // file relation (metadata columns do not survive a later projection)
+      def pos(df: DataFrame): DataFrame = {
+        val kept = if (dvd.isEmpty) df else df.filter(keepFilter(s, dvd))
+        if (!withPos) kept
+        else kept.withColumn("__gdv_file", col("_metadata.file_path"))
+          .withColumn("__gdv_pos", col("_metadata.row_index"))
+      }
       // mapped tables resolve columns by field id — the read conf must
       // be on in THIS session too (a plain SparkSession defaults it
       // off, and name-matching would silently NULL renamed columns)
@@ -260,6 +259,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           }
       }
     }
+  }
 
   /** Time travel: the table as of a historical version. Readable until
     * [[vacuum]] drops the version.
@@ -278,11 +278,31 @@ final class Warehouse(spark: SparkSession, val root: String,
     * pruned. Static-partition layouts (partition dirs outside the
     * committed schema) keep the inference arm, like readSnapshot.
     */
-  def readFiles(ref: TableRef, files: Seq[String]): DataFrame = {
+  def readFiles(ref: TableRef, files: Seq[String]): DataFrame =
+    readCurrentFiles(ref, files, withPos = false)
+
+  /** [[readFiles]] with the merge-on-read position columns exposed:
+    * declared columns plus `__gdv_file` (file URI) and
+    * `__gdv_pos` (row index), live deletion vectors applied — the
+    * DV-mode merge's target read, whose superseded rows commit as
+    * positions ([[dvReplace]]) instead of a copy-on-write rewrite.
+    */
+  private[graft] def readFilesWithPos(ref: TableRef, files: Seq[String]): DataFrame =
+    readCurrentFiles(ref, files, withPos = true)
+
+  private def readCurrentFiles(ref: TableRef, files: Seq[String],
+                               withPos: Boolean): DataFrame = {
     val declared = schemaOf(ref)
-    if (files.isEmpty)
+    val posFields =
+      if (!withPos) Nil
+      else Seq(org.apache.spark.sql.types.StructField("__gdv_file",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("__gdv_pos",
+          org.apache.spark.sql.types.LongType))
+    if (files.isEmpty) // e.g. an insert-only clause merge: no touched bytes
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(declared.fields ++ posFields))
     // route through the snapshot-subset reader so live DELETION
     // VECTORS apply: a merge/update reading its touched files must
     // never resurrect merge-on-read-deleted rows
@@ -291,44 +311,17 @@ final class Warehouse(spark: SparkSession, val root: String,
     val rels = files.map(relKey(ref))
     val pseudo = snap.copy(schemaJson = declared.json, files = rels,
       dvMap = snap.dvMap.view.filterKeys(rels.toSet).toMap)
-    readSnapshot(pseudo)
-      .select(declared.map(f => col(f.name)).toIndexedSeq: _*)
-  }
-
-  /** [[readFiles]] with the merge-on-read position columns exposed:
-    * declared columns plus `__gdv_file` (table-relative path) and
-    * `__gdv_pos` (row index), live deletion vectors applied — the
-    * DV-mode merge's target read, whose superseded rows commit as
-    * positions ([[dvReplace]]) instead of a copy-on-write rewrite.
-    */
-  private[graft] def readFilesWithPos(ref: TableRef,
-                                      files: Seq[String]): DataFrame = {
-    val declared = schemaOf(ref)
-    if (files.isEmpty) // insert-only clause merge: no touched bytes
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(declared.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("__gdv_file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__gdv_pos",
-            org.apache.spark.sql.types.LongType))))
-    val snap = snapshot(ref).getOrElse(
-      TableSnapshot(ref, -1L, declared.json, files.map(relKey(ref))))
-    val rels = files.map(relKey(ref))
-    val pseudo = snap.copy(schemaJson = declared.json, files = rels,
-      dvMap = snap.dvMap.view.filterKeys(rels.toSet).toMap)
-    readSubsetWithPos(pseudo, rels)
-      .select((declared.map(f => col(f.name)) ++
-        Seq(col("__gdv_file"), col("__gdv_pos"))).toIndexedSeq: _*)
+    readFileSubset(pseudo, rels, withPos)
+      .select((declared.fields ++ posFields).map(f => col(f.name)).toIndexedSeq: _*)
   }
 
   // ------------------------------------------------- deletion vectors
 
-  /** Sidecar root: one parquet directory per DV-writing commit
-    * (`_graft_dv/v%08d`), rows `(file: string, pos: long)` — the
-    * positions deleted from `file`, which the commit's `dv` log lines
-    * map file-by-file. Underscore-prefixed like the log and the cdc
-    * dir, so data scans never list it.
+  /** Sidecar root: one bitmap sidecar file per DV-writing commit
+    * (`_graft_dv/v%08d`, [[DeletionVectors]]) — the positions deleted
+    * from each file it holds, which the commit's `dv` log lines map
+    * file-by-file. Underscore-prefixed like the log and the cdc dir, so
+    * data scans never list it.
     */
   private[catalog] val dvDir = "_graft_dv"
 
@@ -337,8 +330,9 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** Turn merge-on-read DELETE on or off (Delta's
     * `delta.enableDeletionVectors`): one carried commit-meta line.
-    * While on, [[deleteWhere]] commits position sidecars instead of
-    * rewriting straddled files; [[compact]] materializes them away.
+    * While on, [[deleteWhere]] commits bitmap sidecars instead of
+    * rewriting straddled files, filtered out in the scan on read;
+    * [[compact]] materializes them away.
     * Turning it OFF stops NEW vectors — existing ones keep applying
     * (and keep read-correct) until a compact/rewrite retires them.
     */
@@ -350,71 +344,18 @@ final class Warehouse(spark: SparkSession, val root: String,
     currentVersion(ref).exists(v =>
       commitMeta(ref, v).get(Warehouse.DvMeta).contains("true"))
 
-  /** The deleted (file, pos) rows of a snapshot's vectors, restricted
-    * to `subset` (rel paths). One read per distinct sidecar dir; rows
-    * are matched back to their OWN commit's mapping, so a file whose
-    * vector a later delete superseded never double-applies.
-    */
-  private def dvRows(s: TableSnapshot, subset: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val base = path(s.ref)
-    val pairs = subset.flatMap(f => s.dvMap.get(f).map(f -> _))
-    val byDir = pairs.groupBy(_._2)
-    byDir.toSeq.sortBy(_._1).map { case (dir, fs) =>
-      val files = fs.map(_._1).toSet
-      spark.read.parquet(s"$base/$dir")
-        .join(files.toSeq.toDF("file"), Seq("file"), "left_semi")
-    }.reduce(_ unionByName _)
-  }
+  /** The live vectors of `files` (rel paths) in snapshot `s`. */
+  private[catalog] def vectorsOf(s: TableSnapshot,
+                                 files: Iterable[String]): DeletionVectors.Vectors =
+    DeletionVectors.load(txnLog, new Path(path(s.ref)), s.dvMap, files)
 
-  /** Anti-join a position-captured scan (built with
-    * `readFileSubset(withPos = true)` — carries `__gdv_file` /
-    * `__gdv_pos`) against its deletion vectors: deleted positions drop
-    * out, the helper columns stay for callers that plan per-file (the
-    * DV delete path) and are projected away by [[readSnapshot]]'s
-    * final select. The join's right side is O(unmaterialized deleted
-    * positions) — AQE broadcasts when small; data filters still push
-    * below the join to the scan.
+  /** The keep-filter of a scan over `dvd` (rel paths with vectors in
+    * `s`), keyed by the qualified file URI `_metadata.file_path` holds.
     */
-  private def applyDv(s: TableSnapshot, withPos: DataFrame,
-                      subset: Seq[String]): DataFrame = {
-    val del = dvRows(s, subset)
-      .select(col("file").as("__dvf"), col("pos").as("__dvp"))
-    withPos.join(del,
-      col("__gdv_file") === col("__dvf") &&
-        col("__gdv_pos") === col("__dvp"), "left_anti")
-  }
-
-  /** Capture `__gdv_file` (table-rel path) and `__gdv_pos` (row index)
-    * straight off a file scan — `_metadata` resolves only against the
-    * file relation itself, before any projection.
-    */
-  private def capturePos(ref: TableRef, scan: DataFrame): DataFrame = {
-    val tablePath = new Path(path(ref))
-    val qBase = fs(tablePath).makeQualified(tablePath).toString
-    scan.withColumn("__gdv_file",
-        expr(s"substring(_metadata.file_path, ${qBase.length + 2})"))
-      .withColumn("__gdv_pos", col("_metadata.row_index"))
-  }
-
-  /** EFFECTIVE rows of a snapshot file subset with `__gdv_file` /
-    * `__gdv_pos` attached and live vectors applied — the per-file
-    * planning read of the DV-aware writers ([[deleteWhere]],
-    * [[updateWhere]], [[dvReplace]]): `input_file_name()` is useless once an
-    * anti-join sits above the scan, so file attribution rides the
-    * captured metadata column instead.
-    */
-  private def readSubsetWithPos(s: TableSnapshot,
-                                subset: Seq[String]): DataFrame = {
-    val (dvd, clean) = subset.partition(s.dvMap.contains)
-    val cleanDf = readFileSubset(s, clean, withPos = true)
-    if (dvd.isEmpty) cleanDf
-    else {
-      val applied = applyDv(s, readFileSubset(s, dvd, withPos = true), dvd)
-      if (clean.isEmpty) applied
-      else cleanDf.unionByName(applied.select(cleanDf.columns.map(col)
-        .toIndexedSeq: _*))
-    }
+  private def keepFilter(s: TableSnapshot, dvd: Seq[String]): Column = {
+    val table = fs(new Path(path(s.ref))).makeQualified(new Path(path(s.ref)))
+    DeletionVectors.keep(spark, vectorsOf(s, dvd).map { case (f, bm) =>
+      new Path(table, f).toUri.toString -> bm })
   }
 
   /** Latest version committed at or before `tsMillis` — the resolver
@@ -1213,11 +1154,8 @@ final class Warehouse(spark: SparkSession, val root: String,
       case Some(rels) => rels.map(r => filesystem.getFileStatus(new Path(dir, r)))
       case None => listDataFileStatuses(dir)
     }
-    val (files, empty) = all.partition { st =>
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hadoopConf))
-      try footer.getRecordCount > 0 finally footer.close()
-    }
+    val (files, empty) = all.partition(st => footerRows(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hadoopConf)) > 0)
     empty.foreach(st => filesystem.delete(st.getPath, false))
     val base = filesystem.makeQualified(dir).toUri.getPath
     val staged = Staged(dir, schema,
@@ -1226,6 +1164,23 @@ final class Warehouse(spark: SparkSession, val root: String,
       files, listed = adopt.isEmpty)
     if (validate) validateConstraintsLocked(ref, stagedRows(staged, withSchema = true))
     staged
+  }
+
+  /** A parquet file's record count, from its footer. */
+  private def footerRows(in: org.apache.parquet.io.InputFile): Long = {
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try footer.getRecordCount finally footer.close()
+  }
+
+  /** Per-file PHYSICAL row counts of `rels` (table-relative, vectors not
+    * subtracted): the driver-local stats manifest's `rows` when it has
+    * them, else the files' parquet footers — never a scan.
+    */
+  private def physicalRows(ref: TableRef, rels: Seq[String]): Map[String, Long] = {
+    val fromManifest = fileRowCounts(ref)
+    rels.map(f => f -> fromManifest.getOrElse(f, footerRows(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(path(ref), f), hadoopConf)))).toMap
   }
 
   /** Move staged files to their relative paths in the table directory. */
@@ -1400,7 +1355,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     val liveDv = dv.getOrElse(parent.fold(Map.empty[String, String])(_.dvMap))
     if (keep.exists(liveDv.contains) || !registerStatsAt(path(ref)))
       TableStatsRegistry.invalidate(path(ref))
-    filesystem.delete(new Path(table, txnFile), false)
+    // only a commit that adds files journaled them
+    if (staged.rels.nonEmpty) filesystem.delete(new Path(table, txnFile), false)
     v
   }
 
@@ -1541,7 +1497,7 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** Per-file exact row counts from the stats manifest (driver-local
     * only; empty when the table keeps no manifest or it is too large
-    * to materialize) — the `.files` metadata table's rows column.
+    * to materialize) — the `.files` table's rows, and [[physicalRows]].
     */
   private[catalog] def fileRowCounts(ref: TableRef): Map[String, Long] =
     manifestLocalDf(path(ref)) match {
@@ -3185,21 +3141,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     * predicate-pushed scan projecting zero data columns — parquet
     * row-group stats skip non-matching groups, so work stays
     * proportional to the files that COULD match, never the table.
-    * `input_file_name()` attributes rows only while no deletion vector
-    * is live: over a vector the read is an anti-join, so attribution
-    * rides the captured `__gdv_file` column instead.
+    * Live deletion vectors filter inside the scan (no join above it),
+    * so `input_file_name()` attributes every row.
     */
-  private def matchesPerFile(ref: TableRef, snap: Option[TableSnapshot],
-                             matched: Column): Seq[(String, Long)] = {
-    val grouped = snap match {
-      case Some(s) if s.dvMap.nonEmpty =>
-        readSubsetWithPos(s, s.files).filter(matched)
-          .groupBy(concat(lit(path(ref) + "/"), col("__gdv_file")))
-      case _ => read(ref).filter(matched).groupBy(input_file_name())
-    }
-    grouped.agg(count(lit(1))).collect()
+  private def matchesPerFile(ref: TableRef, matched: Column): Seq[(String, Long)] =
+    read(ref).filter(matched).groupBy(input_file_name()).agg(count(lit(1))).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toSeq
-  }
 
   /** Row-level DELETE (Delta `DELETE FROM ... WHERE` semantics, the
     * GDPR/compaction primitive the reference's update-insert-only MERGE
@@ -3243,45 +3190,24 @@ final class Warehouse(spark: SparkSession, val root: String,
         s"$ref has no committed version — DV deletes need the commit log"))
       if (planned.files.isEmpty) return 0L
       // matched rows with positions within `files`, existing vectors
-      // applied — read per subset, so the sidecar and the change rows
-      // scan only the files the delete touches
+      // applied — read per subset, so the change rows scan only the
+      // files the delete touches
       def hits(files: Seq[String]): DataFrame =
-        readSubsetWithPos(planned, files).filter(matched)
-      return dvReplace(ref, planned,
-        hits(_).select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos")),
+        readFileSubset(planned, files, withPos = true).filter(matched)
+      return dvReplace(ref, planned, DeletionVectors.build(hits(planned.files)
+          .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))),
         None, Map(Warehouse.OpMeta -> "DELETE"),
         touched =>
           if (!cdfEnabled(ref)) None
           else Some(hits(touched).drop("__gdv_file", "__gdv_pos")
             .withColumn(Warehouse.ChangeTypeCol, lit("delete"))))
     }
-    val perFile = matchesPerFile(ref, snap, matched)
+    val perFile = matchesPerFile(ref, matched)
     if (perFile.isEmpty) return 0L
     val touched = perFile.map(_._1)
-    // per-file totals come from the stats manifest when it has them
-    // (zero I/O) and otherwise from a zero-data-column count over ONLY
-    // the touched files
-    val touchedRels = touched.map(relKey(ref))
-    val fromManifest: Map[String, Long] = manifestDf(path(ref)) match {
-      case Some(m) if m.columns.contains("rows") =>
-        m.filter(col("file").isin(touchedRels: _*) && col("rows").isNotNull)
-          .select("file", "rows").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      case _ => Map.empty
-    }
-    val missing = touched.filterNot(p => fromManifest.contains(relKey(ref)(p)))
-    val counted: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else spark.read.option("basePath", path(ref)).parquet(missing: _*)
-        .groupBy(input_file_name().as("__file"))
-        .agg(count(lit(1)).as("__total"))
-        .collect().map(r => (relKey(ref)(r.getString(0)), r.getLong(1)))
-        .toMap
-    def totalOf(p: String): Long = {
-      val n = relKey(ref)(p)
-      fromManifest.getOrElse(n, counted(n))
-    }
-    val partial = perFile.collect { case (f, n) if n < totalOf(f) => f }
+    // no vector is live here, so physical totals are live totals
+    val totals = physicalRows(ref, touched.map(relKey(ref)))
+    val partial = perFile.collect { case (f, n) if n < totals(relKey(ref)(f)) => f }
     if (partial.isEmpty)
       // pure retirement: the metadata-only partition drop stays
       // metadata-only even with CDF on
@@ -3305,10 +3231,12 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** The MERGE-ON-READ applier — the one deletion-vector write path
     * behind DV-mode DELETE, UPDATE and MERGE (Delta deletion vectors /
-    * Iceberg position deletes). The superseded rows' `(file, pos)`
-    * positions land in ONE parquet sidecar (merged per file with any
-    * carried vector — a second delete COMPOSES) mapped file-by-file by
-    * `dv` log lines; `newRows` (None for a delete) land as a small
+    * Iceberg position deletes). `sup`, the superseded rows' per-file
+    * bitmaps ([[DeletionVectors.build]] over `__gdv_file`/`__gdv_pos`,
+    * so keyed by file URI), lands in ONE sidecar file
+    * (OR-merged per file with any carried vector — a second delete
+    * COMPOSES) mapped file-by-file by `dv` log lines; `newRows` (None
+    * for a delete) land as a small
     * APPEND; one commit publishes both. Unmatched bytes never move, so a
     * scattered-key CDC batch costs O(changed rows), not O(touched files)
     * of rewrite. A touched file whose EVERY live row is superseded
@@ -3317,44 +3245,40 @@ final class Warehouse(spark: SparkSession, val root: String,
     * nothing and adds nothing commits nothing. Returns the number of
     * superseded rows.
     *
-    * Reads apply the vectors as an anti-join on `_metadata.row_index`;
-    * [[compact]] materializes them away; [[vacuum]] sweeps sidecars no
-    * surviving version references.
+    * Reads apply the vectors as a bitmap filter on `_metadata.row_index`
+    * in the scan; [[compact]] materializes them away; [[vacuum]] sweeps
+    * sidecars no surviving version references.
     *
-    * `positions(files)` is the superseded `(file, pos)` rows within
-    * `files` (table-relative paths of `planned`) and `changes(touched)`
-    * the CDF rows given the touched files: a producer planning from a
+    * `changes(touched)` is the CDF rows given the touched files
+    * (table-relative paths of `planned`): a producer planning from a
     * scan (DELETE) reads only those files, a producer holding a
     * materialized classification returns it whole. That classification
     * MUST be one materialized frame when a join produced it (the merge
-    * and update callers localCheckpoint theirs): this method evaluates
-    * positions, rows and changes in separate actions, and un-pinned
-    * window tie-breaks could otherwise supersede one row and append
-    * another. The new rows stage and [[land]] like every added file
-    * (validated, journaled, manifest maintained), with the commit
-    * carrying the version's complete vector map.
+    * and update callers localCheckpoint theirs): `sup`, the rows and
+    * the changes come from separate actions, and un-pinned window
+    * tie-breaks could otherwise supersede one row and append another.
+    * The new rows stage and [[land]] like every added file (validated,
+    * journaled, manifest maintained), with the commit carrying the
+    * version's complete vector map.
     */
   private[graft] def dvReplace(ref: TableRef, planned: TableSnapshot,
-                               positions: Seq[String] => DataFrame,
+                               byUri: DeletionVectors.Vectors,
                                newRows: Option[DataFrame],
                                meta: Map[String, String],
                                changes: Seq[String] => Option[DataFrame]): Long = {
-    // superseded-row counts per file (bounded driver action: one row
-    // per touched file) drive the metadata-retirement fast path
-    val perFileSup = positions(planned.files).groupBy(col("file"))
-      .agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = perFileSup.keys.toSeq.sorted
+    // the log's key: the DECODED table-relative path (a partition value
+    // may need percent-escaping in the URI)
+    val sup = byUri.map { case (uri, bm) =>
+      relKey(ref)(new java.net.URI(uri).getPath) -> bm }
+    val touched = sup.keys.toSeq.sorted
     if (touched.isEmpty && newRows.isEmpty) return 0L
-    // live totals (existing vectors applied) over ONLY the touched
-    // files: a file whose every live row is superseded retires whole
-    val liveTotals =
-      if (touched.isEmpty) Map.empty[String, Long]
-      else readSubsetWithPos(planned, touched)
-        .groupBy(col("__gdv_file")).agg(count(lit(1)).as("__t"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // live rows = physical rows minus the carried vector: a file whose
+    // every live row is superseded retires whole
+    val carried = vectorsOf(planned, touched)
+    val physical = physicalRows(ref, touched)
     val (dead, partial) = touched.partition(f =>
-      perFileSup(f) >= liveTotals(f))
+      DeletionVectors.cardinality(sup(f)) >=
+        physical(f) - carried.get(f).fold(0L)(DeletionVectors.cardinality))
     txnLog.withLock(ref) {
       recoverLocked(ref)
       val snap = ensureLogLocked(ref)
@@ -3362,23 +3286,16 @@ final class Warehouse(spark: SparkSession, val root: String,
         throw new ConcurrentWriteException(
           s"table $ref moved from version ${planned.version} to " +
             s"${snap.version} since this DV write was planned — re-run")
-      val tablePath = new Path(path(ref))
-      val filesystem = fs(tablePath)
-      // sidecar: this commit's touched files' merged positions
-      // (previous vector ∪ superseded rows) — superseded dirs become
-      // vacuum garbage once no version references them
+      // sidecar: this commit's partial files' merged vectors (carried ∪
+      // superseded) — superseded sidecars become vacuum garbage once no
+      // version references them
       val newDvMap: Map[String, String] =
         if (partial.isEmpty) snap.dvMap -- dead
         else {
-          val dir = dvPath(ref, snap.version + 1)
-          filesystem.delete(dir, true) // a crashed predecessor's orphan
-          val newPositions = positions(partial)
-            .filter(col("file").isin(partial: _*)).select(col("file"), col("pos"))
-          val carried = partial.filter(snap.dvMap.contains)
-          val merged =
-            if (carried.isEmpty) newPositions
-            else newPositions.unionByName(dvRows(snap, carried))
-          merged.write.parquet(dir.toString)
+          val file = dvPath(ref, snap.version + 1)
+          fs(file).delete(file, true) // a crashed predecessor's orphan
+          DeletionVectors.write(txnLog, file, partial.map(f =>
+            f -> DeletionVectors.union(carried.get(f), sup(f))).toMap)
           val rel = f"$dvDir/v${snap.version + 1}%08d"
           (snap.dvMap -- dead) ++ partial.map(_ -> rel)
         }
@@ -3392,7 +3309,7 @@ final class Warehouse(spark: SparkSession, val root: String,
             meta, changes(touched), Some(newDvMap))
       }
     }
-    perFileSup.values.sum
+    sup.values.map(DeletionVectors.cardinality).sum
   }
 
   /** Row-level UPDATE (Delta `UPDATE ... SET ... WHERE` semantics):
@@ -3443,7 +3360,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // DV property on, matched rows supersede by position and the
     // updated rows land as one small append — no touched-file rewrite
     if (dvEnabled(ref)) return updateWhereDv(ref, matched, set, snap)
-    val perFile = matchesPerFile(ref, Some(snap), matched)
+    val perFile = matchesPerFile(ref, matched)
     if (perFile.isEmpty) return 0L
     val setMap = set.toMap
     // generated columns whose expressions read a SET column recompute
@@ -3503,7 +3420,7 @@ final class Warehouse(spark: SparkSession, val root: String,
   }
 
   /** MERGE-ON-READ update — [[updateWhere]]'s body when the DV
-    * property is on: the matched rows' positions land in the sidecar
+    * property is on: the matched rows' positions land in a vector
     * and their SET-applied images land as one small append
     * ([[dvReplace]]); unmatched rows in the same files never move.
     * Change-feed rows (pre/postimage) commit atomically as usual.
@@ -3517,7 +3434,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // matched rows with positions, live vectors applied; the predicate
     // pushes to the scan, so planning work tracks the files that could
     // match
-    val eff = readSubsetWithPos(planned, planned.files).filter(matched)
+    val eff = readFileSubset(planned, planned.files, withPos = true).filter(matched)
     val cols = eff.columns.toSeq
       .filterNot(Set("__gdv_file", "__gdv_pos").contains)
     // generated columns reading a SET column recompute over the
@@ -3535,17 +3452,16 @@ final class Warehouse(spark: SparkSession, val root: String,
     }
     // ONE materialized classification (dvReplace's documented
     // contract) carrying pre-image, POST-SET image, and position per
-    // matched row: the ~6 downstream actions (count, per-file
-    // collects, sidecar write, staged append, CDC stage) all read this
-    // checkpoint, so a nondeterministic condition cannot supersede a
+    // matched row: the downstream actions (bitmap build, staged append,
+    // CDC stage) all read this checkpoint, so a nondeterministic condition cannot supersede a
     // row without appending its image, and a nondeterministic SET
     // (current_timestamp()) commits exactly the postimage the CDF
     // reports. O(matched rows), the same bound mergeOnRead pays.
     val staged = graft.util.Scratch.transientCheckpoint(
       regen.localCheckpoint())
-    if (staged.count() == 0L) return 0L
-    val positions = staged
-      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
+    val sup = DeletionVectors.build(staged
+      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos")))
+    if (sup.isEmpty) return 0L
     val newRows = staged.select(cols.map(c => col(s"__post_$c").as(c)): _*)
     val changes =
       if (!cdfEnabled(ref)) None
@@ -3555,7 +3471,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           .unionByName(newRows.withColumn(Warehouse.ChangeTypeCol,
             lit("update_postimage"))))
       }
-    dvReplace(ref, planned, _ => positions, Some(newRows),
+    dvReplace(ref, planned, sup, Some(newRows),
       Map(Warehouse.OpMeta -> "UPDATE"), _ => changes)
   }
 
@@ -4367,117 +4283,48 @@ final class Warehouse(spark: SparkSession, val root: String,
     * Extrema are EXACT by construction: [[fileStats]] computes
     * min/max with Spark's own aggregate over every row at write time
     * (full values, no truncation), so folding per-file extrema equals
-    * the full-scan answer bit-for-bit. The fold itself runs as one
-    * tiny aggregate over the (driver-local cached) manifest.
+    * the full-scan answer bit-for-bit. The fold is the one-group case
+    * of [[metadataAggregateGrouped]]: one tiny aggregate over the
+    * (driver-local cached) manifest.
     * COUNT answers are `sum(rows)` / `sum(rows - nulls_c)`; an empty
     * file list answers without a manifest (0 / null extrema).
     */
   def metadataAggregate(ref: TableRef, files: Seq[String],
-                        aggs: Seq[Warehouse.MetaAgg]): Option[Seq[Any]] = {
-    import Warehouse.{ColCount, ColMax, ColMin, RowCount}
-    if (aggs.isEmpty) return None
-    // live deletion vectors: manifest rows/counts are PHYSICAL — a
-    // metadata-only COUNT would include merge-on-read-deleted rows.
-    // (min/max would still be safe bounds but not exact answers.)
-    // Honest fallback to the scan until a compact materializes.
-    if (snapshot(ref).exists(_.dvMap.nonEmpty)) return None
-    // `files` are snapshot rel paths — the manifest's key space (a
-    // pre-r15 basename-keyed manifest over a partitioned layout simply
-    // fails the per-file validation below → honest scan fallback)
-    val names = files
-    if (names.isEmpty)
-      return Some(aggs.map {
-        case RowCount | ColCount(_) => 0L
-        case _ => null
-      })
-    // driver-local manifests only: past the materialization cutoff the
-    // per-query isin over every snapshot basename would itself run a
-    // Spark job at PLAN time — exactly the table size where falling
-    // back to the scan is the honest answer
-    manifestLocalDf(path(ref)).flatMap { m =>
-      val needed = aggs.flatMap {
-        case RowCount => Seq("rows")
-        case ColCount(c) => Seq("rows", s"nulls_$c")
-        case ColMin(c) => Seq(s"min_$c", s"nulls_$c", "rows")
-        case ColMax(c) => Seq(s"max_$c", s"nulls_$c", "rows")
-      }.distinct
-      if (!needed.forall(m.columns.contains)) None
-      else {
-        val f = m.filter(col("file").isin(names: _*))
-        // one pass: validation counts first, then one result column
-        // per requested aggregate (positions are fixed, so the head()
-        // row reads back by index)
-        def exactExtremum(c: String): Column =
-          // a null per-file extremum is legitimate ONLY for an
-          // all-null column in that file; <=> makes a null nulls_c
-          // (mixed-era manifest) count as a violation
-          count(when(col(s"min_$c").isNull.or(col(s"max_$c").isNull)
-            .and(!(col(s"nulls_$c") <=> col("rows"))), 1))
-        val extremaCols = aggs.collect {
-          case ColMin(c) => c
-          case ColMax(c) => c
-        }.distinct.filter(c => m.columns.contains(s"min_$c") &&
-          m.columns.contains(s"max_$c"))
-        val countCols = aggs.collect { case ColCount(c) => c }.distinct
-        val validation: Seq[Column] = Seq(
-          count(lit(1)).as("__nfiles"),
-          countDistinct(col("file")).as("__ndistinct"),
-          count(col("rows")).as("__nrows")) ++
-          countCols.map(c => count(col(s"nulls_$c")).as(s"__nn_$c")) ++
-          extremaCols.map(c => exactExtremum(c).as(s"__bad_$c"))
-        val results: Seq[Column] = aggs.map {
-          case RowCount => sum(col("rows"))
-          case ColCount(c) => sum(col("rows") - col(s"nulls_$c"))
-          case ColMin(c) => min(col(s"min_$c"))
-          case ColMax(c) => max(col(s"max_$c"))
-        }
-        // extrema columns for min/max must both exist (exactExtremum
-        // reads min AND max); reject up front when either is missing
-        val extremaRequested = aggs.collect {
-          case ColMin(c) => c
-          case ColMax(c) => c
-        }.distinct
-        if (extremaRequested.size != extremaCols.size) None
-        else {
-          val all = validation ++ results
-          val row = f.agg(all.head, all.tail: _*).head()
-          val n = names.size.toLong
-          val valid =
-            row.getLong(0) == n && row.getLong(1) == n &&
-              row.getLong(2) == n &&
-              countCols.indices.forall(i => row.getLong(3 + i) == n) &&
-              extremaCols.indices.forall(i =>
-                row.getLong(3 + countCols.size + i) == 0L)
-          if (!valid) None
-          else Some(aggs.indices.map(i => row.get(validation.size + i)))
-        }
-      }
-    }
-  }
+                        aggs: Seq[Warehouse.MetaAgg]): Option[Seq[Any]] =
+    if (files.isEmpty && aggs.nonEmpty) Some(aggs.map {
+      case Warehouse.RowCount | Warehouse.ColCount(_) => 0L
+      case _ => null
+    })
+    else metadataAggregateGrouped(ref, files.map(_ -> 0).toMap, aggs).map(_(0))
 
   /** GROUPED metadata-only aggregates — [[metadataAggregate]] with the
     * snapshot's files partitioned into caller-defined groups (the scan
     * builder groups by PARTITION-directory values, answering
     * `SELECT part, count(*), min(c), max(c) ... GROUP BY part` from
     * the manifest alone — Iceberg's partition-stats query shape). ONE
-    * driver-local aggregate over the manifest joined to the
-    * (file → group) mapping, never a pass per group. Provability is
-    * the ungrouped contract applied PER GROUP, all-or-nothing: every
-    * group's files fully and exactly accounted for, null extrema only
-    * with the all-null witness — any unprovable group fails the whole
-    * answer (callers fall back to the real scan). Returns
-    * group-id → values in `aggs` order.
+    * driver-local aggregate over the manifest, never a pass per group.
+    * Provability is the ungrouped contract applied PER GROUP,
+    * all-or-nothing: every group's files fully and exactly accounted
+    * for, null extrema only with the all-null witness — any unprovable
+    * group fails the whole answer (callers fall back to the real scan).
+    * Returns group-id → values in `aggs` order.
     */
   def metadataAggregateGrouped(ref: TableRef, groupOf: Map[String, Int],
                                aggs: Seq[Warehouse.MetaAgg])
       : Option[Map[Int, Seq[Any]]] = {
-    import scala.jdk.CollectionConverters._
     import Warehouse.{ColCount, ColMax, ColMin, RowCount}
     if (aggs.isEmpty || groupOf.isEmpty) return None
-    // same DV guard as the ungrouped form: physical manifest counts
-    // lie about live rows while vectors are unmaterialized
+    // live deletion vectors: manifest rows/counts are PHYSICAL — a
+    // metadata-only COUNT would include merge-on-read-deleted rows.
+    // (min/max would still be safe bounds but not exact answers.)
+    // Honest fallback to the scan until a compact materializes.
     if (snapshot(ref).exists(_.dvMap.nonEmpty)) return None
+    // driver-local manifests only: past the materialization cutoff the
+    // per-query isin over every snapshot file would itself run a Spark
+    // job at PLAN time — exactly the table size where falling back to
+    // the scan is the honest answer
     manifestLocalDf(path(ref)).flatMap { m =>
+      // exactExtremum reads min AND max, so extrema need both columns
       val needed = aggs.flatMap {
         case RowCount => Seq("rows")
         case ColCount(c) => Seq("rows", s"nulls_$c")
@@ -4486,20 +4333,16 @@ final class Warehouse(spark: SparkSession, val root: String,
       }.distinct
       if (!needed.forall(m.columns.contains)) None
       else {
-        val mapping = spark.createDataFrame(
-          groupOf.toSeq.map { case (f, g) =>
-            org.apache.spark.sql.Row(f, g)
-          }.asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("file",
-              org.apache.spark.sql.types.StringType, nullable = false),
-            org.apache.spark.sql.types.StructField("__gid",
-              org.apache.spark.sql.types.IntegerType, nullable = false))))
-        // inner join: a snapshot file MISSING from the manifest simply
-        // contributes no row, so its group's accounted count falls
-        // short of the expected count below → unprovable → None
-        val f = m.join(mapping, "file")
+        // `groupOf` keys are snapshot rel paths — the manifest's key
+        // space. Each row's group is a literal map lookup; a snapshot
+        // file MISSING from the manifest contributes no row, so its
+        // group's accounted count falls short below → unprovable → None
+        val f = m.filter(col("file").isin(groupOf.keys.toSeq: _*))
+          .withColumn("__gid", element_at(typedLit(groupOf), col("file")))
         def exactExtremum(c: String): Column =
+          // a null per-file extremum is legitimate ONLY for an
+          // all-null column in that file; <=> makes a null nulls_c
+          // (mixed-era manifest) count as a violation
           count(when(col(s"min_$c").isNull.or(col(s"max_$c").isNull)
             .and(!(col(s"nulls_$c") <=> col("rows"))), 1))
         val countCols = aggs.collect { case ColCount(c) => c }.distinct
@@ -4507,6 +4350,9 @@ final class Warehouse(spark: SparkSession, val root: String,
           case ColMin(c) => c
           case ColMax(c) => c
         }.distinct
+        // one pass per group: validation counts first, then one result
+        // column per requested aggregate (positions are fixed, so each
+        // row reads back by index)
         val validation: Seq[Column] = Seq(
           count(lit(1)).as("__nfiles"),
           countDistinct(col("file")).as("__ndistinct"),
@@ -5044,9 +4890,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         val raw = spark.read.parquet(files: _*)
         val dvd = files.map(relKey(ref)).filter(snapDv.contains)
         val data =
-          if (dvd.isEmpty) raw
-          else applyDv(snapshot(ref).get, capturePos(ref, raw), dvd)
-            .drop("__gdv_file", "__gdv_pos")
+          if (dvd.isEmpty) raw else raw.filter(keepFilter(snapshot(ref).get, dvd))
         val cluster = clusterBy.getOrElse(statColumns(ref))
           .filter(data.columns.contains)
         val packed =
@@ -5299,7 +5143,7 @@ object Warehouse {
   /** CARRIED table property: DELETION VECTORS enabled
     * ([[Warehouse.setDeletionVectors]] — Delta's
     * `delta.enableDeletionVectors`). While on, [[Warehouse.deleteWhere]]
-    * commits row-position sidecars instead of rewriting straddled
+    * commits row-position bitmaps instead of rewriting straddled
     * files — merge-on-read deletes, O(matches) instead of O(files
     * containing a match).
     */

@@ -823,8 +823,8 @@ object PipelineQueries {
     *    IDENTICAL to the pre-delete one and a vector map exists — the
     *    ledger witness that no data file moved;
     *  - the returned rows hash-match DuckDB — read correctness;
-    *  - `dv_read_consistent`: the MERGE-ON-READ read (anti-join
-    *    against the live sidecar) and the post-compact materialized
+    *  - `dv_read_consistent`: the MERGE-ON-READ read (bitmap filter
+    *    on the live vectors in the scan) and the post-compact materialized
     *    read agree on (count, order-insensitive row hash) — the two
     *    read paths cannot drift;
     *  - `physically_erased`: after compact (which rewrites DV'd files
@@ -2168,7 +2168,7 @@ object PipelineQueries {
     * (`dv_zero_rewrites`: every pre-merge file survives untouched, the
     * merge added only fresh append files, and a vector map exists) and
     * hash-matches the post-merge read against DuckDB's recompute —
-    * the merge-on-read read path (anti-join on positions) must agree
+    * the merge-on-read read path (bitmap filter on positions) must agree
     * with a plain engine. At 100 TB this is the CDC economics
     * headline: a batch touching one row per file costs O(changed
     * rows), not O(files straddled) of rewrite.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{TableRef, Warehouse}
+import graft.catalog.{DeletionVectors, TableRef, Warehouse}
 
 /** Native MERGE, replacing the reference's Delta
   * `whenMatchedUpdateAll / whenNotMatchedInsertAll` (no Delta jar in this
@@ -644,7 +644,8 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
         val (sup, adds, changes) = Merge.applyClausesOnRead(
           warehouse.readFilesWithPos(ref, touched), source, keys, cl,
           wantChanges = cdfOn)
-        warehouse.dvReplace(ref, snap, _ => sup, Some(adds), meta, _ => changes)
+        warehouse.dvReplace(ref, snap, DeletionVectors.build(sup), Some(adds), meta,
+          _ => changes)
       case Some((touched, untouched)) if untouched.nonEmpty =>
         val (merged, changes) = Merge.applyClauses(readTouched(touched),
           source, keys, cl, cdfOn)
@@ -866,8 +867,8 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
           val (sup, adds, changes) = Merge.mergeOnRead(
             warehouse.readFilesWithPos(ref, touched), source, keys, tsField,
             wantChanges = cdfOn)
-          warehouse.dvReplace(ref, planned, _ => sup, Some(adds), meta,
-            _ => changes)
+          warehouse.dvReplace(ref, planned, DeletionVectors.build(sup), Some(adds),
+            meta, _ => changes)
         } else {
           val (merged, changes) = upsertAll(readTouched(touched), source, cdfOn)
           warehouse.replaceDataFiles(ref, touched, merged, meta = meta,

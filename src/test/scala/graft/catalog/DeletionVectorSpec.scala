@@ -494,19 +494,21 @@ class DeletionVectorSpec extends SparkSpec {
       "NOT EXISTS must delete unmatched rows INCLUDING the null key")
   }
 
-  test("DV read plans stay scan-shaped: predicate pushed below the anti-join, no rewrite jobs") {
+  test("DV read plans stay scan-shaped: no join above the scan, predicate pushed to the parquet scan") {
     import spark.implicits._
     val (wh, ref) = freshTable("plan")
     wh.deleteWhere(ref, col("k") % 10 === 3)
     val q = wh.read(ref).filter(col("k") > 50)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"), s"DV read must anti-join:\n$plan")
-    // the data predicate reaches the parquet scan under the join
-    assert(plan.contains("PushedFilters: [IsNotNull(k), GreaterThan(k,50)]")
-      || plan.contains("GreaterThan(k,50)"),
-      s"filter must push below the DV anti-join:\n$plan")
     assert(q.select("k").as[Long].collect().toSet ===
       (51L to 100L).filterNot(_ % 10 == 3).toSet)
+    val executed = q.queryExecution.executedPlan
+    val joins = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(executed) { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+    assert(joins.isEmpty, s"a DV read must not join:\n$executed")
+    // the data predicate reaches the parquet scan beside the bitmap filter
+    val plan = executed.toString
+    assert(plan.contains("PushedFilters: [IsNotNull(k), GreaterThan(k,50)]"),
+      s"filter must push to the parquet scan:\n$plan")
   }
 
   test("pruned reads apply deletion vectors and the committed schema") {

@@ -1021,6 +1021,9 @@ class WarehouseSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       wh.versionAsOf(ref, System.currentTimeMillis()))
     assert(e.getMessage.contains("version 2") && e.getMessage.contains("graft.ts"))
+    // history reads the same stamp, so it refuses the same version
+    val h = intercept[IllegalStateException](wh.history(ref))
+    assert(h.getMessage.contains("version 2") && h.getMessage.contains("graft.ts"))
   }
 
   test("blooms survive an overwrite that narrows statsColumns; lapse loudly when the column leaves") {
