@@ -3231,7 +3231,7 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** The MERGE-ON-READ applier — the one deletion-vector write path
     * behind DV-mode DELETE, UPDATE and MERGE (Delta deletion vectors /
-    * Iceberg position deletes). `sup`, the superseded rows' per-file
+    * Iceberg position deletes). `byUri`, the superseded rows' per-file
     * bitmaps ([[DeletionVectors.build]] over `__gdv_file`/`__gdv_pos`,
     * so keyed by file URI), lands in ONE sidecar file
     * (OR-merged per file with any carried vector — a second delete
