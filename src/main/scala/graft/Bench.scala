@@ -323,9 +323,16 @@ object Bench {
     // cost without the stderr log)
     val warmFirsts = scala.collection.mutable.Map[String, Double]()
     val warmAttrSec = 2.0
+    // generated classes compiled so far in this JVM: a warm pass that
+    // still compiles is missing Spark's codegen cache
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def runOne(name: String, thunk: () => Long): ((String, Double), Option[(String, Double)]) = {
       val s0 = graft.util.PhaseTimer.snapshot
+      val k0 = compiles
       val cold = timed("bench")(name, thunk)
+      val k1 = compiles
+      val passCompiles = scala.collection.mutable.ArrayBuffer(s"cold=${k1 - k0}")
       val coldD = phaseDelta(s0)
       coldD.foreach { case (k, v) =>
         coldPhases.updateWith(k)(p => Some(p.getOrElse(0.0) + v))
@@ -337,6 +344,8 @@ object Bench {
         val s1 = graft.util.PhaseTimer.snapshot
         val w0 = timed("bench-warm")(name, thunk)
         val warmD0 = phaseDelta(s1)
+        val k2 = compiles
+        passCompiles += s"warm=${k2 - k1}"
         if (warmD0.nonEmpty)
           System.err.println(s"[bench-phases-warm $name] ${fmtMap(warmD0)}")
         // outlier confirmation pass (see warmNeedsRetry): the artifact
@@ -351,6 +360,7 @@ object Bench {
             val s2 = graft.util.PhaseTimer.snapshot
             val w2 = timed("bench-warm2")(name, thunk)
             val warmD2 = phaseDelta(s2)
+            passCompiles += s"warm2=${compiles - k2}"
             if (warmD2.nonEmpty)
               System.err.println(s"[bench-phases-warm2 $name] ${fmtMap(warmD2)}")
             System.err.println(
@@ -369,6 +379,7 @@ object Bench {
       } else None
       if (coldD.nonEmpty)
         System.err.println(s"[bench-phases-cold $name] ${fmtMap(coldD)}")
+      System.err.println(s"[bench-codegen $name] ${passCompiles.mkString(" ")}")
       graft.util.Scratch.drainTouched()
       (cold, warm)
     }

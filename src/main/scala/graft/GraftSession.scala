@@ -9,6 +9,20 @@ import org.apache.spark.sql.SparkSession
   * loader would silently change nanos handling for every later read.
   */
 object GraftSession {
+  /** Entries in Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One curation
+    * pass needs ~165-190 classes and one medallion cycle ~400; an LRU
+    * smaller than a repeating working set misses on every lookup, so
+    * the default recompiled most of each call (~160 Janino compiles
+    * per curate pass) and ran the fresh classes interpreted.
+    * 1024 is over 2× the largest measured set; each cached class holds
+    * ~30 KB of heap. Spark sizes the cache once, at the first codegen
+    * in the JVM, so this must be a builder conf: a session not built
+    * here that generates code first keeps 100 for the whole JVM.
+    * `CodegenRecompileSpec` is the witness.
+    */
+  val CodegenCacheEntries = 1024
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -32,6 +46,8 @@ object GraftSession {
       .config("spark.sql.parquet.fieldId.write.enabled", "true")
       .config("spark.sql.parquet.fieldId.read.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // generated classes stay cached across calls (see CodegenCacheEntries)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // fork-free local filesystem (graft.util.LocalFs): stock Hadoop
       // spawns chmod/readlink per file create and per streaming WAL
       // rename when libhadoop is absent

@@ -3142,11 +3142,14 @@ final class Warehouse(spark: SparkSession, val root: String,
     * row-group stats skip non-matching groups, so work stays
     * proportional to the files that COULD match, never the table.
     * Live deletion vectors filter inside the scan (no join above it),
-    * so `input_file_name()` attributes every row.
+    * so `input_file_name()` attributes every row. Its URI is
+    * percent-encoded (a partition value may need escaping), so each key
+    * is decoded once here, scheme kept: every consumer (`relKey`,
+    * footers, `currentRels`, the parquet re-reads) takes a plain path.
     */
   private def matchesPerFile(ref: TableRef, matched: Column): Seq[(String, Long)] =
     read(ref).filter(matched).groupBy(input_file_name()).agg(count(lit(1))).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+      .map(r => new Path(new java.net.URI(r.getString(0))).toString -> r.getLong(1)).toSeq
 
   /** Row-level DELETE (Delta `DELETE FROM ... WHERE` semantics, the
     * GDPR/compaction primitive the reference's update-insert-only MERGE

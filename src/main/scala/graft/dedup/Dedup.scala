@@ -360,9 +360,14 @@ object Dedup {
                 smallGraphEdges: Long = 100000L): DataFrame = {
     // materialize the edge list ONCE: the caller's pair plan (often a
     // full LSH candidate generation) must not re-execute inside every
-    // iteration's join and convergence check
-    val edgesRaw = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // iteration's join and convergence check. Both directions come from
+    // ONE scan of `pairs` (a union would plan the pair query twice — a
+    // lazy quadratic join like semDedup's cluster pairs would run twice)
+    val edgesRaw = pairs
+      .select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
+      .select("e.*")
       .localCheckpoint()
     // Small-graph fast path: below `smallGraphEdges` undirected edges
     // (a BOUNDED driver collect — ≤ ~3 MB of long pairs) the iterative

@@ -184,6 +184,35 @@ class WarehouseSpec extends SparkSpec {
       (1L to 100L).count(i => i % 2 == 1 && (i < 10 || i > 30)))
   }
 
+  test("copy-on-write delete and update on partition values that need URI escaping") {
+    import spark.implicits._
+    // `x y` lands in a `seg=x y` directory and `x%` in `seg=x%25`; the
+    // scan's file URIs percent-encode both, the table's keys do not
+    val wh = new Warehouse(spark, tmpDir("wh-escaped-part"))
+    val ref = TableRef("silver", "facts", "escaped_part")
+    val segs = Seq("x y", "x%", "plain")
+    val rows = (1L to 60L).map(i => (i, segs((i % 3).toInt), i * 10))
+    wh.overwrite(ref, rows.toDF("k", "seg", "v").repartition(2),
+      partitionBy = Seq("seg"), statsColumns = Seq("k"))
+    assert(!wh.dvEnabled(ref))
+    def escaped(r: (Long, String, Long)) = r._2 != "plain"
+    // straddling files in both escaped partitions: a rewrite
+    assert(wh.deleteWhere(ref, $"k" <= 20L && $"seg" =!= "plain") ===
+      rows.count(r => r._1 <= 20L && escaped(r)))
+    // every live row of `seg=x%25`: a retirement
+    assert(wh.deleteWhere(ref, $"seg" === "x%") ===
+      rows.count(r => r._1 > 20L && r._2 == "x%"))
+    assert(wh.updateWhere(ref, $"seg" === "x y" && $"k" > 40L, Seq("v" -> lit(-1L))) ===
+      rows.count(r => r._1 > 40L && r._2 == "x y"))
+    val expected = rows
+      .filterNot(r => (r._1 <= 20L && escaped(r)) || r._2 == "x%")
+      .map(r => if (r._2 == "x y" && r._1 > 40L) r.copy(_3 = -1L) else r)
+    assert(wh.read(ref).select("k", "seg", "v").as[(Long, String, Long)]
+      .collect().sortBy(_._1).toSeq === expected)
+    assert(wh.dataFiles(ref).forall(f => f.contains("seg=x y/") || f.contains("seg=plain/")),
+      s"rewrites land back in their partition dirs: ${wh.dataFiles(ref)}")
+  }
+
   test("cloneTable: deep copy at a pinned version, properties carried, source decoupled") {
     import spark.implicits._
     val wh = new Warehouse(spark, tmpDir("wh-clone"))

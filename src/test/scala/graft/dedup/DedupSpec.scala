@@ -308,6 +308,33 @@ class DedupSpec extends SparkSpec {
     assert(maxCanonical === 0L)
   }
 
+  test("dupGroups scans its pair plan once for both edge directions") {
+    import spark.implicits._
+    // a 4-partition pair source with no shuffle: the edge checkpoint is
+    // the call's first job, one stage of one task per scanned partition
+    // (a union of the two directions would scan all 4 partitions twice)
+    val pairs = spark.range(0, 40, 1, 4)
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val firstJobTasks = scala.collection.mutable.ArrayBuffer[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        firstJobTasks.synchronized {
+          if (firstJobTasks.isEmpty) firstJobTasks += e.stageInfos.map(_.numTasks).sum
+        }
+    }
+    org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val groups =
+      try {
+        val g = Dedup.dupGroups(pairs).as[(Long, Long)].collect().toMap
+        org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+        g
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(firstJobTasks.toSeq === Seq(4))
+    // one chain 0-1-…-40: every node resolves to 0
+    assert(groups.size === 41 && groups.values.toSet === Set(0L))
+  }
+
   test("dupGroups fails loudly when maxIters expires before convergence") {
     import spark.implicits._
     val chain = (1L to 40L).sliding(2).map(w => (w(0), w(1))).toSeq
