@@ -16,14 +16,14 @@ import org.apache.spark.sql.types._
 /** Driver-side per-file stats derived from the parquet FOOTERS a write
   * just produced — zero Spark jobs, the way Delta/Iceberg derive commit
   * metadata from write-time file metrics instead of re-scanning the
-  * data (guide §6). Produces rows in the exact shape
-  * `Warehouse.fileStats` emits (`file, rows, min_c, max_c, ndv_c,
-  * nulls_c`), except `ndv_c` is NULL: footers carry no distinct counts,
+  * data (guide §6). Produces rows in the [[Manifest.layout]] the scan
+  * emits (`file, rows, min_c, max_c, ndv_c, nulls_c`), except `ndv_c`
+  * is NULL: footers carry no distinct counts,
   * so callers route tables that DECLARE ndv-dependent planning (and all
   * bloom tables) through the scan job instead.
   *
   * EXACTNESS CONTRACT: the manifest's min/max/nulls/rows feed
-  * metadata-only query ANSWERS (`Warehouse.metadataAggregate`), not
+  * metadata-only query ANSWERS (`Manifest.metadataAggregate`), not
   * just pruning, so a footer-derived value must equal what the
   * column-pruned Spark aggregate would compute — bit for bit. Every
   * case where parquet statistics cannot guarantee that returns None
@@ -191,22 +191,14 @@ private[catalog] object FooterStats {
     // the manifest column can't be typed; fall back (the scan job
     // types it from the declared read schema)
     if (statsColumns.exists(c => !colTypes.contains(c))) return None
-    val fields = Seq(StructField("file", StringType, nullable = true),
-      StructField("rows", LongType, nullable = true)) ++
-      statsColumns.flatMap { c =>
-        val t = colTypes(c)._2
-        Seq(StructField(s"min_$c", t, nullable = true),
-          StructField(s"max_$c", t, nullable = true),
-          StructField(s"ndv_$c", LongType, nullable = true),
-          StructField(s"nulls_$c", LongType, nullable = true))
-      }
+    val schema = Manifest.layout(statsColumns.map(c => c -> colTypes(c)._2), Nil)
     val rows = perFile.map { case (rel, n, stats) =>
       Row.fromSeq(Seq(rel, n) ++ statsColumns.flatMap { c =>
         val (mn, mx, nulls) = stats(c)
         Seq(mn, mx, null, nulls)
       })
     }.toSeq
-    Some((StructType(fields), rows))
+    Some((schema, rows))
   }
 
   /** `Statistics.mergeStatistics` through the erased type — both sides

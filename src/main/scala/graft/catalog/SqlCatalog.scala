@@ -4,9 +4,8 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or, StartsWith}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, ProcedureCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -36,7 +35,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * vectorized parquet path with full predicate pushdown and column
   * pruning. File skipping engages from SQL exactly as from the Scala
   * API: [[GraftFileIndex.listFiles]] receives the pushed data filters
-  * and prunes the file list through the `_graft_stats` manifest
+  * and prunes the file list through the stats manifest
   * (min/max intervals; per-file blooms for equality on bloom-indexed
   * columns) BEFORE any task is scheduled — at 100 TB the difference
   * between "skip the file" and "open every footer".
@@ -967,14 +966,14 @@ private[catalog] object GraftSqlTable {
   }
 }
 
-/** File index over one snapshot's live files that applies
-  * `_graft_stats` manifest pruning to the PUSHED data filters: equality
-  * predicates go through [[Warehouse.excludedByValue]] (range stats +
-  * per-file blooms when the column is bloom-indexed), bounds through
-  * [[Warehouse.excludedByBounds]] (min/max intervals). Unsupported
-  * predicate shapes, non-stat columns, and null-stats files all degrade
-  * to keep-the-file — pruning is an optimization, never a filter (the
-  * retained filters still run on the scanned rows).
+/** File index over one snapshot's live files that prunes by the stats
+  * manifest on the PUSHED data filters, all of them translated into one
+  * exclusion predicate by [[Manifest.excluded]] (min/max intervals,
+  * per-file blooms on bloom-indexed columns, null counts, string
+  * prefixes). Unsupported predicate shapes, non-stat columns, and
+  * null-stats files all degrade to keep-the-file — pruning is an
+  * optimization, never a filter (the retained filters still run on the
+  * scanned rows).
   *
   * Scale note: resolution is METADATA-ONLY — every `file`/`add` log
   * line records the file's (bytes, mtime). The listing statuses are
@@ -1006,17 +1005,7 @@ private[catalog] final class GraftFileIndex(spark: SparkSession,
       GraftFileIndex.committedSchemaOf(snap),
       fileStatusCache = GraftFileIndex.logBackedCache(spark, wh, snap)) {
 
-  private val relBase =
-    GraftFileIndex.qualifiedBase(spark, wh, snap).toUri.getPath.stripSuffix("/")
-
-  /** A listed file's key in the manifest's space: table-relative path
-    * (basename fallback for paths outside the root — never excluded).
-    */
-  private def relOf(p: Path): String = {
-    val fsPath = p.toUri.getPath
-    if (fsPath.startsWith(relBase + "/")) fsPath.substring(relBase.length + 1)
-    else fsPath
-  }
+  private val root = GraftFileIndex.qualifiedBase(spark, wh, snap)
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -1025,7 +1014,7 @@ private[catalog] final class GraftFileIndex(spark: SparkSession,
     val excluded = excludedNames(dataFilters)
     if (excluded.isEmpty) base
     else base.map(pd => pd.copy(files =
-      pd.files.filterNot(f => excluded.contains(relOf(f.getPath)))))
+      pd.files.filterNot(f => excluded.contains(Manifest.keyOf(root, f.getPath)))))
   }
 
   /** GENERATED-PARTITION pruning (Delta's generated-column partition
@@ -1173,7 +1162,7 @@ private[catalog] final class GraftFileIndex(spark: SparkSession,
       case LessThan(l: Literal, a: AttributeReference) => bound(a, l, lower = true)
       case LessThanOrEqual(l: Literal, a: AttributeReference) => bound(a, l, lower = true)
       case In(a: AttributeReference, list)
-          if list.size <= inListCap && list.forall {
+          if list.size <= Manifest.InListCap && list.forall {
             case l: Literal => l.value != null; case _ => false } =>
         onSrc(a).toSeq.flatMap { case (p, g, _) =>
           val vs = list.map { case l: Literal => genAt(p, g, l) }
@@ -1185,91 +1174,18 @@ private[catalog] final class GraftFileIndex(spark: SparkSession,
     }
   }
 
-  /** Manifest keys (table-relative paths) PROVABLY excluded by some pushed predicate — pruning by
-    * EXCLUSION, never by keep-list: this index may wrap a pinned
-    * historical snapshot (`VERSION AS OF`), and a keep-list computed
-    * from the CURRENT version's file list would silently drop snapshot
-    * files retired since (delete/compaction/overwrite). The
-    * [[Warehouse.excludedByBounds]]/[[Warehouse.excludedByValue]] sets
-    * are snapshot-safe (immutable uniquely-named files — see their
-    * contract), and any snapshot file the current manifest no longer
-    * describes is simply absent from them, i.e. kept. A file excluded
-    * by ANY conjunct holds no matching row, so the per-predicate sets
-    * union. Empty = nothing prunable.
+  /** Manifest keys PROVABLY excluded by the pushed predicates, through
+    * the one translator ([[Manifest.excluded]]) in one manifest pass —
+    * pruning by EXCLUSION, never by keep-list: this index may wrap a
+    * pinned historical snapshot (`VERSION AS OF`), and a keep-list from
+    * the CURRENT version would drop snapshot files retired since.
+    * Exclusion sets are snapshot-safe, and a snapshot file the current
+    * manifest no longer describes is simply kept. Empty = nothing
+    * prunable.
     */
   private def excludedNames(dataFilters: Seq[Expression]): Set[String] =
-    dataFilters.flatMap(excludedFor)
-      .foldLeft(Set.empty[String])(_ union _)
-
-  /** Exclusion set for ONE predicate tree, None = nothing provable.
-    * Boolean structure composes set-algebraically: a conjunction
-    * excludes what EITHER side excludes (union; one provable side is
-    * enough), a disjunction only what BOTH sides exclude
-    * (intersection; both must be provable) — so `k = 5 OR k = 980`
-    * prunes exactly like `k IN (5, 980)`.
-    */
-  private def excludedFor(filter: Expression): Option[Set[String]] = {
-    def scala(l: Literal): Any =
-      CatalystTypeConverters.convertToScala(l.value, l.dataType)
-    filter match {
-      case And(left, right) =>
-        (excludedFor(left), excludedFor(right)) match {
-          case (Some(a), Some(b)) => Some(a union b)
-          case (a, b) => a.orElse(b)
-        }
-      case Or(left, right) =>
-        for { a <- excludedFor(left); b <- excludedFor(right) }
-          yield a intersect b
-      case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByValue(snap.ref, a.name, scala(l))
-      case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-        wh.excludedByValue(snap.ref, a.name, scala(l))
-      case GreaterThan(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, Some(scala(l)), None)
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, Some(scala(l)), None)
-      case LessThan(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, None, Some(scala(l)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, None, Some(scala(l)))
-      // literal-on-the-left bound forms arrive normalized by the
-      // optimizer in practice; handle every flip anyway
-      case GreaterThan(l: Literal, a: AttributeReference) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, None, Some(scala(l)))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, None, Some(scala(l)))
-      case LessThan(l: Literal, a: AttributeReference) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, Some(scala(l)), None)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
-        wh.excludedByBounds(snap.ref, a.name, Some(scala(l)), None)
-      // point-lookup lists: a file is excludable only when it excludes
-      // EVERY listed value. Bounded at inListCap values — a giant IN
-      // degrades to keep-everything, never to a long manifest pass.
-      case In(a: AttributeReference, list)
-          if list.size <= inListCap &&
-            list.forall { case l: Literal => l.value != null; case _ => false } =>
-        wh.excludedByValues(snap.ref, a.name,
-          list.collect { case l: Literal => scala(l) })
-      case InSet(a: AttributeReference, hset) if hset.size <= inListCap =>
-        val vs = hset.toSeq.filter(_ != null)
-          .map(v => CatalystTypeConverters.convertToScala(v, a.dataType))
-        if (vs.size == hset.size) wh.excludedByValues(snap.ref, a.name, vs)
-        else None // a null member can't match rows, but stay conservative
-      case IsNull(a: AttributeReference) =>
-        wh.excludedByNull(snap.ref, a.name, isNull = true)
-      case IsNotNull(a: AttributeReference) =>
-        wh.excludedByNull(snap.ref, a.name, isNull = false)
-      case StartsWith(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByPrefix(snap.ref, a.name, l.value.toString)
-      case EqualNullSafe(a: AttributeReference, l: Literal) if l.value != null =>
-        wh.excludedByValue(snap.ref, a.name, scala(l))
-      case EqualNullSafe(l: Literal, a: AttributeReference) if l.value != null =>
-        wh.excludedByValue(snap.ref, a.name, scala(l))
-      case _ => None
-    }
-  }
-
-  private val inListCap = 64
+    dataFilters.reduceOption(And).flatMap(wh.manifest.excluded(snap.ref, _))
+      .getOrElse(Set.empty)
 }
 
 private[catalog] object GraftFileIndex {

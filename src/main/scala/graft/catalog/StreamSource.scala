@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -248,8 +248,8 @@ private[catalog] final class GraftMetaAggScan(snap: TableSnapshot,
   * subquery on any advertised filter attribute; after the build side
   * executes (the reused broadcast), [[filter]] receives the actual
   * join-key values and excludes every file the stats manifest PROVES
-  * key-free (per-value min/max interval + bloom, the same
-  * [[Warehouse.excludedByValues]] sets static pruning uses — snapshot-
+  * key-free (per-value min/max interval + bloom, through the same
+  * translator static pruning uses, [[Manifest.excluded]] — snapshot-
   * safe exclusion, so time-traveling scans prune soundly too).
   * `toBatch` then re-plans with those files dropped — the dynamic file
   * pruning a 100 TB star join lives on: the dim's WHERE decides which
@@ -362,20 +362,15 @@ private[catalog] final class GraftScan(spark: SparkSession,
       .distinct.map(c => Expressions.column(c)).toArray
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    var names = Set.empty[String]
-    var segments = Set.empty[String]
-    predicates.foreach { p =>
-      inShape(p).foreach { case (column, values) =>
-        if (partitionFieldTypes.contains(column))
-          segments ++= excludedPartitionSegments(column, values)
-            .getOrElse(Set.empty)
-        else
-          names ++= wh.excludedByValues(snap.ref, column, values)
-            .getOrElse(Set.empty)
-      }
-    }
-    runtimeExcludedNames = names
-    runtimeExcludedSegments = segments
+    val (onPartitions, onStats) = predicates.toSeq.flatMap(inShape)
+      .partition { case (column, _) => partitionFieldTypes.contains(column) }
+    runtimeExcludedSegments = onPartitions.flatMap { case (column, values) =>
+      excludedPartitionSegments(column, values).getOrElse(Set.empty)
+    }.toSet
+    // all the stats-column lists in one manifest pass
+    runtimeExcludedNames = onStats.map { case (column, values) =>
+      Manifest.in(column, values) }.reduceOption(And)
+      .flatMap(wh.manifest.excluded(snap.ref, _)).getOrElse(Set.empty)
   }
 
   /** Decompose one runtime predicate; the only shape Spark's
@@ -449,8 +444,7 @@ private[catalog] final class GraftScan(spark: SparkSession,
     if (runtimeExcludedNames.isEmpty && runtimeExcludedSegments.isEmpty) base
     else new RuntimeFilteredBatch(base, runtimeExcludedNames,
       runtimeExcludedSegments, snap.ref.toString,
-      new org.apache.hadoop.fs.Path(wh.path(snap.ref)).toUri.getPath
-        .stripSuffix("/"))
+      GraftFileIndex.qualifiedBase(spark, wh, snap))
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -477,7 +471,7 @@ private[catalog] final class RuntimeFilteredBatch(underlying: Batch,
                                                   excludedNames: Set[String],
                                                   excludedSegments: Set[String],
                                                   table: String,
-                                                  tableBase: String)
+                                                  root: org.apache.hadoop.fs.Path)
     extends Batch {
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -490,14 +484,9 @@ private[catalog] final class RuntimeFilteredBatch(underlying: Batch,
       var kept = 0
       def keep(f: org.apache.spark.sql.execution.datasources.PartitionedFile): Boolean = {
         val p = f.filePath.toPath
-        val fsPath = p.toUri.getPath
-        val rel =
-          if (fsPath.startsWith(tableBase + "/"))
-            fsPath.substring(tableBase.length + 1)
-          else fsPath
-        !excludedNames.contains(rel) &&
+        !excludedNames.contains(Manifest.keyOf(root, p)) &&
           (excludedSegments.isEmpty ||
-            !fsPath.split('/').exists(excludedSegments.contains))
+            !p.toUri.getPath.split('/').exists(excludedSegments.contains))
       }
       val filtered = planned.flatMap { case fp: FilePartition =>
         total += fp.files.length

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{approx_count_distinct, array, col, count, countDistinct, element_at, expr, input_file_name, lit, max, min, monotonically_increasing_id, spark_partition_id, split, substring, sum, typedLit, when, xxhash64}
+import org.apache.spark.sql.functions.{array, col, count, element_at, expr, input_file_name, lit, max, monotonically_increasing_id, spark_partition_id, split, sum, when}
 
 /** Three-level table reference, mirroring the reference's
   * `catalog.schema.table` namespace (/root/reference/lib/ingestors.py:95,
@@ -113,6 +113,9 @@ final class Warehouse(spark: SparkSession, val root: String,
     * and the writer lock ([[TxnLog]]).
     */
   private[catalog] val txnLog = new TxnLog(hadoopConf, path, writerLeaseMs)
+
+  /** The tables' per-file stats manifests. */
+  private[catalog] val manifest = new Manifest(spark, this)
 
   def currentVersion(ref: TableRef): Option[Long] = txnLog.versions(ref).lastOption
 
@@ -571,7 +574,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * (retired files excluded even though still on disk), the physical
     * listing for logless directories. Qualified paths either way.
     */
-  private def currentDataFiles(ref: TableRef): Seq[Path] = {
+  private[catalog] def currentDataFiles(ref: TableRef): Seq[Path] = {
     val tablePath = new Path(path(ref))
     val filesystem = fs(tablePath)
     snapshot(ref) match {
@@ -1041,7 +1044,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     // lazy one-time stats load, so cardinality-aware optimizer rules
     // work in fresh sessions over a persisted warehouse
     if (TableStatsRegistry.shouldAttempt(p) && TableStatsRegistry.get(p).isEmpty)
-      registerStatsAt(p)
+      manifest.register(p)
     snapshot(ref) match {
       case Some(s) => readSnapshot(s)
       case None => spark.read.parquet(p)
@@ -1055,12 +1058,11 @@ final class Warehouse(spark: SparkSession, val root: String,
   // writer lock: [[stageFrame]] (or [[stagedFiles]], for files the
   // streaming sink's executors wrote) turns its rows into validated
   // files beside the table, and [[land]] journals, moves and commits
-  // them, with [[planManifest]] deciding the stats manifest before
+  // them, with [[Manifest.plan]] deciding the stats manifest before
   // anything moves.
   // ---------------------------------------------------------------------
 
-  import Warehouse.{AppendPart, DropManifest, KeepManifest, ManifestStep,
-    Staged, StagedManifest, SwapManifest}
+  import Warehouse.Staged
 
   /** The staged rows, read with the write's schema — or, `withSchema`
     * false, with the footer-inferred one: the stats scan's read, whose
@@ -1195,92 +1197,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     }
   }
 
-  /** THE manifest step for a commit keeping `keep` of `parent`'s files
-    * and adding `staged`'s. A full replace (`fresh` = its stats, bloom
-    * and NDV columns) writes a fresh manifest, or drops it when it
-    * declares no stats column (it would describe retired files only).
-    * Bloom presence is a durable table
-    * property: a full replace carries every prior bloom column still in
-    * the schema into both its stats and bloom sets, so equality
-    * skipping never lapses silently — only a column leaving the schema
-    * ends its bloom, and that is warned.
-    *
-    * Every other commit keeps the live manifest's stats and bloom
-    * columns: retired files leave it and new files join it — as ONE
-    * appended part when nothing retires ([[canAppendManifestPart]] and
-    * [[manifestTypesMatch]] permitting: O(new files), the point of an
-    * append commit), otherwise rewritten as a union. A manifestless
-    * table still without files starts one from its CREATE TABLE
-    * declared stats columns ([[Warehouse.StatsColumnsMeta]]).
-    *
-    * New-file stats are derived once, from the staged files
-    * ([[footerOrScan]]); a part appended after the commit is
-    * materialized now, since the staged paths are gone by then. A
-    * rewrite stages in `staged.dir` until [[land]] publishes it.
-    */
-  private def planManifest(ref: TableRef, parent: Option[TableSnapshot],
-                           keep: Seq[String], staged: Staged,
-                           fresh: Option[(Seq[String], Seq[String], Seq[String])])
-      : ManifestStep = {
-    lazy val old = manifestDf(path(ref))
-    lazy val oldBlooms = old.toSeq.flatMap(_.columns
-      .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
-    val dataCols = staged.schema.fieldNames.toSeq
-    val retired = parent.toSeq.flatMap(_.files).filterNot(keep.toSet)
-    def newStats(cols: Seq[String], blooms: Seq[String],
-                 ndv: Seq[String]): DataFrame =
-      graft.util.PhaseTimer.time("wh.stats") {
-        footerOrScan(ref, staged.rels, staged.files.map(_.getPath), cols,
-            blooms, ndv) {
-          val data = stagedRows(staged, withSchema = false)
-          val missing = cols.filterNot(data.columns.contains)
-          require(missing.isEmpty,
-            s"stats column(s) not in table: ${missing.mkString(",")} " +
-              "(partition columns carry no file stats — prune on the partition instead)")
-          fileStats(data, staged.dir.toString, cols, blooms)
-        }
-      }
-    // the post-commit file count bounds the manifest's rows
-    def swap(next: DataFrame): ManifestStep = SwapManifest(stageManifest(ref,
-      next, (keep.size + staged.rels.size).toLong, new Path(staged.dir, statsDir)))
-    fresh match {
-      case Some((stats, _, _)) if stats.isEmpty => DropManifest
-      case Some((stats, blooms, ndv)) =>
-        val (carry, lapsed) = oldBlooms.partition(dataCols.contains)
-        if (lapsed.nonEmpty)
-          Warehouse.log.warn(s"$ref: bloom column(s) " +
-            s"${lapsed.mkString(",")} left the schema; their equality " +
-            "skipping lapses with this overwrite")
-        swap(newStats((stats ++ carry).distinct, (blooms ++ carry).distinct, ndv))
-      case None =>
-        val declared =
-          if (old.nonEmpty || parent.exists(_.files.nonEmpty)) Nil
-          else metaColumns(ref, Warehouse.StatsColumnsMeta)
-        val statCols = (old.toSeq.flatMap(_.columns).collect {
-          case c if c.startsWith("min_") => c.stripPrefix("min_")
-        } ++ declared).distinct.filter(dataCols.contains)
-        old match {
-          case Some(_) if retired.isEmpty && staged.rels.isEmpty => KeepManifest
-          case Some(m) if retired.isEmpty &&
-              canAppendManifestPart(new Path(path(ref)), m.columns.toSeq,
-                statsColumnsOf(statCols, oldBlooms)) &&
-              manifestTypesMatch(m, staged.schema, statCols) =>
-            val part = newStats(statCols, oldBlooms, Nil)
-            AppendPart(spark.createDataFrame(
-              java.util.Arrays.asList(metaFrame(part).collect(): _*), part.schema))
-          case Some(m) =>
-            val kept =
-              if (retired.isEmpty) m else m.filter(!col("file").isin(retired: _*))
-            swap(if (staged.rels.isEmpty || statCols.isEmpty) kept
-              else unionManifest(kept, newStats(statCols, oldBlooms, Nil)))
-          case None if statCols.nonEmpty && staged.rels.nonEmpty =>
-            swap(newStats(statCols, metaColumns(ref, Warehouse.BloomColumnsMeta)
-              .filter(statCols.contains), Nil))
-          case None => KeepManifest
-        }
-    }
-  }
-
   /** THE lander (writer lock held): commit `parent`'s `keep` files plus
     * the staged ones, with `meta`, and with `dv` as the version's
     * complete deletion-vector map when given (see [[commitLocked]]).
@@ -1291,16 +1207,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     * switch: readers resolve the old complete version or the new one,
     * and a reader mid-scan on the old version keeps its files, which
     * are retired, not deleted. A full replace (`fresh`, see
-    * [[planManifest]]) commits the staged schema, every other commit
+    * [[Manifest.plan]]) commits the staged schema, every other commit
     * the parent's.
     *
-    * The [[planManifest]] step follows the commit; a crash in between
-    * leaves a stale manifest, which pruning tolerates by construction
-    * (entries for retired files never match the live list, unknown
-    * files are kept). Then the planner stats: invalidated while
-    * deletion vectors are live (manifest row counts do not subtract
-    * them), else re-registered — and invalidated when that fails, so
-    * the registry never keeps serving the pre-commit numbers.
+    * The manifest step follows the commit (a crash in between leaves a
+    * stale manifest, which pruning tolerates by construction), then the
+    * planner stats refresh ([[Manifest.refresh]]).
     *
     * `parent` None is a BOOTSTRAP (first-ever overwrite, nothing
     * committed and no data): no snapshot exists for a concurrent read
@@ -1317,7 +1229,8 @@ final class Warehouse(spark: SparkSession, val root: String,
                    dv: Option[Map[String, String]]): Long = {
     val table = new Path(path(ref))
     val filesystem = fs(table)
-    val step = planManifest(ref, parent, keep, staged, fresh)
+    val step = manifest.plan(ref, parent, keep, staged, fresh)(
+      stagedRows(staged, withSchema = false))
     val schemaJson = parent.filter(_ => fresh.isEmpty)
       .fold(staged.schema.json)(_.schemaJson)
     val v = parent match {
@@ -1345,16 +1258,9 @@ final class Warehouse(spark: SparkSession, val root: String,
         commitLocked(ref, schemaJson, keep ++ staged.rels, meta ++ cdcMeta,
           snap.fileMeta ++ staged.fileMeta, dv)
     }
-    step match {
-      case KeepManifest => ()
-      case DropManifest => filesystem.delete(new Path(table, statsDir), true)
-      case AppendPart(stats) => appendManifestPart(table, stats)
-      case SwapManifest((tmp, seeded)) => publishManifest(ref,
-        (if (parent.isEmpty) new Path(table, statsDir) else tmp, seeded))
-    }
+    manifest.applyStep(ref, step, bootstrap = parent.isEmpty)
     val liveDv = dv.getOrElse(parent.fold(Map.empty[String, String])(_.dvMap))
-    if (keep.exists(liveDv.contains) || !registerStatsAt(path(ref)))
-      TableStatsRegistry.invalidate(path(ref))
+    manifest.refresh(ref, dvLive = keep.exists(liveDv.contains))
     // only a commit that adds files journaled them
     if (staged.rels.nonEmpty) filesystem.delete(new Path(table, txnFile), false)
     v
@@ -1372,7 +1278,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * @param statsColumns per-file min/max (plus null count and rows)
     *        collected into the stats manifest; empty = no manifest
     * @param bloomColumns equality-skipping blooms, a subset of
-    *        `statsColumns`; durable once requested (see [[planManifest]])
+    *        `statsColumns`; durable once requested (see [[Manifest.plan]])
     * @param staticPartitions writes the frame into a fixed
     *        `key=value/...` subtree instead of routing rows through
     *        Spark's dynamic-partition writer — for loads where the
@@ -1404,7 +1310,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     *        generation VALIDATION still runs
     * @param ndvColumns per-file NDV declaration; rides the commit as
     *        carried meta, so every later stats commit keeps collecting
-    *        it (the scan job) for the table's life — see [[ndvStatsLive]]
+    *        it (the scan job) for the table's life
     */
   def overwrite(ref: TableRef, df0: DataFrame, partitionBy: Seq[String] = Nil,
                 statsColumns: Seq[String] = Nil,
@@ -1472,7 +1378,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * [[land]] a version listing the previous files PLUS the new ones.
     * Nothing is retired, so under delta encoding a small insert into a
     * huge table writes O(insert) log bytes, and the stats manifest
-    * grows by one part (see [[planManifest]]).
+    * grows by one part (see [[Manifest.plan]]).
     *
     * Partitioned layouts are honored: rows route through `partitionBy`
     * on the committed layout ([[layoutOf]]), so an insert into a
@@ -1494,18 +1400,6 @@ final class Warehouse(spark: SparkSession, val root: String,
         Warehouse.withOp(meta ++ hwMeta, "APPEND"), None, None)
     }
   }
-
-  /** Per-file exact row counts from the stats manifest (driver-local
-    * only; empty when the table keeps no manifest or it is too large
-    * to materialize) — the `.files` table's rows, and [[physicalRows]].
-    */
-  private[catalog] def fileRowCounts(ref: TableRef): Map[String, Long] =
-    manifestLocalDf(path(ref)) match {
-      case Some(m) if m.columns.contains("rows") =>
-        m.filter(col("rows").isNotNull).select("file", "rows").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      case _ => Map.empty
-    }
 
   /** Test-only interleave hook for [[copyInto]] — see the seam inside. */
   private[catalog] var copyIntoInterleave: () => Unit = () => ()
@@ -1804,18 +1698,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     * reinterpreting them under another scale silently multiplies
     * every historical value.
     *
-    * The stats manifest FOLLOWS in the same operation: `min_/max_`
-    * rows re-cast to the new type, and the column's BLOOM word arrays
-    * are NULLED for existing files — a bloom hashes the value's
-    * physical width (`xxhash64(int)` ≠ `xxhash64(long)` for the same
-    * value), so narrow-width words probed at the wide width would
-    * FALSELY SKIP files containing the value. NULL blooms degrade
-    * those files to range-only pruning, never to wrong answers; later
-    * rewrites rebuild blooms at the new width. A crash between the
-    * schema commit and the manifest swap stays safe: probes derive
-    * their hash width from the MANIFEST's own dtype (still narrow),
-    * and the next manifest union heals the drift (see
-    * [[unionManifest]]).
+    * The stats manifest FOLLOWS in the same operation
+    * ([[Manifest.castColumn]]): min/max re-cast, the column's blooms
+    * nulled, since narrow-width words probed at the wide width would
+    * FALSELY SKIP files. A crash between the schema commit and the
+    * manifest swap stays safe: probes hash at the MANIFEST's own type
+    * (still narrow), and the next manifest union heals the drift.
     *
     * Refused for partition columns (the directory string is typed by
     * the declared schema — reinterpreting the layout is not a
@@ -1859,22 +1747,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         else f))
       val v = commitLocked(ref, widened.json, snap.files,
         Map(Warehouse.OpMeta -> "WIDEN_COLUMN"), snap.fileMeta)
-      // manifest follows, swapped post-commit (tmp + rename): cast the
-      // column's min/max to the new type, NULL its blooms
-      manifestDf(path(ref)).foreach { old =>
-        if (old.columns.contains(s"min_${field.name}")) {
-          var next = old
-            .withColumn(s"min_${field.name}",
-              col(s"min_${field.name}").cast(newType))
-            .withColumn(s"max_${field.name}",
-              col(s"max_${field.name}").cast(newType))
-          if (old.columns.contains(s"bloom_${field.name}"))
-            next = next.withColumn(s"bloom_${field.name}",
-              lit(null).cast(org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.LongType)))
-          swapManifest(ref, next)
-        }
-      }
+      manifest.castColumn(ref, field.name, newType)
       v
     }
 
@@ -2163,31 +2036,6 @@ final class Warehouse(spark: SparkSession, val root: String,
           else Map(Warehouse.ColumnMappingMaxIdMeta -> next.toString))
   }
 
-  /** Swap a freshly-built manifest frame into place (tmp write +
-    * delete + rename + stats re-registration) — the crash-ordering-
-    * sensitive sequence the metadata-only schema changes share.
-    */
-  private def swapManifest(ref: TableRef, next: DataFrame): Unit = {
-    publishManifest(ref, stageManifest(ref, next,
-      snapshot(ref).map(_.files.size.toLong).getOrElse(Long.MaxValue),
-      new Path(path(ref), s"$statsDir.tmp-${System.nanoTime()}")))
-    if (!registerStatsAt(path(ref)))
-      TableStatsRegistry.invalidate(path(ref))
-  }
-
-  /** Rename the stats-manifest columns of `from` to `to` (cheap
-    * O(manifest) rewrite) — the mapped rename's manifest carry. */
-  private def renameManifestColumns(ref: TableRef, from: String,
-                                    to: String): Unit =
-    manifestDf(path(ref)).foreach { m =>
-      val renames = Seq("min_", "max_", "ndv_", "nulls_", "bloom_")
-        .map(p => (s"$p$from", s"$p$to"))
-        .filter { case (a, _) => m.columns.contains(a) }
-      if (renames.nonEmpty)
-        swapManifest(ref, renames.foldLeft(m) { case (d, (a, b)) =>
-          d.withColumnRenamed(a, b) })
-    }
-
   def renameColumn(ref: TableRef, from: String, to: String): Long = {
     require(to.nonEmpty && !to.exists(c => c == '\n' || c == '\t'),
       s"renameColumn on $ref: invalid target name '$to'")
@@ -2299,7 +2147,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         // manifest forever: statColumns would keep returning the old
         // name, every later write would filter it out, and stats for
         // the column would silently stop.
-        renameManifestColumns(ref, field.name, to)
+        manifest.renameColumn(ref, field.name, to)
         commitLocked(ref, renamed.json, cur.files,
           idMeta ++ defMeta ++ layoutMeta ++
             Map(Warehouse.OpMeta -> "RENAME_COLUMN"), cur.fileMeta,
@@ -2309,8 +2157,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     def follow(cols: Seq[String]): Seq[String] =
       cols.map(c => if (c.equalsIgnoreCase(field.name)) to else c)
     val statCols = follow(statColumns(ref))
-    val blooms = follow(manifestDf(path(ref)).toSeq.flatMap(_.columns
-      .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_"))))
+    val blooms = follow(bloomColumns(ref))
     val df = readSnapshot(snap).withColumnRenamed(field.name, to)
     overwrite(ref, df,
       partitionBy = partCols.filter(df.columns.contains),
@@ -2353,9 +2200,7 @@ final class Warehouse(spark: SparkSession, val root: String,
       ++ (if (snap.files.isEmpty) metaColumns(ref, Warehouse.PartitionByMeta)
           else Nil))
     val statCols = statColumns(ref).filter(df.columns.contains)
-    val blooms = manifestDf(path(ref)).toSeq.flatMap(_.columns
-      .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
-      .filter(statCols.contains)
+    val blooms = bloomColumns(ref).filter(statCols.contains)
     // carried meta comes from the PINNED version, not the current one
     // (Delta's VERSION AS OF clone copies that version's metadata): a
     // constraint added after asOf must not land on a clone whose pinned
@@ -3643,836 +3488,109 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   // ------------------------------------------------ file skipping
 
-  /** Manifest directory name — underscore-prefixed so Spark's file
-    * index treats it as hidden and plain `read` never sees it as data.
-    */
-  private val statsDir = "_graft_stats"
-
-  /** Per-file stats for freshly written files: derived DRIVER-SIDE from
-    * their parquet footers ([[FooterStats]] — zero Spark jobs) when the
-    * commit qualifies, else the column-pruned `scan` job as before.
-    * Footer derivation requires: no bloom columns (their word
-    * aggregates need the data), no live NDV declaration for the table
-    * ([[ndvStatsLive]] — footers carry no distinct counts), a
-    * commit-scale file count, and every stat column footer-provable
-    * (FooterStats falls back on float/double, INT96, missing
-    * statistics, …). `keys` are the manifest `file` keys for
-    * `absPaths`, in order — the exact strings the scan's
-    * input_file_name arithmetic would produce.
-    */
-  private def footerOrScan(ref: TableRef, keys: Seq[String],
-                           absPaths: Seq[Path], statsColumns: Seq[String],
-                           bloomColumns: Seq[String],
-                           ndvColumns: Seq[String])
-                          (scan: => DataFrame): DataFrame = {
-    val footer =
-      if (bloomColumns.nonEmpty || ndvColumns.nonEmpty || keys.isEmpty ||
-          keys.size > Warehouse.manifestLocalWriteRows || ndvStatsLive(ref))
-        None
-      else FooterStats.derive(spark.sessionState.newHadoopConf(),
-        keys.zip(absPaths), statsColumns)
-    footer match {
-      case Some((schema, rows)) =>
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      case None => scan
-    }
-  }
-
-  /** Whether stats commits on this table must keep collecting per-file
-    * NDV (forcing the scan job): declared via
-    * [[Warehouse.NdvColumnsMeta]] (the `ndvColumns` overwrite param —
-    * carried meta, so one declaration covers the table's life), or the
-    * live manifest already holds non-null ndv values (legacy tables
-    * keep the planning signal they were written with). NDV feeds ONLY
-    * planning (the row_number→top-k skip, CBO column stats), never
-    * query answers, so tables that don't declare it simply plan
-    * without a cardinality signal — measured across every declared
-    * gate at sf0.01 and sf0.1: none relies on it.
-    */
-  private def ndvStatsLive(ref: TableRef): Boolean =
-    metaColumns(ref, Warehouse.NdvColumnsMeta).nonEmpty || {
-      val tp = path(ref)
-      manifestDfImpl(tp, localOnly = true) match {
-        case Some(m) =>
-          val ndvIx = m.schema.fields.zipWithIndex
-            .collect { case (f, i) if f.name.startsWith("ndv_") => i }
-          // LocalRelation rows — zero jobs
-          ndvIx.nonEmpty &&
-            m.collect().exists(r => ndvIx.exists(i => !r.isNullAt(i)))
-        case None =>
-          // absent manifest → no legacy signal; OVERSIZED manifest
-          // (past the local cutoff) → conservative: keep the scan job
-          val manifestPath = new Path(s"$tp/$statsDir")
-          val filesystem = fs(manifestPath)
-          filesystem.exists(manifestPath) &&
-            filesystem.listStatus(manifestPath)
-              .exists(_.getPath.getName.endsWith(".parquet"))
-      }
-    }
-
-  /** Write a manifest frame as one part file under `dir`: collected
-    * and written FROM THE DRIVER when `expectRows` (the caller's known
-    * post-commit file count) stays within
-    * [[Warehouse.manifestLocalWriteRows]] — no Spark write job, and
-    * the returned rows let the caller seed the manifest cache — else
-    * through the distributed single-task write as before.
-    */
-  private def writeManifestTo(manifest: DataFrame, dir: Path, expectRows: Long)
-      : Option[(org.apache.spark.sql.types.StructType, Seq[Row], String)] =
-    if (expectRows > Warehouse.manifestLocalWriteRows) {
-      manifest.coalesce(1) // one manifest row per data file: always tiny
-        .write.mode("overwrite").parquet(dir.toString)
-      None
-    } else {
-      val rows = metaFrame(manifest).collect().toSeq
-      val part = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
-      ManifestIO.writeLocalParquet(spark, manifest.schema, rows,
-        new Path(dir, part))
-      Some((manifest.schema, rows, part))
-    }
-
-  /** Stage `next` in `tmp` as the table's next manifest (under the
-    * `wh.manifest` timer); [[publishManifest]] swaps it in. `expectRows`
-    * bounds the post-commit file count, as for [[writeManifestTo]].
-    */
-  private def stageManifest(ref: TableRef, next: DataFrame,
-                            expectRows: Long, tmp: Path): StagedManifest =
-    (tmp, graft.util.PhaseTimer.time("wh.manifest")(
-      writeManifestTo(next, tmp, expectRows)))
-
-  /** Swap a staged manifest in for the live one (delete + rename — the
-    * crash-ordering-sensitive step every manifest writer shares; pruning
-    * tolerates a crash in between, since stale entries never match the
-    * live file list) and seed the manifest cache with its rows. A
-    * manifest staged at the live path (a bootstrap's, renamed in with
-    * its directory) only seeds. Registering or invalidating the planner
-    * stats stays with the caller.
-    */
-  private def publishManifest(ref: TableRef, staged: StagedManifest): Unit = {
-    val (tmp, seeded) = staged
-    val live = new Path(path(ref), statsDir)
-    val filesystem = fs(live)
-    if (tmp != live) {
-      filesystem.delete(live, true)
-      if (!filesystem.rename(tmp, live))
-        throw new RuntimeException(s"failed to swap stats manifest for $ref")
-    }
-    seeded.foreach { case (sch, rows, part) =>
-      seedManifestCache(path(ref), sch, rows, Set(part)) }
-  }
-
-  /** Run a commit-scale INTERNAL metadata aggregate (a stats manifest
-    * holds one row per data file) without the adaptive-execution job
-    * multiplication: AQE materializes each query stage as its own job
-    * to re-optimize between them, which for a ≤10k-row aggregate is
-    * pure fixed overhead (2-3 scheduled jobs where one suffices), and
-    * its re-optimization has nothing to improve on a plan this size.
-    * The shuffle width follows the known output bound instead of the
-    * session width — one reduce task per ~1000 manifest rows, a
-    * DATA-derived width (not a core-count-derived one), valid at any
-    * scale because callers only enter here under the
-    * [[Warehouse.manifestLocalWriteRows]] gate.
-    *
-    * The overrides live on a DEDICATED META SESSION (one per
-    * underlying session, JVM-wide), never on the shared session: the
-    * round-21 implementation get/set/restored the session conf around
-    * the collect, so a concurrent reader planning an unrelated query
-    * mid-commit silently inherited AQE-off/width-8 (a thread-local
-    * SQLConf override does not work either — AQE's
-    * InsertAdaptiveSparkPlan reads the SESSION conf directly). The
-    * frame's analyzed plan is re-bound to the meta session for
-    * execution; plans are session-independent. MetaSessionSpec asserts
-    * isolation, plan shape, and value identity.
-    */
-  private[catalog] def metaFrame(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftMetaExec.onSession(
-      Warehouse.metaSessionFor(spark), df)
-
-  /** Per-file bloom sizing: 4096 bits (64 longs ≈ 0.5 KB per file per
-    * column), k = 2 probe positions per value from one xxhash64. The
-    * false-positive rate is (1 − e^(−2n/4096))² for n distinct values
-    * per file: ~0.2% at n = 100, ~5% at n = 500, ~22% at n = 1000, and
-    * effectively saturated (fpp > 50%) by n ≈ 2500 — saturation
-    * degrades to "never excluded", conservative like null min/max
-    * stats, it just stops helping. Equality skipping on a column is
-    * therefore worth having when per-file NDV stays in the low
-    * hundreds (small files, or a low-cardinality-per-file clustered
-    * layout); beyond that, rely on range stats + clustering instead.
-    */
-  private val bloomWords = 64
-  private val bloomBits = bloomWords * 64
-
-  /** Per-file stats rows (file key = path RELATIVE to `baseDir`, the
-    * staging directory whose layout the move preserves; row count,
-    * min_c/max_c/ndv_c columns, plus bloom_c word arrays for
-    * `bloomColumns`) for the given frame — a column-pruned scan of only
-    * the stat columns. Keyed by the RELATIVE PATH, never the basename:
-    * `partitionBy` layouts reuse one task's part-file basename across
-    * partition directories, so a basename key would silently merge
-    * distinct files into one row — killing per-file pruning and the
-    * metadata-aggregate provability exactly on partitioned tables. The approximate
-    * per-file distinct count feeds the [[TableStatsRegistry]]
-    * cardinality signal; the bloom word array feeds equality skipping
-    * ([[readPrunedEq]]). A file whose URI unexpectedly escapes the
-    * base prefix keys by basename — the conservative pre-r15 shape
-    * consumers simply fail to match (keep-the-file).
-    *
-    * Blooms are OPT-IN per column (`Warehouse.overwrite(bloomColumns)`,
-    * then durable for the table's life): the 64 bit_or word aggregates
-    * plus two hash projections run over every row of every commit, and
-    * only point-lookup-heavy tables earn that write tax — range stats
-    * and clustering serve everything else. An absent bloom_c column
-    * degrades [[splitFilesByValue]] to range-only, never to wrong
-    * answers.
-    */
-  private def fileStats(data: DataFrame, baseDir: String,
-                        statsColumns: Seq[String],
-                        bloomColumns: Seq[String]): DataFrame = {
-    // per column: one word-array bloom built as `bloomWords` bit_or
-    // aggregates (elementwise-OR of arrays has no native aggregate);
-    // NULL values contribute no bits — equality lookup is non-null by
-    // definition (IS NULL prunes on the null-count stats instead).
-    // The two probe positions are PROJECTED once per row per column
-    // before the aggregate — inlining them into each of the 64 word
-    // aggregates would re-evaluate the hash O(words) times per row.
-    // SQL-expr formulation: shiftleft with a COLUMN bit count exists
-    // only in the SQL surface (the Scala DSL overload takes a literal).
-    // Probes = pmod(xxhash64, bits) and pmod(xxhash64 >> 21, bits) —
-    // splitFilesByValue mirrors this arithmetic on the driver.
-    val blooms = bloomColumns.filter(statsColumns.contains)
-    // base-relative key: strip the scheme from input_file_name's URI
-    // form the same way the driver-side base is normalized, so
-    // "file:///x/seg=a/p.parquet" under base "/x" keys as
-    // "seg=a/p.parquet" — identical to the commit log's rel paths
-    val basePath = new Path(baseDir)
-    val base = fs(basePath).makeQualified(basePath).toUri.getPath
-      .stripSuffix("/")
-    val noScheme = org.apache.spark.sql.functions.regexp_replace(
-      input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-    val rel = when(noScheme.startsWith(base + "/"),
-        noScheme.substr(lit(base.length + 2), lit(Int.MaxValue)))
-      .otherwise(element_at(split(noScheme, "/"), -1))
-    val probed = blooms.foldLeft(
-        data.withColumn("__file", rel)) { (df, c) =>
-      val h = s"xxhash64(`$c`)"
-      df.withColumn(s"__bp1_$c", expr(s"pmod($h, ${bloomBits}L)"))
-        .withColumn(s"__bp2_$c", expr(s"pmod(shiftright($h, 21), ${bloomBits}L)"))
-    }
-    def bloomWordAggs(c: String): Seq[Column] =
-      (0 until bloomWords).map { i =>
-        val contribs = Seq(s"__bp1_$c", s"__bp2_$c").map(p =>
-          s"(CASE WHEN `$c` IS NOT NULL AND CAST(`$p` DIV 64 AS INT) = $i " +
-            s"THEN shiftleft(1L, CAST(`$p` % 64 AS INT)) ELSE 0L END)")
-        expr(s"bit_or(${contribs.mkString(" | ")})").as(s"__bw_${c}_$i")
-      }
-    val aggs = statsColumns.flatMap(c => Seq(
-      min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
-      approx_count_distinct(col(c)).as(s"ndv_$c"),
-      // per-file null count: IS [NOT] NULL file skipping
-      // (excludedByNull) and a exactness witness next to min/max
-      (count(lit(1)) - count(col(c))).as(s"nulls_$c")) ++
-        (if (blooms.contains(c)) bloomWordAggs(c) else Nil)) :+
-      count(lit(1)).as("rows")
-    val agged = probed
-      .groupBy(col("__file").as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    val keep = Seq(col("file"), col("rows")) ++ statsColumns.flatMap(c => Seq(
-      col(s"min_$c"), col(s"max_$c"), col(s"ndv_$c"), col(s"nulls_$c")) ++
-      (if (blooms.contains(c))
-         Seq(array((0 until bloomWords).map(i => col(s"__bw_${c}_$i")): _*)
-           .as(s"bloom_$c"))
-       else Nil))
-    agged.select(keep: _*)
-  }
-
-  /** Aggregate the manifest's per-file stats into the JVM-wide
-    * [[TableStatsRegistry]]. No-op for manifests predating the
-    * rows/ndv columns (or with partially-null rows from a mixed-era
-    * incremental merge) — the registry only ever holds sums it can
-    * fully account for.
-    *
-    * Returns whether stats were actually registered — false when the
-    * manifest is absent, predates the rows column, or (e.g. after a
-    * retirement that emptied the table) holds zero accountable files.
-    * Callers on a write path must invalidate on false or the registry
-    * keeps serving the PRE-write numbers; the lazy read-path loader
-    * instead leaves the old no-op semantics alone (invalidating there
-    * would clear the attempted marker and re-read the manifest on
-    * every read of a stats-less table).
-    */
-  private def registerStatsAt(tablePath: String): Boolean =
-    graft.util.PhaseTimer.time("wh.registry") {
-    manifestDf(tablePath).exists { m =>
-      if (!m.columns.contains("rows")) false
-      else {
-        val ndvCols = m.columns.filter(_.startsWith("ndv_")).toSeq
-        // DRIVER-SIDE sums for cached-local manifests: small manifests
-        // are served as collected LocalRelations (manifestDf), and an
-        // `agg(...).head()` over one still schedules a Spark job — a
-        // fixed ~0.2-0.4 s tax EVERY stats-bearing commit paid. The
-        // fold below is the same arithmetic over the same rows with
-        // zero jobs; parquet-backed (oversized) manifests keep the
-        // distributed aggregate.
-        m.queryExecution.analyzed match {
-          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            val sch = m.schema
-            val rowsIx = sch.fieldIndex("rows")
-            val rows = m.collect() // LocalTableScan: no job
-            val nfiles = rows.length.toLong
-            val nrows = rows.count(!_.isNullAt(rowsIx)).toLong
-            if (nfiles > 0 && nfiles == nrows) {
-              val rowsSum = rows.iterator
-                .map(_.getAs[Number](rowsIx).longValue).sum
-              val ndv = ndvCols.flatMap { c =>
-                val ix = sch.fieldIndex(c)
-                val vs = rows.iterator.filterNot(_.isNullAt(ix))
-                  .map(_.getAs[Number](ix).longValue).toSeq
-                // EVERY file must carry the column's ndv or it sits
-                // out: a mixed footer/scan-era manifest would otherwise
-                // register a partial sum as the table's cardinality
-                if (vs.size != rows.length) None
-                else Some(c.stripPrefix("ndv_") -> vs.sum)
-              }.toMap
-              TableStatsRegistry.put(tablePath,
-                TableStatsRegistry.TableStats(rowsSum, ndv))
-              true
-            } else false
-          case _ =>
-            val aggs = Seq(count(lit(1)).as("nfiles"), count(col("rows")).as("nrows"),
-              sum(col("rows")).as("rows")) ++ ndvCols.flatMap(c =>
-              Seq(sum(col(c)).as(c), count(col(c)).as(s"__n_$c")))
-            val r = m.agg(aggs.head, aggs.tail: _*).head()
-            if (r.getLong(0) > 0 && r.getLong(0) == r.getLong(1)) {
-              val ndv = ndvCols.zipWithIndex.flatMap { case (c, i) =>
-                // same full-accounting rule as the local arm: a
-                // partially-null ndv column (mixed footer/scan eras)
-                // must not register a partial sum
-                if (r.isNullAt(3 + i * 2) ||
-                    r.getLong(3 + i * 2 + 1) != r.getLong(0)) None
-                else Some(c.stripPrefix("ndv_") -> r.getLong(3 + i * 2))
-              }.toMap
-              TableStatsRegistry.put(tablePath,
-                TableStatsRegistry.TableStats(r.getLong(2), ndv))
-              true
-            } else false
-        }
-      }
-    }
-    }
-
-  /** The manifest as a DataFrame, when present and non-empty.
-    *
-    * Served through a JVM-wide DRIVER-LOCAL cache: small manifests
-    * (≤ [[Warehouse.manifestLocalBytes]]) collect once into a
-    * LocalRelation frame, so every later `filter(...).collect()` a
-    * pruning call makes plans driver-side — ZERO Spark jobs per
-    * predicate, which is what keeps a point-lookup-heavy SQL workload
-    * (each query pushes several prunable conjuncts) from paying a
-    * manifest-scan job per conjunct. Freshness is SELF-VALIDATING, no
-    * invalidation plumbing: the cache key fingerprints the manifest's
-    * part files (name+len+mtime from the one listStatus this method
-    * already needs to address them), and every manifest swap writes
-    * fresh UUID-named parts. Oversized manifests skip the local
-    * materialization and read parquet-backed as before.
-    */
-  private def manifestDf(tablePath: String): Option[DataFrame] =
-    manifestDfImpl(tablePath, localOnly = false)
-
-  /** [[manifestDf]] restricted to DRIVER-LOCAL manifests: None past the
-    * materialization cutoff. Planning-time consumers (metadata
-    * aggregates, exact planner statistics — called per QUERY, not per
-    * scan task) use this so a 100k+-file manifest never costs a Spark
-    * job with a giant IN at plan time; they fall back to scanning,
-    * which is what such a query costs anyway.
-    */
-  private def manifestLocalDf(tablePath: String): Option[DataFrame] =
-    manifestDfImpl(tablePath, localOnly = true)
-
-  private def manifestDfImpl(tablePath: String, localOnly: Boolean): Option[DataFrame] = {
-    val manifestPath = new Path(s"$tablePath/$statsDir")
-    val filesystem = fs(manifestPath)
-    if (!filesystem.exists(manifestPath)) return None
-    // address the manifest's part files directly: the _-prefixed dir
-    // itself is deliberately hidden from Spark's file index
-    val statuses = filesystem.listStatus(manifestPath)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    if (statuses.isEmpty) return None
-    val files = statuses.map(_.getPath.toString).toIndexedSeq
-    if (statuses.map(_.getLen).sum > Warehouse.manifestLocalBytes)
-      return if (localOnly) None else Some(spark.read.parquet(files: _*))
-    val fingerprint = statuses.map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val key = s"${System.identityHashCode(spark)}:$tablePath"
-    Warehouse.manifestCache.get(key) match {
-      // the session-identity check guards identityHashCode reuse: a
-      // dead session's hash can recur on a new one, and serving the
-      // dead session's frame would throw downstream
-      case Some((fp, df)) if fp == fingerprint &&
-          (df.sparkSession eq spark) => Some(df)
-      case _ =>
-        val loaded = spark.read.parquet(files: _*)
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(loaded.collect(): _*), loaded.schema)
-        // bound total driver residency: a full flush on overflow is
-        // crude but safe — entries rebuild on demand, and the cap is
-        // far above any one workload's live table count
-        if (Warehouse.manifestCache.size >= Warehouse.manifestCacheMax)
-          Warehouse.manifestCache.clear()
-        Warehouse.manifestCache.put(key, (fingerprint, local))
-        Some(local)
-    }
-  }
-
-  /** Seed [[Warehouse.manifestCache]] with manifest rows the writer
-    * already holds, so the post-commit [[registerStatsAt]] (and every
-    * later pruning read) resolves driver-locally instead of paying a
-    * read-back Spark job per commit. The fingerprint comes from one
-    * listStatus of the LIVE manifest dir — the same one a cache-miss
-    * read would have done — so freshness stays self-validating: if a
-    * concurrent writer swaps the manifest after this listing, its
-    * fingerprint no longer matches and the cache rebuilds from disk.
-    * No-op (a later read rebuilds normally) when the manifest is
-    * oversized or the listing is empty.
-    */
-  private def seedManifestCache(tablePath: String,
-                                schema: org.apache.spark.sql.types.StructType,
-                                rows: Seq[Row],
-                                expectParts: Set[String]): Unit = {
-    val manifestPath = new Path(s"$tablePath/$statsDir")
-    val filesystem = fs(manifestPath)
-    if (!filesystem.exists(manifestPath)) return
-    val statuses = filesystem.listStatus(manifestPath)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    if (statuses.isEmpty) return
-    // the listing must be EXACTLY the part set this writer just
-    // published: a cross-process writer swapping the manifest between
-    // our rename and this listing would otherwise pair OUR rows with
-    // ITS files' fingerprint — a stale cache entry that self-validates.
-    // On mismatch, skip: the next read rebuilds from disk, which is
-    // always correct.
-    if (statuses.map(_.getPath.getName).toSet != expectParts) return
-    if (statuses.map(_.getLen).sum > Warehouse.manifestLocalBytes) return
-    val fingerprint = statuses.map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val key = s"${System.identityHashCode(spark)}:$tablePath"
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), ManifestIO.relaxedNullability(schema))
-    if (Warehouse.manifestCache.size >= Warehouse.manifestCacheMax)
-      Warehouse.manifestCache.clear()
-    Warehouse.manifestCache.put(key, (fingerprint, local))
-  }
-
   /** Columns with min/max stats in the table's manifest (empty = none). */
-  def statColumns(ref: TableRef): Seq[String] =
-    manifestDf(path(ref)).toSeq.flatMap(_.columns)
-      .collect { case c if c.startsWith("min_") => c.stripPrefix("min_") }
+  def statColumns(ref: TableRef): Seq[String] = manifest.statColumns(ref)
 
   /** Columns with bloom word-arrays in the table's manifest (empty =
     * none) — full-rewrite callers must pass these back into
-    * [[overwrite]] or the rewrite silently drops point-lookup pruning
-    * until some later write restores it.
+    * [[overwrite]] or the rewrite silently drops point-lookup pruning.
     */
-  def bloomColumns(ref: TableRef): Seq[String] =
-    manifestDf(path(ref)).toSeq.flatMap(_.columns)
-      .collect { case c if c.startsWith("bloom_") => c.stripPrefix("bloom_") }
+  def bloomColumns(ref: TableRef): Seq[String] = manifest.bloomColumns(ref)
 
-  /** Split the table's data files into (mayOverlap, provablyDisjoint)
-    * for `[lo, hi]` on `column`, using the stats manifest. Conservative:
-    * files with null stats or absent from the manifest land in
-    * mayOverlap, so the disjoint list is *provable* — a row with
-    * `column` in `[lo, hi]` can only live in a mayOverlap file. None
-    * when the table has no manifest for `column` (caller decides the
-    * fallback).
+  /** Split the table's current files into (mayOverlap, provablyDisjoint)
+    * for `[lo, hi]` on `column`: a row in the range can only live in a
+    * mayOverlap file. None without a manifest for `column`.
     */
   def splitFilesByRange(ref: TableRef, column: String, lo: Any,
                         hi: Any): Option[(Seq[String], Seq[String])] =
-    excludedByBounds(ref, column, Some(lo), Some(hi))
-      .map(partitionCurrent(ref, _))
+    manifest.split(ref, Manifest.bounds(column, Some(lo), Some(hi)))
 
-  /** (mayOverlap, provablyDisjoint) over the CURRENT version's files
-    * for an excluded-key set — the splitFiles* tail. Snapshot
-    * readers must NOT use this shape: a pinned version's files retired
-    * from the current list land in neither side (use the excludedBy*
-    * sets directly and keep everything not in them).
-    */
-  private def partitionCurrent(ref: TableRef,
-                               excluded: Set[String]): (Seq[String], Seq[String]) = {
-    val (disjoint, overlap) = currentDataFiles(ref)
-      .partition(p => excluded.contains(relKey(ref)(p.toString)))
-    (overlap.map(_.toString), disjoint.map(_.toString))
-  }
-
-  /** A (possibly URI-form) data-file path in the manifest's key space:
-    * the table-relative path, or the basename when the path escapes
-    * the table root (the conservative shape consumers fail to match).
-    */
-  private def relKey(ref: TableRef)(p: String): String = {
-    val tablePath = new Path(path(ref))
-    val base = fs(tablePath).makeQualified(tablePath).toUri.getPath
-      .stripSuffix("/")
-    val fsPath = new Path(p).toUri.getPath
-    if (fsPath.startsWith(base + "/")) fsPath.substring(base.length + 1)
-    else fsPath.split('/').last
-  }
-
-  /** Manifest file keys (table-relative paths) the stats manifest
-    * PROVABLY excludes for values in
-    * `[lo, hi]` on `column` (None on a side = unbounded). None when the
-    * table has no manifest entry for the column.
-    *
-    * Exclusion sets are SNAPSHOT-SAFE where keep-lists are not: data
-    * files are immutable and uniquely named (Spark part-file UUIDs), so
-    * a manifest row describes its file forever — a key in this set
-    * cannot hold a matching row in ANY version. A time-travel reader
-    * ([[graft.catalog.GraftCatalog]] under `VERSION AS OF`) therefore
-    * prunes by dropping members of this set and KEEPING everything
-    * else, including snapshot files the current manifest no longer
-    * lists (they are simply absent here). Files with null stats stay
-    * out of the set — pruning only ever shrinks, never filters.
-    */
-  def excludedByBounds(ref: TableRef, column: String, lo: Option[Any],
-                       hi: Option[Any]): Option[Set[String]] =
-    manifestDf(path(ref)).flatMap { manifest =>
-      if (!manifest.columns.contains(s"min_$column")) None
-      else {
-        val mn = col(s"min_$column")
-        val mx = col(s"max_$column")
-        val excluded =
-          lo.map(v => mx < lit(v)).getOrElse(lit(false)) ||
-            hi.map(v => mn > lit(v)).getOrElse(lit(false))
-        Some(manifest.filter(excluded <=> lit(true))
-          .select("file").collect().map(_.getString(0)).toSet)
-      }
-    }
-
-  /** Equality skipping: partition current files into (possibly-contains,
-    * provably-excludes) for `column = value`, combining the min/max
-    * interval test with the per-file BLOOM filter — the case range
-    * stats cannot help with: a hash-clustered layout overlaps every
-    * file's [min, max] with every point, but each file's bloom still
-    * rejects keys it never saw. Conservative like the range split:
-    * files with a null/absent bloom (pre-bloom manifests, all-null
-    * columns) or a saturated one survive; a bloom hit is "maybe", so
-    * callers still apply the exact row filter. None when the table has
-    * no manifest for the column.
+  /** [[splitFilesByRange]] for `column = value`, by min/max interval and
+    * per-file bloom — a bloom hit is "maybe", so callers still filter.
     */
   def splitFilesByValue(ref: TableRef, column: String,
                         value: Any): Option[(Seq[String], Seq[String])] =
-    excludedByValue(ref, column, value).map(partitionCurrent(ref, _))
+    manifest.split(ref, Manifest.in(column, Seq(value)))
 
-  /** Manifest keys the stats manifest provably excludes for `column =
-    * value` (min/max interval + per-file bloom). Same snapshot-safe
-    * exclusion contract as [[excludedByBounds]].
+  /** Manifest keys provably excluded for values in `[lo, hi]` on
+    * `column` (None on a side = unbounded), under [[Manifest.excluded]]'s
+    * snapshot-safe exclusion contract. None without a manifest for it.
     */
+  def excludedByBounds(ref: TableRef, column: String, lo: Option[Any],
+                       hi: Option[Any]): Option[Set[String]] =
+    manifest.excluded(ref, Manifest.bounds(column, lo, hi))
+
+  /** Manifest keys provably excluded for `column = value`. */
   def excludedByValue(ref: TableRef, column: String,
                       value: Any): Option[Set[String]] =
     excludedByValues(ref, column, Seq(value))
 
-  /** Manifest keys provably excluded for `column IN (values...)`: a file
-    * is excludable only when it excludes EVERY value (per-value
-    * min/max interval + bloom tests, AND-ed) — the point-lookup shape
-    * `WHERE k IN (...)` that previously got zero file skipping through
-    * SQL. All value hashes evaluate in ONE local 1-row projection (no
-    * per-value job), and the manifest is scanned once with the
-    * conjunction. Callers should cap the value-list size (the SQL
-    * catalog skips lists past a few dozen — a giant IN degrades to
-    * keep-everything, never to a slow manifest pass). None when the
-    * table has no manifest for the column or `values` is empty.
+  /** Manifest keys provably excluded for `column IN (values...)`: files
+    * that exclude EVERY value. None when `values` is empty.
     */
   def excludedByValues(ref: TableRef, column: String,
-                       values: Seq[Any]): Option[Set[String]] = {
-    if (values.isEmpty) return None
-    manifestDf(path(ref)).flatMap { manifest =>
-      if (!manifest.columns.contains(s"min_$column")) None
-      else {
-        import org.apache.spark.sql.functions.{element_at => elemAt}
-        val dt = manifest.schema(s"min_$column").dataType
-        val hasBloom = manifest.columns.contains(s"bloom_$column")
-        // every literal's hash through the SAME Spark expression the
-        // writer used — one local 1-row eval for ALL values, no job
-        val hashes: Seq[Long] =
-          if (!hasBloom) Seq.fill(values.size)(0L)
-          else {
-            val hRow = spark.range(1)
-              .select(values.map(v => xxhash64(lit(v).cast(dt))): _*)
-              .head()
-            values.indices.map(hRow.getLong)
-          }
-        def pos(hh: Long, shift: Int): Long = {
-          val shifted = hh >> shift
-          ((shifted % bloomBits) + bloomBits) % bloomBits
-        }
-        val bloom = col(s"bloom_$column")
-        def miss(p: Long) =
-          elemAt(bloom, (p / 64).toInt + 1)
-            .bitwiseAND(lit(1L << (p % 64).toInt)) === 0L
-        val excluded = values.zip(hashes).map { case (value, h) =>
-          val rangeMiss = col(s"max_$column") < lit(value) ||
-            col(s"min_$column") > lit(value)
-          val bloomMiss =
-            if (!hasBloom) lit(false)
-            else bloom.isNotNull &&
-              ((miss(pos(h, 0)) || miss(pos(h, 21))) <=> lit(true))
-          (rangeMiss <=> lit(true)) || bloomMiss
-        }.reduce(_ && _)
-        Some(manifest.filter(excluded)
-          .select("file").collect().map(_.getString(0)).toSet)
-      }
-    }
-  }
+                       values: Seq[Any]): Option[Set[String]] =
+    manifest.excluded(ref, Manifest.in(column, values))
 
-  /** Manifest keys provably excluded for `column IS NULL` (`isNull =
-    * true`: files with a ZERO null count) or `column IS NOT NULL`
-    * (files where every row is null). Rides the manifest's per-file
-    * `nulls_<c>` column; manifests written before null counts existed
-    * (null-backfilled rows from a mixed-era incremental merge
-    * included) keep their files — same conservative contract as the
-    * other excludedBy* sets. None when the manifest lacks the column.
+  /** Manifest keys provably excluded for `column IS NULL` (`isNull`) or
+    * `column IS NOT NULL`, by the per-file null counts.
     */
   def excludedByNull(ref: TableRef, column: String,
                      isNull: Boolean): Option[Set[String]] =
-    manifestDf(path(ref)).flatMap { manifest =>
-      if (!manifest.columns.contains(s"nulls_$column") ||
-          !manifest.columns.contains("rows")) None
-      else {
-        val excluded =
-          if (isNull) col(s"nulls_$column") === lit(0L)
-          else col(s"nulls_$column") === col("rows")
-        Some(manifest.filter(excluded <=> lit(true))
-          .select("file").collect().map(_.getString(0)).toSet)
-      }
-    }
+    manifest.excluded(ref, Manifest.isNull(column, isNull))
 
   /** Manifest keys provably excluded for `column LIKE 'prefix%'` on a
-    * STRING stats column: `max < prefix` puts every value below the
-    * prefixed range, and `substring(min, 1, len) > prefix` puts every
-    * value above it (any prefixed string compares below `min` on its
-    * first `len` characters). Non-string stat columns return None —
-    * prefix order only matches value order for strings.
+    * string stats column (None for other types).
     */
   def excludedByPrefix(ref: TableRef, column: String,
                        prefix: String): Option[Set[String]] =
-    manifestDf(path(ref)).flatMap { manifest =>
-      if (!manifest.columns.contains(s"min_$column")) None
-      else manifest.schema(s"min_$column").dataType match {
-        case org.apache.spark.sql.types.StringType =>
-          val excluded = col(s"max_$column") < lit(prefix) ||
-            substring(col(s"min_$column"), 1, prefix.length) > lit(prefix)
-          Some(manifest.filter(excluded <=> lit(true))
-            .select("file").collect().map(_.getString(0)).toSet)
-        case _ => None
-      }
-    }
+    manifest.excluded(ref, Manifest.startsWith(column, prefix))
 
-  /** Metadata-only aggregates: answer COUNT(*) / COUNT(col) /
-    * MIN(col) / MAX(col) over a snapshot's file list from the stats
-    * manifest alone — ZERO data-file access (the Delta/Iceberg
-    * "metadata-only query" shape; at 100 TB the difference between an
-    * instant answer and a full-table scan). Returns the aggregate
-    * values in `aggs` order, or None unless EVERY answer is provable:
-    *
-    *  - every snapshot file has exactly one manifest row with a
-    *    non-null `rows` count (a pinned historical snapshot whose
-    *    files the current manifest no longer lists → None);
-    *  - `ColCount` needs the file's `nulls_<c>` count;
-    *  - `ColMin`/`ColMax` accept a null per-file extremum ONLY with
-    *    the all-null witness `nulls_<c> == rows` — a null min from a
-    *    stats-less or mixed-era row is indistinguishable from data, so
-    *    it disqualifies the whole answer (conservative: callers fall
-    *    back to scanning).
-    *
-    * Extrema are EXACT by construction: [[fileStats]] computes
-    * min/max with Spark's own aggregate over every row at write time
-    * (full values, no truncation), so folding per-file extrema equals
-    * the full-scan answer bit-for-bit. The fold is the one-group case
-    * of [[metadataAggregateGrouped]]: one tiny aggregate over the
-    * (driver-local cached) manifest.
-    * COUNT answers are `sum(rows)` / `sum(rows - nulls_c)`; an empty
-    * file list answers without a manifest (0 / null extrema).
+  /** Metadata-only COUNT / MIN / MAX over a snapshot's files, from the
+    * stats manifest alone ([[Manifest.metadataAggregateGrouped]]).
     */
   def metadataAggregate(ref: TableRef, files: Seq[String],
                         aggs: Seq[Warehouse.MetaAgg]): Option[Seq[Any]] =
-    if (files.isEmpty && aggs.nonEmpty) Some(aggs.map {
-      case Warehouse.RowCount | Warehouse.ColCount(_) => 0L
-      case _ => null
-    })
-    else metadataAggregateGrouped(ref, files.map(_ -> 0).toMap, aggs).map(_(0))
+    manifest.metadataAggregate(ref, files, aggs)
 
-  /** GROUPED metadata-only aggregates — [[metadataAggregate]] with the
-    * snapshot's files partitioned into caller-defined groups (the scan
-    * builder groups by PARTITION-directory values, answering
-    * `SELECT part, count(*), min(c), max(c) ... GROUP BY part` from
-    * the manifest alone — Iceberg's partition-stats query shape). ONE
-    * driver-local aggregate over the manifest, never a pass per group.
-    * Provability is the ungrouped contract applied PER GROUP,
-    * all-or-nothing: every group's files fully and exactly accounted
-    * for, null extrema only with the all-null witness — any unprovable
-    * group fails the whole answer (callers fall back to the real scan).
-    * Returns group-id → values in `aggs` order.
-    */
+  /** [[metadataAggregate]] per caller-defined group of files. */
   def metadataAggregateGrouped(ref: TableRef, groupOf: Map[String, Int],
                                aggs: Seq[Warehouse.MetaAgg])
-      : Option[Map[Int, Seq[Any]]] = {
-    import Warehouse.{ColCount, ColMax, ColMin, RowCount}
-    if (aggs.isEmpty || groupOf.isEmpty) return None
-    // live deletion vectors: manifest rows/counts are PHYSICAL — a
-    // metadata-only COUNT would include merge-on-read-deleted rows.
-    // (min/max would still be safe bounds but not exact answers.)
-    // Honest fallback to the scan until a compact materializes.
-    if (snapshot(ref).exists(_.dvMap.nonEmpty)) return None
-    // driver-local manifests only: past the materialization cutoff the
-    // per-query isin over every snapshot file would itself run a Spark
-    // job at PLAN time — exactly the table size where falling back to
-    // the scan is the honest answer
-    manifestLocalDf(path(ref)).flatMap { m =>
-      // exactExtremum reads min AND max, so extrema need both columns
-      val needed = aggs.flatMap {
-        case RowCount => Seq("rows")
-        case ColCount(c) => Seq("rows", s"nulls_$c")
-        case ColMin(c) => Seq(s"min_$c", s"max_$c", s"nulls_$c", "rows")
-        case ColMax(c) => Seq(s"min_$c", s"max_$c", s"nulls_$c", "rows")
-      }.distinct
-      if (!needed.forall(m.columns.contains)) None
-      else {
-        // `groupOf` keys are snapshot rel paths — the manifest's key
-        // space. Each row's group is a literal map lookup; a snapshot
-        // file MISSING from the manifest contributes no row, so its
-        // group's accounted count falls short below → unprovable → None
-        val f = m.filter(col("file").isin(groupOf.keys.toSeq: _*))
-          .withColumn("__gid", element_at(typedLit(groupOf), col("file")))
-        def exactExtremum(c: String): Column =
-          // a null per-file extremum is legitimate ONLY for an
-          // all-null column in that file; <=> makes a null nulls_c
-          // (mixed-era manifest) count as a violation
-          count(when(col(s"min_$c").isNull.or(col(s"max_$c").isNull)
-            .and(!(col(s"nulls_$c") <=> col("rows"))), 1))
-        val countCols = aggs.collect { case ColCount(c) => c }.distinct
-        val extremaCols = aggs.collect {
-          case ColMin(c) => c
-          case ColMax(c) => c
-        }.distinct
-        // one pass per group: validation counts first, then one result
-        // column per requested aggregate (positions are fixed, so each
-        // row reads back by index)
-        val validation: Seq[Column] = Seq(
-          count(lit(1)).as("__nfiles"),
-          countDistinct(col("file")).as("__ndistinct"),
-          count(col("rows")).as("__nrows")) ++
-          countCols.map(c => count(col(s"nulls_$c")).as(s"__nn_$c")) ++
-          extremaCols.map(c => exactExtremum(c).as(s"__bad_$c"))
-        val results: Seq[Column] = aggs.map {
-          case RowCount => sum(col("rows"))
-          case ColCount(c) => sum(col("rows") - col(s"nulls_$c"))
-          case ColMin(c) => min(col(s"min_$c"))
-          case ColMax(c) => max(col(s"max_$c"))
-        }
-        val all = validation ++ results
-        val rows = f.groupBy(col("__gid")).agg(all.head, all.tail: _*)
-          .collect()
-        val expected = groupOf.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-        val byGid = rows.map(r => r.getInt(0) -> r).toMap
-        val allValid = expected.forall { case (gid, n) =>
-          byGid.get(gid).exists { r =>
-            r.getLong(1) == n && r.getLong(2) == n && r.getLong(3) == n &&
-              countCols.indices.forall(i => r.getLong(4 + i) == n) &&
-              extremaCols.indices.forall(i =>
-                r.getLong(4 + countCols.size + i) == 0L)
-          }
-        }
-        if (!allValid) None
-        else Some(byGid.map { case (gid, r) =>
-          gid -> aggs.indices.map(i => r.get(1 + validation.size + i))
-        })
-      }
-    }
-  }
+      : Option[Map[Int, Seq[Any]]] =
+    manifest.metadataAggregateGrouped(ref, groupOf, aggs)
 
-  /** Per-column PLANNER statistics for a snapshot's file list, folded
-    * from the stats manifest: per stat column, the summed per-file
-    * approximate NDV (an upper estimate — cross-file repeats double-
-    * count — which is the conservative direction for join sizing),
-    * the exact null count, and the exact min/max. ESTIMATES feeding
-    * CBO ([[GraftScan.estimateStatistics]]'s `columnStats`), not query
-    * answers — but still emitted only when every snapshot file has
-    * exactly one manifest row (the metadataAggregate accounting
-    * discipline): a partial manifest yields None and the planner
-    * keeps its size-only estimate rather than mixing eras. One
-    * driver-local aggregate; None past the materialization cutoff.
-    */
+  /** Per-column planner statistics for a snapshot's files. */
   def columnStatsFor(ref: TableRef, files: Seq[String])
-      : Option[Map[String, Warehouse.ColStats]] = {
-    if (files.isEmpty) return None
-    manifestLocalDf(path(ref)).flatMap { m =>
-      val cols = m.columns.collect {
-        case c if c.startsWith("ndv_") => c.stripPrefix("ndv_")
-      }.toSeq
-      if (cols.isEmpty || !m.columns.contains("rows")) None
-      else {
-        val f = m.filter(col("file").isin(files: _*))
-        val validation: Seq[Column] = Seq(
-          count(lit(1)).as("__n"), countDistinct(col("file")).as("__nd"),
-          count(col("rows")).as("__nr"))
-        val perCol: Seq[Column] = cols.flatMap { c =>
-          Seq(sum(col(s"ndv_$c")), count(col(s"ndv_$c")),
-            if (m.columns.contains(s"nulls_$c")) sum(col(s"nulls_$c"))
-            else lit(null).cast("long"),
-            min(col(s"min_$c")), max(col(s"max_$c")))
-        }
-        val all = validation ++ perCol
-        val row = f.agg(all.head, all.tail: _*).head()
-        val n = files.size.toLong
-        if (row.getLong(0) != n || row.getLong(1) != n || row.getLong(2) != n)
-          None
-        else Some(cols.zipWithIndex.flatMap { case (c, i) =>
-          val base = validation.size + i * 5
-          // NDV present for every file, or the column sits out
-          if (row.getLong(base + 1) != n) None
-          else Some(c -> Warehouse.ColStats(
-            ndv = Some(row.getLong(base)),
-            nullCount = if (row.isNullAt(base + 2)) None
-              else Some(row.getLong(base + 2)),
-            min = Option(row.get(base + 3)),
-            max = Option(row.get(base + 4))))
-        }.toMap).filter(_.nonEmpty)
-      }
-    }
-  }
+      : Option[Map[String, Warehouse.ColStats]] =
+    manifest.columnStatsFor(ref, files)
 
-  /** Point-lookup read: [[splitFilesByValue]]'s kept files (falls back
-    * to a full read without a manifest), read like [[readFiles]] —
-    * committed schema, live deletion vectors applied. The caller's
-    * `column = value` filter still applies — bloom hits are "maybe".
+  /** Point-lookup read: [[splitFilesByValue]]'s kept files, read like
+    * [[readFiles]] (a full read without a manifest). The caller's
+    * `column = value` filter still applies.
     */
   def readPrunedEq(ref: TableRef, column: String, value: Any): DataFrame =
-    splitFilesByValue(ref, column, value) match {
-      case None => read(ref)
-      case Some((kept, _)) if kept.isEmpty => read(ref).limit(0)
-      case Some((kept, _)) => readFiles(ref, kept)
-    }
+    manifest.readPruned(ref, Manifest.in(column, Seq(value)))
 
-  /** Range-pruned read: drop files whose [min, max] interval for
-    * `column` provably misses [lo, hi] (`max < lo` or `min > hi`).
-    * Conservative by construction — files with null stats (all-null
-    * column) or absent from the manifest are kept, so the result only
-    * ever SHRINKS the file list; callers still apply their exact
-    * row-level filter on top. Falls back to a full read when the table
-    * has no manifest for `column`. Kept files read like [[readFiles]]:
-    * in the committed schema, with live deletion vectors applied.
-    *
-    * At 100 TB this is the difference between touching every footer and
-    * opening only the files a point/range lookup can live in — provided
-    * the write clustered the column (e.g. `repartitionByRange` +
-    * `sortWithinPartitions` before [[overwrite]]), which is what makes
-    * per-file intervals disjoint instead of all-overlapping.
+  /** Range-pruned read: [[splitFilesByRange]]'s kept files, read like
+    * [[readFiles]] (a full read without a manifest). Prunes well when
+    * the write clustered `column` (`repartitionByRange` +
+    * `sortWithinPartitions`); callers still apply their row filter.
     */
   def readPruned(ref: TableRef, column: String, lo: Any, hi: Any): DataFrame =
-    splitFilesByRange(ref, column, lo, hi) match {
-      case None => read(ref)
-      case Some((kept, _)) if kept.isEmpty => read(ref).limit(0)
-      case Some((kept, _)) => readFiles(ref, kept)
-    }
+    manifest.readPruned(ref, Manifest.bounds(column, Some(lo), Some(hi)))
+
+  /** Per-file exact row counts from the driver-local stats manifest. */
+  private[catalog] def fileRowCounts(ref: TableRef): Map[String, Long] =
+    manifest.fileRowCounts(ref)
+
+  /** A metadata aggregate on the meta session ([[Manifest.metaFrame]]). */
+  private[catalog] def metaFrame(df: DataFrame): DataFrame = manifest.metaFrame(df)
+
+  /** `p`'s manifest key in `ref`'s directory ([[Manifest.keyOf]]). */
+  private[catalog] def relKey(ref: TableRef)(p: String): String = {
+    val tablePath = new Path(path(ref))
+    Manifest.keyOf(fs(tablePath).makeQualified(tablePath), new Path(p))
+  }
 
   /** Table-relative paths of `paths` (absolute), refusing a stale plan
     * — the guard [[replaceDataFiles]] and [[retireDataFiles]] share:
@@ -4485,10 +3603,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   private def currentRels(ref: TableRef, snap: TableSnapshot,
                           paths: Seq[String], action: String): Set[String] = {
-    val tablePath = new Path(path(ref))
-    val tableBase = fs(tablePath).makeQualified(tablePath).toUri.getPath
-    val rels = paths.map(p =>
-      new Path(p).toUri.getPath.stripPrefix(tableBase).stripPrefix("/"))
+    val rels = paths.map(relKey(ref))
     val staleMissing = rels.filterNot(snap.files.toSet)
     if (staleMissing.nonEmpty)
       throw new ConcurrentWriteException(
@@ -4576,127 +3691,6 @@ final class Warehouse(spark: SparkSession, val root: String,
         Warehouse.withOp(meta, "REPLACE"), changes, None)
     }
     ()
-  }
-
-  /** Whether an INSERT-ONLY commit may extend the stats manifest by
-    * APPENDING a new part file instead of rewriting it — O(new files)
-    * manifest cost instead of O(table), the difference between a
-    * small insert into a million-file table costing one tiny part
-    * write and costing a full manifest rewrite. Conditions: nothing
-    * retired (retired rows would need pruning), the new rows carry
-    * exactly the live manifest's column set (mixed-schema parts would
-    * corrupt by-name parquet reads), and the part count stays under
-    * [[Warehouse.manifestPartCap]] (past it, the rewrite doubles as
-    * manifest compaction). The part is written AFTER the commit: a
-    * crash in between leaves missing rows, which every consumer
-    * treats conservatively (pruning keeps unknown files,
-    * metadata aggregates fall back to the scan).
-    */
-  private def canAppendManifestPart(tablePath: Path, oldCols: Seq[String],
-                                    newCols: Seq[String]): Boolean = {
-    if (!oldCols.sorted.sameElements(newCols.sorted)) return false
-    val dir = new Path(tablePath, statsDir)
-    val filesystem = fs(dir)
-    filesystem.exists(dir) &&
-      filesystem.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) <
-        Warehouse.manifestPartCap
-  }
-
-  /** The column set [[fileStats]] emits for a stat/bloom declaration —
-    * the schema-compatibility half of the append-part decision, known
-    * WITHOUT building the frame (kept in sync with [[fileStats]]).
-    */
-  private def statsColumnsOf(statsColumns: Seq[String],
-                             bloomColumns: Seq[String]): Seq[String] = {
-    val blooms = bloomColumns.filter(statsColumns.contains)
-    Seq("file", "rows") ++ statsColumns.flatMap(c =>
-      Seq(s"min_$c", s"max_$c", s"ndv_$c", s"nulls_$c") ++
-        (if (blooms.contains(c)) Seq(s"bloom_$c") else Nil))
-  }
-
-  /** Union a (possibly pre-filtered) manifest with fresh per-file
-    * stats, HEALING declared-type drift (the crash window of
-    * [[widenColumnType]]'s manifest swap): `unionByName` promotes
-    * `min_/max_` to the common wider type, and any column whose dtype
-    * differs between the two sides gets its bloom words NULLED on
-    * BOTH — words built at the narrow width probed at the wide width
-    * would falsely SKIP files holding the value. NULL blooms degrade
-    * to range-only pruning, never to wrong answers; later rewrites
-    * rebuild them at the settled width.
-    */
-  private def unionManifest(kept: DataFrame, newStats: DataFrame): DataFrame = {
-    val common = kept.columns.filter(newStats.columns.contains).toSeq
-    val drifted = common.filter(c => c.startsWith("min_") &&
-      kept.schema(c).dataType != newStats.schema(c).dataType)
-      .map(_.stripPrefix("min_"))
-    val u = kept.select(common.map(col): _*)
-      .unionByName(newStats, allowMissingColumns = true)
-    drifted.foldLeft(u) { (d, c) =>
-      if (d.columns.contains(s"bloom_$c"))
-        d.withColumn(s"bloom_$c", lit(null).cast(
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))
-      else d
-    }
-  }
-
-  /** Whether the write frame's stat columns carry the SAME dtypes the
-    * live manifest stores — the TYPE half of the append-part fast-path
-    * decision ([[canAppendManifestPart]] is the name half). False
-    * right after [[widenColumnType]] until the manifest settles,
-    * forcing the [[unionManifest]] path, which promotes and heals.
-    */
-  private def manifestTypesMatch(old: DataFrame,
-                                 data: org.apache.spark.sql.types.StructType,
-                                 statCols: Seq[String]): Boolean =
-    statCols.forall { c =>
-      !old.columns.contains(s"min_$c") ||
-        data.find(_.name.equalsIgnoreCase(c))
-          .forall(f => f.dataType == old.schema(s"min_$c").dataType)
-    }
-
-  /** Extend the manifest with one new part. When the existing manifest
-    * is driver-local (the common, small case) the part is collected
-    * and written from the driver — no Spark job — made visible
-    * atomically by rename, and the cache is seeded with old+new rows
-    * so the post-commit registry read needs no job either. Oversized
-    * manifests keep the distributed append write.
-    */
-  private def appendManifestPart(tablePath: Path, newStats: DataFrame): Unit =
-    graft.util.PhaseTimer.time("wh.manifest") {
-    val tp = tablePath.toString
-    val dir = new Path(tablePath, statsDir)
-    manifestLocalDf(tp) match {
-      case Some(old) =>
-        // align the part to the old column order (the append-part gate
-        // already proved the name/type sets match) so one schema
-        // serves both the part file and the seeded union
-        val aligned = newStats.select(old.columns.map(col).toIndexedSeq: _*)
-        val rows = metaFrame(aligned).collect().toSeq
-        val listing = fs(dir).listStatus(dir)
-        val priorParts = listing
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.getName).toSet
-        // a .part-*.tmp present at entry is ALWAYS a crashed append's
-        // orphan (appends serialize on the writer lock), invisible to
-        // readers but otherwise never reclaimed — delete stragglers
-        // here so they can't accumulate across the table's life
-        listing.filter { s =>
-          val n = s.getPath.getName
-          n.startsWith(".part-") && n.endsWith(".tmp")
-        }.foreach(s => fs(dir).delete(s.getPath, false))
-        val uuid = java.util.UUID.randomUUID()
-        val tmp = new Path(dir, s".part-$uuid.tmp") // invisible: no .parquet suffix
-        val dest = new Path(dir, s"part-00000-$uuid.parquet")
-        ManifestIO.writeLocalParquet(spark,
-          ManifestIO.relaxedNullability(old.schema), rows, tmp)
-        if (!fs(dir).rename(tmp, dest))
-          throw new RuntimeException(s"failed to publish manifest part $dest")
-        seedManifestCache(tp, old.schema, old.collect().toSeq ++ rows,
-          priorParts + dest.getName)
-      case None =>
-        newStats.coalesce(1).write.mode("append").parquet(dir.toString)
-    }
   }
 
   private val txnFile = "_graft_txn"
@@ -4966,23 +3960,6 @@ object Warehouse {
     }.toMap
   }
 
-  /** A stats manifest written beside the live one but not yet visible:
-    * its directory, plus the rows to seed the manifest cache with when
-    * [[writeManifestTo]] wrote it from the driver.
-    */
-  private[catalog] type StagedManifest =
-    (Path, Option[(org.apache.spark.sql.types.StructType, Seq[Row], String)])
-
-  /** What a commit does to the stats manifest: decided by
-    * [[planManifest]] before any file moves, applied by [[land]] after
-    * the commit.
-    */
-  private[catalog] sealed trait ManifestStep
-  private[catalog] case object KeepManifest extends ManifestStep
-  private[catalog] case object DropManifest extends ManifestStep
-  private[catalog] final case class AppendPart(stats: DataFrame) extends ManifestStep
-  private[catalog] final case class SwapManifest(staged: StagedManifest) extends ManifestStep
-
   /** The commit-log read counters ([[TxnLog.LogIO]]). */
   private[graft] val LogIO: TxnLog.LogIO.type = TxnLog.LogIO
 
@@ -4998,15 +3975,8 @@ object Warehouse {
     // a sibling prefix table only evicts a rebuildable cache entry.
     val needle = TableStatsRegistry.normalize(tablePath)
     TxnLog.purgeCaches(needle)
-    manifestCache.keys.filter(_.contains(needle)).foreach(manifestCache.remove)
+    Manifest.purgeCache(needle)
   }
-
-  /** Insert-only commits append manifest PART files up to this count;
-    * the next one (or any commit with retirements) rewrites the whole
-    * manifest, which doubles as its compaction — the same
-    * bounded-parts-then-checkpoint discipline as the commit log.
-    */
-  private[catalog] val manifestPartCap = 64
 
   /** One column's planner statistics, folded from the manifest —
     * [[Warehouse.columnStatsFor]]'s row. `min`/`max` carry the
@@ -5027,51 +3997,6 @@ object Warehouse {
   final case class ColMin(column: String) extends MetaAgg
   /** MAX(col) — fold of the per-file exact maxima. */
   final case class ColMax(column: String) extends MetaAgg
-
-  /** Manifests at most this big materialize into the driver-local
-    * cache (one row per data file; with blooms ≈ 0.6 KB/row, so 64 MB
-    * ≈ a 100k-file table — beyond that the parquet-backed read path
-    * keeps driver memory bounded).
-    */
-  private val manifestLocalBytes = 64L << 20
-
-  /** Manifests with at most this many rows are WRITTEN from the driver
-    * ([[ManifestIO.writeLocalParquet]] — no Spark job) and their rows
-    * seeded straight into [[manifestCache]]; larger ones keep the
-    * distributed `coalesce(1).write` path. With blooms ≈ 0.6 KB/row
-    * this bounds the driver-held frame to ~6 MB.
-    */
-  private[catalog] val manifestLocalWriteRows = 10000
-
-  /** One isolated session per underlying session for internal
-    * commit-scale metadata aggregates ([[Warehouse.metaFrame]]): AQE
-    * off (its per-stage re-optimization jobs are pure overhead on
-    * ≤10k-row frames) and a fixed data-derived shuffle width. Keyed
-    * WEAKLY by the session object (identity equality, SparkSession's
-    * own): one driver hosting many user sessions must not keep a
-    * dropped session — and its SessionState — alive through its meta
-    * session.
-    */
-  private val metaSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, SparkSession]())
-
-  private[catalog] def metaSessionFor(spark: SparkSession): SparkSession =
-    metaSessions.computeIfAbsent(spark, s => {
-      val m = s.newSession()
-      m.conf.set("spark.sql.adaptive.enabled", "false")
-      m.conf.set("spark.sql.shuffle.partitions", "8")
-      m
-    })
-
-  /** (sessionId:tablePath) → (part-file fingerprint, LocalRelation
-    * manifest). See [[Warehouse]].manifestDf. Flushed whole when it
-    * reaches [[manifestCacheMax]] entries so long-lived drivers (and
-    * test JVMs cycling hundreds of temp tables) stay bounded.
-    */
-  private val manifestCache =
-    scala.collection.concurrent.TrieMap[String, (String, DataFrame)]()
-
-  private val manifestCacheMax = 256
 
   /** The operation a version's commit performed ([[TxnLog.OpMeta]]). */
   val OpMeta: String = TxnLog.OpMeta

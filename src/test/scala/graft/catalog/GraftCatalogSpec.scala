@@ -274,6 +274,27 @@ class GraftCatalogSpec extends SparkSpec {
     val qNse = spark.sql(s"SELECT k FROM $t WHERE k <=> 443")
     assert(qNse.as[Long].collect() === Seq(443L))
     assert(plannedFiles(qNse).size < total, "<=> never pruned")
+
+    // (rows, planned files) per shape, pinned at what the per-predicate
+    // exclusion sets decided: an unprovable side counts as excluding
+    // nothing, so it leaves an AND to its other side and voids an OR
+    def shape(where: String): (Long, Int) = {
+      val q = spark.sql(s"SELECT k FROM $t WHERE $where")
+      (q.count(), plannedFiles(q).size)
+    }
+    // AND with one unprovable side
+    assert(shape("k <= 40 AND s LIKE '%7'") === ((4L, 1)))
+    // OR with one unprovable side prunes nothing
+    assert(shape("k = 5 OR s LIKE '%7'") === ((101L, 8)))
+    // nested OR of ANDs
+    assert(shape("(k >= 10 AND k <= 20) OR (k >= 990 AND s LIKE '%5')") === ((12L, 2)))
+    // bounds with the literal on the left
+    assert(shape("980 < k") === ((20L, 1)))
+    assert(shape("200 >= k") === ((200L, 2)))
+    // an IN list past the 64-value cap prunes nothing
+    assert(shape(s"k IN (${(1 to 65).mkString(", ")})") === ((65L, 8)))
+    // an InSet with a null member prunes nothing
+    assert(shape(s"k IN (${(1 to 11).mkString(", ")}, NULL)") === ((11L, 8)))
   }
 
   test("pruning survives AQE: ORDER BY + broadcast join still plan a pruned fact scan") {

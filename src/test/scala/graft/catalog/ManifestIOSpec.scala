@@ -7,6 +7,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.catalog.{Manifest => ManifestIO}
 
 /** [[ManifestIO.writeLocalParquet]] — the driver-side manifest writer
   * must be read-back-equivalent to Spark's own executor parquet write:
@@ -82,5 +83,33 @@ class ManifestIOSpec extends SparkSpec {
     val Some((kept2, excluded2)) = wh.splitFilesByValue(ref, "k", 2000L)
     assert(kept2.size === 1 && excluded2.size === 4,
       s"expected 1 kept / 4 excluded, got ${kept2.size}/${excluded2.size}")
+  }
+
+  test("a bloom point lookup hashes its literal without a Spark job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    val wh = new Warehouse(spark, tmpDir("wh-bloom-jobs"))
+    val ref = TableRef("silver", "mio", "hashed")
+    // hash-distributed keys: every file's [min, max] spans the table,
+    // so only the blooms can exclude a file
+    wh.overwrite(ref, (1L to 1000L).toDF("k").repartition(4, col("k")),
+      statsColumns = Seq("k"), bloomColumns = Seq("k"))
+    val holder = new Path(wh.read(ref).filter(col("k") === 500L)
+      .select(input_file_name()).as[String].head()).getName
+    val expected = wh.dataFiles(ref).map(new Path(_).getName).toSet - holder
+    wh.excludedByValue(ref, "k", 500L) // the manifest is cached from here on
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val excluded = try wh.excludedByValue(ref, "k", 500L) finally {
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(excluded === Some(expected))
+    assert(jobs === 0, "hashing the lookup literal ran a Spark job")
   }
 }
