@@ -186,6 +186,7 @@ private[catalog] object GraftMetadataTables {
       StructField("default_columns", StringType)))
     new GraftLocalTable(s"${snap.ref}.detail", detailSchema, () => {
       val ref = snap.ref
+      val decl = wh.features.current(ref)
       def csvOrNull(xs: Iterable[String]): Any =
         if (xs.isEmpty) null
         else UTF8String.fromString(xs.toSeq.sorted.mkString(","))
@@ -201,15 +202,12 @@ private[catalog] object GraftMetadataTables {
         snap.files.count(_.startsWith(Warehouse.ForeignPrefix)).toLong,
         wh.cdfEnabled(ref),
         wh.dvEnabled(ref),
-        csvOrNull(wh.checkConstraints(ref).keys),
-        csvOrNull(wh.generatedColumns(ref)
-          .map { case (c, e) => s"$c AS ($e)" }),
+        csvOrNull(decl.checks.keys),
+        csvOrNull(decl.generated.map { case (c, e) => s"$c AS ($e)" }),
         csvOrNull(wh.pinnedVersions(ref)
           .map { case (c, v) => s"$c@v$v" }),
-        csvOrNull(wh.identityColumns(ref)
-          .map { case (c, (st, sp)) => s"$c IDENTITY($st,$sp)" }),
-        csvOrNull(wh.columnDefaults(ref)
-          .map { case (c, e) => s"$c DEFAULT ($e)" }))))
+        csvOrNull(decl.identity.map { case (c, (st, sp)) => s"$c IDENTITY($st,$sp)" }),
+        csvOrNull(decl.defaults.map { case (c, e) => s"$c DEFAULT ($e)" }))))
     })
   }
 

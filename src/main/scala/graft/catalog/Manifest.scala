@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryComparison, Expression, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThanOrEqual, Literal, Or, StartsWith}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.functions.{approx_count_distinct, array, col, count, countDistinct, element_at, expr, input_file_name, lit, max, min, pmod, regexp_replace, shiftright, substring, sum, typedLit, when, xxhash64}
+import org.apache.spark.sql.functions.{approx_count_distinct, array, coalesce, col, count, countDistinct, element_at, expr, input_file_name, lit, max, min, pmod, regexp_replace, shiftright, substring, sum, try_element_at, typedLit, when, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, NullType, StringType, StructField, StructType}
 
 import graft.util.PhaseTimer
@@ -195,11 +195,11 @@ private[catalog] final class Manifest(spark: SparkSession, wh: Warehouse) {
       }
     }
 
-  /** The per-file stats rows of `data` (file key = path RELATIVE to
-    * `baseDir`, the staging directory whose layout the move preserves):
-    * one column-pruned aggregate per file. Keyed by the relative path,
-    * never the basename: `partitionBy` layouts reuse one task's
-    * part-file basename across partition directories.
+  /** The per-file stats rows of `data`, the rows of `staged`'s files
+    * (file key = the staged relative path, whose layout the move
+    * preserves): one column-pruned aggregate per file. Keyed by the
+    * relative path, never the basename: `partitionBy` layouts reuse one
+    * task's part-file basename across partition directories.
     *
     * Blooms are OPT-IN per column (`Warehouse.overwrite(bloomColumns)`,
     * then durable for the table's life): the 64 bit_or word aggregates
@@ -207,20 +207,25 @@ private[catalog] final class Manifest(spark: SparkSession, wh: Warehouse) {
     * only point-lookup-heavy tables earn that write tax. NULL values
     * contribute no bits (IS NULL prunes on the null counts instead).
     */
-  private def fileStats(data: DataFrame, baseDir: String,
+  private def fileStats(data: DataFrame, staged: Warehouse.Staged,
                         statsColumns: Seq[String],
                         bloomColumns: Seq[String]): DataFrame = {
     val blooms = bloomColumns.filter(statsColumns.contains)
     // base-relative key: strip the scheme from input_file_name's URI
     // form the way the driver-side base is normalized, so
     // "file:///x/seg=a/p.parquet" under base "/x" keys as "seg=a/p.parquet"
-    val basePath = new Path(baseDir)
-    val base = fs(basePath).makeQualified(basePath).toUri.getPath
-      .stripSuffix("/")
+    val base = fs(staged.dir).makeQualified(staged.dir).toUri.getPath.stripSuffix("/")
     val noScheme = regexp_replace(input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-    val rel = when(noScheme.startsWith(base + "/"),
+    val encoded = when(noScheme.startsWith(base + "/"),
         noScheme.substr(lit(base.length + 2), lit(Int.MaxValue)))
       .otherwise(noScheme)
+    // that URI is percent-encoded: a file whose path needs escaping (a
+    // partition value like `x y`) maps back to its staged relative path
+    val escaped = staged.rels.zip(staged.files).map { case (r, st) =>
+      fs(st.getPath).makeQualified(st.getPath).toUri.getRawPath -> r
+    }.filterNot { case (raw, r) => raw.endsWith("/" + r) }.toMap
+    val rel = if (escaped.isEmpty) encoded
+      else coalesce(try_element_at(typedLit(escaped), noScheme), encoded)
     // the two probe positions are PROJECTED once per row before the
     // aggregate — inlined into each word aggregate, the hash would run
     // once per word
@@ -396,7 +401,7 @@ private[catalog] final class Manifest(spark: SparkSession, wh: Warehouse) {
           require(missing.isEmpty,
             s"stats column(s) not in table: ${missing.mkString(",")} " +
               "(partition columns carry no file stats — prune on the partition instead)")
-          fileStats(d, staged.dir.toString, cols, blooms)
+          fileStats(d, staged, cols, blooms)
         }
       }
     // the post-commit file count bounds the manifest's rows

@@ -299,67 +299,32 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           "the physical layout")
     }
     // same loud-refusal contract as alterTable: every key is either
-    // GOVERNED (routed through its Warehouse entry point below),
+    // GOVERNED (routed through the governed-property dispatch below),
     // Spark-reserved bookkeeping, or an error — a silently-dropped
     // `graft.cdf` or `graft.check.*` at CREATE time would yield a
     // table that LOOKS governed but enforces nothing
     val sparkReserved = Set(TableCatalog.PROP_PROVIDER,
       TableCatalog.PROP_COMMENT, TableCatalog.PROP_OWNER)
+    // the declared layout is createTable's own argument
+    val layoutKeys = Seq(Warehouse.StatsColumnsMeta, Warehouse.BloomColumnsMeta)
     val ungoverned = props.keys.filterNot { k =>
       sparkReserved.contains(k) || k.startsWith(TableCatalog.OPTION_PREFIX) ||
-        k == Warehouse.StatsColumnsMeta || k == Warehouse.BloomColumnsMeta ||
-        k == Warehouse.CdfMeta || k == Warehouse.DvMeta ||
-        k == Warehouse.ColumnMappingMeta ||
-        k.startsWith(Warehouse.CheckMetaPrefix) ||
-        k.startsWith(Warehouse.GenMetaPrefix) ||
-        k.startsWith(Warehouse.DefaultMetaPrefix) ||
-        k.startsWith(Warehouse.IdentityMetaPrefix)
+        layoutKeys.contains(k) || TableFeatures.governs(k)
     }.toSeq.sorted
-    require(ungoverned.isEmpty,
-      s"graft CREATE TABLE TBLPROPERTIES governs " +
-        s"${Warehouse.StatsColumnsMeta}, ${Warehouse.BloomColumnsMeta}, " +
-        s"${Warehouse.CdfMeta}, ${Warehouse.DvMeta}, " +
-        s"${Warehouse.CheckMetaPrefix}<name>, " +
-        s"${Warehouse.GenMetaPrefix}<col>, " +
-        s"${Warehouse.DefaultMetaPrefix}<col>, " +
-        s"${Warehouse.IdentityMetaPrefix}<col> and " +
-        s"${Warehouse.ColumnMappingMeta} only; not governed: " +
-        ungoverned.mkString(", "))
+    if (ungoverned.nonEmpty)
+      TableFeatures.ungoverned("CREATE TABLE", layoutKeys, ungoverned)
     def csv(k: String): Seq[String] =
       props.get(k).toSeq.flatMap(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-    def flag(k: String): Option[Boolean] = props.get(k).map { v =>
-      require(v == "true" || v == "false", s"$k takes true/false, got '$v'")
-      v.toBoolean
-    }
     warehouse.createTable(ref, schema, partCols,
       statsColumns = csv(Warehouse.StatsColumnsMeta),
       bloomColumns = csv(Warehouse.BloomColumnsMeta))
-    // governed properties route through the SAME entry points as ALTER
-    // TABLE — a constraint declared at CREATE validates (trivially, the
-    // table is empty) and then gates the CTAS data write and every
-    // later one exactly like one added afterwards
-    props.foreach {
-      case (k, v) if k.startsWith(Warehouse.CheckMetaPrefix) =>
-        warehouse.setCheckConstraint(ref,
-          k.stripPrefix(Warehouse.CheckMetaPrefix), v)
-      case (k, v) if k.startsWith(Warehouse.GenMetaPrefix) =>
-        warehouse.setGeneratedColumn(ref,
-          k.stripPrefix(Warehouse.GenMetaPrefix), v)
-      case (k, v) if k.startsWith(Warehouse.DefaultMetaPrefix) =>
-        warehouse.setColumnDefault(ref,
-          k.stripPrefix(Warehouse.DefaultMetaPrefix), v)
-      case (k, v) if k.startsWith(Warehouse.IdentityMetaPrefix) =>
-        val (st, sp) = Warehouse.parseIdentitySpec(k, v)
-        warehouse.setIdentityColumn(ref,
-          k.stripPrefix(Warehouse.IdentityMetaPrefix), st, sp)
-      case (Warehouse.ColumnMappingMeta, v) =>
-        require(v == "id",
-          s"${Warehouse.ColumnMappingMeta} supports mode 'id', got '$v'")
-        warehouse.enableColumnMapping(ref)
-      case _ => ()
-    }
-    flag(Warehouse.CdfMeta).foreach(warehouse.setChangeDataFeed(ref, _))
-    flag(Warehouse.DvMeta).foreach(warehouse.setDeletionVectors(ref, _))
+    // governed properties route through the SAME dispatch as ALTER
+    // TABLE SET — a constraint declared at CREATE validates (trivially,
+    // the table is empty) and then gates the CTAS data write and every
+    // later one exactly like one added afterwards; the toggles go last
+    props.toSeq.filter { case (k, _) => TableFeatures.governs(k) }
+      .sortBy { case (k, _) => Seq(Warehouse.CdfMeta, Warehouse.DvMeta).indexOf(k) }
+      .foreach { case (k, v) => warehouse.features.setProperty(ref, k, v) }
     loadTable(ident)
   }
 
@@ -368,11 +333,12 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * (round-15 verdict, next #4): one log append, zero data movement,
     * the same resurrection-tombstone and constraint-reference guards
     * as the Scala API (SQL ≡ Scala by construction — it IS the same
-    * entry point). `SET/UNSET TBLPROPERTIES` maps the two governed
-    * properties — `graft.check.<name>` CHECK constraints (validated at
-    * set time) and the `graft.cdf` change-data-feed toggle — onto
-    * their Warehouse entry points. Nested fields, column moves, NOT
-    * NULL adds, and ungoverned properties are refused loudly.
+    * entry point). `SET/UNSET TBLPROPERTIES` goes through the one
+    * governed-property dispatch ([[TableFeatures.setProperty]] /
+    * [[TableFeatures.unsetProperty]]): CHECK, GENERATED, DEFAULT and
+    * IDENTITY declarations, column mapping, and the change-data-feed
+    * and deletion-vector toggles. Nested fields, column moves, NOT NULL
+    * adds, and ungoverned properties are refused loudly.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val ref = refOf(ident)
@@ -461,75 +427,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"${r.fieldNames().mkString(".")}")
       wh.renameColumn(ref, r.fieldNames()(0), r.newName())
     }
-    // SET/UNSET TBLPROPERTIES — the SQL spelling of the two governed
-    // table properties (Delta's own idiom for both): CHECK constraints
-    // (`graft.check.<name>` = predicate, validated against existing
-    // rows at set time exactly like the Scala/CALL surface — it IS
-    // setCheckConstraint) and the change-data-feed toggle
-    // (`graft.cdf` = true/false). Other keys are refused loudly: a
-    // silently-carried free-form property would LOOK governed.
-    sets.foreach { s =>
-      (s.property, s.value) match {
-        case (k, v) if k.startsWith(Warehouse.CheckMetaPrefix) =>
-          wh.setCheckConstraint(ref, k.stripPrefix(Warehouse.CheckMetaPrefix), v)
-        case (k, v) if k.startsWith(Warehouse.GenMetaPrefix) =>
-          wh.setGeneratedColumn(ref, k.stripPrefix(Warehouse.GenMetaPrefix), v)
-        case (k, v) if k.startsWith(Warehouse.DefaultMetaPrefix) =>
-          wh.setColumnDefault(ref, k.stripPrefix(Warehouse.DefaultMetaPrefix), v)
-        case (k, v) if k.startsWith(Warehouse.IdentityMetaPrefix) =>
-          // `'graft.identity.<col>' = 'start,step'` (bare start => step 1)
-          val (st, sp) = Warehouse.parseIdentitySpec(k, v)
-          wh.setIdentityColumn(ref, k.stripPrefix(Warehouse.IdentityMetaPrefix),
-            st, sp)
-        case (Warehouse.ColumnMappingMeta, v) =>
-          require(v == "id",
-            s"${Warehouse.ColumnMappingMeta} supports mode 'id', got '$v'")
-          wh.enableColumnMapping(ref)
-        case (Warehouse.CdfMeta, v) =>
-          require(v == "true" || v == "false",
-            s"${Warehouse.CdfMeta} takes true/false, got '$v'")
-          wh.setChangeDataFeed(ref, v.toBoolean)
-        case (Warehouse.DvMeta, v) =>
-          require(v == "true" || v == "false",
-            s"${Warehouse.DvMeta} takes true/false, got '$v'")
-          wh.setDeletionVectors(ref, v.toBoolean)
-        case (k, _) => throw new UnsupportedOperationException(
-          s"graft SET TBLPROPERTIES governs ${Warehouse.CheckMetaPrefix}" +
-            s"<name>, ${Warehouse.GenMetaPrefix}<col>, " +
-            s"${Warehouse.DefaultMetaPrefix}<col>, " +
-            s"${Warehouse.IdentityMetaPrefix}<col>, " +
-            s"${Warehouse.CdfMeta}, ${Warehouse.DvMeta} and " +
-            s"${Warehouse.ColumnMappingMeta} only; " +
-            s"'$k' is not a governed table property")
-      }
-    }
-    unsets.foreach { u =>
-      u.property match {
-        case k if k.startsWith(Warehouse.CheckMetaPrefix) =>
-          wh.dropCheckConstraint(ref, k.stripPrefix(Warehouse.CheckMetaPrefix))
-        case k if k.startsWith(Warehouse.GenMetaPrefix) =>
-          wh.dropGeneratedColumn(ref, k.stripPrefix(Warehouse.GenMetaPrefix))
-        case k if k.startsWith(Warehouse.DefaultMetaPrefix) =>
-          wh.dropColumnDefault(ref, k.stripPrefix(Warehouse.DefaultMetaPrefix))
-        case k if k.startsWith(Warehouse.IdentityMetaPrefix) =>
-          wh.dropIdentityColumn(ref, k.stripPrefix(Warehouse.IdentityMetaPrefix))
-        case Warehouse.CdfMeta => wh.setChangeDataFeed(ref, enabled = false)
-        case Warehouse.DvMeta => wh.setDeletionVectors(ref, enabled = false)
-        case Warehouse.ColumnMappingMeta =>
-          throw new UnsupportedOperationException(
-            s"${Warehouse.ColumnMappingMeta} cannot be unset: committed " +
-              "data files carry field ids and name-based reads would " +
-              "silently misread renamed columns — copy into a fresh " +
-              "unmapped table instead")
-        case k => throw new UnsupportedOperationException(
-          s"graft UNSET TBLPROPERTIES governs ${Warehouse.CheckMetaPrefix}" +
-            s"<name>, ${Warehouse.GenMetaPrefix}<col>, " +
-            s"${Warehouse.DefaultMetaPrefix}<col>, " +
-            s"${Warehouse.IdentityMetaPrefix}<col>, " +
-            s"${Warehouse.CdfMeta} and ${Warehouse.DvMeta} only; " +
-            s"'$k' is not a governed table property")
-      }
-    }
+    // SET/UNSET TBLPROPERTIES — the SQL spelling of the governed table
+    // properties (Delta's own idiom); ungoverned keys refuse loudly
+    sets.foreach(s => wh.features.setProperty(ref, s.property, s.value))
+    unsets.foreach(u => wh.features.unsetProperty(ref, u.property))
     if (adds.nonEmpty) {
       val fields = adds.map { a =>
         require(a.fieldNames().length == 1,
@@ -781,11 +682,8 @@ private[catalog] final class GraftSqlTable(spark: SparkSession,
     * back; an empty table answers from the CREATE TABLE declared meta.
     */
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] = {
-    val cols =
-      if (snap.files.nonEmpty) partitionFields.fieldNames.toSeq
-      else wh.metaColumns(snap.ref, Warehouse.PartitionByMeta)
-    cols.map(org.apache.spark.sql.connector.expressions.Expressions.identity)
-      .toArray
+    wh.layoutOf(snap)
+      .map(org.apache.spark.sql.connector.expressions.Expressions.identity).toArray
   }
 
   /** `SHOW TBLPROPERTIES graft....` — the committed version, the
@@ -915,9 +813,7 @@ private[catalog] final class GraftSqlTable(spark: SparkSession,
               // CREATE TABLE's declared meta while still fileless) and
               // the stats-column set (blooms auto-carry inside
               // overwrite's durable-property logic)
-              val partCols =
-                if (snap.files.nonEmpty) Warehouse.partDirCols(snap.files)
-                else wh.metaColumns(snap.ref, Warehouse.PartitionByMeta)
+              val partCols = wh.layoutOf(snap)
               val statCols = (wh.statColumns(snap.ref) ++
                 (if (snap.files.isEmpty)
                    wh.metaColumns(snap.ref, Warehouse.StatsColumnsMeta)
@@ -1043,10 +939,8 @@ private[catalog] final class GraftFileIndex(spark: SparkSession,
       : Map[String, (String, String, Boolean)] = {
     val partType = partitionSchema.fields.map(f => f.name -> f.dataType).toMap
     if (partType.isEmpty || snap.version < 0) Map.empty
-    else wh.commitMeta(snap.ref, snap.version).iterator.collect {
-      case (k, e) if k.startsWith(Warehouse.GenMetaPrefix) && e.nonEmpty &&
-          partType.contains(k.stripPrefix(Warehouse.GenMetaPrefix)) =>
-        k.stripPrefix(Warehouse.GenMetaPrefix) -> e
+    else wh.features.decode(snap).generated.filter { case (p, _) =>
+      partType.contains(p)
     }.flatMap { case (p, genSql) =>
       classifyGeneration(genSql).map { case (src, monotone) =>
         src -> (p, genSql, monotone)

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{array, col, count, element_at, expr, input_file_name, lit, max, monotonically_increasing_id, spark_partition_id, split, sum, when}
+import org.apache.spark.sql.functions.{array, col, count, input_file_name, lit, split, when}
 
 /** Three-level table reference, mirroring the reference's
   * `catalog.schema.table` namespace (/root/reference/lib/ingestors.py:95,
@@ -116,6 +116,11 @@ final class Warehouse(spark: SparkSession, val root: String,
 
   /** The tables' per-file stats manifests. */
   private[catalog] val manifest = new Manifest(spark, this)
+
+  /** The tables' declared features: constraints, generations, defaults,
+    * identity, column mapping ([[TableFeatures]]).
+    */
+  private[catalog] val features = new TableFeatures(spark, this)
 
   def currentVersion(ref: TableRef): Option[Long] = txnLog.versions(ref).lastOption
 
@@ -502,7 +507,7 @@ final class Warehouse(spark: SparkSession, val root: String,
   }
 
   /** [[TxnLog.commit]] under the `wh.commit` timer (writer lock held). */
-  private def commitLocked(ref: TableRef, schemaJson: String,
+  private[catalog] def commitLocked(ref: TableRef, schemaJson: String,
                            files: Seq[String],
                            meta: Map[String, String] = Map.empty,
                            fileMeta: Map[String, (Long, Long)] = Map.empty,
@@ -529,12 +534,20 @@ final class Warehouse(spark: SparkSession, val root: String,
     * diffs a bounded version range instead of an ever-growing one.
     */
   def commitMetaOnly(ref: TableRef, meta: Map[String, String]): Long =
+    commitMetaOn(ref)(_ => meta)
+
+  /** [[commitMetaOnly]] of the meta `meta` returns for the snapshot it
+    * commits onto, in one writer-lock hold — where a declaration guards
+    * and validates existing rows ([[TableFeatures]]'s declare path).
+    */
+  private[catalog] def commitMetaOn(ref: TableRef)
+                                   (meta: TableSnapshot => Map[String, String]): Long =
     txnLog.withLock(ref) {
       recoverLocked(ref)
       val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
         s"$ref has no committed version to re-commit meta onto"))
       commitLocked(ref, snap.schemaJson, snap.files,
-        Warehouse.withOp(meta, "META"), snap.fileMeta)
+        Warehouse.withOp(meta(snap), "META"), snap.fileMeta)
     }
 
   /** Newest committed value of a meta key, walking versions backward
@@ -657,9 +670,10 @@ final class Warehouse(spark: SparkSession, val root: String,
     // WAP staging writes files NOW but allocates no commit: identity
     // assignment (whose high-water advance IS a commit-meta line)
     // cannot ride it — refuse rather than publish silently-NULL ids
-    require(identityColumns(ref).isEmpty,
+    val decl = features.current(ref)
+    require(decl.identity.isEmpty,
       s"stageOverwrite on $ref: GENERATED ALWAYS AS IDENTITY column(s) " +
-        s"${identityColumns(ref).keys.mkString(",")} need their " +
+        s"${decl.identity.keys.mkString(",")} need their " +
         "high-water advance committed with the allocating write — use " +
         "overwrite/append directly")
     val id = java.util.UUID.randomUUID().toString.take(12)
@@ -672,7 +686,7 @@ final class Warehouse(spark: SparkSession, val root: String,
       // nonexistent table (readers that saw 'no table' would suddenly
       // see an empty one as the side effect of a stage that never
       // succeeded)
-      val (staged, _) = stageFrame(ref, df, tmp, None, Nil,
+      val (staged, _) = stageFrame(decl, df, tmp, None, Nil,
         rewrite = false, validate = true)
       // a logless dir's readers list the directory physically — commit
       // the current listing (or empty) so they resolve the log while
@@ -1082,9 +1096,9 @@ final class Warehouse(spark: SparkSession, val root: String,
     * directory components of the files, or the CREATE TABLE declared
     * layout ([[Warehouse.PartitionByMeta]]) while the table has none.
     */
-  private def layoutOf(ref: TableRef, snap: TableSnapshot): Seq[String] =
+  private[catalog] def layoutOf(snap: TableSnapshot): Seq[String] =
     if (snap.files.nonEmpty) Warehouse.partDirCols(snap.files)
-    else metaColumns(ref, Warehouse.PartitionByMeta)
+    else metaColumns(snap.ref, Warehouse.PartitionByMeta)
 
   /** Run `body` with a fresh staging directory, removed afterwards
     * either way. A SIBLING of the table directory, so concurrent scans
@@ -1098,8 +1112,9 @@ final class Warehouse(spark: SparkSession, val root: String,
     finally { fs(stage).delete(stage, true); () }
   }
 
-  /** THE stager (writer lock held): write `df0` for a commit on `ref`
-    * as parquet under `dir` — inside `subdir` (`k=v/…`: static
+  /** THE stager (writer lock held): write `df0` for a commit on the
+    * table whose declarations are `decl` as parquet under `dir` — inside
+    * `subdir` (`k=v/…`: static
     * partitions, or a rewrite scoped to one partition directory) when
     * given — with rows routed through `partitionBy`. Unless `rewrite`
     * (an internal rewrite whose frame is already the committed truth:
@@ -1108,15 +1123,17 @@ final class Warehouse(spark: SparkSession, val root: String,
     * GENERATED columns compute (a generation may read a defaulted
     * column), then IDENTITY columns assign — inside the lock, since the
     * high-water read and its advance ride this commit. Mapped tables
-    * get their declared field ids ([[withFieldIds]]). The data write
+    * get their declared field ids ([[TableFeatures.withFieldIds]]). The data write
     * runs under `wh.data`. Returns the staged files ([[stagedFiles]])
     * and the identity high-water meta the commit must carry.
     */
-  private def stageFrame(ref: TableRef, df0: DataFrame, dir: Path,
+  private def stageFrame(decl: TableFeatures.Declared, df0: DataFrame, dir: Path,
                          subdir: Option[String], partitionBy: Seq[String],
                          rewrite: Boolean, validate: Boolean)
       : (Staged, Map[String, String]) = {
-    val df = if (rewrite) df0 else applyGenerated(ref, applyDefaults(ref, df0))
+    val ref = decl.ref
+    val df =
+      if (rewrite) df0 else features.applyGenerated(decl, features.applyDefaults(decl, df0))
     // partition values live in directory names: a routed column must be
     // in the frame, a directory-encoded one must not
     val encoded = subdir.toSeq.flatMap(_.split('/').toSeq)
@@ -1127,30 +1144,31 @@ final class Warehouse(spark: SparkSession, val root: String,
         s"in the frame and directory-encoded column(s) ${encoded.mkString(",")} " +
         s"dropped from it; the frame has ${df.columns.mkString(",")}")
     val (dfI, hwMeta, idCleanup) =
-      applyIdentityLocked(ref, df, allowSupplied = rewrite)
+      features.applyIdentityLocked(decl, df, allowSupplied = rewrite)
     try {
-      val dfF = withFieldIds(ref, dfI)
+      val (dfF, _) = features.withFieldIds(decl, dfI, mint = false)
       val writer =
         if (partitionBy.isEmpty) dfF.write else dfF.write.partitionBy(partitionBy: _*)
       graft.util.PhaseTimer.time("wh.data") {
         writer.mode("overwrite").parquet(subdir.fold(dir)(new Path(dir, _)).toString)
       }
-      (stagedFiles(ref, dir, None, dfF.schema, validate), hwMeta)
+      (stagedFiles(dir, None, dfF.schema, Option.when(validate)(decl)), hwMeta)
     } finally idCleanup()
   }
 
   /** The files under `dir` as [[land]] commits them: each file's
     * `dir`-relative path and status, files that hold no row deleted (a
     * version never lists one — Spark writes a file even for an empty
-    * frame), then CHECK constraints and supplied GENERATED values
-    * validated over the staged bytes before anything moves — unless not
-    * `validate` (maintenance rewrites move rows that already passed).
+    * frame), then CHECK constraints and supplied GENERATED values of
+    * `validate`'s declarations validated over the staged bytes before
+    * anything moves — None for maintenance rewrites, which move rows
+    * that already passed.
     * `adopt` names the files when `dir` may hold others (a streaming
     * epoch's dead task attempts); None takes the whole listing.
     */
-  private def stagedFiles(ref: TableRef, dir: Path, adopt: Option[Seq[String]],
+  private def stagedFiles(dir: Path, adopt: Option[Seq[String]],
                           schema: org.apache.spark.sql.types.StructType,
-                          validate: Boolean): Staged = {
+                          validate: Option[TableFeatures.Declared]): Staged = {
     val filesystem = fs(dir)
     val all = adopt match {
       case Some(rels) => rels.map(r => filesystem.getFileStatus(new Path(dir, r)))
@@ -1164,7 +1182,7 @@ final class Warehouse(spark: SparkSession, val root: String,
       files.map(st => filesystem.makeQualified(st.getPath).toUri.getPath
         .stripPrefix(base).stripPrefix("/")),
       files, listed = adopt.isEmpty)
-    if (validate) validateConstraintsLocked(ref, stagedRows(staged, withSchema = true))
+    validate.foreach(features.validateConstraintsLocked(_, stagedRows(staged, withSchema = true)))
     staged
   }
 
@@ -1251,7 +1269,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         // the changes frame may read the files being retired — they
         // are still in place
         val cdcMeta = changes.fold(Map.empty[String, String])(
-          stageCdcLocked(ref, snap.version, _))
+          stageCdcLocked(snap, _))
         if (staged.rels.nonEmpty)
           writeTxnJournal(ref, staged.rels, snap.files.filterNot(keep.toSet))
         moveIn(ref, staged)
@@ -1348,20 +1366,20 @@ final class Warehouse(spark: SparkSession, val root: String,
     val bootstrap = currentVersion(ref).isEmpty &&
       (!filesystem.exists(target) || listDataFiles(target).isEmpty)
     val parent = if (bootstrap) None else Some(ensureLogLocked(ref))
+    val decl = parent.fold(features.current(ref))(features.decode)
     // a full replace writes every physical file fresh from df's
     // declared schema: dropped-column tombstones clear — the bytes
     // they guarded are gone, the names are safe to re-add
-    val clearDropped = parent.toSeq.flatMap(s => commitMeta(ref, s.version).keys)
-      .filter(_.startsWith(Warehouse.DroppedMetaPrefix)).map(_ -> "").toMap
+    val clearDropped = decl.dropped.map(TableFeatures.droppedMetaKey(_) -> "").toMap
     val ndvMeta =
       if (ndvColumns.isEmpty) Map.empty[String, String]
       else Map(Warehouse.NdvColumnsMeta -> ndvColumns.mkString(","))
     // COLUMN MAPPING: a full replace may reshape the schema — declared
     // names keep their field ids, new columns mint fresh ones, and the
     // id high-water advances in this commit
-    val (df, mapMeta) = fieldIdsForReplace(ref, df0)
+    val (df, mapMeta) = features.withFieldIds(decl, df0, mint = true)
     withStage(ref, "overwrite") { stage =>
-      val (staged, hwMeta) = stageFrame(ref, df, stage,
+      val (staged, hwMeta) = stageFrame(decl, df, stage,
         if (staticPartitions.isEmpty) None
         else Some(staticPartitions.map { case (k, v) => s"$k=$v" }.mkString("/")),
         partitionBy, rewrite = internalRewrite, validate = true)
@@ -1394,8 +1412,8 @@ final class Warehouse(spark: SparkSession, val root: String,
       s"$ref does not exist — append needs a committed table (overwrite creates)")
     val snap = ensureLogLocked(ref)
     withStage(ref, "append") { stage =>
-      val (staged, hwMeta) = stageFrame(ref, df0, stage, None,
-        layoutOf(ref, snap), rewrite = false, validate = true)
+      val (staged, hwMeta) = stageFrame(features.decode(snap), df0, stage, None,
+        layoutOf(snap), rewrite = false, validate = true)
       land(ref, Some(snap), snap.files, staged, None,
         Warehouse.withOp(meta ++ hwMeta, "APPEND"), None, None)
     }
@@ -1685,297 +1703,48 @@ final class Warehouse(spark: SparkSession, val root: String,
     currentVersion(ref).toSeq.flatMap(v => commitMeta(ref, v).get(key))
       .flatMap(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
 
-  /** METADATA-ONLY declared-type widening (Delta's type widening,
-    * `ALTER TABLE ... ALTER COLUMN ... TYPE`): byte→short→int→long,
-    * any of those →double, float→double, and decimal PRECISION growth
-    * at the same scale. One log append, zero data movement — reads are
-    * declared-schema and Spark's vectorized parquet reader up-casts
-    * narrower physical values on the fly, so old files keep their
-    * narrow bytes while new writes land wide (the 100 TB shape: the
-    * first int counter to overflow costs one metadata commit, not a
-    * table rewrite). NARROWING refuses loudly, as does any decimal
-    * SCALE change — parquet decimals store unscaled integers, and
-    * reinterpreting them under another scale silently multiplies
-    * every historical value.
-    *
-    * The stats manifest FOLLOWS in the same operation
-    * ([[Manifest.castColumn]]): min/max re-cast, the column's blooms
-    * nulled, since narrow-width words probed at the wide width would
-    * FALSELY SKIP files. A crash between the schema commit and the
-    * manifest swap stays safe: probes hash at the MANIFEST's own type
-    * (still narrow), and the next manifest union heals the drift.
-    *
-    * Refused for partition columns (the directory string is typed by
-    * the declared schema — reinterpreting the layout is not a
-    * metadata operation) and for columns a GENERATED column reads or
-    * is (the generation's expression re-types with its inputs; its
-    * committed values would silently disagree with recomputation).
-    */
+  // ------------------------------------------------ table features
+  // One-line entry points over [[TableFeatures]]: declarations, their
+  // listings, column mapping and the schema-evolution verbs.
+
   def widenColumnType(ref: TableRef, column: String,
                       newType: org.apache.spark.sql.types.DataType): Long =
-    txnLog.withLock(ref) {
-      recoverLocked(ref)
-      val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
-        s"$ref has no committed version — widenColumnType alters an existing table"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val field = schema.find(_.name.equalsIgnoreCase(column)).getOrElse(
-        throw new IllegalArgumentException(
-          s"widenColumnType on $ref: no column '$column' " +
-            s"(have ${schema.fieldNames.mkString(",")})"))
-      require(Warehouse.isTypeWidening(field.dataType, newType),
-        s"ALTER COLUMN TYPE on $ref.${field.name}: ${field.dataType.sql} -> " +
-          s"${newType.sql} is not a sanctioned widening " +
-          "(byte->short->int->long, integral->double, float->double, " +
-          "decimal precision growth at the same scale) — narrowing or " +
-          "reinterpreting would corrupt committed values")
-      val partCols = (Warehouse.partDirCols(snap.files) ++
-        metaColumns(ref, Warehouse.PartitionByMeta)).toSet
-      require(!partCols.exists(_.equalsIgnoreCase(column)),
-        s"widenColumnType on $ref cannot alter partition column " +
-          s"'${field.name}' — the directory layout is typed by it")
-      val genTouched = generatedColumns(ref).filter { case (c, e) =>
-        c.equalsIgnoreCase(column) ||
-          Warehouse.exprRefs(e).contains(field.name.toLowerCase)
-      }
-      require(genTouched.isEmpty,
-        s"widenColumnType on $ref: GENERATED column(s) " +
-          s"${genTouched.keys.mkString(",")} are (or read) '${field.name}' " +
-          "— drop the generation first (re-add it after)")
-      val widened = org.apache.spark.sql.types.StructType(schema.map(f =>
-        if (f.name.equalsIgnoreCase(field.name)) f.copy(dataType = newType)
-        else f))
-      val v = commitLocked(ref, widened.json, snap.files,
-        Map(Warehouse.OpMeta -> "WIDEN_COLUMN"), snap.fileMeta)
-      manifest.castColumn(ref, field.name, newType)
-      v
-    }
-
-  /** METADATA-ONLY column addition (Delta's `ALTER TABLE ADD COLUMNS`):
-    * widen the committed schema with new NULLABLE fields — one log
-    * append, ZERO data movement (the 100 TB shape: adding a column to
-    * a petabyte table is instant). Existing files simply lack the
-    * columns; every read surface null-backfills by name (the SQL
-    * catalog's parquet scan does this natively for requested-but-
-    * absent columns, [[readSnapshot]] adds the missing committed
-    * columns explicitly), and later writes that carry values mix
-    * freely with old files. Time travel to a pre-widening version
-    * keeps the old schema — the schema rides the snapshot. Same-name
-    * collisions are refused; nullability is forced (a non-null new
-    * column would instantly be violated by every existing row).
-    */
+    features.widenColumnType(ref, column, newType)
   def addColumns(ref: TableRef,
                  fields: Seq[org.apache.spark.sql.types.StructField]): Long =
-    txnLog.withLock(ref) {
-      recoverLocked(ref)
-      require(fields.nonEmpty, "addColumns needs at least one field")
-      val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
-        s"$ref has no committed version — addColumns widens an existing table"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val clash = fields.map(_.name).filter(n =>
-        schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-      require(clash.isEmpty,
-        s"addColumns to $ref: column(s) ${clash.mkString(",")} already exist")
-      val meta = commitMeta(ref, snap.version)
-      // mapping counts only when the schema actually CARRIES ids (a
-      // restore below the enable point leaves the meta on over an
-      // id-less schema — there, reads resolve by name and the
-      // resurrection guard must hold exactly as for unmapped tables)
-      val mapping = meta.get(Warehouse.ColumnMappingMeta).contains("id") &&
-        schema.forall(_.metadata.contains(Warehouse.FieldIdKey))
-      // resurrection guard: a previously-dropped name's bytes still sit
-      // in live files, and a declared-schema read would surface them as
-      // the "new" column's values. UNDER COLUMN MAPPING the guard is
-      // unnecessary by construction — reads resolve by field id and
-      // ids are never reused, so the old bytes are unreachable no
-      // matter what the new column is called.
-      val dead = fields.map(_.name).filter(n =>
-        meta.get(Warehouse.droppedMetaKey(n.toLowerCase)).exists(_.nonEmpty))
-      require(mapping || dead.isEmpty,
-        s"addColumns to $ref: column(s) ${dead.mkString(",")} were " +
-          "previously dropped and live files still carry their bytes — " +
-          "a full overwrite rewrites them, or pick another name")
-      // mapped tables: new columns mint fresh ids past the high-water
-      var nextId = meta.get(Warehouse.ColumnMappingMaxIdMeta)
-        .filter(_.nonEmpty).map(_.toLong).getOrElse(0L)
-      val added = fields.map { f0 =>
-        val f = f0.copy(nullable = true)
-        if (!mapping) f
-        else {
-          nextId += 1
-          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putLong(Warehouse.FieldIdKey, nextId).build())
-        }
-      }
-      val idMeta =
-        if (!mapping) Map.empty[String, String]
-        else Map(Warehouse.ColumnMappingMaxIdMeta -> nextId.toString)
-      val widened = org.apache.spark.sql.types.StructType(schema ++ added)
-      commitLocked(ref, widened.json, snap.files,
-        Map(Warehouse.OpMeta -> "ADD_COLUMNS") ++ idMeta, snap.fileMeta)
-    }
-
-  /** METADATA-ONLY column removal (`ALTER TABLE DROP COLUMNS` without
-    * Delta's column-mapping machinery — possible here because reads
-    * are declared-schema, so a column absent from the committed schema
-    * is simply never requested from the files that still carry its
-    * bytes; [[vacuum]]-then-[[compact]] reclaims them physically).
-    * One log append, zero data movement; time travel below the narrow
-    * keeps the column. Refused for partition columns (directory-
-    * encoded — the layout IS the column) and for columns a live CHECK
-    * constraint mentions (the next write's validation would fail
-    * unresolved).
-    */
+    features.addColumns(ref, fields)
   def dropColumns(ref: TableRef, names: Seq[String]): Long =
-    txnLog.withLock(ref) {
-      recoverLocked(ref)
-      require(names.nonEmpty, "dropColumns needs at least one column")
-      val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
-        s"$ref has no committed version — dropColumns narrows an existing table"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val missing = names.filterNot(n =>
-        schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-      require(missing.isEmpty,
-        s"dropColumns on $ref: column(s) ${missing.mkString(",")} do not exist")
-      val partCols = (Warehouse.partDirCols(snap.files)
-        ++ (if (snap.files.isEmpty) // still-empty createTable layout
-              metaColumns(ref, Warehouse.PartitionByMeta)
-            else Nil)).toSet
-      val parts = names.filter(partCols.contains)
-      require(parts.isEmpty,
-        s"dropColumns on $ref cannot drop partition column(s) " +
-          s"${parts.mkString(",")} — the directory layout is the column")
-      // the constraint's actual attribute set (the predicate parsed at
-      // set time, so this parse cannot fail) — a column named `r` must
-      // drop cleanly while `price > 0` is live, and only a genuinely
-      // referenced column refuses
-      val dropNames = names.map(_.toLowerCase).toSet
-      val referenced = checkConstraints(ref).filter { case (_, p) =>
-        org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-          .parseExpression(p).collect {
-            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-              a.nameParts.last.toLowerCase // `t.price` still guards `price`
-          }.exists(n => dropNames.contains(n))
-      }
-      require(referenced.isEmpty,
-        s"dropColumns on $ref: CHECK constraint(s) " +
-          s"${referenced.keys.mkString(",")} mention the column(s) — drop " +
-          "the constraint first")
-      // same guard for GENERATED columns: dropping the generated
-      // column itself, or a column its expression reads, would leave a
-      // generation over nothing
-      val genTouched = generatedColumns(ref).filter { case (c, e) =>
-        dropNames.contains(c.toLowerCase) ||
-          org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-            .parseExpression(e).collect {
-              case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-                a.nameParts.last.toLowerCase
-            }.exists(dropNames.contains)
-      }
-      require(genTouched.isEmpty,
-        s"dropColumns on $ref: GENERATED column(s) " +
-          s"${genTouched.keys.mkString(",")} are (or are derived from) the " +
-          "column(s) — drop the generation first (dropGeneratedColumn)")
-      val idTouched = identityColumns(ref).keys
-        .filter(c => dropNames.contains(c.toLowerCase))
-      require(idTouched.isEmpty,
-        s"dropColumns on $ref: IDENTITY column(s) " +
-          s"${idTouched.mkString(",")} — drop the identity first " +
-          "(dropIdentityColumn)")
-      // a dropped column's DEFAULT dies with it (tombstoned in the
-      // same commit), so a later same-name re-add starts clean
-      val deadDefaults = columnDefaults(ref).keys
-        .filter(c => dropNames.contains(c.toLowerCase))
-        .map(c => Warehouse.defaultMetaKey(c) -> "").toMap
-      val dropSet = dropNames
-      require(schema.count(f => !dropSet.contains(f.name.toLowerCase)) >= 1,
-        s"dropColumns on $ref would leave no columns")
-      val narrowed = org.apache.spark.sql.types.StructType(
-        schema.filterNot(f => dropSet.contains(f.name.toLowerCase)))
-      // tombstone the names: live files still CARRY the bytes, so a
-      // same-name re-add would resurrect them (the hazard Delta's
-      // column mapping exists for) — [[addColumns]] refuses tombstoned
-      // names until a full rewrite replaces every physical file
-      commitLocked(ref, narrowed.json, snap.files,
-        Map(Warehouse.OpMeta -> "DROP_COLUMNS") ++ deadDefaults ++
-          names.map(n => Warehouse.droppedMetaKey(n.toLowerCase) -> "1"),
-        snap.fileMeta)
-    }
-
-  /** RENAME COLUMN — a GUARDED FULL REWRITE through the commit
-    * protocol, NOT a metadata flip: files are name-based by deliberate
-    * design (no Delta-style column-mapping layer — every read surface
-    * would grow a logical→physical translation), so the only sound
-    * rename writes every physical file fresh under the new name. One
-    * versioned OVERWRITE commit, O(data) — the cost is stated, not
-    * hidden (at 100 TB you schedule it like a compaction; per-file
-    * name mapping is the eventual O(1) unlock). What carries across:
-    * stats/bloom manifest columns follow the rename, partition layout
-    * is preserved, dropped-name tombstones clear (the rewrite replaced
-    * the bytes they guarded — renaming INTO a previously-dropped name
-    * is safe), time travel below the rename keeps the old name (the
-    * schema rides the snapshot). Refused for partition columns (the
-    * directory layout IS the column) and for columns a live CHECK
-    * constraint references (drop the constraint first). CAS-guarded:
-    * a concurrent commit between the read and the rewrite fails this
-    * loudly instead of being silently lost.
-    */
-  /** Whether this table reads and writes by parquet FIELD ID (column
-    * mapping, Delta's `columnMapping.mode = 'id'`). */
-  def columnMappingEnabled(ref: TableRef): Boolean =
-    currentVersion(ref).exists(v =>
-      commitMeta(ref, v).get(Warehouse.ColumnMappingMeta).contains("id"))
-
-  /** Enable COLUMN MAPPING: every committed schema field gets a stable
-    * parquet FIELD ID, every later data file carries the ids, and
-    * reads resolve columns BY ID (`spark.sql.parquet.fieldId.*` —
-    * Spark's native mechanism, the same one Delta/Iceberg id-mode
-    * mapping rides). What it buys at 100 TB: [[renameColumn]] becomes
-    * ONE metadata commit (the logical name changes, the id — and
-    * therefore every physical byte — stays), and a dropped column's
-    * name can be re-added safely (ids are never reused, so the old
-    * bytes are unreachable by construction, no tombstone needed).
-    *
-    * Enable on a table with NO data files (right after CREATE TABLE):
-    * existing files were written without ids and id-based reads would
-    * refuse them loudly — rather than silently null-fill, enabling on
-    * a non-empty table refuses with the rewrite recipe.
-    */
-  def enableColumnMapping(ref: TableRef): Long = txnLog.withLock(ref) {
-    recoverLocked(ref)
-    val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
-      s"$ref has no committed version — create the table first"))
-    // idempotent ONLY when the current schema actually carries ids: a
-    // RESTORE below the enable point leaves the meta on over an
-    // id-less schema, and re-enabling must re-assign (subject to the
-    // same empty-table requirement)
-    val cur = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    if (columnMappingEnabled(ref) &&
-        cur.forall(_.metadata.contains(Warehouse.FieldIdKey)))
-      return snap.version
-    require(snap.files.isEmpty,
-      s"enableColumnMapping on $ref: ${snap.files.size} data file(s) were " +
-        "written WITHOUT field ids and id-based reads cannot resolve " +
-        "them. Enable mapping right after CREATE TABLE (before the " +
-        "first write); for an existing table, copy into a fresh mapped " +
-        "table (createTable + enableColumnMapping + append(read(...)))")
-    var next = 0L
-    val mapped = org.apache.spark.sql.types.StructType(cur.map { f =>
-      next += 1
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata)
-        .putLong(Warehouse.FieldIdKey, next).build())
-    })
-    ensureFieldIdConfs()
-    commitLocked(ref, mapped.json, snap.files,
-      Map(Warehouse.OpMeta -> "ENABLE_COLUMN_MAPPING",
-        Warehouse.ColumnMappingMeta -> "id",
-        Warehouse.ColumnMappingMaxIdMeta -> next.toString), snap.fileMeta)
-  }
+    features.dropColumns(ref, names)
+  def renameColumn(ref: TableRef, from: String, to: String): Long =
+    features.renameColumn(ref, from, to)
+  def enableColumnMapping(ref: TableRef): Long = features.enableColumnMapping(ref)
+  def columnMappingEnabled(ref: TableRef): Boolean = features.current(ref).mapped
+  def setCheckConstraint(ref: TableRef, name: String, predicate: String): Long =
+    features.setCheckConstraint(ref, name, predicate)
+  def dropCheckConstraint(ref: TableRef, name: String): Long =
+    features.dropCheckConstraint(ref, name)
+  def checkConstraints(ref: TableRef): Map[String, String] = features.current(ref).checks
+  def setGeneratedColumn(ref: TableRef, column: String, exprSql: String): Long =
+    features.setGeneratedColumn(ref, column, exprSql)
+  def dropGeneratedColumn(ref: TableRef, column: String): Long =
+    features.dropGeneratedColumn(ref, column)
+  def generatedColumns(ref: TableRef): Map[String, String] = features.current(ref).generated
+  def setColumnDefault(ref: TableRef, column: String, exprSql: String): Long =
+    features.setColumnDefault(ref, column, exprSql)
+  def dropColumnDefault(ref: TableRef, column: String): Long =
+    features.dropColumnDefault(ref, column)
+  def columnDefaults(ref: TableRef): Map[String, String] = features.current(ref).defaults
+  def setIdentityColumn(ref: TableRef, column: String,
+                        start: Long = 1L, step: Long = 1L): Long =
+    features.setIdentityColumn(ref, column, start, step)
+  def dropIdentityColumn(ref: TableRef, column: String): Long =
+    features.dropIdentityColumn(ref, column)
+  def identityColumns(ref: TableRef): Map[String, (Long, Long)] =
+    features.current(ref).identity
+  private[catalog] def applyIdentityLocked(ref: TableRef, df: DataFrame,
+                                           allowSupplied: Boolean)
+      : (DataFrame, Map[String, String], () => Unit) =
+    features.applyIdentityLocked(features.current(ref), df, allowSupplied)
 
   /** The two Spark confs field-id matching needs — runtime SQL confs,
     * safe no-ops for schemas without id metadata (name matching as
@@ -1987,189 +1756,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
   }
 
-  /** Attach the declared field-id metadata to a write frame (no-op for
-    * unmapped tables): every data file of a mapped table must carry
-    * ids — a file written without them fails reads LOUDLY (by design:
-    * `fieldId.read.ignoreMissing` stays false, so a missed write path
-    * surfaces instead of silently reading nulls). Columns outside the
-    * declared schema (internal markers, CDC flags) pass through.
-    */
-  private def withFieldIds(ref: TableRef, df: DataFrame): DataFrame = {
-    if (!columnMappingEnabled(ref)) return df
-    ensureFieldIdConfs()
-    val declared = schemaOf(ref)
-    df.select(df.columns.map { c =>
-      declared.find(_.name.equalsIgnoreCase(c)) match {
-        case Some(f) if f.metadata.contains(Warehouse.FieldIdKey) =>
-          col(c).as(c, f.metadata)
-        case _ => col(c)
-      }
-    }.toIndexedSeq: _*)
-  }
-
-  /** [[withFieldIds]] for FULL REPLACES, where the frame may carry a
-    * NEW column set: declared names keep their ids, new columns mint
-    * fresh ones past the never-reused high-water, and the returned
-    * meta advances it in the same commit.
-    */
-  private def fieldIdsForReplace(ref: TableRef, df: DataFrame)
-      : (DataFrame, Map[String, String]) = {
-    if (currentVersion(ref).isEmpty || !columnMappingEnabled(ref))
-      return (df, Map.empty)
-    ensureFieldIdConfs()
-    val declared = schemaOf(ref)
-    val meta = commitMeta(ref, currentVersion(ref).get)
-    var next = meta.get(Warehouse.ColumnMappingMaxIdMeta)
-      .filter(_.nonEmpty).map(_.toLong).getOrElse(0L)
-    val start = next
-    val out = df.select(df.columns.map { c =>
-      declared.find(_.name.equalsIgnoreCase(c)) match {
-        case Some(f) if f.metadata.contains(Warehouse.FieldIdKey) =>
-          col(c).as(c, f.metadata)
-        case _ =>
-          next += 1
-          col(c).as(c, new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong(Warehouse.FieldIdKey, next).build())
-      }
-    }.toIndexedSeq: _*)
-    (out, if (next == start) Map.empty
-          else Map(Warehouse.ColumnMappingMaxIdMeta -> next.toString))
-  }
-
-  def renameColumn(ref: TableRef, from: String, to: String): Long = {
-    require(to.nonEmpty && !to.exists(c => c == '\n' || c == '\t'),
-      s"renameColumn on $ref: invalid target name '$to'")
-    val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
-      s"$ref has no committed version — renameColumn rewrites an existing table"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val field = schema.find(_.name.equalsIgnoreCase(from)).getOrElse(
-      throw new IllegalArgumentException(
-        s"renameColumn on $ref: column '$from' does not exist"))
-    require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
-      s"renameColumn on $ref: column '$to' already exists")
-    val partCols = (Warehouse.partDirCols(snap.files)
-      ++ (if (snap.files.isEmpty) metaColumns(ref, Warehouse.PartitionByMeta)
-          else Nil))
-    require(!partCols.exists(_.equalsIgnoreCase(from)),
-      s"renameColumn on $ref cannot rename partition column '$from' — " +
-        "the directory layout is the column")
-    val referenced = checkConstraints(ref).filter { case (_, p) =>
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(p).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.last.toLowerCase
-        }.contains(from.toLowerCase)
-    }
-    require(referenced.isEmpty,
-      s"renameColumn on $ref: CHECK constraint(s) " +
-        s"${referenced.keys.mkString(",")} reference '$from' — drop the " +
-        "constraint first (re-add it against the new name after)")
-    // GENERATED columns refuse the same way: renaming the generated
-    // column or one its expression reads would leave the carried
-    // generation dangling (the next write fails unresolved)
-    val genTouched = generatedColumns(ref).filter { case (c, e) =>
-      c.equalsIgnoreCase(from) ||
-        Warehouse.exprRefs(e).contains(from.toLowerCase)
-    }
-    require(genTouched.isEmpty,
-      s"renameColumn on $ref: GENERATED column(s) " +
-        s"${genTouched.keys.mkString(",")} are (or read) '$from' — drop " +
-        "the generation first (re-add it against the new name after)")
-    // IDENTITY and DEFAULT declarations FOLLOW the rename: their meta
-    // keys re-key in the same rewrite commit (old key tombstoned), and
-    // the identity high-water carries so the sequence never restarts
-    val idMeta: Map[String, String] =
-      identityColumns(ref).find(_._1.equalsIgnoreCase(from)) match {
-        case Some((c, (start, step))) =>
-          val hw = commitMeta(ref, snap.version)
-            .get(Warehouse.identityHwKey(c))
-          Map(Warehouse.identityMetaKey(c) -> "",
-            Warehouse.identityMetaKey(to) -> s"$start,$step",
-            Warehouse.identityHwKey(c) -> "") ++
-            hw.map(Warehouse.identityHwKey(to) -> _)
-        case None => Map.empty
-      }
-    val defMeta: Map[String, String] =
-      columnDefaults(ref).find(_._1.equalsIgnoreCase(from)) match {
-        case Some((c, e)) =>
-          Map(Warehouse.defaultMetaKey(c) -> "",
-            Warehouse.defaultMetaKey(to) -> e)
-        case None => Map.empty
-      }
-    // COLUMN MAPPING: the rename is ONE metadata commit — the field id
-    // (and every physical byte keyed by it) stays, only the logical
-    // name changes; identity/default declarations re-key exactly like
-    // the rewrite path, the stats manifest renames its columns
-    // (O(manifest)). Refused while CDF is on: committed change files
-    // carry the OLD name and a feed crossing the rename would union
-    // mismatched schemas — disable the feed around the rename.
-    // The field must actually CARRY its id: a RESTORE below the
-    // enable point resurrects a pre-mapping schema while the mapping
-    // meta still reads on — a metadata rename there would orphan the
-    // old-name bytes (silent NULLs); such tables take the honest
-    // rewrite below instead.
-    if (columnMappingEnabled(ref) &&
-        field.metadata.contains(Warehouse.FieldIdKey)) {
-      require(!cdfEnabled(ref),
-        s"renameColumn on $ref: the change data feed is enabled and " +
-          "committed change files carry the old name — " +
-          "setChangeDataFeed(ref, false) around the rename (the feed " +
-          "restarts cleanly after)")
-      // the DECLARED-layout meta (CREATE TABLE's stats/bloom/partition
-      // comma-lists) follows the rename too: on a still-empty mapped
-      // table the first append reads these to bootstrap its manifest,
-      // and a stale old name would silently never seed stats/blooms
-      // for the renamed column
-      def followMeta(key: String): Map[String, String] = {
-        val cols = metaColumns(ref, key)
-        if (cols.exists(_.equalsIgnoreCase(from)))
-          Map(key -> cols.map(c =>
-            if (c.equalsIgnoreCase(from)) to else c).mkString(","))
-        else Map.empty
-      }
-      val layoutMeta = followMeta(Warehouse.StatsColumnsMeta) ++
-        followMeta(Warehouse.BloomColumnsMeta) ++
-        followMeta(Warehouse.PartitionByMeta)
-      return txnLog.withLock(ref) {
-        recoverLocked(ref)
-        val cur = snapshot(ref).get
-        require(cur.version == snap.version,
-          s"renameColumn on $ref lost a race: planned against " +
-            s"v${snap.version}, table is now at v${cur.version} — re-run")
-        val renamed = org.apache.spark.sql.types.StructType(schema.map(f =>
-          if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f))
-        // manifest FIRST, commit second: a crash in between leaves the
-        // schema un-renamed with a new-named manifest — pruning
-        // degrades conservatively (no min_<old> column matches) and
-        // RE-RUNNING the rename heals (the manifest pass is a no-op,
-        // the commit lands). Commit-first would strand an old-named
-        // manifest forever: statColumns would keep returning the old
-        // name, every later write would filter it out, and stats for
-        // the column would silently stop.
-        manifest.renameColumn(ref, field.name, to)
-        commitLocked(ref, renamed.json, cur.files,
-          idMeta ++ defMeta ++ layoutMeta ++
-            Map(Warehouse.OpMeta -> "RENAME_COLUMN"), cur.fileMeta,
-          dv = Some(cur.dvMap))
-      }
-    }
-    def follow(cols: Seq[String]): Seq[String] =
-      cols.map(c => if (c.equalsIgnoreCase(field.name)) to else c)
-    val statCols = follow(statColumns(ref))
-    val blooms = follow(bloomColumns(ref))
-    val df = readSnapshot(snap).withColumnRenamed(field.name, to)
-    overwrite(ref, df,
-      partitionBy = partCols.filter(df.columns.contains),
-      statsColumns = statCols.filter(df.columns.contains),
-      bloomColumns = blooms.filter(df.columns.contains),
-      expectedVersion = Some(snap.version),
-      meta = idMeta ++ defMeta ++ Map(Warehouse.OpMeta -> "RENAME_COLUMN"),
-      // the frame is the complete committed truth under the new name
-      internalRewrite = true)
-    currentVersion(ref).get
-  }
-
   /** DEEP CLONE (Delta's `CREATE TABLE ... CLONE src [VERSION AS OF]`):
     * copy a committed snapshot — the CURRENT one or a pinned
     * historical version — into a fresh table through one bootstrap
@@ -2178,14 +1764,13 @@ final class Warehouse(spark: SparkSession, val root: String,
     * name, and the source stays free to churn/vacuum (time travel on
     * the source dies at its vacuum horizon; the clone is forever).
     * What carries: data at the pinned version, partition layout,
-    * stats/bloom manifest columns, CHECK constraints and the CDF flag
-    * (properties copy verbatim, Delta's clone semantics); what does
-    * NOT: the source's history (the clone starts at version 1) and its
-    * change feed. Lineage rides the commit meta
+    * stats/bloom manifest columns, and the pinned version's carried
+    * meta that [[TableFeatures.clonedMeta]] names; what does NOT: the
+    * source's history (the clone starts at version 1) and its change
+    * feed. Lineage rides the commit meta
     * (`graft.clone.source`/`source_version`). Refuses an existing
-    * destination (overwrite's `onlyIfAbsent` race guard). Deep by
-    * design: a shallow (zero-copy) clone needs absolute-path file
-    * entries the table-relative log deliberately avoids.
+    * destination (overwrite's `onlyIfAbsent` race guard). `shallow`
+    * copies no data instead ([[shallowClone]]).
     */
   def cloneTable(ref: TableRef, dst: TableRef,
                  asOf: Option[Long] = None,
@@ -2196,27 +1781,18 @@ final class Warehouse(spark: SparkSession, val root: String,
         s"$ref has no committed version — cloneTable copies a committed table"))
     if (shallow) return shallowClone(ref, dst, snap)
     val df = readSnapshot(snap)
-    val partCols = (Warehouse.partDirCols(snap.files)
-      ++ (if (snap.files.isEmpty) metaColumns(ref, Warehouse.PartitionByMeta)
-          else Nil))
     val statCols = statColumns(ref).filter(df.columns.contains)
     val blooms = bloomColumns(ref).filter(statCols.contains)
     // carried meta comes from the PINNED version, not the current one
     // (Delta's VERSION AS OF clone copies that version's metadata): a
     // constraint added after asOf must not land on a clone whose pinned
     // rows never passed it, and a post-asOf CDF toggle isn't part of
-    // the state being pinned
-    val carried = commitMeta(ref, snap.version).filter { case (k, v) =>
-        v.nonEmpty && (k.startsWith(Warehouse.CheckMetaPrefix) ||
-          k == Warehouse.CdfMeta ||
-          // a still-EMPTY source's declared layout lives only in meta
-          // (no files to derive from) — the clone must keep declaring it
-          (snap.files.isEmpty &&
-            Seq(Warehouse.PartitionByMeta, Warehouse.StatsColumnsMeta,
-              Warehouse.BloomColumnsMeta).contains(k)))
-      }
+    // the state being pinned. A still-EMPTY source's declared layout
+    // lives only in meta (no files to derive from): the clone keeps it.
+    val carried = TableFeatures.clonedMeta(commitMeta(ref, snap.version),
+      layout = snap.files.isEmpty)
     overwrite(dst, df,
-      partitionBy = partCols.filter(df.columns.contains),
+      partitionBy = layoutOf(snap).filter(df.columns.contains),
       statsColumns = statCols, bloomColumns = blooms,
       onlyIfAbsent = true,
       meta = carried ++ Map(Warehouse.OpMeta -> "CLONE",
@@ -2260,10 +1836,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         "shallow clone — materialize it (overwrite(ref, read(ref))) or " +
         "deep-clone instead")
     val prefix = s"${Warehouse.ForeignPrefix}${ref.catalog}/${ref.schema}/${ref.table}/"
-    val carried = commitMeta(ref, snap.version).filter { case (k, v) =>
-      v.nonEmpty && (k.startsWith(Warehouse.CheckMetaPrefix) ||
-        k == Warehouse.CdfMeta)
-    }
+    val carried = TableFeatures.clonedMeta(commitMeta(ref, snap.version), layout = false)
     // PIN FIRST: from this commit on, source vacuum keeps the pinned
     // version's files — the clone can then never observe a torn source
     commitMetaOnly(ref, Map(Warehouse.pinMetaKey(dst) -> snap.version.toString))
@@ -2364,454 +1937,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     ()
   }
 
-  /** Add a CHECK constraint (Delta's `ALTER TABLE ADD CONSTRAINT`
-    * counterpart): a SQL predicate every row of every future write
-    * must satisfy (NULL passes, SQL CHECK semantics), carried as the
-    * commit-meta key `graft.check.<name>` and ENFORCED BY THE COMMIT
-    * PROTOCOL — overwrite, append, file replacement (merge/update),
-    * and streaming-sink epochs all validate their STAGED files before
-    * any data moves, whatever surface issued the write (Scala, SQL
-    * INSERT/UPDATE/MERGE, `writeStream.toTable`). Existing rows are
-    * validated NOW — a constraint the current table violates is
-    * refused, so a constraint that exists has always held. Maintenance
-    * rewrites (compact/z-order) skip re-validation: they move rows
-    * that already passed.
-    */
-  def setCheckConstraint(ref: TableRef, name: String, predicate: String): Long = {
-    require(name.nonEmpty && name.forall(c =>
-      c.isLetterOrDigit || c == '_'), s"constraint name must be word-like: $name")
-    require(predicate.trim.nonEmpty &&
-      !predicate.exists(c => c == '\t' || c == '\n'),
-      s"constraint predicate must be single-line SQL: $predicate")
-    val p = org.apache.spark.sql.functions.expr(predicate) // parse now
-    val current = read(ref)
-    val violations = current.filter(p <=> lit(false)).count()
-    if (violations > 0)
-      throw new IllegalStateException(
-        s"cannot add CHECK constraint '$name' to $ref: $violations " +
-          s"existing row(s) violate ($predicate) — a constraint that " +
-          "exists must have always held")
-    commitMetaOnly(ref, Map(Warehouse.checkMetaKey(name) -> predicate))
-  }
-
-  /** Drop a CHECK constraint. Carried meta cannot be deleted, so the
-    * key keeps an empty tombstone value, which enforcement skips.
-    */
-  def dropCheckConstraint(ref: TableRef, name: String): Long =
-    commitMetaOnly(ref, Map(Warehouse.checkMetaKey(name) -> ""))
-
-  /** GENERATED column (Delta `GENERATED ALWAYS AS (expr)`): declare
-    * that `column` is always `exprSql` of the row's other columns —
-    * carried meta `graft.generated.<col>`. Writers that OMIT the
-    * column get it computed ([[overwrite]]/[[append]], so SQL INSERT
-    * and CTAS through them too); writers that SUPPLY it are validated
-    * in the same staged one-pass aggregate as CHECK constraints —
-    * every write surface, because generation that only some paths
-    * honor is how derived columns silently drift from their source at
-    * 100 TB. Existing rows must already satisfy the generation (the
-    * have-always-held contract CHECK constraints carry). The common
-    * use is a derived partition column (`order_day` from a timestamp):
-    * the expression computes once at write time and the directory
-    * layout prunes on it forever after.
-    */
-  def setGeneratedColumn(ref: TableRef, column: String,
-                         exprSql: String): Long = {
-    require(exprSql.trim.nonEmpty &&
-      !exprSql.exists(c => c == '\t' || c == '\n'),
-      s"generation expression must be single-line SQL: $exprSql")
-    val schema = schemaOf(ref)
-    require(schema.fieldNames.contains(column),
-      s"cannot generate '$column' on $ref: not a declared column " +
-        s"(have ${schema.fieldNames.mkString(",")})")
-    // identity interplay refuses BOTH ways: an identity column is
-    // engine-assigned (never derived), and a generation cannot read
-    // one (generations compute before identity assignment)
-    val ids = identityColumns(ref)
-    require(!ids.keys.exists(_.equalsIgnoreCase(column)),
-      s"'$column' on $ref is a GENERATED ALWAYS AS IDENTITY column — " +
-        "the engine assigns it; a generation cannot")
-    val idRead = ids.keys.filter(c =>
-      Warehouse.exprRefs(exprSql).contains(c.toLowerCase))
-    require(idRead.isEmpty,
-      s"generation for '$column' on $ref reads IDENTITY column(s) " +
-        s"${idRead.mkString(",")} — generations compute before identity " +
-        "assignment, so they can never see the assigned value")
-    val e = org.apache.spark.sql.functions.expr(exprSql) // parse now
-    val bad = read(ref).filter(!(col(column) <=> e)).count()
-    if (bad > 0)
-      throw new IllegalStateException(
-        s"cannot declare '$column' GENERATED AS ($exprSql) on $ref: " +
-          s"$bad existing row(s) differ — a generation that exists " +
-          "must have always held")
-    commitMetaOnly(ref, Map(Warehouse.genMetaKey(column) -> exprSql))
-  }
-
-  /** Drop a generation (empty tombstone, like constraints). */
-  def dropGeneratedColumn(ref: TableRef, column: String): Long =
-    commitMetaOnly(ref, Map(Warehouse.genMetaKey(column) -> ""))
-
-  /** Live generated columns (column → expression SQL). */
-  def generatedColumns(ref: TableRef): Map[String, String] =
-    currentVersion(ref).map(v => commitMeta(ref, v).collect {
-      case (k, e) if k.startsWith(Warehouse.GenMetaPrefix) && e.nonEmpty =>
-        k.stripPrefix(Warehouse.GenMetaPrefix) -> e
-    }).getOrElse(Map.empty)
-
-  /** Column DEFAULT (`ALTER TABLE ... SET DEFAULT`): declare that a
-    * writer OMITTING `column` gets `exprSql` materialized into the new
-    * rows — carried meta `graft.default.<col>`, applied by
-    * [[overwrite]]/[[append]] (so SQL CTAS and the ingest surface too)
-    * and by explicit-projection MERGE INSERT clauses. The expression
-    * must be CONSTANT (no column references — a row-dependent default
-    * is a GENERATED column) and is cast to the column's declared type.
-    * Existing rows are untouched (Delta's semantics: a default applies
-    * to future inserts only; historical rows keep NULL). Granularity
-    * is the FRAME: a supplied column is the caller's truth even where
-    * it holds NULLs — per-row NULL replacement would corrupt explicit
-    * NULLs, which SQL DEFAULT never does either.
-    */
-  def setColumnDefault(ref: TableRef, column: String, exprSql: String): Long = {
-    require(exprSql.trim.nonEmpty &&
-      !exprSql.exists(c => c == '\t' || c == '\n'),
-      s"default expression must be single-line SQL: $exprSql")
-    val schema = schemaOf(ref)
-    val field = schema.find(_.name.equalsIgnoreCase(column)).getOrElse(
-      throw new IllegalArgumentException(
-        s"cannot default '$column' on $ref: not a declared column " +
-          s"(have ${schema.fieldNames.mkString(",")})"))
-    require(Warehouse.exprRefs(exprSql).isEmpty,
-      s"DEFAULT for '$column' on $ref must be a constant expression " +
-        s"(no column references): ($exprSql) — a row-dependent default " +
-        "is a GENERATED column (setGeneratedColumn)")
-    require(!generatedColumns(ref).keys.exists(_.equalsIgnoreCase(column)),
-      s"'$column' on $ref is GENERATED — a generation computes when " +
-        "omitted already; a default would shadow it")
-    require(!identityColumns(ref).keys.exists(_.equalsIgnoreCase(column)),
-      s"'$column' on $ref is an IDENTITY column — the engine assigns it")
-    // evaluate once now: an unfoldable or mistyped default must refuse
-    // at declaration, not at some future write
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.expr(exprSql)
-        .cast(field.dataType)).head()
-    commitMetaOnly(ref, Map(Warehouse.defaultMetaKey(field.name) -> exprSql))
-  }
-
-  /** Drop a column default (empty tombstone, like constraints). */
-  def dropColumnDefault(ref: TableRef, column: String): Long = {
-    val key = columnDefaults(ref).keys
-      .find(_.equalsIgnoreCase(column)).getOrElse(column)
-    commitMetaOnly(ref, Map(Warehouse.defaultMetaKey(key) -> ""))
-  }
-
-  /** Live column defaults (column → constant expression SQL). */
-  def columnDefaults(ref: TableRef): Map[String, String] =
-    currentVersion(ref).map(v => commitMeta(ref, v).collect {
-      case (k, e) if k.startsWith(Warehouse.DefaultMetaPrefix) && e.nonEmpty =>
-        k.stripPrefix(Warehouse.DefaultMetaPrefix) -> e
-    }).getOrElse(Map.empty)
-
-  /** Materialize declared defaults onto a write frame for columns the
-    * caller omitted (no-op for frames that carry them). Runs BEFORE
-    * [[applyGenerated]] so a generation may read a defaulted column.
-    */
-  private def applyDefaults(ref: TableRef, df: DataFrame): DataFrame = {
-    if (currentVersion(ref).isEmpty) return df
-    val defs = columnDefaults(ref)
-      .filterNot { case (c, _) => df.columns.exists(_.equalsIgnoreCase(c)) }
-    if (defs.isEmpty) return df
-    val schema = schemaOf(ref)
-    defs.toSeq.sortBy(_._1).foldLeft(df) { case (d, (c, e)) =>
-      val t = schema.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
-        .getOrElse(throw new IllegalStateException(
-          s"default on $ref names '$c', which left the schema — " +
-            "dropColumnDefault it"))
-      d.withColumn(c, org.apache.spark.sql.functions.expr(e).cast(t))
-    }
-  }
-
-  /** IDENTITY column (Delta `GENERATED ALWAYS AS IDENTITY (START WITH
-    * s INCREMENT BY k)`): the ENGINE assigns `column` on every
-    * append/overwrite that omits it — contiguous values in the staged
-    * frame's row order, continuing from a durable high-water mark that
-    * advances inside the allocating commit itself
-    * ([[Warehouse.identityHwKey]]), so ids survive crashes and are
-    * never reused. ALWAYS semantics: a write SUPPLYING the column
-    * refuses (internal full rewrites — rename-column, subquery DML —
-    * carry committed ids through explicitly), UPDATE cannot SET it,
-    * and MERGE/replacePartitions refuse identity targets outright (a
-    * merge would forge or drift engine-assigned ids; Delta's original
-    * contract). Assignment is two-phase distributed — per-partition
-    * counts then a prefix-sum offset map — never a global window.
-    *
-    * Declared on an EMPTY column only: existing rows must all be NULL
-    * for it (a fresh table, or one just widened by [[addColumns]] —
-    * those historical NULLs stay, exactly like any widening backfill).
-    * The column must be a declared BIGINT non-partition column without
-    * a generation or default.
-    */
-  def setIdentityColumn(ref: TableRef, column: String,
-                        start: Long = 1L, step: Long = 1L): Long = {
-    require(step != 0L, s"identity step on $ref.$column must be non-zero")
-    val schema = schemaOf(ref)
-    val field = schema.find(_.name.equalsIgnoreCase(column)).getOrElse(
-      throw new IllegalArgumentException(
-        s"cannot make '$column' IDENTITY on $ref: not a declared column " +
-          s"(have ${schema.fieldNames.mkString(",")})"))
-    require(field.dataType == org.apache.spark.sql.types.LongType,
-      s"identity column '$column' on $ref must be BIGINT " +
-        s"(100 TB of rows outgrows anything narrower); got ${field.dataType}")
-    val snap = snapshot(ref)
-    val partCols = snap.toSeq.flatMap(s => Warehouse.partDirCols(s.files)) ++
-      metaColumns(ref, Warehouse.PartitionByMeta)
-    require(!partCols.exists(_.equalsIgnoreCase(column)),
-      s"identity column '$column' on $ref cannot be a partition column — " +
-        "engine-assigned values would explode the directory layout")
-    require(!generatedColumns(ref).keys.exists(_.equalsIgnoreCase(column)),
-      s"'$column' on $ref is GENERATED — drop the generation first")
-    require(!columnDefaults(ref).keys.exists(_.equalsIgnoreCase(column)),
-      s"'$column' on $ref has a DEFAULT — drop it first")
-    val reading = generatedColumns(ref).filter { case (_, e) =>
-      Warehouse.exprRefs(e).contains(field.name.toLowerCase) }
-    require(reading.isEmpty,
-      s"generation(s) ${reading.keys.mkString(",")} on $ref read " +
-        s"'$column' — generations compute before identity assignment, " +
-        "so they can never see the assigned value")
-    val nonNull = read(ref).filter(col(field.name).isNotNull).count()
-    require(nonNull == 0L,
-      s"cannot make '$column' IDENTITY on $ref: $nonNull existing row(s) " +
-        "carry values the engine did not assign — identity declares " +
-        "engine ownership from the start (historical NULLs are fine)")
-    // Reset the high-water IN THE SAME COMMIT: a prior declaration on
-    // this column (dropped, then data truncated / column re-added)
-    // leaves its high-water meta behind, and a stale hw would silently
-    // override the declared `start`. Re-declaration means "fresh
-    // sequence from MY start" — the hw seeds to start - step so the
-    // first assigned value is exactly `start`.
-    commitMetaOnly(ref,
-      Map(Warehouse.identityMetaKey(field.name) -> s"$start,$step",
-        Warehouse.identityHwKey(field.name) -> (start - step).toString))
-  }
-
-  /** Drop an identity declaration (empty tombstone; the high-water
-    * meta stays behind harmlessly — a later re-declaration starts a
-    * fresh sequence from its own `start`).
-    */
-  def dropIdentityColumn(ref: TableRef, column: String): Long = {
-    val key = identityColumns(ref).keys
-      .find(_.equalsIgnoreCase(column)).getOrElse(column)
-    commitMetaOnly(ref, Map(Warehouse.identityMetaKey(key) -> ""))
-  }
-
-  /** Live identity columns (column → (start, step)). */
-  def identityColumns(ref: TableRef): Map[String, (Long, Long)] =
-    currentVersion(ref).map(v => commitMeta(ref, v).collect {
-      case (k, v0) if k.startsWith(Warehouse.IdentityMetaPrefix) &&
-          v0.nonEmpty =>
-        k.stripPrefix(Warehouse.IdentityMetaPrefix) ->
-          Warehouse.parseIdentitySpec(k, v0)
-    }).getOrElse(Map.empty)
-
-  /** Assign identity values onto a write frame (writer lock held —
-    * the high-water read and its advance must be one atomic commit).
-    * Two-phase, 100 TB-shaped, and fully inside Tungsten (round-19
-    * verdict, next #6): one tiny count-per-partition job (map-side
-    * partial aggregate, shuffles ≤ one row per partition), a
-    * driver-folded offset array (O(#partitions)), then the ids
-    * materialize as a CODEGEN'D PROJECTION —
-    * `hw + step·(offset(partition) + row-index-in-partition + 1)` with
-    * the row index recovered from `monotonically_increasing_id`'s
-    * low 33 bits — no global sort, no single-partition window, and no
-    * InternalRow→Row→InternalRow round-trip over the frame (the old
-    * `rdd.zipWithIndex` path paid that conversion twice per row).
-    * The frame is localCheckpointed first so the count pass, the id
-    * pass, and the staged file write all see ONE materialization with
-    * pinned partition boundaries (a re-evaluated nondeterministic
-    * source would shear ids from rows).
-    *
-    * Returns the frame (declared column order restored), the
-    * high-water meta advance to merge into the allocating commit, and
-    * a cleanup thunk the caller runs once the staged write has landed
-    * (unpersists the checkpoint blocks — a no-op otherwise).
-    * Supplying the column refuses unless `allowSupplied` (internal
-    * full rewrites carrying already-committed ids).
-    */
-  private[catalog] def applyIdentityLocked(ref: TableRef, df: DataFrame,
-                                           allowSupplied: Boolean)
-      : (DataFrame, Map[String, String], () => Unit) = {
-    val noop = () => ()
-    // Internal full rewrites (renameColumn, subquery DML) carry
-    // already-committed ids through — they NEVER mint. Short-circuit
-    // before inspecting columns: a rename of the table's ONLY identity
-    // column presents a frame where the old name is absent, and
-    // falling through would resurrect the old column populated with
-    // freshly minted ids (and re-advance its tombstoned high-water).
-    if (allowSupplied) return (df, Map.empty, noop)
-    if (currentVersion(ref).isEmpty) return (df, Map.empty, noop)
-    val ids = identityColumns(ref)
-    if (ids.isEmpty) return (df, Map.empty, noop)
-    val supplied = ids.keys.filter(c =>
-      df.columns.exists(_.equalsIgnoreCase(c))).toSeq.sorted
-    val base =
-      if (supplied.isEmpty) df
-      else {
-        // SQL INSERT resolves against the FULL table schema, so an
-        // omitted identity column can arrive as an all-NULL placeholder
-        // — that IS an omission (strip and assign). Any real value is a
-        // forgery of an engine-assigned id and refuses. One bounded
-        // aggregate over the batch decides.
-        val aggs = supplied.map(c => sum(when(col(c).isNotNull, 1L)
-          .otherwise(0L)).as(s"__id_$c"))
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        val real = supplied.zipWithIndex.filter { case (_, i) =>
-          !row.isNullAt(i) && row.getLong(i) > 0L }.map(_._1)
-        require(real.isEmpty,
-          s"write to $ref supplies GENERATED ALWAYS AS IDENTITY " +
-            s"column(s) ${real.mkString(",")} — the engine assigns " +
-            "them; omit the column(s) from the frame (an all-NULL " +
-            "placeholder column is accepted as omission)")
-        df.drop(supplied: _*)
-      }
-    val meta = commitMeta(ref, currentVersion(ref).get)
-    val ordered = ids.toSeq.sortBy(_._1)
-    val hws: Seq[(String, Long, Long)] = ordered.map { case (c, (start, step)) =>
-      val hw = meta.get(Warehouse.identityHwKey(c)).filter(_.nonEmpty)
-        .map(_.toLong).getOrElse(start - step)
-      (c, hw, step)
-    }
-    val src = base.localCheckpoint()
-    // phase 1: rows per partition (the only extra job; its shuffle is
-    // ≤ one pre-aggregated row per partition), folded into exclusive
-    // prefix offsets on the driver
-    val countRows = src.groupBy(spark_partition_id().as("__graft_pid"))
-      .count().collect()
-    val maxPid = if (countRows.isEmpty) -1
-      else countRows.iterator.map(_.getInt(0)).max
-    val counts = new Array[Long](maxPid + 1)
-    countRows.foreach(r => counts(r.getInt(0)) = r.getLong(1))
-    val n = counts.sum
-    val offsets: Array[Long] = counts.scanLeft(0L)(_ + _).init
-    // phase 2: ids as a codegen'd column — the projection evaluates in
-    // checkpoint scan order, so `monotonically_increasing_id`'s low
-    // 33 bits ARE the 0-based row index within the pinned partition.
-    // The nondeterministic id expression is materialized ONCE into a
-    // temp column and every identity column derives from that
-    // attribute: reusing the same expression instance per identity
-    // column was codegen-safe (each occurrence gets its own counter)
-    // but the interpreted-projection fallback shares one incrementing
-    // instance across occurrences — multiple identity columns would
-    // shear. CollapseProject cannot re-inline it (nondeterministic).
-    val rowIdx = monotonically_increasing_id()
-      .bitwiseAND(lit((1L << 33) - 1))
-    val offCol = element_at(lit(offsets), spark_partition_id() + lit(1))
-    val withIdx = src.withColumn("__graft_idx", offCol + rowIdx + lit(1L))
-    val withIds0 = hws.foldLeft(withIdx) { case (d, (c, hw, step)) =>
-      d.withColumn(c, lit(hw) + lit(step) * col("__graft_idx"))
-    }.drop("__graft_idx")
-    // identity columns stay NULLABLE in the committed schema (historical
-    // rows of a widened-then-declared table hold NULLs) — the literal
-    // arithmetic above would tighten them to NOT NULL on full overwrites
-    val withIds = withIds0.to(org.apache.spark.sql.types.StructType(
-      withIds0.schema.map(f =>
-        if (ids.keys.exists(_.equalsIgnoreCase(f.name)))
-          f.copy(nullable = true)
-        else f)))
-    // declared column order, so a full overwrite's committed schema
-    // keeps the table's shape instead of pushing identity to the end
-    val declared = schemaOf(ref).fieldNames.toSeq
-      .filter(n0 => withIds.columns.exists(_.equalsIgnoreCase(n0)))
-    val extras = withIds.columns.toSeq.filterNot(c =>
-      declared.exists(_.equalsIgnoreCase(c)))
-    val out = withIds.select((declared ++ extras).map(col): _*)
-    val hwMeta = hws.map { case (c, hw, step) =>
-      Warehouse.identityHwKey(c) -> (hw + step * n).toString
-    }.toMap
-    (out, hwMeta, () => { src.unpersist(); () })
-  }
-
-  /** Compute OMITTED generated columns onto a write frame (no-op for
-    * frames that carry them — those validate instead). Dependency
-    * order ([[Warehouse.topoGenerations]]): a generation reading
-    * another omitted generation resolves regardless of column naming —
-    * each `withColumn` stage sees its providers already computed.
-    */
-  private def applyGenerated(ref: TableRef, df: DataFrame): DataFrame = {
-    if (currentVersion(ref).isEmpty) return df
-    val gens = generatedColumns(ref)
-      .filterNot { case (c, _) => df.columns.contains(c) }
-    Warehouse.topoGenerations(gens).foldLeft(df) { case (d, (c, e)) =>
-      d.withColumn(c, org.apache.spark.sql.functions.expr(e))
-    }
-  }
-
-  /** Generations to RECOMPUTE when the (lowercase) `setNames` columns
-    * change — transitively: a generation over a recomputed generation
-    * recomputes too. Excludes columns the writer assigns itself
-    * (those validate instead). Dependency-ordered.
-    */
-  private[graft] def generatedRecomputes(ref: TableRef,
-                                         setNames: Set[String])
-      : Seq[(String, String)] = {
-    val gens = generatedColumns(ref)
-      .filterNot { case (g, _) => setNames.contains(g.toLowerCase) }
-    if (gens.isEmpty) return Nil
-    var changed = setNames
-    var out = Map.empty[String, String]
-    var progress = true
-    while (progress) {
-      val add = gens.filter { case (g, e) => !out.contains(g) &&
-        Warehouse.exprRefs(e).intersect(changed).nonEmpty }
-      progress = add.nonEmpty
-      out ++= add
-      changed ++= add.keys.map(_.toLowerCase)
-    }
-    Warehouse.topoGenerations(out)
-  }
-
-  /** Live CHECK constraints (name → predicate) from the carried meta. */
-  def checkConstraints(ref: TableRef): Map[String, String] =
-    currentVersion(ref).map(v => commitMeta(ref, v).collect {
-      case (k, p) if k.startsWith(Warehouse.CheckMetaPrefix) && p.nonEmpty =>
-        k.stripPrefix(Warehouse.CheckMetaPrefix) -> p
-    }).getOrElse(Map.empty)
-
-  /** Validate staged parquet against the table's live constraints in
-    * ONE aggregate pass (zero cost when no constraints exist; rows
-    * where a predicate is NULL pass, SQL CHECK semantics). Throws
-    * before the caller has moved anything.
-    */
-  private def validateConstraintsLocked(ref: TableRef,
-                                        staged: => DataFrame): Unit = {
-    val checks = checkConstraints(ref)
-    // GENERATED columns validate in the same pass: supplied values
-    // must EQUAL their generation (null-safe), or the derived column
-    // silently drifts from its source
-    val frame = staged
-    val gens = generatedColumns(ref)
-      .filter { case (c, _) => frame.columns.contains(c) }
-    if (checks.isEmpty && gens.isEmpty) return
-    graft.util.PhaseTimer.time("wh.validate") {
-    val all: Seq[(String, String, Column)] =
-      checks.toSeq.map { case (n, p) =>
-        ("CHECK constraint", s"$n ($p)",
-          org.apache.spark.sql.functions.expr(p) <=> lit(false))
-      } ++ gens.toSeq.map { case (c, e) =>
-        ("GENERATED column", s"$c AS ($e)",
-          !(col(c) <=> org.apache.spark.sql.functions.expr(e)))
-      }
-    val aggs = all.zipWithIndex.map { case ((_, _, viol), i) =>
-      sum(when(viol, 1L).otherwise(0L)).as(s"__v$i")
-    }
-    val row = frame.agg(aggs.head, aggs.tail: _*).head()
-    all.zipWithIndex.foreach { case ((kind, what, _), i) =>
-      val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
-      if (bad > 0)
-        throw new IllegalStateException(
-          s"write to $ref violates $kind '$what': " +
-            s"$bad row(s) fail — nothing was committed")
-    }
-    }
-  }
-
   /** Turn the CHANGE DATA FEED on or off for a table: one carried
     * commit-meta line (`graft.cdf=true`, a pure-metadata commit —
     * Delta's `delta.enableChangeDataFeed` counterpart). While on,
@@ -2844,20 +1969,22 @@ final class Warehouse(spark: SparkSession, val root: String,
     new Path(path(ref), f"$cdcDir/v$version%08d")
 
   /** Write `changes` as the change files of the NEXT commit (caller
-    * holds the writer lock; `current` is the version its commit will
-    * build on). Returns the meta marker to merge into that commit.
+    * holds the writer lock; `snap` is the version its commit will build
+    * on). Returns the meta marker to merge into that commit.
     */
-  private def stageCdcLocked(ref: TableRef, current: Long,
+  private def stageCdcLocked(snap: TableSnapshot,
                              changes: DataFrame): Map[String, String] = {
+    val ref = snap.ref
     require(changes.columns.contains(Warehouse.ChangeTypeCol),
       s"change files need a ${Warehouse.ChangeTypeCol} column; got " +
         changes.columns.mkString(","))
-    val dir = cdcPath(ref, current + 1)
+    val dir = cdcPath(ref, snap.version + 1)
     fs(dir).delete(dir, true) // a crashed predecessor's orphan
     // mapped tables: the feed scans change files with the id-carrying
     // committed schema, so data columns must carry their ids here too
     // (the change-type column matches by name — it has no declared id)
-    withFieldIds(ref, changes).write.parquet(dir.toString)
+    features.withFieldIds(features.decode(snap), changes, mint = false)._1
+      .write.parquet(dir.toString)
     Map(Warehouse.CdcMeta -> "1")
   }
 
@@ -2939,8 +2066,8 @@ final class Warehouse(spark: SparkSession, val root: String,
       sweepStaleStages()
       // adopt exactly the committed tasks' files (never a dead
       // attempt's partial): validated, then landed
-      val staged = stagedFiles(ref, stage, Some(stagedRels),
-        committedSchema(snap), validate = true)
+      val staged = stagedFiles(stage, Some(stagedRels),
+        committedSchema(snap), Some(features.decode(snap)))
       land(ref, Some(snap), if (replaceAll) Nil else snap.files, staged,
         if (!replaceAll) None
         else Some((statColumns(ref).filter(staged.schema.fieldNames.contains), Nil, Nil)),
@@ -3148,10 +2275,10 @@ final class Warehouse(spark: SparkSession, val root: String,
           (snap.dvMap -- dead) ++ partial.map(_ -> rel)
         }
       withStage(ref, "dvwrite") { stage =>
-        val staged = newRows.fold(stagedFiles(ref, stage, Some(Nil),
-            committedSchema(snap), validate = false))(
-          stageFrame(ref, _, stage, None, layoutOf(ref, snap), rewrite = true,
-            validate = true)._1)
+        val staged = newRows.fold(stagedFiles(stage, Some(Nil),
+            committedSchema(snap), None))(
+          stageFrame(features.decode(snap), _, stage, None, layoutOf(snap),
+            rewrite = true, validate = true)._1)
         if (touched.nonEmpty || staged.rels.nonEmpty)
           land(ref, Some(snap), snap.files.filterNot(dead.toSet), staged, None,
             meta, changes(touched), Some(newDvMap))
@@ -3199,23 +2326,24 @@ final class Warehouse(spark: SparkSession, val root: String,
       s"updateWhere on $ref cannot SET ${badSet.mkString(",")}: not a " +
         "data column (partition columns are directory-encoded — a " +
         "partition-moving update is a delete + insert)")
+    val decl = features.decode(snap)
     val idSet = set.map(_._1).filter(n =>
-      identityColumns(ref).keys.exists(_.equalsIgnoreCase(n)))
+      decl.identity.keys.exists(_.equalsIgnoreCase(n)))
     require(idSet.isEmpty,
       s"updateWhere on $ref cannot SET IDENTITY column(s) " +
         s"${idSet.mkString(",")} — engine-assigned values never change")
-    // merge-on-read routing (same dispatch as deleteWhere): with the
-    // DV property on, matched rows supersede by position and the
-    // updated rows land as one small append — no touched-file rewrite
-    if (dvEnabled(ref)) return updateWhereDv(ref, matched, set, snap)
-    val perFile = matchesPerFile(ref, matched)
-    if (perFile.isEmpty) return 0L
-    val setMap = set.toMap
     // generated columns whose expressions read a SET column recompute
     // over the POST-SET image (transitively, dependency-ordered) —
     // GENERATED ALWAYS AS semantics; carrying the stale value would
     // bounce off the staged validation
-    val genX = generatedRecomputes(ref, set.map(_._1.toLowerCase).toSet)
+    val genX = features.generatedRecomputes(decl, set.map(_._1.toLowerCase).toSet)
+    // merge-on-read routing (same dispatch as deleteWhere): with the
+    // DV property on, matched rows supersede by position and the
+    // updated rows land as one small append — no touched-file rewrite
+    if (dvEnabled(ref)) return updateWhereDv(ref, matched, set, genX, snap)
+    val perFile = matchesPerFile(ref, matched)
+    if (perFile.isEmpty) return 0L
+    val setMap = set.toMap
     val cdfOn = cdfEnabled(ref)
     // rewrite per partition directory so replacement files land back
     // inside their partitions (compact's layout-preserving shape)
@@ -3272,10 +2400,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     * and their SET-applied images land as one small append
     * ([[dvReplace]]); unmatched rows in the same files never move.
     * Change-feed rows (pre/postimage) commit atomically as usual.
+    * `genX`: the generations the SET recomputes.
     */
   private def updateWhereDv(ref: TableRef,
                             matched: org.apache.spark.sql.Column,
                             set: Seq[(String, org.apache.spark.sql.Column)],
+                            genX: Seq[(String, String)],
                             planned: TableSnapshot): Long = {
     if (planned.files.isEmpty) return 0L
     val setMap = set.toMap
@@ -3289,7 +2419,6 @@ final class Warehouse(spark: SparkSession, val root: String,
     // post-SET image (references renamed onto the __post_ columns;
     // dependency-ordered so a generation over a generation sees its
     // provider fresh)
-    val genX = generatedRecomputes(ref, set.map(_._1.toLowerCase).toSet)
     val renames = cols.map(c => c.toLowerCase -> s"`__post_$c`").toMap
     val postSet = eff.select(cols.map(col) ++ cols.map(c =>
         setMap.get(c).getOrElse(col(c)).as(s"__post_$c")) ++
@@ -3628,8 +2757,8 @@ final class Warehouse(spark: SparkSession, val root: String,
       val snap = ensureLogLocked(ref)
       val retired = currentRels(ref, snap, replaced, "retirement")
       withStage(ref, "retire") { stage =>
-        land(ref, Some(snap), snap.files.filterNot(retired), stagedFiles(ref,
-          stage, Some(Nil), committedSchema(snap), validate = false), None,
+        land(ref, Some(snap), snap.files.filterNot(retired), stagedFiles(
+          stage, Some(Nil), committedSchema(snap), None), None,
           Warehouse.withOp(meta, "REPLACE"), None, None)
       }
       ()
@@ -3684,8 +2813,8 @@ final class Warehouse(spark: SparkSession, val root: String,
     val retired = currentRels(ref, snap, replaced, "replacement")
     val op = meta.getOrElse(Warehouse.OpMeta, "")
     withStage(ref, "merge") { stage =>
-      val (staged, _) = stageFrame(ref, replacement, stage, subdir,
-        if (subdir.nonEmpty) Nil else layoutOf(ref, snap), rewrite = true,
+      val (staged, _) = stageFrame(features.decode(snap), replacement, stage, subdir,
+        if (subdir.nonEmpty) Nil else layoutOf(snap), rewrite = true,
         validate = op != "COMPACT" && op != "ZORDER")
       land(ref, Some(snap), snap.files.filterNot(retired), staged, None,
         Warehouse.withOp(meta, "REPLACE"), changes, None)
@@ -3738,7 +2867,7 @@ final class Warehouse(spark: SparkSession, val root: String,
   /** [[recover]] body for callers that ALREADY hold the writer lock
     * (every writer, before it plans) — the lock is not reentrant.
     */
-  private def recoverLocked(ref: TableRef): Boolean = {
+  private[catalog] def recoverLocked(ref: TableRef): Boolean = {
     val tablePath = new Path(path(ref))
     val filesystem = fs(tablePath)
     val j = new Path(tablePath, txnFile)
@@ -3830,12 +2959,7 @@ final class Warehouse(spark: SparkSession, val root: String,
         require(partCols.nonEmpty,
           s"compact($ref) with a partition filter needs a " +
             "directory-partitioned table")
-        val refs = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-          .parseExpression(sql).collect {
-            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-              a.nameParts.last.toLowerCase
-          }
-        val badRefs = refs.filterNot(partCols.map(_.toLowerCase).contains)
+        val badRefs = TableFeatures.exprRefs(sql).filterNot(partCols.map(_.toLowerCase).contains)
         require(badRefs.isEmpty,
           s"compact($ref) partition filter may reference partition " +
             s"column(s) ${partCols.mkString(",")} only; got " +
@@ -4001,23 +3125,19 @@ object Warehouse {
   /** The operation a version's commit performed ([[TxnLog.OpMeta]]). */
   val OpMeta: String = TxnLog.OpMeta
 
-  /** Carried-meta toggle of COLUMN MAPPING (`'id'` = enabled, empty =
-    * off — Delta's `delta.columnMapping.mode`). Mapped tables write
-    * parquet FIELD IDs into every data file and read by id, so
-    * [[Warehouse.renameColumn]] becomes a metadata commit.
+  /** Table-feature keys and parsers ([[TableFeatures]]), aliased for
+    * callers outside the catalog package.
     */
-  val ColumnMappingMeta = "graft.columnmapping"
-
-  /** Carried-meta high-water of assigned field ids — ids are NEVER
-    * reused (a dropped column's bytes still sit in live files keyed by
-    * its id; a reused id would resurrect them under the new column).
-    */
-  val ColumnMappingMaxIdMeta = "graft.columnmapping.maxid"
-
-  /** The parquet metadata key Spark's reader/writer use for field-id
-    * matching (`spark.sql.parquet.fieldId.{read,write}.enabled`).
-    */
-  val FieldIdKey = "parquet.field.id"
+  val ColumnMappingMeta: String = TableFeatures.ColumnMappingMeta
+  val FieldIdKey: String = TableFeatures.FieldIdKey
+  def identityHwKey(column: String): String = TableFeatures.identityHwKey(column)
+  def parseIdentitySpec(key: String, value: String): (Long, Long) =
+    TableFeatures.parseIdentitySpec(key, value)
+  private[graft] def exprRefs(sql: String): Set[String] = TableFeatures.exprRefs(sql)
+  private[graft] def substituteSql(sql: String, sets: Map[String, String]): String =
+    TableFeatures.substituteSql(sql, sets)
+  private[graft] def topoGenerations(gens: Map[String, String]): Seq[(String, String)] =
+    TableFeatures.topoGenerations(gens)
 
   /** Carried-meta pointer to the [[Warehouse.copyInto]] loaded-files
     * ledger (a filename under [[IngestDir]]). Carried so RESTORE
@@ -4140,158 +3260,6 @@ object Warehouse {
       f.split('/').dropRight(1).toSeq
         .takeWhile(_.contains('=')).map(_.takeWhile(_ != '='))
     }
-
-  /** Column names (last name part, lowercased) an expression SQL
-    * references — the dependency probe generated-column ordering,
-    * recompute targeting, and the drop guards share.
-    */
-  private[graft] def exprRefs(sql: String): Set[String] =
-    org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-      .parseExpression(sql).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.nameParts.last.toLowerCase
-      }.toSet
-
-  /** Substitute assigned columns into an expression: every reference
-    * to a key of `sets` (lowercase name → replacement SQL) becomes
-    * that replacement's parsed expression — how a generation
-    * recomputes over a POST-assignment image when the evaluation frame
-    * only carries the pre-image under the original names.
-    */
-  private[graft] def substituteSql(sql: String,
-                                   sets: Map[String, String]): String =
-    // transformUp, NOT transform: the replacement must never be
-    // re-descended — a self-referential assignment (`price ->
-    // price + delta`) would loop, and its internal references mean the
-    // PRE-image by SET semantics anyway
-    org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-      .parseExpression(sql).transformUp {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if sets.contains(a.nameParts.last.toLowerCase) =>
-          org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-            .parseExpression(sets(a.nameParts.last.toLowerCase))
-      }.sql
-
-  /** Dependency-order generations: a generation may read ANOTHER
-    * generated column, so compute providers first (alphabetical order
-    * broke on naming — the round-18 hazard). Cycles and self-reference
-    * refuse loudly instead of failing with an unresolved-column error
-    * that depends on column names.
-    */
-  private[graft] def topoGenerations(gens: Map[String, String])
-      : Seq[(String, String)] = {
-    val lcOf = gens.keys.map(k => k.toLowerCase -> k).toMap
-    var remaining = gens.toSeq.sortBy(_._1)
-    var done = Set.empty[String]
-    val out = Seq.newBuilder[(String, String)]
-    var progress = true
-    while (remaining.nonEmpty && progress) {
-      val (ready, blocked) = remaining.partition { case (_, e) =>
-        exprRefs(e).intersect(lcOf.keySet -- done).isEmpty
-      }
-      progress = ready.nonEmpty
-      out ++= ready
-      done ++= ready.map(_._1.toLowerCase)
-      remaining = blocked
-    }
-    require(remaining.isEmpty,
-      s"generated columns form a reference cycle: " +
-        remaining.map(_._1).mkString(","))
-    out.result()
-  }
-
-  /** Carried-meta prefix of CHECK constraints
-    * ([[Warehouse.setCheckConstraint]]): `graft.check.<name>` →
-    * predicate SQL; empty value = dropped tombstone.
-    */
-  val CheckMetaPrefix = "graft.check."
-
-  def checkMetaKey(name: String): String = s"$CheckMetaPrefix$name"
-
-  /** Carried-meta prefix of GENERATED column expressions
-    * (`graft.generated.<col>` = single-line SQL over the row's other
-    * columns). Empty value = generation dropped (tombstone).
-    */
-  val GenMetaPrefix = "graft.generated."
-
-  def genMetaKey(column: String): String = s"$GenMetaPrefix$column"
-
-  /** Carried-meta prefix of column DEFAULT expressions
-    * (`graft.default.<col>` = single-line constant SQL). Writers that
-    * OMIT the column get the default materialized; empty value =
-    * default dropped (tombstone).
-    */
-  val DefaultMetaPrefix = "graft.default."
-
-  def defaultMetaKey(column: String): String = s"$DefaultMetaPrefix$column"
-
-  /** Carried-meta prefix of IDENTITY column declarations
-    * (`graft.identity.<col>` = `start,step`, GENERATED ALWAYS AS
-    * IDENTITY). Deliberately NOT a prefix of [[IdentityHwPrefix]] —
-    * the two key families must never shadow each other's parses.
-    */
-  val IdentityMetaPrefix = "graft.identity."
-
-  def identityMetaKey(column: String): String = s"$IdentityMetaPrefix$column"
-
-  /** Carried-meta prefix of identity HIGH-WATER marks: the LAST value
-    * the engine allocated for the column. Advances atomically inside
-    * the allocating commit (same meta line, same rename), so a crashed
-    * write can never reuse ids a committed version handed out.
-    */
-  val IdentityHwPrefix = "graft.identityhw."
-
-  def identityHwKey(column: String): String = s"$IdentityHwPrefix$column"
-
-  /** Sanctioned declared-type widenings ([[Warehouse.widenColumnType]]):
-    * the pairs Spark's vectorized parquet reader up-casts losslessly
-    * on the fly. byte→short→int→long, any of those →double,
-    * float→double, decimal precision growth at the SAME scale.
-    * Everything else — narrowing, scale changes, cross-family
-    * reinterpretation — is not a widening.
-    */
-  def isTypeWidening(from: org.apache.spark.sql.types.DataType,
-                     to: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    (from, to) match {
-      case (f, t) if f == t => false // not a change at all
-      case (ByteType, ShortType | IntegerType | LongType | DoubleType) => true
-      case (ShortType, IntegerType | LongType | DoubleType) => true
-      case (IntegerType, LongType | DoubleType) => true
-      case (LongType, DoubleType) => false // loses precision past 2^53
-      case (FloatType, DoubleType) => true
-      case (f: DecimalType, t: DecimalType) =>
-        t.scale == f.scale && t.precision > f.precision
-      case _ => false
-    }
-  }
-
-  /** Parse a governed identity property value: `'start,step'`, or a
-    * bare `'start'` meaning step 1. Malformed shapes ('1,2,3',
-    * non-numeric pieces, empties) refuse loudly naming the key and
-    * the expected format — never a bare MatchError.
-    */
-  def parseIdentitySpec(key: String, value: String): (Long, Long) = {
-    def bad(): Nothing = throw new IllegalArgumentException(
-      s"$key expects 'start,step' (two integers) or a bare integer " +
-        s"start; got '$value'")
-    def num(s: String): Long =
-      try s.trim.toLong catch { case _: NumberFormatException => bad() }
-    value.split(",", -1).map(_.trim) match {
-      case Array(st) if st.nonEmpty => (num(st), 1L)
-      case Array(st, sp) if st.nonEmpty && sp.nonEmpty => (num(st), num(sp))
-      case _ => bad()
-    }
-  }
-
-  /** Carried-meta prefix of dropped-column tombstones
-    * ([[Warehouse]].dropColumns' resurrection guard): cleared (blanked)
-    * by the next full overwrite, whose fresh files carry no old bytes.
-    */
-  val DroppedMetaPrefix = "graft.dropped."
-
-  def droppedMetaKey(lowerName: String): String =
-    s"$DroppedMetaPrefix$lowerName"
 
   /** The change-kind column of change files and of the `.changes` read
     * surface: insert / delete / update_preimage / update_postimage

@@ -77,6 +77,26 @@ class ConstraintSpec extends SparkSpec {
     assert(wh.checkConstraints(ref) === Map.empty)
   }
 
+  test("a declaration validates existing rows inside the writer lock") {
+    import spark.implicits._
+    val root = tmpDir("wh-check-locked")
+    val wh = new Warehouse(spark, root)
+    val ref = TableRef("silver", "g", "checked_locked")
+    wh.overwrite(ref, Seq((1L, 5L), (2L, 7L)).toDF("k", "v"))
+    // the probe runs inside the validation job itself (listener events
+    // arrive asynchronously, possibly after the lock is gone): it
+    // records whether the writer lock is held while rows are counted,
+    // so no append can land between the count and the commit
+    val lockFile = new java.io.File(wh.path(ref) + ".lock")
+    val seen = spark.sparkContext.collectionAccumulator[java.lang.Boolean]("lock")
+    spark.udf.register("lock_probe", org.apache.spark.sql.functions.udf {
+      (v: Long) => seen.add(lockFile.exists()); v > 0 }.asNondeterministic())
+    wh.setCheckConstraint(ref, "v_probe", "lock_probe(v)")
+    val held = seen.value
+    assert(!held.isEmpty && held.stream().allMatch(_.booleanValue),
+      s"existing rows must be validated under the writer lock; saw $held")
+  }
+
   test("a WAP stage validates constraints; a violating batch stages nothing") {
     import spark.implicits._
     val wh = new Warehouse(spark, tmpDir("wh-check-wap"))

@@ -203,6 +203,23 @@ class FooterStatsSpec extends SparkSpec {
     assert(kept.nonEmpty && (kept.size + dropped.size) === wh.dataFiles(ref).size)
   }
 
+  test("scan-built manifest keys are the log's paths under escaped partition values") {
+    val wh = new Warehouse(spark, tmpDir("wh-footer-escaped"))
+    val ref = TableRef("silver", "fs", "escaped")
+    // a bloom column forces the scan path, whose input_file_name() URI
+    // percent-encodes the space; '+' stays literal (url_decode would
+    // turn it into a space)
+    val df = (1 to 30).map(i => (i.toLong, Seq("x y", "z", "a+b")(i % 3)))
+      .toDF("k", "seg")
+    wh.overwrite(ref, df, partitionBy = Seq("seg"), statsColumns = Seq("k"),
+      bloomColumns = Seq("k"))
+    val files = wh.snapshot(ref).get.files
+    assert(files.exists(_.startsWith("seg=x y/")))
+    assert(wh.fileRowCounts(ref).keySet === files.toSet)
+    assert(wh.metadataAggregate(ref, files, Seq(Warehouse.RowCount))
+      .contains(Seq(30L)))
+  }
+
   test("all-null files and mid-commit schema gaps stay conservative") {
     val wh = new Warehouse(spark, tmpDir("wh-footer-nulls"))
     val ref = TableRef("silver", "fs", "nulls")

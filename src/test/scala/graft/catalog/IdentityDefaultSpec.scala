@@ -373,6 +373,22 @@ class IdentityDefaultSpec extends SparkSpec {
       "the re-declared sequence must start at the declared start")
   }
 
+  test("identity partition guard follows the committed layout: files outrank the declared one") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-id-relayout"))
+    val ref = TableRef("silver", "i", "relayout")
+    wh.createTable(ref, StructType(Seq(
+      StructField("p", LongType), StructField("x", LongType))),
+      partitionBy = Seq("p"))
+    // a flat overwrite re-lays the table out; the declaration stays carried
+    wh.overwrite(ref, Seq((Option.empty[Long], 10L)).toDF("p", "x"))
+    assert(wh.snapshot(ref).get.files.forall(!_.contains("p=")))
+    wh.setIdentityColumn(ref, "p")
+    wh.append(ref, Seq(20L).toDF("x"))
+    assert(wh.read(ref).filter(col("x") === 20L).select("p")
+      .as[Long].head() === 1L)
+  }
+
   test("malformed identity property values refuse loudly, naming the key") {
     // governed-property parse: '1,2,3', non-numerics, and empties are
     // user typos that must produce the same loud shape as every other

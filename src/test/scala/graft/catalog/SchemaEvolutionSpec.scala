@@ -235,4 +235,21 @@ class SchemaEvolutionSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       wh.widenColumnType(dref, "d", DecimalType(14, 4)))
   }
+
+  test("ALTER COLUMN TYPE follows the committed layout: files outrank the declared one") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-widen-relayout"))
+    val ref = TableRef("silver", "w", "relayout")
+    wh.createTable(ref, StructType(Seq(
+      StructField("p", IntegerType), StructField("x", LongType))),
+      partitionBy = Seq("p"))
+    // still fileless: the declared layout governs
+    intercept[IllegalArgumentException](wh.widenColumnType(ref, "p", LongType))
+    // a flat overwrite re-lays the table out; the declaration stays carried
+    wh.overwrite(ref, Seq((1, 10L)).toDF("p", "x"))
+    assert(wh.snapshot(ref).get.files.forall(!_.contains("p=")))
+    wh.widenColumnType(ref, "p", LongType)
+    assert(wh.schemaOf(ref)("p").dataType === LongType)
+  }
 }

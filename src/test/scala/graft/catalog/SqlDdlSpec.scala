@@ -235,6 +235,66 @@ class SqlDdlSpec extends SparkSpec {
       spark.sql(
         s"ALTER TABLE $cat.silver.g.gov SET TBLPROPERTIES ('owner' = 'me')")
     }
+
+    // every governed key, through CREATE TBLPROPERTIES, SET and UNSET
+    def chain(e: Throwable): Seq[String] = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).toSeq.flatMap(c => Option(c.getMessage))
+    def refuses(sql: String, says: String): Unit = {
+      val e = intercept[Exception](spark.sql(sql))
+      assert(chain(e).exists(_.contains(says)), s"$sql: ${chain(e)}")
+    }
+    val cols = "(k BIGINT, rid BIGINT, price DOUBLE, ch STRING, g BIGINT)"
+    spark.sql(s"CREATE TABLE $cat.silver.g.every $cols TBLPROPERTIES (" +
+      "'graft.stats_columns' = 'k', 'graft.bloom_columns' = 'k', " +
+      "'graft.cdf' = 'true', 'graft.dv' = 'true', " +
+      "'graft.columnmapping' = 'id', 'graft.check.pos' = 'price > 0', " +
+      "'graft.generated.g' = 'k * 2', 'graft.default.ch' = \"'web'\", " +
+      "'graft.identity.rid' = '5,5')")
+    val every = TableRef("silver", "g", "every")
+    def declared(t: TableRef) = (wh.checkConstraints(t), wh.generatedColumns(t),
+      wh.columnDefaults(t), wh.identityColumns(t), wh.cdfEnabled(t),
+      wh.dvEnabled(t), wh.columnMappingEnabled(t))
+    val all = (Map("pos" -> "price > 0"), Map("g" -> "k * 2"),
+      Map("ch" -> "'web'"), Map("rid" -> ((5L, 5L))), true, true, true)
+    assert(declared(every) === all)
+    val meta = wh.commitMeta(every, wh.currentVersion(every).get)
+    assert(meta.get("graft.stats_columns").contains("k") &&
+      meta.get("graft.bloom_columns").contains("k"))
+    refuses(s"CREATE TABLE $cat.silver.g.badmode (k BIGINT) " +
+      "TBLPROPERTIES ('graft.columnmapping' = 'name')", "supports mode 'id'")
+    refuses(s"CREATE TABLE $cat.silver.g.badflag (k BIGINT) " +
+      "TBLPROPERTIES ('graft.cdf' = 'yes')", "takes true/false")
+    refuses(s"CREATE TABLE $cat.silver.g.badid (rid BIGINT) " +
+      "TBLPROPERTIES ('graft.identity.rid' = '1,2,3')", "graft.identity.rid")
+    // SET, one key per statement: the same declarations on a bare table
+    spark.sql(s"CREATE TABLE $cat.silver.g.later $cols")
+    val later = TableRef("silver", "g", "later")
+    Seq("'graft.columnmapping' = 'id'", "'graft.check.pos' = 'price > 0'",
+      "'graft.generated.g' = 'k * 2'", "'graft.default.ch' = \"'web'\"",
+      "'graft.identity.rid' = '5,5'", "'graft.cdf' = 'true'",
+      "'graft.dv' = 'true'").foreach(p =>
+      spark.sql(s"ALTER TABLE $cat.silver.g.later SET TBLPROPERTIES ($p)"))
+    assert(declared(later) === all)
+    for (p <- Seq("'graft.stats_columns' = 'k'", "'graft.bloom_columns' = 'k'",
+                  "'my.custom.key' = 'x'"))
+      refuses(s"ALTER TABLE $cat.silver.g.later SET TBLPROPERTIES ($p)",
+        p.takeWhile(_ != '=').trim.stripPrefix("'").stripSuffix("'"))
+    refuses(s"ALTER TABLE $cat.silver.g.later SET TBLPROPERTIES " +
+      "('graft.identity.ch' = '1,x')", "graft.identity.ch")
+    refuses(s"ALTER TABLE $cat.silver.g.later SET TBLPROPERTIES " +
+      "('graft.dv' = 'on')", "takes true/false")
+    // UNSET drops every declaration and turns the toggles off; column
+    // mapping and ungoverned keys refuse
+    Seq("graft.check.pos", "graft.generated.g", "graft.default.ch",
+      "graft.identity.rid", "graft.cdf", "graft.dv").foreach(k =>
+      spark.sql(s"ALTER TABLE $cat.silver.g.every UNSET TBLPROPERTIES ('$k')"))
+    assert(declared(every) ===
+      ((Map.empty, Map.empty, Map.empty, Map.empty, false, false, true)))
+    refuses(s"ALTER TABLE $cat.silver.g.every UNSET TBLPROPERTIES " +
+      "('graft.columnmapping')", "cannot be unset")
+    refuses(s"ALTER TABLE $cat.silver.g.every UNSET TBLPROPERTIES " +
+      "('graft.stats_columns')", "graft.stats_columns")
+    assert(wh.columnMappingEnabled(every))
   }
 
   test("CREATE TABLE TBLPROPERTIES: governed keys route at create time, ungoverned refuse") {
