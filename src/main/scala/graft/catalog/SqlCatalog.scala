@@ -201,70 +201,51 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * elsewhere (a declared-but-unenforced key is how lakes lie).
     */
   override def createTable(ident: Identifier,
-                           info: org.apache.spark.sql.connector.catalog.TableInfo): Table = {
-    createTable(ident, info.columns(), info.partitions(), info.properties())
-    val cs = Option(info.constraints()).getOrElse(Array.empty)
-    if (cs.isEmpty) loadTable(ident)
-    else {
-      val ref = refOf(ident)
-      try {
-        cs.foreach {
-          case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
-            require(c.predicateSql() != null && c.predicateSql().nonEmpty,
-              s"CHECK constraint ${c.name()} carries no predicate SQL")
-            warehouse.setCheckConstraint(ref, c.name(), c.predicateSql())
-          case other => throw new UnsupportedOperationException(
-            s"graft enforces CHECK constraints only; '${other.toDDL}' " +
-              "would be informational (unenforced) — refusing rather " +
-              "than silently not enforcing it")
-        }
-      } catch {
-        case t: Throwable =>
-          warehouse.drop(ref) // atomic CREATE: no half-declared table
-          throw t
+                           info: org.apache.spark.sql.connector.catalog.TableInfo): Table =
+    create(ident, schemaOf(info.columns()), info.partitions(), info.properties()) { ref =>
+      declareColumns(ref, info.columns())
+      Option(info.constraints()).getOrElse(Array.empty).foreach {
+        case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
+          require(c.predicateSql() != null && c.predicateSql().nonEmpty,
+            s"CHECK constraint ${c.name()} carries no predicate SQL")
+          warehouse.setCheckConstraint(ref, c.name(), c.predicateSql())
+        case other => throw new UnsupportedOperationException(
+          s"graft enforces CHECK constraints only; '${other.toDDL}' " +
+            "would be informational (unenforced) — refusing rather " +
+            "than silently not enforcing it")
       }
-      loadTable(ident)
     }
-  }
 
   override def createTable(ident: Identifier,
                            columns: Array[org.apache.spark.sql.connector.catalog.Column],
                            partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
-                           properties: util.Map[String, String]): Table = {
-    val schema = StructType(columns.map(c =>
-      org.apache.spark.sql.types.StructField(c.name(), c.dataType(),
-        c.nullable())))
-    createTable(ident, schema, partitions, properties)
-    val ref = refOf(ident)
-    val specs = columns.filter(c => c.identityColumnSpec() != null ||
-      c.defaultValue() != null || c.generationExpression() != null)
-    try {
-      specs.foreach { c =>
-        Option(c.identityColumnSpec()).foreach { s =>
-          require(!s.isAllowExplicitInsert,
-            s"graft identity column '${c.name()}' must be GENERATED " +
-              "ALWAYS — BY DEFAULT (explicit inserts allowed) would let " +
-              "callers forge engine-assigned ids")
-          warehouse.setIdentityColumn(ref, c.name(), s.getStart, s.getStep)
-        }
-        Option(c.defaultValue()).foreach { d =>
-          require(d.getSql != null,
-            s"graft DEFAULT on '${c.name()}' needs its SQL text")
-          warehouse.setColumnDefault(ref, c.name(), d.getSql)
-        }
-        Option(c.generationExpression()).foreach { g =>
-          warehouse.setGeneratedColumn(ref, c.name(), g)
-        }
+                           properties: util.Map[String, String]): Table =
+    create(ident, schemaOf(columns), partitions, properties)(declareColumns(_, columns))
+
+  private def schemaOf(columns: Array[org.apache.spark.sql.connector.catalog.Column]) =
+    StructType(columns.map(c =>
+      org.apache.spark.sql.types.StructField(c.name(), c.dataType(), c.nullable())))
+
+  /** Column-level declarations: IDENTITY, DEFAULT and GENERATED. */
+  private def declareColumns(ref: TableRef,
+                             columns: Array[org.apache.spark.sql.connector.catalog.Column]): Unit =
+    columns.foreach { c =>
+      Option(c.identityColumnSpec()).foreach { s =>
+        require(!s.isAllowExplicitInsert,
+          s"graft identity column '${c.name()}' must be GENERATED " +
+            "ALWAYS — BY DEFAULT (explicit inserts allowed) would let " +
+            "callers forge engine-assigned ids")
+        warehouse.setIdentityColumn(ref, c.name(), s.getStart, s.getStep)
       }
-    } catch {
-      case t: Throwable =>
-        // CREATE TABLE is atomic: a refused column spec must not leave
-        // the half-declared empty table behind
-        warehouse.drop(ref)
-        throw t
+      Option(c.defaultValue()).foreach { d =>
+        require(d.getSql != null,
+          s"graft DEFAULT on '${c.name()}' needs its SQL text")
+        warehouse.setColumnDefault(ref, c.name(), d.getSql)
+      }
+      Option(c.generationExpression()).foreach { g =>
+        warehouse.setGeneratedColumn(ref, c.name(), g)
+      }
     }
-    loadTable(ident)
-  }
 
   /** `CREATE TABLE` (and the metadata half of CTAS) through the commit
     * protocol ([[Warehouse.createTable]] — round-15 verdict, next #3):
@@ -280,7 +261,19 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
-                           properties: util.Map[String, String]): Table = {
+                           properties: util.Map[String, String]): Table =
+    create(ident, schema, partitions, properties)(_ => ())
+
+  /** The one CREATE: version 1, then the governed properties, then the
+    * overload's own declarations (`declare`) — all or nothing. Any
+    * refusal after version 1 drops the table, so a refused CREATE
+    * leaves nothing behind (a failure before it, e.g. the name is
+    * taken, touches nothing).
+    */
+  private def create(ident: Identifier, schema: StructType,
+                     partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
+                     properties: util.Map[String, String])
+                    (declare: TableRef => Unit): Table = {
     val ref = refOf(ident)
     val partCols = partitions.toSeq.map { t =>
       val refs = t.references()
@@ -318,13 +311,21 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     warehouse.createTable(ref, schema, partCols,
       statsColumns = csv(Warehouse.StatsColumnsMeta),
       bloomColumns = csv(Warehouse.BloomColumnsMeta))
-    // governed properties route through the SAME dispatch as ALTER
-    // TABLE SET — a constraint declared at CREATE validates (trivially,
-    // the table is empty) and then gates the CTAS data write and every
-    // later one exactly like one added afterwards; the toggles go last
-    props.toSeq.filter { case (k, _) => TableFeatures.governs(k) }
-      .sortBy { case (k, _) => Seq(Warehouse.CdfMeta, Warehouse.DvMeta).indexOf(k) }
-      .foreach { case (k, v) => warehouse.features.setProperty(ref, k, v) }
+    try {
+      // governed properties route through the SAME dispatch as ALTER
+      // TABLE SET — a constraint declared at CREATE validates
+      // (trivially, the table is empty) and then gates the CTAS data
+      // write and every later one exactly like one added afterwards;
+      // the toggles go last
+      props.toSeq.filter { case (k, _) => TableFeatures.governs(k) }
+        .sortBy { case (k, _) => Seq(Warehouse.CdfMeta, Warehouse.DvMeta).indexOf(k) }
+        .foreach { case (k, v) => warehouse.features.setProperty(ref, k, v) }
+      declare(ref)
+    } catch {
+      case t: Throwable =>
+        warehouse.drop(ref)
+        throw t
+    }
     loadTable(ident)
   }
 
@@ -1008,7 +1009,7 @@ private[catalog] final class GraftFileIndex(spark: SparkSession,
     val pt = partitionSchema.fields.find(_.name == partCol).get.dataType
     val litSql =
       try lit.sql catch { case _: Exception => return None }
-    val probe = Warehouse.substituteSql(genSql,
+    val probe = TableFeatures.substituteSql(genSql,
       generatedPartitions.collect {
         case (src, (p, _, _)) if p == partCol => src -> litSql
       })

@@ -512,9 +512,10 @@ final case class GraftMergeClausesCommand(root: String, ref: TableRef,
 }
 
 /** The routed subquery UPDATE: kept rows union SET-projected matched
-  * rows, committed as one snapshot-consistent OVERWRITE with layout
-  * and stats carried and the analysis-time version CAS'd; CDF
-  * pre/postimage pairs commit atomically when the feed is on.
+  * rows, committed as one snapshot-consistent full rewrite
+  * ([[Warehouse.rewriteTable]]: layout and stats carried, the
+  * analysis-time version CAS'd); CDF pre/postimage pairs commit
+  * atomically when the feed is on.
   */
 final case class GraftSubqueryUpdateCommand(root: String, ref: TableRef,
                                             plannedVersion: Long,
@@ -538,34 +539,23 @@ final case class GraftSubqueryUpdateCommand(root: String, ref: TableRef,
       if (!wh.cdfEnabled(ref)) None
       else Some(rows(pre).withColumn(ct, lit("update_preimage"))
         .unionByName(rows(post).withColumn(ct, lit("update_postimage"))))
-    val updated = rows(result)
-    val partCols = wh.snapshot(ref).toSeq
-      .flatMap(s => Warehouse.partDirCols(s.files))
-    val statCols = wh.statColumns(ref).filter(updated.columns.contains)
-    wh.overwrite(ref, updated,
-      partitionBy = partCols.filter(updated.columns.contains),
-      statsColumns = statCols,
-      // carry live blooms (like replaceDataFiles' oldBlooms) or this
-      // rewrite silently sheds point-lookup pruning
-      bloomColumns = wh.bloomColumns(ref).filter(statCols.contains),
-      expectedVersion = Some(plannedVersion),
-      meta = Map(Warehouse.OpMeta -> "UPDATE"), changes = changes,
-      // kept rows carry committed identity values through verbatim
-      internalRewrite = true)
+    wh.rewriteTable(ref, Some(plannedVersion), rows(result),
+      Map(Warehouse.OpMeta -> "UPDATE"), changes, Nil)
     Seq.empty
   }
 }
 
-/** The routed subquery DELETE: a snapshot-consistent anti-filter
-  * OVERWRITE at execution time — read the target (deletion vectors and
-  * foreign entries applied), keep every row the condition does NOT
-  * match (three-valued logic: a NULL predicate keeps the row), commit
-  * with the partition layout and stats columns carried and the planned
-  * version CAS'd. The analyzed condition re-binds to the read plan's
-  * attributes BY NAME (its subquery plans ride along untouched — the
-  * optimizer's DV rewrite covers relations inside them). O(table)
-  * rewrite — the honest price of an arbitrary subquery predicate;
-  * filter-only deletes keep the pruned `SupportsDelete` path.
+/** The routed subquery DELETE: a snapshot-consistent anti-filter full
+  * rewrite ([[Warehouse.rewriteTable]]) at execution time — read the
+  * target (deletion vectors and foreign entries applied), keep every
+  * row the condition does NOT match (three-valued logic: a NULL
+  * predicate keeps the row), commit with the partition layout and
+  * stats columns carried and the planned version CAS'd. The analyzed
+  * condition re-binds to the read plan's attributes BY NAME (its
+  * subquery plans ride along untouched — the optimizer's DV rewrite
+  * covers relations inside them). O(table) rewrite — the honest price
+  * of an arbitrary subquery predicate; filter-only deletes keep the
+  * pruned `SupportsDelete` path.
   */
 final case class GraftSubqueryDeleteCommand(root: String, ref: TableRef,
                                             plannedVersion: Long,
@@ -583,25 +573,15 @@ final case class GraftSubqueryDeleteCommand(root: String, ref: TableRef,
     def rows(p: LogicalPlan) =
       new org.apache.spark.sql.classic.Dataset[Row](classic, p,
         Encoders.row(p.schema))
-    val kept = rows(keep)
     val changes =
       if (!wh.cdfEnabled(ref)) None
       else Some(rows(deleted)
         .withColumn(Warehouse.ChangeTypeCol, lit("delete")))
-    val partCols = wh.snapshot(ref).toSeq
-      .flatMap(s => Warehouse.partDirCols(s.files))
     // CAS on the ANALYSIS-time version: the relation inside `keep` is
     // pinned to that snapshot, so a concurrent commit must conflict
     // loudly rather than be silently overwritten
-    val statCols = wh.statColumns(ref).filter(kept.columns.contains)
-    wh.overwrite(ref, kept,
-      partitionBy = partCols.filter(kept.columns.contains),
-      statsColumns = statCols,
-      bloomColumns = wh.bloomColumns(ref).filter(statCols.contains),
-      expectedVersion = Some(plannedVersion),
-      meta = Map(Warehouse.OpMeta -> "DELETE"), changes = changes,
-      // kept rows carry committed identity values through verbatim
-      internalRewrite = true)
+    wh.rewriteTable(ref, Some(plannedVersion), rows(keep),
+      Map(Warehouse.OpMeta -> "DELETE"), changes, Nil)
     Seq.empty
   }
 }

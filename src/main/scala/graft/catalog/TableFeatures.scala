@@ -772,7 +772,7 @@ private[catalog] final class TableFeatures(spark: SparkSession, wh: Warehouse) {
   }
 }
 
-private[catalog] object TableFeatures {
+private[graft] object TableFeatures {
 
   /** Every feature declaration one version carries, decoded once from
     * its commit meta (dropped declarations — empty tombstones — are

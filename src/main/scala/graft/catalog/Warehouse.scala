@@ -122,6 +122,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     */
   private[catalog] val features = new TableFeatures(spark, this)
 
+  /** `snap`'s declarations, decoded once — for planners outside the
+    * catalog package (a merge plans against one snapshot).
+    */
+  private[graft] def declared(snap: TableSnapshot): TableFeatures.Declared =
+    features.decode(snap)
+
   def currentVersion(ref: TableRef): Option[Long] = txnLog.versions(ref).lastOption
 
   /** Earliest version still readable (above the vacuum horizon) — what
@@ -286,41 +292,35 @@ final class Warehouse(spark: SparkSession, val root: String,
     * pruned. Static-partition layouts (partition dirs outside the
     * committed schema) keep the inference arm, like readSnapshot.
     */
-  def readFiles(ref: TableRef, files: Seq[String]): DataFrame =
-    readCurrentFiles(ref, files, withPos = false)
+  def readFiles(ref: TableRef, files: Seq[String]): DataFrame = {
+    val rels = files.map(relKey(ref))
+    readRows(snapshot(ref).getOrElse(
+      TableSnapshot(ref, -1L, schemaOf(ref).json, rels)), rels, withPos = false)
+  }
 
-  /** [[readFiles]] with the merge-on-read position columns exposed:
-    * declared columns plus `__gdv_file` (file URI) and
-    * `__gdv_pos` (row index), live deletion vectors applied — the
-    * DV-mode merge's target read, whose superseded rows commit as
-    * positions ([[dvReplace]]) instead of a copy-on-write rewrite.
+  /** [[readFiles]] over `snap`'s table-relative `rels`, in declared
+    * column order, live deletion vectors applied — a mutation reading
+    * its touched files never resurrects merge-on-read-deleted rows.
+    * Directory-encoded columns outside the committed schema (static
+    * partitions) ride along. `withPos` adds `__gdv_file` (file URI) and
+    * `__gdv_pos` (row index), whose superseded rows [[dvReplace]]
+    * commits as positions.
     */
-  private[graft] def readFilesWithPos(ref: TableRef, files: Seq[String]): DataFrame =
-    readCurrentFiles(ref, files, withPos = true)
-
-  private def readCurrentFiles(ref: TableRef, files: Seq[String],
-                               withPos: Boolean): DataFrame = {
-    val declared = schemaOf(ref)
+  private def readRows(snap: TableSnapshot, rels: Seq[String], withPos: Boolean): DataFrame = {
+    val declared = if (snap.schemaJson.nonEmpty) committedSchema(snap) else schemaOf(snap.ref)
     val posFields =
       if (!withPos) Nil
       else Seq(org.apache.spark.sql.types.StructField("__gdv_file",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("__gdv_pos",
           org.apache.spark.sql.types.LongType))
-    if (files.isEmpty) // e.g. an insert-only clause merge: no touched bytes
+    if (rels.isEmpty) // e.g. an insert-only clause merge: no touched bytes
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(declared.fields ++ posFields))
-    // route through the snapshot-subset reader so live DELETION
-    // VECTORS apply: a merge/update reading its touched files must
-    // never resurrect merge-on-read-deleted rows
-    val snap = snapshot(ref).getOrElse(
-      TableSnapshot(ref, -1L, declared.json, files.map(relKey(ref))))
-    val rels = files.map(relKey(ref))
-    val pseudo = snap.copy(schemaJson = declared.json, files = rels,
-      dvMap = snap.dvMap.view.filterKeys(rels.toSet).toMap)
-    readFileSubset(pseudo, rels, withPos)
-      .select((declared.fields ++ posFields).map(f => col(f.name)).toIndexedSeq: _*)
+    val dirCols = Warehouse.partDirCols(rels).filterNot(declared.fieldNames.contains)
+    readFileSubset(snap, rels, withPos).select(
+      (declared.fieldNames.toSeq ++ dirCols ++ posFields.map(_.name)).map(col): _*)
   }
 
   // ------------------------------------------------- deletion vectors
@@ -2129,24 +2129,15 @@ final class Warehouse(spark: SparkSession, val root: String,
     * logic is honored: rows where the predicate evaluates NULL are
     * kept, exactly like `DELETE FROM t WHERE cond`.
     *
-    * Copy-on-write (the default): [[matchesPerFile]] plans the touched
-    * files, a file whose EVERY row matches retires as pure metadata
-    * ([[retireDataFiles]] — a predicate aligned with the clustering
-    * drops a 100 TB slice for the cost of one log append), and only
-    * the straddling files are rewritten ([[replaceDataFiles]]); every
-    * other file keeps its bytes and path.
-    *
-    * Merge-on-read (the deletion-vector property is on, or vectors are
-    * live): the matched positions go to [[dvReplace]] with no new rows
-    * — one sidecar, zero data-file churn. The deleted BYTES stay in the
-    * data file until a [[compact]] rewrite plus [[vacuum]] — identical
-    * to Delta's REORG + VACUUM sequence; the GDPR proof query in the
-    * gate suite pins it.
-    *
-    * Change feed: with the CDF property on, the deleted rows land as
-    * change files atomically with the commit (O(deleted rows)) on both
-    * routes — except a pure retirement, whose rows the feed DERIVES
-    * from the retired files themselves.
+    * A producer for [[mutate]]: matched rows classify `delete`, the
+    * rest `keep`. Copy-on-write, a file whose every live row matches
+    * retires as pure metadata (a predicate aligned with the clustering
+    * drops a 100 TB slice for the cost of one log append) and only the
+    * straddling files are rewritten. Merge-on-read, the matched
+    * positions become one vector sidecar with zero data-file churn; the
+    * deleted BYTES stay in the data file until a [[compact]] rewrite
+    * plus [[vacuum]] — identical to Delta's REORG + VACUUM sequence; the
+    * GDPR proof query in the gate suite pins it.
     *
     * Concurrency: the plan is computed optimistically; the commit
     * re-validates it under the writer lock and throws
@@ -2156,52 +2147,13 @@ final class Warehouse(spark: SparkSession, val root: String,
   def deleteWhere(ref: TableRef, cond: Column): Long = {
     requireNoForeign(ref, "deleteWhere")
     val matched = cond <=> lit(true) // null predicate = not matched
-    val snap = snapshot(ref)
-    // merge-on-read routing: the table property asks for it, or live
-    // vectors exist (a copy-on-write rewrite of a DV'd file would need
-    // the DV-aware read anyway — one applier owns that composition)
-    if (dvEnabled(ref) || snap.exists(_.dvMap.nonEmpty)) {
-      val planned = snap.getOrElse(throw new IllegalArgumentException(
-        s"$ref has no committed version — DV deletes need the commit log"))
-      if (planned.files.isEmpty) return 0L
-      // matched rows with positions within `files`, existing vectors
-      // applied — read per subset, so the change rows scan only the
-      // files the delete touches
-      def hits(files: Seq[String]): DataFrame =
-        readFileSubset(planned, files, withPos = true).filter(matched)
-      return dvReplace(ref, planned, DeletionVectors.build(hits(planned.files)
-          .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))),
-        None, Map(Warehouse.OpMeta -> "DELETE"),
-        touched =>
-          if (!cdfEnabled(ref)) None
-          else Some(hits(touched).drop("__gdv_file", "__gdv_pos")
-            .withColumn(Warehouse.ChangeTypeCol, lit("delete"))))
-    }
-    val perFile = matchesPerFile(ref, matched)
-    if (perFile.isEmpty) return 0L
-    val touched = perFile.map(_._1)
-    // no vector is live here, so physical totals are live totals
-    val totals = physicalRows(ref, touched.map(relKey(ref)))
-    val partial = perFile.collect { case (f, n) if n < totals(relKey(ref)(f)) => f }
-    if (partial.isEmpty)
-      // pure retirement: the metadata-only partition drop stays
-      // metadata-only even with CDF on
-      retireDataFiles(ref, touched, meta = Map(Warehouse.OpMeta -> "DELETE"))
-    else {
-      // mixed rewrite: the deleted rows of ALL touched files (the
-      // commit marker claims completeness) become the change files
-      val changes =
-        if (!cdfEnabled(ref)) None
-        else Some(spark.read.option("basePath", path(ref))
-          .parquet(touched: _*).filter(matched)
-          .withColumn(Warehouse.ChangeTypeCol, lit("delete")))
-      replaceDataFiles(ref, touched,
-        spark.read.option("basePath", path(ref))
-          .parquet(partial: _*)
-          .filter(!matched),
-        meta = Map(Warehouse.OpMeta -> "DELETE"), changes = changes)
-    }
-    perFile.map(_._2).sum
+    val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
+      s"$ref has no committed version"))
+    mutate(Mutation("DELETE", snap, Mutation.Matching(matched), Set(Mutation.Delete),
+        joined = false, whole = None) { (target, onRead) =>
+      Mutation.classified(if (onRead) target.filter(matched) else target,
+        when(matched, Mutation.Delete).otherwise(Mutation.Keep), Map.empty)
+    })
   }
 
   /** The MERGE-ON-READ applier — the one deletion-vector write path
@@ -2225,13 +2177,12 @@ final class Warehouse(spark: SparkSession, val root: String,
     * sidecars no surviving version references.
     *
     * `changes(touched)` is the CDF rows given the touched files
-    * (table-relative paths of `planned`): a producer planning from a
-    * scan (DELETE) reads only those files, a producer holding a
-    * materialized classification returns it whole. That classification
-    * MUST be one materialized frame when a join produced it (the merge
-    * and update callers localCheckpoint theirs): `sup`, the rows and
-    * the changes come from separate actions, and un-pinned window
-    * tie-breaks could otherwise supersede one row and append another.
+    * (table-relative paths of `planned`): an unpinned classification
+    * (DELETE) re-reads only those files, a pinned one returns itself
+    * whole. [[mutate]], the one caller, pins the classification when
+    * `sup`, the rows and the changes would otherwise come from separate
+    * evaluations that can disagree (window tie-breaks, nondeterministic
+    * SET values).
     * The new rows stage and [[land]] like every added file (validated,
     * journaled, manifest maintained), with the commit carrying the
     * version's complete vector map.
@@ -2288,26 +2239,24 @@ final class Warehouse(spark: SparkSession, val root: String,
   }
 
   /** Row-level UPDATE (Delta `UPDATE ... SET ... WHERE` semantics):
-    * rewrite ONLY the files that contain a matching row — matched rows
-    * get the SET columns re-evaluated, unmatched rows in the same file
-    * pass through unchanged, and every untouched file keeps its bytes
-    * and path. Returns the number of rows updated.
+    * matched rows get the SET columns re-evaluated, unmatched rows pass
+    * through unchanged. Returns the number of rows updated.
     *
-    * Same match planner as [[deleteWhere]] ([[matchesPerFile]]), so
-    * work is proportional to the files that COULD match, and the
-    * rewrite to the files that DO. SQL's three-valued logic is
-    * honored — rows where the predicate evaluates NULL are NOT
-    * updated. Partitioned layouts rewrite per partition directory
-    * (files go back inside their partitions, one commit per touched
-    * directory — [[compact]]'s crash-recoverable shape); the
-    * predicate may reference partition columns, the SET may NOT (a
-    * partition-moving update is a delete + insert, refused here the
-    * way Delta refuses partition-column updates on partitioned
-    * tables' physical layout).
+    * A producer for [[mutate]]: matched rows classify `update` with
+    * their post-SET image, so copy-on-write rewrites only the files that
+    * hold a matching row (every other file keeps its bytes and path) and
+    * merge-on-read appends only the updated rows. Either way the UPDATE
+    * is ONE commit, also when it touches several partition directories
+    * (rewritten files route back into their partitions). SQL's
+    * three-valued logic is honored — rows where the predicate evaluates
+    * NULL are NOT updated. The predicate may reference partition
+    * columns, the SET may NOT (a partition-moving update is a delete +
+    * insert, refused here the way Delta refuses partition-column updates
+    * on partitioned tables' physical layout).
     *
-    * Concurrency: the touched-file plan is computed optimistically;
-    * [[replaceDataFiles]] re-validates under the writer lock and
-    * throws [[ConcurrentWriteException]] if the table moved.
+    * Concurrency: the plan is computed optimistically; the commit
+    * re-validates it under the writer lock and throws
+    * [[ConcurrentWriteException]] if the table moved.
     */
   def updateWhere(ref: TableRef, cond: org.apache.spark.sql.Column,
                   set: Seq[(String, org.apache.spark.sql.Column)]): Long = {
@@ -2318,9 +2267,7 @@ final class Warehouse(spark: SparkSession, val root: String,
       s"$ref has no committed version"))
     // SET targets must be physical DATA columns of the files
     val partCols: Set[String] = Warehouse.partDirCols(snap.files).toSet
-    val dataCols = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fieldNames.toSeq.filterNot(partCols.contains)
+    val dataCols = committedSchema(snap).fieldNames.toSeq.filterNot(partCols.contains)
     val badSet = set.map(_._1).filterNot(dataCols.contains)
     require(badSet.isEmpty,
       s"updateWhere on $ref cannot SET ${badSet.mkString(",")}: not a " +
@@ -2337,119 +2284,134 @@ final class Warehouse(spark: SparkSession, val root: String,
     // GENERATED ALWAYS AS semantics; carrying the stale value would
     // bounce off the staged validation
     val genX = features.generatedRecomputes(decl, set.map(_._1.toLowerCase).toSet)
-    // merge-on-read routing (same dispatch as deleteWhere): with the
-    // DV property on, matched rows supersede by position and the
-    // updated rows land as one small append — no touched-file rewrite
-    if (dvEnabled(ref)) return updateWhereDv(ref, matched, set, genX, snap)
-    val perFile = matchesPerFile(ref, matched)
-    if (perFile.isEmpty) return 0L
-    val setMap = set.toMap
-    val cdfOn = cdfEnabled(ref)
-    // rewrite per partition directory so replacement files land back
-    // inside their partitions (compact's layout-preserving shape)
-    perFile.map(_._1)
-      .groupBy(f => relKey(ref)(f).split('/').dropRight(1).mkString("/"))
-      .foreach { case (subdir, files) =>
-        // basePath read restores partition columns for the predicate;
-        // only data columns are written back (dirs carry the rest).
-        // readFiles applies live deletion vectors, so a rewrite can
-        // never resurrect merge-on-read-deleted rows — and the
-        // rewritten files' vector mappings die with the retirement.
-        val slice = readFiles(ref, files)
-        val allCols = slice.columns.toSeq
-        // stage 1: the user SET over the pre-image; stage 2: derived
-        // columns recompute over the post-SET image, gated on the SAME
-        // matched flag (re-evaluating the condition post-SET would
-        // answer a different question)
-        val postSet = slice.withColumn("__upd_m", matched)
-          .select(allCols.map(c =>
-            setMap.get(c)
-              .map(v => when(col("__upd_m"), v).otherwise(col(c)).as(c))
-              .getOrElse(col(c))) :+ col("__upd_m"): _*)
-        val regen = genX.foldLeft(postSet) { case (d, (g, e)) =>
-          d.withColumn(g, when(col("__upd_m"),
-            org.apache.spark.sql.functions.expr(e)).otherwise(col(g)))
-        }
-        val rewritten = regen.select(dataCols.map(col): _*)
-        // CDF: this directory's matched rows, before and after the SET
-        // (full table schema — change files stand alone), atomic with
-        // the commit; O(updated rows) extra per directory
-        val changes =
-          if (!cdfOn) None
-          else {
-            val pre = slice.filter(matched)
-            val post0 = pre.select(allCols.map(c =>
-              setMap.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-            val post = genX.foldLeft(post0) { case (d, (g, e)) =>
-              d.withColumn(g, org.apache.spark.sql.functions.expr(e))
-            }
-            Some(pre.withColumn(Warehouse.ChangeTypeCol,
-                lit("update_preimage"))
-              .unionByName(post.withColumn(Warehouse.ChangeTypeCol,
-                lit("update_postimage"))))
-          }
-        replaceDataFiles(ref, files, rewritten,
-          subdir = if (subdir.isEmpty) None else Some(subdir),
-          meta = Map(Warehouse.OpMeta -> "UPDATE"), changes = changes)
+    val updated = col(Mutation.KindCol) === Mutation.Update
+    mutate(Mutation("UPDATE", snap, Mutation.Matching(matched), Set(Mutation.Update),
+        joined = false, whole = None) { (target, onRead) =>
+      // stage 1: the user SET over the pre-image; stage 2: generations
+      // over the post-SET image (references renamed onto the post
+      // columns), gated on the SAME classification — re-evaluating the
+      // condition post-SET would answer a different question
+      val postSet = Mutation.classified(if (onRead) target.filter(matched) else target,
+        when(matched, Mutation.Update).otherwise(Mutation.Keep),
+        set.map { case (c, v) => c -> when(updated, v).otherwise(col(c)) }.toMap)
+      val renames = Mutation.columns(target).map(c =>
+        c.toLowerCase -> s"`${Mutation.post(c)}`").toMap
+      genX.foldLeft(postSet) { case (d, (g, e)) =>
+        d.withColumn(Mutation.post(g), when(updated,
+          org.apache.spark.sql.functions.expr(TableFeatures.substituteSql(e, renames)))
+          .otherwise(col(g)))
       }
-    perFile.map(_._2).sum
+    })
   }
 
-  /** MERGE-ON-READ update — [[updateWhere]]'s body when the DV
-    * property is on: the matched rows' positions land in a vector
-    * and their SET-applied images land as one small append
-    * ([[dvReplace]]); unmatched rows in the same files never move.
-    * Change-feed rows (pre/postimage) commit atomically as usual.
-    * `genX`: the generations the SET recomputes.
+  /** THE row-level mutation router — the one place the copy-on-write /
+    * merge-on-read rule lives. The rule: a mutation touching every file
+    * ([[Mutation.All]]) rewrites the table whole; otherwise the table's
+    * deletion-vector property decides.
+    *
+    * Merge-on-read: the touched files' claimed rows supersede by
+    * position and the updated and inserted rows land as one small
+    * append ([[dvReplace]]); unmatched bytes never move. A frame the
+    * append reads (or a joined one the change feed reads too) is pinned
+    * first — the positions, the appended rows and the change rows come
+    * from separate actions and must be one classification.
+    *
+    * Copy-on-write: the touched files are rewritten with their kept and
+    * post-image rows plus the inserts ([[replaceDataFiles]], routed back
+    * through the committed layout); a pure delete retires the files
+    * whose every live row it claims as metadata ([[retireDataFiles]]),
+    * and a merge touching every file rewrites the table whole
+    * ([[rewriteTable]]). A joined frame the change feed also reads is
+    * pinned.
+    *
+    * Every read applies live deletion vectors, so files that carry
+    * them need no routing of their own. Either arm commits ONCE, with
+    * the change rows ([[Mutation.changeRows]]) when the change data feed
+    * is on — except a pure retirement, whose rows the feed derives from
+    * the retired files. Returns the number of claimed target rows a
+    * [[Mutation.Matching]] producer asked for (0 for the others
+    * copy-on-write).
     */
-  private def updateWhereDv(ref: TableRef,
-                            matched: org.apache.spark.sql.Column,
-                            set: Seq[(String, org.apache.spark.sql.Column)],
-                            genX: Seq[(String, String)],
-                            planned: TableSnapshot): Long = {
-    if (planned.files.isEmpty) return 0L
-    val setMap = set.toMap
-    // matched rows with positions, live vectors applied; the predicate
-    // pushes to the scan, so planning work tracks the files that could
-    // match
-    val eff = readFileSubset(planned, planned.files, withPos = true).filter(matched)
-    val cols = eff.columns.toSeq
-      .filterNot(Set("__gdv_file", "__gdv_pos").contains)
-    // generated columns reading a SET column recompute over the
-    // post-SET image (references renamed onto the __post_ columns;
-    // dependency-ordered so a generation over a generation sees its
-    // provider fresh)
-    val renames = cols.map(c => c.toLowerCase -> s"`__post_$c`").toMap
-    val postSet = eff.select(cols.map(col) ++ cols.map(c =>
-        setMap.get(c).getOrElse(col(c)).as(s"__post_$c")) ++
-      Seq(col("__gdv_file"), col("__gdv_pos")): _*)
-    val regen = genX.foldLeft(postSet) { case (d, (g, e)) =>
-      d.withColumn(s"__post_$g", org.apache.spark.sql.functions.expr(
-        Warehouse.substituteSql(e, renames)))
-    }
-    // ONE materialized classification (dvReplace's documented
-    // contract) carrying pre-image, POST-SET image, and position per
-    // matched row: the downstream actions (bitmap build, staged append,
-    // CDC stage) all read this checkpoint, so a nondeterministic condition cannot supersede a
-    // row without appending its image, and a nondeterministic SET
-    // (current_timestamp()) commits exactly the postimage the CDF
-    // reports. O(matched rows), the same bound mergeOnRead pays.
-    val staged = graft.util.Scratch.transientCheckpoint(
-      regen.localCheckpoint())
-    val sup = DeletionVectors.build(staged
-      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos")))
-    if (sup.isEmpty) return 0L
-    val newRows = staged.select(cols.map(c => col(s"__post_$c").as(c)): _*)
-    val changes =
-      if (!cdfEnabled(ref)) None
-      else {
-        val pre = staged.select(cols.map(col): _*)
-        Some(pre.withColumn(Warehouse.ChangeTypeCol, lit("update_preimage"))
-          .unionByName(newRows.withColumn(Warehouse.ChangeTypeCol,
-            lit("update_postimage"))))
+  private[graft] def mutate(m: Mutation): Long = {
+    import Mutation._
+    val snap = m.planned
+    val ref = snap.ref
+    val meta = Map(Warehouse.OpMeta -> m.op)
+    val cdfOn = cdfEnabled(ref)
+    val appends = m.kinds(Update) || m.kinds(Insert)
+    def rows(rels: Seq[String], onRead: Boolean) =
+      m.classify(readRows(snap, rels, onRead), onRead)
+    def pinned(frame: DataFrame, pin: Boolean) =
+      if (pin) graft.util.Scratch.transientCheckpoint(frame.localCheckpoint()) else frame
+    def changes(frame: => DataFrame) = Option.when(cdfOn)(changeRows(frame, m.kinds))
+    def rewrite(rels: Seq[String], gone: Set[String], claimed: Long): Long = {
+      val frame = pinned(rows(rels, onRead = false), m.joined && cdfOn)
+      val kept = if (gone.isEmpty) frame else rows(rels.filterNot(gone), onRead = false)
+      val after = postRows(kept, Keep, Update, Insert)
+      m.whole.filter(_ => rels.size == snap.files.size) match {
+        case Some(stats) =>
+          rewriteTable(ref, Some(snap.version), after, meta, changes(frame), stats)
+        case None =>
+          replaceDataFiles(ref, rels.map(r => new Path(path(ref), r).toString), after,
+            meta = meta, changes = changes(frame))
       }
-    dvReplace(ref, planned, sup, Some(newRows),
-      Map(Warehouse.OpMeta -> "UPDATE"), _ => changes)
+      claimed
+    }
+    m.touched match {
+      case All => rewrite(snap.files, Set.empty, 0L)
+      case touched if dvEnabled(ref) =>
+        val rels = touched match {
+          case Files(paths) => paths.map(relKey(ref))
+          case _ => snap.files // the predicate pushes into the scan
+        }
+        val pin = appends || (m.joined && cdfOn)
+        val frame = pinned(rows(rels, onRead = true), pin)
+        val sup = DeletionVectors.build(frame.filter(kindIn(Update, Delete))
+          .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos")))
+        if (sup.isEmpty && !m.kinds(Insert)) return 0L
+        dvReplace(ref, snap, sup, Option.when(appends)(postRows(frame, Update, Insert)),
+          meta, touchedRels => changes(if (pin) frame else rows(touchedRels, onRead = true)))
+      case Files(paths) => rewrite(paths.map(relKey(ref)), Set.empty, 0L)
+      case Matching(claims) =>
+        val perFile = matchesPerFile(ref, claims).map { case (f, n) => relKey(ref)(f) -> n }
+        if (perFile.isEmpty) return 0L
+        val rels = perFile.map(_._1)
+        val claimed = perFile.map(_._2).sum
+        // a pure delete claiming every LIVE row of a file retires it
+        val gone =
+          if (m.kinds != Set(Delete)) Set.empty[String]
+          else {
+            val carried = vectorsOf(snap, rels)
+            val physical = physicalRows(ref, rels)
+            perFile.collect { case (f, n) if n >= physical(f) -
+              carried.get(f).fold(0L)(DeletionVectors.cardinality) => f }.toSet
+          }
+        if (rels.forall(gone)) {
+          retireDataFiles(ref, rels.map(r => new Path(path(ref), r).toString), meta)
+          claimed
+        } else rewrite(rels, gone, claimed)
+    }
+  }
+
+  /** THE full-table copy-on-write rewrite — a merge's fallback and the
+    * SQL subquery UPDATE / DELETE: `rows`, the complete committed truth
+    * (nothing computes on omit, identity values carry through), replace
+    * every file in one commit that keeps the committed layout
+    * ([[layoutOf]]) and the stats and bloom columns (plus `addStats`),
+    * and CASes on `expected`, the version the rows were computed from —
+    * a concurrent commit in between conflicts loudly instead of being
+    * silently lost. `changes` commit atomically with it.
+    */
+  private[graft] def rewriteTable(ref: TableRef, expected: Option[Long], rows: DataFrame,
+                                  meta: Map[String, String], changes: Option[DataFrame],
+                                  addStats: Seq[String]): Unit = {
+    val stats = (statColumns(ref) ++ addStats).distinct.filter(rows.columns.contains)
+    overwrite(ref, rows,
+      partitionBy = snapshot(ref).toSeq.flatMap(layoutOf).filter(rows.columns.contains),
+      statsColumns = stats,
+      bloomColumns = bloomColumns(ref).filter(stats.contains),
+      expectedVersion = expected, meta = meta, changes = changes,
+      internalRewrite = true)
   }
 
   /** K4 TRUNCATE (lib/checker_handler.py:119): keep the table, drop
@@ -3133,11 +3095,6 @@ object Warehouse {
   def identityHwKey(column: String): String = TableFeatures.identityHwKey(column)
   def parseIdentitySpec(key: String, value: String): (Long, Long) =
     TableFeatures.parseIdentitySpec(key, value)
-  private[graft] def exprRefs(sql: String): Set[String] = TableFeatures.exprRefs(sql)
-  private[graft] def substituteSql(sql: String, sets: Map[String, String]): String =
-    TableFeatures.substituteSql(sql, sets)
-  private[graft] def topoGenerations(gens: Map[String, String]): Seq[(String, String)] =
-    TableFeatures.topoGenerations(gens)
 
   /** Carried-meta pointer to the [[Warehouse.copyInto]] loaded-files
     * ledger (a filename under [[IngestDir]]). Carried so RESTORE

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{DeletionVectors, TableRef, Warehouse}
+import graft.catalog.{Mutation, TableFeatures, TableRef, Warehouse}
 
 /** Native MERGE, replacing the reference's Delta
   * `whenMatchedUpdateAll / whenNotMatchedInsertAll` (no Delta jar in this
@@ -55,30 +55,8 @@ object Merge {
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String],
             tsField: Option[String]): DataFrame = {
     requireSameSchema(target.columns.toSeq, source, keys)
-    rewrite(target, source, keys, UpsertAll, tsField, wantChanges = false,
-      materialize = false)._1
-  }
-
-  /** [[merge]] plus the ROW-LEVEL CHANGE classification — the
-    * change-data-feed producer: returns (merged contents, change rows)
-    * where the change rows are the target schema plus
-    * [[graft.catalog.Warehouse.ChangeTypeCol]] (`insert` for unmatched
-    * source rows incl. the stale-row quirk, `update_preimage` /
-    * `update_postimage` for each replaced target row — Delta CDF's
-    * vocabulary). The classified join is MATERIALIZED once
-    * (localCheckpoint, O(target slice + batch) — the caller prunes the
-    * target to touched files first) so the merged output and the
-    * change rows derive from the SAME multi-match tie-breaks: two
-    * independent executions of a window over equal-ts matches could
-    * otherwise pick different winners and make the feed lie about the
-    * table.
-    */
-  def mergeWithChanges(target: DataFrame, source: DataFrame, keys: Seq[String],
-                       tsField: Option[String]): (DataFrame, DataFrame) = {
-    requireSameSchema(target.columns.toSeq, source, keys)
-    val (merged, changes) = rewrite(target, source, keys, UpsertAll, tsField,
-      wantChanges = true, materialize = true)
-    (merged, changes.get)
+    Mutation.postRows(classified(target, source, keys, UpsertAll, tsField, onRead = false),
+      Mutation.Keep, Mutation.Update, Mutation.Insert)
   }
 
   /** One fully-rendered MERGE clause. Conditions and assignment values
@@ -121,14 +99,14 @@ object Merge {
   }
 
   /** Delta-J1's update-all / insert-all as clauses: the shape
-    * [[merge]], [[mergeWithChanges]] and [[mergeOnRead]] apply.
+    * [[merge]] and `MergeTable.upsert` apply.
     */
-  private lazy val UpsertAll = MergeClauses(
+  private[graft] lazy val UpsertAll = MergeClauses(
     matched = Seq(Clause(None, "update")), inserts = Seq(Clause(None, "insert")))
 
   /** J1 sources carry exactly the target's columns, in order. */
-  private def requireSameSchema(cols: Seq[String], source: DataFrame,
-                                keys: Seq[String]): Unit = {
+  private[graft] def requireSameSchema(cols: Seq[String], source: DataFrame,
+                                       keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "merge requires at least one key column")
     require(source.columns.toSeq == cols,
       s"merge schema mismatch: target ${cols.mkString(",")} vs source " +
@@ -143,19 +121,84 @@ object Merge {
       insert.toSeq.map(c => Clause(c, "insert")),
       bySource.map(c => Clause(c, "delete")))
 
-  /** The classified join every merge route shares: one full-outer join
-    * on the keys (plus J1's `source.ts >= target.ts` when `tsField` is
-    * set), one window resolving multi-match per target row (latest ts
-    * first, else the first key's source ordering), and clause order
-    * folded into a KIND tag (`m<i>` matched, `s<i>` by-source, `i<i>`
-    * insert, `keep`). `carry` columns (merge-on-read file/pos) ride
-    * through untouched; `keepKept=false` drops keep rows — merge-on-read
-    * never needs them. NOT materialized: the caller decides.
+  /** The post-clause image of a classification — one
+    * [[Mutation.post]] column per output column, each value chained over
+    * the clause kinds: star takes the same-named source column; explicit
+    * sets evaluate their expression CAST to the target type; unassigned
+    * columns keep the target value (update) or NULL (insert). The base
+    * of the chain is the keep row's own value.
     */
-  private def classify(target: DataFrame, source: DataFrame,
-                       keys: Seq[String], cl: MergeClauses,
-                       tsField: Option[String], carry: Seq[String],
-                       keepKept: Boolean): DataFrame = {
+  private def postImage(classified: DataFrame, cols: Seq[String],
+                        cl: MergeClauses): Seq[Column] = {
+    // classified carries the target columns at their own types
+    val types = classified.schema.map(f => f.name -> f.dataType).toMap
+    val tagged: Seq[(String, Clause, Boolean)] =
+      cl.matched.zipWithIndex.map { case (c, i) => (s"m$i", c, false) } ++
+      cl.bySource.zipWithIndex.map { case (c, i) => (s"s$i", c, false) } ++
+      cl.inserts.zipWithIndex.map { case (c, i) => (s"i$i", c, true) }
+    cols.map { c =>
+      tagged.filter(_._2.action != "delete").foldRight(col(c)) {
+        case ((kind, clause, isInsert), els) =>
+          val v = clause.sets match {
+            case None => col(SRC + c)
+            case Some(sets) => sets.toMap.get(c) match {
+              case Some(sqlText) => expr(sqlText).cast(types(c))
+              case None if isInsert => lit(null).cast(types(c))
+              case None => col(c)
+            }
+          }
+          when(col(KIND) === kind, v).otherwise(els)
+      }.as(Mutation.post(c))
+    }
+  }
+
+  private def kindsOf(cl: MergeClauses): (Seq[String], Seq[String], Seq[String]) = {
+    def pick(clauses: Seq[Clause], tag: String, act: String): Seq[String] =
+      clauses.zipWithIndex.collect { case (c, i) if c.action == act => s"$tag$i" }
+    val updates = pick(cl.matched, "m", "update") ++ pick(cl.bySource, "s", "update")
+    val deletes = pick(cl.matched, "m", "delete") ++ pick(cl.bySource, "s", "delete")
+    val inserts = cl.inserts.indices.map(i => s"i$i")
+    (updates, deletes, inserts)
+  }
+
+  private def inKinds(kinds: Seq[String]): Column =
+    if (kinds.isEmpty) lit(false) else col(KIND).isin(kinds: _*)
+
+  /** The [[Mutation]] kinds `cl` can produce. */
+  private[graft] def kinds(cl: MergeClauses): Set[String] = {
+    val (updates, deletes, inserts) = kindsOf(cl)
+    Seq(Mutation.Update -> updates, Mutation.Delete -> deletes,
+      Mutation.Insert -> inserts).collect { case (k, tags) if tags.nonEmpty => k }.toSet
+  }
+
+  /** One MERGE's classified frame — the [[Mutation]] contract — for
+    * the full Delta clause surface:
+    *
+    * {{{
+    * WHEN MATCHED [AND c] THEN UPDATE SET * | SET col = expr… | DELETE
+    * WHEN NOT MATCHED [AND c] THEN INSERT * | (cols) VALUES (exprs)   (ordered, several)
+    * WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET … | DELETE    (ordered)
+    * }}}
+    *
+    * One full-outer join on the keys (plus J1's `source.ts >= target.ts`
+    * when `tsField` is set), one window resolving multi-match per target
+    * row (latest ts first, else the first key's source ordering —
+    * deterministic, see [[merge]]), and clause order folded into a tag
+    * (`m<i>` matched, `s<i>` by-source, `i<i>` insert, `keep`): the
+    * first clause of the row's class whose condition holds applies,
+    * none → keep. The source may carry EXTRA columns (CDC op flags)
+    * beyond the target schema; they are usable in conditions and
+    * expressions and dropped from the output. NULL keys never match:
+    * null-key source rows are insert candidates, null-key target rows
+    * are not-matched-by-source. With `onRead` the target carries
+    * `__gdv_file` / `__gdv_pos`, which ride through, and keep rows drop —
+    * their bytes never move, which is the point of merge-on-read: a CDC
+    * apply costs O(changed rows). NOT materialized: the router decides.
+    */
+  private[graft] def classified(target: DataFrame, source: DataFrame, keys: Seq[String],
+                                cl: MergeClauses, tsField: Option[String],
+                                onRead: Boolean): DataFrame = {
+    val carry = if (onRead) Carry else Nil
     require(keys.nonEmpty, "merge requires at least one key column")
     val cols = target.columns.toSeq.filterNot(carry.contains)
     val missingKeys = keys.filterNot(source.columns.contains)
@@ -192,179 +235,24 @@ object Merge {
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .withColumn(KIND,
         when(col(PRESENT), matchedKind).otherwise(bySourceKind))
+    // merge-on-read never needs keep rows: drop them before anything
+    // materializes
     val targetRows =
-      if (keepKept) targetRows0 else targetRows0.filter(col(KIND) =!= "keep")
+      if (!onRead) targetRows0 else targetRows0.filter(col(KIND) =!= "keep")
     val insertRows = joined.filter(col(TID).isNull)
       .withColumn(KIND, insertKind).filter(col(KIND) =!= "keep")
     val selectCols = cols.map(col) ++ srcCols.map(c => col(SRC + c)) ++
       carry.map(col) :+ col(KIND)
-    targetRows.select(selectCols: _*)
+    val tagged = targetRows.select(selectCols: _*)
       .unionByName(insertRows.select(selectCols: _*))
-  }
-
-  /** Pin a classification so separate downstream actions share its
-    * window tie-breaks (and its nondeterministic clause values).
-    */
-  private def materialized(classified: DataFrame): DataFrame =
-    graft.util.Scratch.transientCheckpoint(classified.localCheckpoint())
-
-  /** The post-clause image of a classification — every output column
-    * plus KIND, each column's value chained over the clause kinds: star
-    * takes the same-named source column; explicit sets evaluate their
-    * expression CAST to the target type; unassigned columns keep the
-    * target value (update) or NULL (insert). The base of the chain is
-    * the keep row's own value.
-    */
-  private def postImage(classified: DataFrame, cols: Seq[String],
-                        cl: MergeClauses): DataFrame = {
-    // classified carries the target columns at their own types
-    val types = classified.schema.map(f => f.name -> f.dataType).toMap
-    val tagged: Seq[(String, Clause, Boolean)] =
-      cl.matched.zipWithIndex.map { case (c, i) => (s"m$i", c, false) } ++
-      cl.bySource.zipWithIndex.map { case (c, i) => (s"s$i", c, false) } ++
-      cl.inserts.zipWithIndex.map { case (c, i) => (s"i$i", c, true) }
-    classified.select(cols.map { c =>
-      tagged.filter(_._2.action != "delete").foldRight(col(c)) {
-        case ((kind, clause, isInsert), els) =>
-          val v = clause.sets match {
-            case None => col(SRC + c)
-            case Some(sets) => sets.toMap.get(c) match {
-              case Some(sqlText) => expr(sqlText).cast(types(c))
-              case None if isInsert => lit(null).cast(types(c))
-              case None => col(c)
-            }
-          }
-          when(col(KIND) === kind, v).otherwise(els)
-      }.as(c)
-    } :+ col(KIND): _*)
-  }
-
-  private def kindsOf(cl: MergeClauses): (Seq[String], Seq[String], Seq[String]) = {
-    def pick(clauses: Seq[Clause], tag: String, act: String): Seq[String] =
-      clauses.zipWithIndex.collect { case (c, i) if c.action == act => s"$tag$i" }
-    val updates = pick(cl.matched, "m", "update") ++ pick(cl.bySource, "s", "update")
-    val deletes = pick(cl.matched, "m", "delete") ++ pick(cl.bySource, "s", "delete")
-    val inserts = cl.inserts.indices.map(i => s"i$i")
-    (updates, deletes, inserts)
-  }
-
-  private def inKinds(kinds: Seq[String]): Column =
-    if (kinds.isEmpty) lit(false) else col(KIND).isin(kinds: _*)
-
-  /** CDF change rows of one classification, in Delta's vocabulary:
-    * `insert` and `update_postimage` rows carry post-clause values
-    * (`post`), `update_preimage` and `delete` rows the target's own
-    * (`classified`).
-    */
-  private def changeRows(classified: DataFrame, post: DataFrame,
-                         cols: Seq[String], cl: MergeClauses): DataFrame = {
     val (updates, deletes, inserts) = kindsOf(cl)
-    def rows(from: DataFrame, kinds: Seq[String], changeType: String) =
-      from.filter(inKinds(kinds)).select(cols.map(col) :+
-        lit(changeType).as(graft.catalog.Warehouse.ChangeTypeCol): _*)
-    Seq(rows(post, inserts, "insert"),
-      rows(classified, updates, "update_preimage"),
-      rows(post, updates, "update_postimage"),
-      rows(classified, deletes, "delete")).reduce(_ unionByName _)
+    val kind = when(inKinds(updates), Mutation.Update)
+      .when(inKinds(deletes), Mutation.Delete)
+      .when(inKinds(inserts), Mutation.Insert).otherwise(Mutation.Keep)
+    tagged.select(cols.map(col) ++ postImage(tagged, cols, cl) ++ carry.map(col) :+
+      kind.as(Mutation.KindCol): _*)
   }
 
-  /** COPY-ON-WRITE output of one classification: (post-merge rows of
-    * the target slice, CDF change rows when `wantChanges`).
-    */
-  private def rewrite(target: DataFrame, source: DataFrame, keys: Seq[String],
-                      cl: MergeClauses, tsField: Option[String],
-                      wantChanges: Boolean, materialize: Boolean)
-      : (DataFrame, Option[DataFrame]) = {
-    val cols = target.columns.toSeq
-    val classified0 = classify(target, source, keys, cl, tsField,
-      carry = Nil, keepKept = true)
-    val classified =
-      if (materialize) materialized(classified0) else classified0
-    val post = postImage(classified, cols, cl)
-    val merged = post.filter(!inKinds(kindsOf(cl)._2)).drop(KIND)
-    (merged,
-      if (wantChanges) Some(changeRows(classified, post, cols, cl)) else None)
-  }
-
-  /** MERGE-ON-READ output of one classification — the producer for
-    * `Warehouse.dvReplace`: `sup`, the superseded target rows as
-    * `(file, pos)` (every matched row an update OR delete clause
-    * claimed — these positions join the deletion-vector sidecar);
-    * `adds`, the rows to APPEND (each updated row's post-clause values
-    * plus the accepted inserts); `changes`, CDF rows or None. The target
-    * must carry `__gdv_file` / `__gdv_pos`
-    * ([[graft.catalog.Warehouse.readFilesWithPos]]); keep rows drop
-    * before the checkpoint — their bytes never move, which is the point:
-    * a CDC apply costs O(changed rows), not O(touched files) of rewrite.
-    */
-  private def onRead(target: DataFrame, source: DataFrame, keys: Seq[String],
-                     cl: MergeClauses, tsField: Option[String],
-                     wantChanges: Boolean)
-      : (DataFrame, DataFrame, Option[DataFrame]) = {
-    val cols = target.columns.toSeq.filterNot(Carry.contains)
-    val classified = materialized(classify(target, source, keys, cl,
-      tsField, carry = Carry, keepKept = false))
-    val (updateKinds, deleteKinds, insertKinds) = kindsOf(cl)
-    val sup = classified.filter(inKinds(updateKinds ++ deleteKinds))
-      .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos"))
-    val post = postImage(classified, cols, cl)
-    val adds = post.filter(inKinds(updateKinds ++ insertKinds)).drop(KIND)
-    (sup, adds,
-      if (wantChanges) Some(changeRows(classified, post, cols, cl)) else None)
-  }
-
-  /** General MERGE clause application — the full Delta clause surface:
-    *
-    * {{{
-    * WHEN MATCHED [AND c] THEN UPDATE SET * | SET col = expr… | DELETE
-    * WHEN NOT MATCHED [AND c] THEN INSERT * | (cols) VALUES (exprs)   (ordered, several)
-    * WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET … | DELETE    (ordered)
-    * }}}
-    *
-    * Declared order decides — the first clause of the row's class
-    * whose condition holds applies, none → keep. The source may carry
-    * EXTRA columns (CDC op flags) beyond the target schema; they are
-    * usable in conditions/expressions and dropped from the output.
-    * Multiple source matches resolve deterministically by the first
-    * key's source ordering (Delta aborts; deviation documented on
-    * [[merge]]). NULL keys never match: null-key source rows are
-    * insert candidates, null-key target rows are
-    * not-matched-by-source.
-    *
-    * Returns (post-merge rows of the target slice, CDF change rows
-    * when `wantChanges`) off ONE materialized classification.
-    */
-  def applyClauses(target: DataFrame, source: DataFrame, keys: Seq[String],
-                   cl: MergeClauses, wantChanges: Boolean)
-      : (DataFrame, Option[DataFrame]) =
-    rewrite(target, source, keys, cl, None, wantChanges, materialize = true)
-
-  /** MERGE-ON-READ clause application — [[applyClauses]] semantics,
-    * returning `(sup, adds, changes)` for `Warehouse.dvReplace`. By-source
-    * clauses are REJECTED here — they can touch any target row, so they
-    * pay the copy-on-write rewrite (the caller routes).
-    */
-  def applyClausesOnRead(target: DataFrame, source: DataFrame,
-                         keys: Seq[String], cl: MergeClauses,
-                         wantChanges: Boolean)
-      : (DataFrame, DataFrame, Option[DataFrame]) = {
-    require(cl.bySource.isEmpty,
-      "by-source clauses can touch any target row — merge-on-read cannot " +
-        "route them; use the copy-on-write path")
-    onRead(target, source, keys, cl, None, wantChanges)
-  }
-
-  /** MERGE-ON-READ upsert — the DV-mode merge's producer: [[merge]] /
-    * [[mergeWithChanges]] semantics, returning `(sup, adds, changes)`
-    * for `Warehouse.dvReplace` off ONE materialized classification.
-    * Unmatched target rows appear in NEITHER output.
-    */
-  def mergeOnRead(target: DataFrame, source: DataFrame, keys: Seq[String],
-                  tsField: Option[String], wantChanges: Boolean)
-      : (DataFrame, DataFrame, Option[DataFrame]) = {
-    requireSameSchema(target.columns.toSeq.filterNot(Carry.contains), source, keys)
-    onRead(target, source, keys, UpsertAll, tsField, wantChanges)
-  }
 }
 
 /** A warehouse-backed merge target: Delta-`DeltaTable.forName` stand-in
@@ -412,48 +300,10 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
                        evolveSchema: Boolean = false) {
 
   private val pruneKey = keys.head
+  /** Stats columns a bootstrap writes, and a full rewrite adds to the
+    * table's — so the next batch can prune.
+    */
   private def bootstrapStats: Seq[String] = if (collectStats) Seq(pruneKey) else Nil
-
-  /** Stats columns of a full rewrite: the table's, plus the prune key
-    * when this target collects stats — so the next batch can prune.
-    */
-  private def statCols: Seq[String] =
-    if (collectStats) (warehouse.statColumns(ref) :+ pruneKey).distinct
-    else warehouse.statColumns(ref)
-
-  /** The full read-merge-overwrite every merge route falls back to
-    * (no manifest, every file may overlap, by-source clauses, schema
-    * evolution). It keeps the committed partition layout (`k=v` path
-    * components — a fallback that dropped it would silently FLATTEN
-    * the table: values intact, partition pruning gone), the stats and
-    * bloom columns, and CASes on `baseVersion`, the version the merge
-    * computed against — a concurrent commit in the read→overwrite
-    * window conflicts loudly (and the retry loop re-plans) instead of
-    * being silently lost.
-    */
-  private def rewriteAll(merged: DataFrame, baseVersion: Option[Long],
-                         meta: Map[String, String],
-                         changes: Option[DataFrame]): Unit = {
-    val sc = statCols.filter(merged.columns.contains)
-    warehouse.overwrite(ref, merged,
-      partitionBy = warehouse.snapshot(ref).toSeq
-        .flatMap(s => Warehouse.partDirCols(s.files))
-        .filter(merged.columns.contains),
-      statsColumns = sc,
-      bloomColumns = warehouse.bloomColumns(ref).filter(sc.contains),
-      expectedVersion = baseVersion, meta = meta, changes = changes)
-  }
-
-  /** Update-all / insert-all over `target`, with the change rows when
-    * the table's change data feed is on.
-    */
-  private def upsertAll(target: DataFrame, source: DataFrame,
-                        cdfOn: Boolean): (DataFrame, Option[DataFrame]) =
-    if (!cdfOn) (Merge.merge(target, source, keys, tsField), None)
-    else {
-      val (merged, changes) = Merge.mergeWithChanges(target, source, keys, tsField)
-      (merged, Some(changes))
-    }
 
   /** Widen `df` with null columns so its column set becomes the ordered
     * union of its own and `other`'s; rejects same-name type conflicts.
@@ -474,41 +324,28 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
     widened.select((df.columns ++ missing).map(col).toIndexedSeq: _*)
   }
 
-  /** Upsert with bounded retry on writer conflicts. A
-    * [[graft.catalog.ConcurrentWriteException]] from the warehouse means
-    * either another writer holds the table lock or this plan went stale
-    * against a newer version — in BOTH cases nothing has touched the
-    * table, and the correct response for a CDC batch is to re-read and
-    * re-plan, which is exactly what re-running the attempt does (every
-    * attempt reads the CURRENT version). Bounded + jittered so true
-    * contention storms still surface to the caller instead of spinning.
+  /** Delta-J1's update-all / insert-all ([[Merge.merge]] semantics),
+    * retried on writer conflicts ([[retryOnConflict]]). Bootstraps the
+    * table on first run; an insert-only batch (its key range misses
+    * every file) appends without a join.
     */
-  def upsert(source: DataFrame): Unit = retryOnConflict(upsertOnce(source))
+  def upsert(source: DataFrame): Unit = retryOnConflict(mergeOnce(source, None))
 
   /** CLAUSE MERGE — the Delta surface beyond update-all/insert-all
-    * ([[Merge.applyClauses]] semantics; conditions and assignment
-    * values are SQL text over bare target names and `__src_`-prefixed
-    * source names): ordered `WHEN MATCHED [AND c] THEN UPDATE SET
-    * * | col = expr… | DELETE`, ordered conditional
-    * `WHEN NOT MATCHED THEN INSERT * | (cols) VALUES (exprs)`, and
-    * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET … | DELETE`.
-    * The CDC-apply shape (`s.op = 'D' → DELETE`, else update, inserts
-    * filtered) and the incremental-aggregation merge
-    * (`SET t.total = t.total + s.delta`) both run through here.
-    *
-    * Physical shape: without by-source clauses the target prunes to
-    * the source key range exactly like [[upsert]] — unmatched files
-    * keep their bytes — and with deletion vectors on
-    * (`graft.dv=true`) the merge goes MERGE-ON-READ: claimed rows
-    * supersede by position, updated values and inserts land as one
-    * small append, unmatched bytes in the touched files never move
-    * ([[Merge.applyClausesOnRead]] + `Warehouse.dvReplace`). A
-    * by-source clause can touch ANY target row, so it pays the full
-    * copy-on-write rewrite (Delta's shape too); CDF classification
-    * commits atomically as usual.
+    * ([[Merge.classified]] semantics; conditions and assignment values
+    * are SQL text over bare target names and `__src_`-prefixed source
+    * names): ordered `WHEN MATCHED [AND c] THEN UPDATE SET * | col =
+    * expr… | DELETE`, ordered conditional `WHEN NOT MATCHED THEN INSERT
+    * * | (cols) VALUES (exprs)`, and `WHEN NOT MATCHED BY SOURCE [AND
+    * c] THEN UPDATE SET … | DELETE`. The CDC-apply shape (`s.op = 'D' →
+    * DELETE`, else update, inserts filtered) and the
+    * incremental-aggregation merge (`SET t.total = t.total + s.delta`)
+    * both run through here. Same planner as [[upsert]]; a by-source
+    * clause can touch ANY target row, so it rewrites the table whole
+    * (Delta's shape too).
     */
   def upsertClauses(source: DataFrame, clauses: Merge.MergeClauses): Unit =
-    retryOnConflict(upsertClausesOnce(source, clauses))
+    retryOnConflict(mergeOnce(source, Some(clauses)))
 
   /** Round-18 tuple-shape adapter (star update/delete, one insert,
     * by-source deletes) over the generalized [[upsertClauses]].
@@ -525,60 +362,48 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
     * contract too. Route inserts through `Warehouse.append` (which
     * assigns) or drop the identity first.
     */
-  private def requireNoIdentity(): Unit = {
-    if (!warehouse.exists(ref)) return
-    val ids = warehouse.identityColumns(ref)
-    require(ids.isEmpty,
+  private def requireNoIdentity(decl: TableFeatures.Declared): Unit =
+    require(decl.identity.isEmpty,
       s"MERGE/replacePartitions into $ref: GENERATED ALWAYS AS IDENTITY " +
-        s"column(s) ${ids.keys.mkString(",")} are engine-assigned — a " +
+        s"column(s) ${decl.identity.keys.mkString(",")} are engine-assigned — a " +
         "merge would forge or drift them; append new rows through the " +
         "warehouse (ids assign there) or dropIdentityColumn first")
-  }
 
-  /** Explicit INSERT clauses fill OMITTED defaulted columns with their
-    * declared DEFAULT instead of NULL (compute-on-omit parity with
-    * append/overwrite); runs BEFORE the generated extension so a
-    * generation may read a defaulted column's value.
+  /** The declared clause surface: explicit INSERT clauses fill OMITTED
+    * defaulted columns with their DEFAULT instead of NULL
+    * (compute-on-omit parity with append/overwrite), then explicit
+    * assignments gain GENERATED-column recomputes — an UPDATE whose SET
+    * touches a generation's source recomputes the derived value over
+    * the post-assignment image (assigned references substituted
+    * textually; unassigned bare names already evaluate to the kept
+    * target value, or to NULL on insert rows, which is exactly the
+    * committed image), and an explicit INSERT computes every omitted
+    * generation. Defaults fill first, so a generation may read a
+    * defaulted column's value. Star clauses copy the source's values
+    * verbatim — those validate instead.
     */
-  private def withDefaultFills(cl: Merge.MergeClauses): Merge.MergeClauses = {
-    val defs = warehouse.columnDefaults(ref)
-    if (defs.isEmpty) return cl
+  private def declaredClauses(decl: TableFeatures.Declared,
+                              cl: Merge.MergeClauses): Merge.MergeClauses = {
+    val defs = decl.defaults.toSeq.sortBy(_._1)
     def fill(c: Merge.Clause): Merge.Clause = c.sets match {
       case Some(sets) =>
         val assigned = sets.map(_._1.toLowerCase).toSet
-        val extra = defs.toSeq.sortBy(_._1)
-          .filterNot { case (n, _) => assigned.contains(n.toLowerCase) }
+        val extra = defs.filterNot { case (n, _) => assigned.contains(n.toLowerCase) }
         if (extra.isEmpty) c else c.copy(sets = Some(sets ++ extra))
       case _ => c
     }
-    cl.copy(inserts = cl.inserts.map(fill))
-  }
-
-  /** Extend explicit-assignment clauses with GENERATED-column
-    * recomputes: an UPDATE whose SET touches a generation's source
-    * recomputes the derived value over the post-assignment image
-    * (assigned references substituted textually — unassigned bare
-    * names already evaluate to the kept target value, or to NULL on
-    * insert rows, which is exactly the committed image); an explicit
-    * INSERT computes every omitted generation (compute-on-omit, the
-    * same contract as append/overwrite). Star clauses copy the
-    * source's generated values verbatim — those validate instead.
-    */
-  private def withGeneratedRecomputes(cl: Merge.MergeClauses)
-      : Merge.MergeClauses = {
-    val gens = warehouse.generatedColumns(ref)
-    if (gens.isEmpty) return cl
+    val gens = decl.generated
     def extend(c: Merge.Clause, isInsert: Boolean): Merge.Clause =
       c.sets match {
-        case Some(sets) if c.action != "delete" =>
+        case Some(sets) if c.action != "delete" && gens.nonEmpty =>
           var assigned = sets.map { case (n, e) => n.toLowerCase -> e }.toMap
           val extra = Seq.newBuilder[(String, String)]
-          Warehouse.topoGenerations(gens
+          TableFeatures.topoGenerations(gens
             .filterNot { case (g, _) => assigned.contains(g.toLowerCase) })
             .foreach { case (g, e) =>
               if (isInsert ||
-                  Warehouse.exprRefs(e).intersect(assigned.keySet).nonEmpty) {
-                val sub = Warehouse.substituteSql(e, assigned)
+                  TableFeatures.exprRefs(e).intersect(assigned.keySet).nonEmpty) {
+                val sub = TableFeatures.substituteSql(e, assigned)
                 extra += g -> sub
                 assigned += g.toLowerCase -> sub
               }
@@ -588,44 +413,87 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
         case _ => c
       }
     Merge.MergeClauses(cl.matched.map(extend(_, isInsert = false)),
-      cl.inserts.map(extend(_, isInsert = true)),
+      cl.inserts.map(c => extend(fill(c), isInsert = true)),
       cl.bySource.map(extend(_, isInsert = false)))
   }
 
-  private def upsertClausesOnce(source: DataFrame,
-                                cl0: Merge.MergeClauses): Unit = {
-    requireNoIdentity()
-    val cl = withGeneratedRecomputes(withDefaultFills(cl0))
+  /** THE merge planner behind [[upsert]] (`clauses` None: update-all /
+    * insert-all with `tsField`, plus the bootstrap, `evolveSchema` and
+    * the insert-only fast path) and [[upsertClauses]]: heal a crashed
+    * predecessor, pin the snapshot, check the batch against its schema,
+    * bound the batch's first-key range, split the files by it, and hand
+    * ONE classification to `Warehouse.mutate`, which routes it
+    * copy-on-write or merge-on-read. A batch that needs every file (a
+    * by-source clause, a target without a manifest, an evolving schema)
+    * rewrites the table whole.
+    */
+  private def mergeOnce(source: DataFrame, clauses: Option[Merge.MergeClauses]): Unit = {
     val meta = Map(Warehouse.OpMeta -> "MERGE")
-    require(warehouse.exists(ref),
-      s"clause merge needs an existing target table $ref (a WHEN MATCHED " +
-        "clause over nothing is meaningless — bootstrap with overwrite " +
-        "or the plain upsert)")
+    if (!warehouse.exists(ref)) {
+      require(clauses.isEmpty,
+        s"clause merge needs an existing target table $ref (a WHEN MATCHED " +
+          "clause over nothing is meaningless — bootstrap with overwrite " +
+          "or the plain upsert)")
+      // onlyIfAbsent: if another writer bootstraps between the exists
+      // check and our lock acquisition, this throws (nothing written)
+      // and the retry loop re-enters through the merge path
+      warehouse.overwrite(ref, source, statsColumns = bootstrapStats,
+        onlyIfAbsent = true, meta = meta)
+      return
+    }
+    // heal any interrupted prior replacement BEFORE reading the target —
+    // a crashed add-new leaves duplicate rows that a plain re-merge
+    // would keep (unmatched target duplicates survive the merge)
     warehouse.recover(ref)
     val snap = warehouse.snapshot(ref).getOrElse(throw new
         IllegalArgumentException(s"$ref has no committed version"))
-    warehouse.requireNoForeign(ref, "clause merge")
-    val baseVersion = warehouse.currentVersion(ref)
-    // star clauses copy source columns VERBATIM, so every target
-    // column must arrive at the target's type; explicit-assignment
-    // clauses cast their expressions, so only the join keys must align
-    // (extra CDC flag columns ride along for the clause conditions)
-    val tsig = warehouse.schemaOf(ref).map(f => (f.name, f.dataType))
-    val ssig = source.schema.map(f => (f.name, f.dataType)).toMap
-    val checked = if (cl.hasStar) tsig
-                  else tsig.filter { case (n, _) => keys.contains(n) }
-    val bad = checked.filterNot { case (n, t) => ssig.get(n).contains(t) }
-    require(bad.isEmpty,
-      s"clause merge schema mismatch on ${bad.map(_._1).mkString(",")}: " +
-        s"target ${tsig.mkString(",")} vs source ${source.schema.map(f =>
-          (f.name, f.dataType)).mkString(",")}")
-    val cdfOn = warehouse.cdfEnabled(ref)
-    def fullRewrite(): Unit = {
-      val (merged, changes) = Merge.applyClauses(warehouse.read(ref),
-        source, keys, cl, cdfOn)
-      rewriteAll(merged, baseVersion, meta, changes)
+    warehouse.requireNoForeign(ref, "merge")
+    val decl = warehouse.declared(snap)
+    requireNoIdentity(decl)
+    val cl = declaredClauses(decl, clauses.getOrElse(Merge.UpsertAll))
+    def route(touched: Mutation.Touched, widened: Boolean): Unit =
+      warehouse.mutate(Mutation("MERGE", snap, touched, Merge.kinds(cl),
+          joined = true, whole = Some(bootstrapStats)) { (target, onRead) =>
+        if (!widened) Merge.classified(target, source, keys, cl, tsField, onRead)
+        else {
+          val wTarget = widen(target, source)
+          Merge.classified(wTarget, widen(source, target)
+            .select(wTarget.columns.map(col).toIndexedSeq: _*), keys, cl, tsField, onRead)
+        }
+      })
+    val tsig = decl.schema.map(f => (f.name, f.dataType))
+    val ssig = source.schema.map(f => (f.name, f.dataType))
+    if (clauses.isEmpty && evolveSchema) {
+      // trigger on name+type signature, not names alone — a same-name
+      // different-type batch must hit widen()'s conflict check, not
+      // slip through the incremental path into a mixed-type file
+      val target = warehouse.read(ref)
+      if (ssig != target.schema.map(f => (f.name, f.dataType))) {
+        require(source.columns.contains(pruneKey),
+          s"evolved batch must keep the merge key '$pruneKey'")
+        if (source.isEmpty) return
+        widen(target, source) // type conflicts refuse before anything runs
+        // an evolution batch rewrites whole, so every data file shares
+        // one schema
+        route(Mutation.All, widened = true)
+        return
+      }
     }
-    if (cl.bySource.nonEmpty) { fullRewrite(); return }
+    if (clauses.isEmpty) Merge.requireSameSchema(tsig.map(_._1), source, keys)
+    else {
+      // star clauses copy source columns VERBATIM, so every target
+      // column must arrive at the target's type; explicit-assignment
+      // clauses cast their expressions, so only the join keys must align
+      // (extra CDC flag columns ride along for the clause conditions)
+      val ssigMap = ssig.toMap
+      val checked = if (cl.hasStar) tsig
+                    else tsig.filter { case (n, _) => keys.contains(n) }
+      val bad = checked.filterNot { case (n, t) => ssigMap.get(n).contains(t) }
+      require(bad.isEmpty,
+        s"clause merge schema mismatch on ${bad.map(_._1).mkString(",")}: " +
+          s"target ${tsig.mkString(",")} vs source ${ssig.mkString(",")}")
+    }
+    if (cl.bySource.nonEmpty) { route(Mutation.All, widened = false); return }
     val bounds = source
       .agg(count(lit(1)), min(col(pruneKey)), max(col(pruneKey))).head()
     if (bounds.getLong(0) == 0L) return // empty batch, no by-source: no-op
@@ -634,24 +502,18 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
         Some((Seq.empty[String], warehouse.dataFiles(ref)))
       else warehouse.splitFilesByRange(ref, pruneKey, bounds.get(1), bounds.get(2))
     split match {
-      // MERGE-ON-READ (round 19): claimed rows supersede by position,
-      // updated values + accepted inserts land as one append — the
-      // same economics the classic upsert's DV branch bought, now for
-      // the clause-shaped CDC apply. Unlike the copy-on-write arm this
-      // needs no untouched file to beat the rewrite: even a batch
-      // whose key range straddles EVERY file costs O(claimed rows)
-      case Some((touched, _)) if warehouse.dvEnabled(ref) =>
-        val (sup, adds, changes) = Merge.applyClausesOnRead(
-          warehouse.readFilesWithPos(ref, touched), source, keys, cl,
-          wantChanges = cdfOn)
-        warehouse.dvReplace(ref, snap, DeletionVectors.build(sup), Some(adds), meta,
-          _ => changes)
-      case Some((touched, untouched)) if untouched.nonEmpty =>
-        val (merged, changes) = Merge.applyClauses(readTouched(touched),
-          source, keys, cl, cdfOn)
-        warehouse.replaceDataFiles(ref, touched, merged, meta = meta,
-          changes = changes)
-      case _ => fullRewrite()
+      case Some((Nil, untouched)) if clauses.isEmpty && untouched.nonEmpty =>
+        // disjoint ranges: insert-only. Name AND type must match — the
+        // batch bypasses the join, so this is the last check before its
+        // rows land in files the table's schema is assumed to describe.
+        // No change files: a pure append DERIVES as inserts at read
+        // time, so the streaming-CDC hot path pays nothing
+        require(ssig == tsig,
+          s"merge schema mismatch: target ${tsig.mkString(",")} vs " +
+            s"source ${ssig.mkString(",")}")
+        warehouse.replaceDataFiles(ref, Nil, source, meta = meta)
+      case Some((touched, _)) => route(Mutation.Files(touched), widened = false)
+      case None => route(Mutation.All, widened = false) // no manifest
     }
   }
 
@@ -700,7 +562,6 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
   private def replacePartitionsOnce(partitionKeys: DataFrame,
                                     replacement: DataFrame,
                                     rawMeta: Map[String, String] = Map.empty): Unit = {
-    requireNoIdentity()
     // one MERGE stamp covers bootstrap, pruned replace, and full
     // rewrite (callers' meta still rides; an explicit op wins)
     val meta = Warehouse.withOp(rawMeta, "MERGE")
@@ -710,7 +571,9 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
       return
     }
     warehouse.recover(ref)
-    val baseVersion = warehouse.currentVersion(ref)
+    val snap = warehouse.snapshot(ref)
+    snap.foreach(s => requireNoIdentity(warehouse.declared(s)))
+    val baseVersion = snap.map(_.version)
     val bounds = partitionKeys
       .agg(count(lit(1)), min(col(pruneKey)), max(col(pruneKey))).head()
     if (bounds.getLong(0) == 0L) return // no affected partitions: no-op
@@ -749,8 +612,8 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
       else warehouse.splitFilesByRange(ref, pruneKey, bounds.get(1), bounds.get(2))
     split match {
       case Some((touched, untouched)) if untouched.nonEmpty =>
-        // route through the warehouse's subset reader (same contract as
-        // readTouched): the COMMITTED schema guards mixed-era files and
+        // route through the warehouse's declared-schema subset reader:
+        // the COMMITTED schema guards mixed-era files and
         // live DELETION VECTORS apply — a raw parquet read here would
         // rewrite merge-on-read-deleted rows of unaffected partitions
         // into new files, permanently resurrecting them once the old
@@ -766,118 +629,9 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
             .getOrElse(replacement.limit(0))))
       case _ =>
         // no manifest (or every file may overlap): full rewrite
-        rewriteAll(dropAffected(warehouse.read(ref)).unionByName(replacement),
-          baseVersion, meta, changesFor(keepAffected(warehouse.read(ref))))
-    }
-  }
-
-  /** DECLARED-SCHEMA read of the touched-file subset (the same
-    * mixed-era contract as [[graft.catalog.Warehouse.readSnapshot]]):
-    * footer inference over old files silently drops columns a
-    * metadata-only ADD COLUMNS widened in (the merge would then refuse
-    * — or worse, write narrow files), and keeps bytes a DROP COLUMNS
-    * tombstoned out (the merge would resurrect them). Missing declared
-    * columns null-backfill by name; undeclared physical columns are
-    * pruned by the final select.
-    */
-  private def readTouched(touched: Seq[String]): DataFrame =
-    // Warehouse.readFiles hands the COMMITTED schema to the reader
-    // (spark.read.schema), never single-footer inference: a mixed-era
-    // touched set after a metadata-only ADD COLUMNS could otherwise
-    // infer from an old file, drop the widened column from the read,
-    // and commit a null backfill over real values.
-    warehouse.readFiles(ref, touched)
-
-  private def upsertOnce(source: DataFrame): Unit = {
-    requireNoIdentity()
-    val meta = Map(Warehouse.OpMeta -> "MERGE")
-    if (!warehouse.exists(ref)) {
-      // onlyIfAbsent: if another writer bootstraps between the exists
-      // check and our lock acquisition, this throws (nothing written)
-      // and the retry loop re-enters through the merge path
-      warehouse.overwrite(ref, source, statsColumns = bootstrapStats,
-        onlyIfAbsent = true, meta = meta)
-      return
-    }
-    // heal any interrupted prior replacement BEFORE reading the target —
-    // a crashed add-new leaves duplicate rows that a plain re-merge
-    // would keep (unmatched target duplicates survive Merge.merge)
-    warehouse.recover(ref)
-    // the version this merge computes against: the CAS of every full
-    // rewrite below ([[rewriteAll]])
-    val baseVersion = warehouse.currentVersion(ref)
-    if (evolveSchema) {
-      val target = warehouse.read(ref)
-      // trigger on name+type signature, not names alone — a same-name
-      // different-type batch must hit widen()'s conflict check, not
-      // slip through the incremental path into a mixed-type file
-      def sig(d: DataFrame) = d.schema.map(f => (f.name, f.dataType))
-      if (sig(source) != sig(target)) {
-        require(source.columns.contains(pruneKey),
-          s"evolved batch must keep the merge key '$pruneKey'")
-        if (source.isEmpty) return
-        val wTarget = widen(target, source)
-        val wSource = widen(source, target)
-          .select(wTarget.columns.map(col).toIndexedSeq: _*)
-        val (merged, changes) =
-          upsertAll(wTarget, wSource, warehouse.cdfEnabled(ref))
-        rewriteAll(merged, baseVersion, meta, changes)
-        return
-      }
-    }
-    val bounds = source
-      .agg(count(lit(1)), min(col(pruneKey)), max(col(pruneKey))).head()
-    if (bounds.getLong(0) == 0L) return // empty batch: no-op
-    val split =
-      if (bounds.isNullAt(1)) // all-null keys: nothing can match
-        Some((Seq.empty[String], warehouse.dataFiles(ref)))
-      else warehouse.splitFilesByRange(ref, pruneKey, bounds.get(1), bounds.get(2))
-    // change-data-feed production (the table property asks for it):
-    // rewriting merges classify their rows once and commit the change
-    // files atomically; the insert-only fast path stays change-file
-    // free — a pure append DERIVES as inserts at read time, so the
-    // streaming-CDC hot path pays nothing
-    val cdfOn = warehouse.cdfEnabled(ref)
-    split match {
-      // merge-on-read needs no untouched file to beat the rewrite: a
-      // batch whose key range straddles EVERY file still costs
-      // O(claimed rows), so DV mode takes this arm whenever the
-      // manifest resolves at all
-      case Some((touched, untouched))
-          if untouched.nonEmpty || warehouse.dvEnabled(ref) =>
-        if (touched.isEmpty) { // disjoint ranges: insert-only
-          // name AND type must match — an insert-only batch bypasses
-          // the join, so this is the last check before its rows land
-          // in files the table's schema is assumed to describe
-          // (schemaOf answers from the commit log — no footer read)
-          val tsig = warehouse.schemaOf(ref)
-            .map(f => (f.name, f.dataType))
-          val ssig = source.schema.map(f => (f.name, f.dataType))
-          require(ssig == tsig,
-            s"merge schema mismatch: target ${tsig.mkString(",")} vs " +
-              s"source ${ssig.mkString(",")}")
-          warehouse.replaceDataFiles(ref, touched, source, meta = meta)
-        } else if (warehouse.dvEnabled(ref)) {
-          // MERGE-ON-READ (the DV write path): superseded target rows
-          // commit as sidecar positions, replacement values + inserts
-          // land as one small append — unmatched bytes in the touched
-          // files never move
-          val planned = warehouse.snapshot(ref).getOrElse(
-            throw new IllegalStateException(s"$ref vanished mid-merge"))
-          val (sup, adds, changes) = Merge.mergeOnRead(
-            warehouse.readFilesWithPos(ref, touched), source, keys, tsField,
-            wantChanges = cdfOn)
-          warehouse.dvReplace(ref, planned, DeletionVectors.build(sup), Some(adds),
-            meta, _ => changes)
-        } else {
-          val (merged, changes) = upsertAll(readTouched(touched), source, cdfOn)
-          warehouse.replaceDataFiles(ref, touched, merged, meta = meta,
-            changes = changes)
-        }
-      case _ =>
-        // no manifest, or every file may overlap: full rewrite
-        val (merged, changes) = upsertAll(warehouse.read(ref), source, cdfOn)
-        rewriteAll(merged, baseVersion, meta, changes)
+        warehouse.rewriteTable(ref, baseVersion,
+          dropAffected(warehouse.read(ref)).unionByName(replacement), meta,
+          changesFor(keepAffected(warehouse.read(ref))), bootstrapStats)
     }
   }
 }

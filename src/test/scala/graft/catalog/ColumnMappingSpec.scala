@@ -302,4 +302,24 @@ class ColumnMappingSpec extends SparkSpec {
       Seq((5L, "web"), (10L, "web")),
       "identity sequence and default must survive the mapped renames")
   }
+
+  test("copy-on-write DELETE on a mapped table resolves a renamed column by id") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("wh-colmap-delete"))
+    val ref = TableRef("silver", "m", "mapped_delete")
+    wh.createTable(ref, StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType))),
+      statsColumns = Seq("k"))
+    wh.enableColumnMapping(ref)
+    wh.append(ref, (1L to 20L).map(i => (i, i * 10)).toDF("k", "v")
+      .repartitionByRange(2, col("k")))
+    wh.renameColumn(ref, "v", "w")
+    assert(!wh.dvEnabled(ref))
+    // w = 10 is k = 1, which shares its file: a straddling rewrite
+    assert(wh.deleteWhere(ref, col("w") === 10L) === 1L)
+    val got = wh.read(ref)
+    assert(got.columns.toSeq === Seq("k", "w"))
+    assert(got.select("k", "w").as[(Long, Long)].collect().sortBy(_._1).toSeq
+      === (2L to 20L).map(i => (i, i * 10)))
+  }
 }

@@ -151,6 +151,18 @@ class DeletionVectorSpec extends SparkSpec {
       "merge must not resurrect DV-deleted rows")
     assert(out.filter(col("k") === 5L).select("name").as[String].head()
       === "merged")
+    // DELETE after the DV property is turned off while vectors are live:
+    // the copy-on-write arm reads through the vectors
+    val (wh3, ref3) = freshTable("dvoff")
+    wh3.deleteWhere(ref3, col("k") <= 10)
+    wh3.setDeletionVectors(ref3, enabled = false)
+    assert(wh3.snapshot(ref3).get.dvMap.nonEmpty)
+    assert(wh3.deleteWhere(ref3, col("k") <= 20) === 10L,
+      "rows 1-10 are deleted; only 11-20 delete")
+    assert(wh3.read(ref3).count() === 80L)
+    assert(wh3.read(ref3).filter(col("k") <= 20).count() === 0L)
+    assert(wh3.deleteWhere(ref3, col("k") > 0) === 80L)
+    assert(wh3.read(ref3).count() === 0L)
   }
 
   test("DV-mode UPDATE is merge-on-read: positions + one small append, zero rewrite of unmatched bytes") {

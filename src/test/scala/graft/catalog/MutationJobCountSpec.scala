@@ -8,8 +8,9 @@ import graft.sinks.{Merge, MergeTable}
 
 /** Spark job counts of every row-level mutation route and every
   * file-adding route, pinned: DELETE (partial and whole-file), UPDATE,
-  * upsert, clause MERGE, append, insert-only upsert, full overwrite and
-  * a streaming-sink epoch commit, each in the four write configurations
+  * upsert, clause MERGE, append, insert-only upsert, full overwrite,
+  * a streaming-sink epoch commit, a clause MERGE with a by-source
+  * clause (the full-rewrite fallback) and a partition replace, each in the four write configurations
   * (copy-on-write / deletion vectors × change data feed off / on). The
   * routes share one match planner, one applier per configuration and
   * one stage/land/manifest commit path, so a refactor that adds a pass
@@ -23,7 +24,8 @@ class MutationJobCountSpec extends SparkSpec {
 
   private val routes =
     Seq("delete partial", "delete whole file", "update", "upsert", "clause merge",
-      "append", "insert-only upsert", "overwrite (replace)", "stream epoch")
+      "append", "insert-only upsert", "overwrite (replace)", "stream epoch",
+      "clause merge by source", "replace partitions")
 
   private def routeJobs(dv: Boolean, cdf: Boolean): Seq[Int] = {
     import spark.implicits._
@@ -87,7 +89,13 @@ class MutationJobCountSpec extends SparkSpec {
         statsColumns = Seq("k"))), {
         val rels = stagedEpoch(Seq((700L, 1L), (701L, 2L)))
         jobsOf(wh.commitStreamEpoch(ref, "q", 0L, rels))
-      })
+      },
+      // a by-source clause can claim any row: the full-rewrite fallback
+      jobsOf(mt.upsertClauses(Seq((10L, 1L), (20L, 2L)).toDF("k", "v"),
+        Merge.MergeClauses(matched = Seq(Merge.Clause(None, "update")),
+          bySource = Seq(Merge.Clause(Some("k = 700"), "delete"))))),
+      jobsOf(mt.replacePartitions(Seq(30L, 40L).toDF("k"),
+        Seq((30L, 3L)).toDF("k", "v"))))
     finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -99,18 +107,18 @@ class MutationJobCountSpec extends SparkSpec {
   }
 
   test("copy-on-write, change feed off: pinned job counts per route") {
-    check(dv = false, cdf = false, Seq(5, 2, 4, 8, 9, 1, 3, 3, 0))
+    check(dv = false, cdf = false, Seq(4, 2, 4, 8, 8, 1, 3, 3, 0, 3, 5))
   }
 
   test("copy-on-write, change feed on: pinned job counts per route") {
-    check(dv = false, cdf = true, Seq(7, 2, 5, 10, 10, 1, 3, 3, 0))
+    check(dv = false, cdf = true, Seq(5, 2, 5, 10, 10, 1, 3, 3, 0, 5, 8))
   }
 
   test("deletion vectors, change feed off: pinned job counts per route") {
-    check(dv = true, cdf = false, Seq(1, 1, 3, 9, 9, 1, 3, 3, 0))
+    check(dv = true, cdf = false, Seq(1, 1, 3, 9, 9, 1, 3, 3, 0, 3, 5))
   }
 
   test("deletion vectors, change feed on: pinned job counts per route") {
-    check(dv = true, cdf = true, Seq(2, 2, 4, 10, 10, 1, 3, 3, 0))
+    check(dv = true, cdf = true, Seq(2, 2, 4, 10, 10, 1, 3, 3, 0, 5, 8))
   }
 }

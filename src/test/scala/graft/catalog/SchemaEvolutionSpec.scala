@@ -252,4 +252,21 @@ class SchemaEvolutionSpec extends SparkSpec {
     wh.widenColumnType(ref, "p", LongType)
     assert(wh.schemaOf(ref)("p").dataType === LongType)
   }
+
+  test("copy-on-write DELETE reads the declared schema: a metadata-only widened column in the predicate") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StructField}
+    val wh = new Warehouse(spark, tmpDir("wh-evo-delete"))
+    val ref = TableRef("silver", "evo", "delete_widened")
+    wh.overwrite(ref, (1L to 20L).map(i => (i, i * 10)).toDF("k", "v")
+      .repartitionByRange(2, $"k"), statsColumns = Seq("k"))
+    wh.addColumns(ref, Seq(StructField("c", LongType)))
+    assert(!wh.dvEnabled(ref))
+    // k = 1 shares its file with k = 2..10: a straddling rewrite
+    assert(wh.deleteWhere(ref, $"k" === 1L && $"c".isNull) === 1L)
+    val got = wh.read(ref)
+    assert(got.columns.toSeq === Seq("k", "v", "c"))
+    assert(got.select("k").as[Long].collect().sorted.toSeq === (2L to 20L))
+    assert(got.filter($"c".isNotNull).count() === 0L)
+  }
 }

@@ -538,4 +538,28 @@ class SqlDdlSpec extends SparkSpec {
     assert(wh.read(TableRef("dev", "g", "rc")).count() === 1L,
       "the refused replace must leave the clone readable")
   }
+
+  test("CREATE TABLE is atomic: a refused governed property leaves no table behind") {
+    val root = tmpDir("wh-ddl-atomic")
+    val wh = new Warehouse(spark, root)
+    val cat = catalogFor(root, "c11")
+    val refused = Seq(
+      "(rid BIGINT, v STRING) TBLPROPERTIES ('graft.identity.rid' = '1,2,3')",
+      "(rid BIGINT, v STRING) TBLPROPERTIES ('graft.cdf' = 'yes')",
+      "(rid BIGINT, v STRING) TBLPROPERTIES ('graft.check.c' = 'rid > 0', " +
+        "'graft.columnmapping' = 'name')",
+      // the column-spec overload: its declarations run after the
+      // governed properties, inside the same drop-on-refusal
+      "(rid BIGINT, v STRING DEFAULT 'x') TBLPROPERTIES ('graft.cdf' = 'yes')",
+      // inline constraints, the third overload
+      "(rid BIGINT, v STRING, CONSTRAINT u UNIQUE (rid))")
+    refused.zipWithIndex.foreach { case (ddl, i) =>
+      intercept[Exception](spark.sql(s"CREATE TABLE $cat.silver.g.atomic$i $ddl"))
+      assert(!wh.exists(TableRef("silver", "g", s"atomic$i")),
+        s"refused CREATE left the table behind: $ddl")
+      // the name stays free: a clean CREATE succeeds
+      spark.sql(s"CREATE TABLE $cat.silver.g.atomic$i (rid BIGINT, v STRING)")
+      assert(wh.currentVersion(TableRef("silver", "g", s"atomic$i")).contains(1L))
+    }
+  }
 }

@@ -1155,4 +1155,39 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.read(ref).filter($"k" === 5L).select("v").as[String].head() === "x")
     assert(wh.read(ref).count() === 20L)
   }
+
+  test("copy-on-write UPDATE across partition directories is one commit") {
+    import spark.implicits._
+    val root = tmpDir("wh-update-atomic")
+    val wh = new Warehouse(spark, root)
+    val ref = TableRef("silver", "facts", "update_atomic")
+    wh.overwrite(ref,
+      Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L), (4L, "b", 40L))
+        .toDF("k", "p", "v"),
+      partitionBy = Seq("p"), statsColumns = Seq("k"))
+    wh.setChangeDataFeed(ref, enabled = true)
+    assert(!wh.dvEnabled(ref))
+    val v0 = wh.currentVersion(ref).get
+    assert(wh.updateWhere(ref, $"k" === 1L || $"k" === 3L,
+      Seq("v" -> ($"v" + 1L))) === 2L)
+    assert(wh.currentVersion(ref).get === v0 + 1,
+      "an UPDATE touching two partition directories must commit once")
+    assert(wh.history(ref).filter($"version" === v0 + 1)
+      .select("operation").as[String].collect().toSeq === Seq("UPDATE"))
+    assert(wh.read(ref).select("k", "p", "v").as[(Long, String, Long)]
+      .collect().sortBy(_._1).toSeq ===
+      Seq((1L, "a", 11L), (2L, "a", 20L), (3L, "b", 31L), (4L, "b", 40L)))
+    assert(wh.dataFiles(ref).forall(f => f.contains("p=a/") || f.contains("p=b/")),
+      s"rewrites land back in their partition dirs: ${wh.dataFiles(ref)}")
+    // the change rows land in that one version
+    spark.conf.set("spark.sql.catalog.graftupdatomic", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftupdatomic.root", root)
+    val feed = spark.read.option("startingVersion", (v0 + 1).toString)
+      .option("endingVersion", (v0 + 1).toString)
+      .table("graftupdatomic.silver.facts.update_atomic.changes")
+      .select($"k", $"v", org.apache.spark.sql.functions.col(Warehouse.ChangeTypeCol))
+      .as[(Long, Long, String)].collect().toSet
+    assert(feed === Set((1L, 10L, "update_preimage"), (1L, 11L, "update_postimage"),
+      (3L, 30L, "update_preimage"), (3L, 31L, "update_postimage")))
+  }
 }

@@ -8,7 +8,7 @@ import graft.SparkSpec
 import graft.catalog.{GraftCatalog, TableRef, Warehouse}
 
 /** The Delta MERGE clause surface beyond update-all/insert-all
-  * ([[Merge.applyClauses]] / [[MergeTable.upsertClauses]] / the
+  * ([[Merge.classified]] / [[MergeTable.upsertClauses]] / the
   * SqlMerge clause route): conditional matched updates, matched
   * DELETE, conditional INSERT, NOT MATCHED BY SOURCE DELETE, clause
   * order, file pruning, CDF classification, and the SQL surface.
