@@ -24,17 +24,13 @@ import org.apache.spark.sql.functions.{col, lit}
   * @param planned the snapshot the producer planned against
   * @param touched where the claimed rows can live ([[Mutation.Touched]])
   * @param kinds   the kinds beyond `keep` the frame can hold
-  * @param joined  the classification resolves a join (window
-  *                tie-breaks), so two evaluations may disagree
-  * @param whole   Some(stats columns): a copy-on-write rewrite of every
-  *                file rewrites the table whole ([[Warehouse.rewriteTable]],
-  *                adding those stats columns) — a merge's fallback; None
-  *                replaces the files even then
+  * @param addStats stats columns a merge's whole-table rewrite adds to
+  *                 the table's own ([[Warehouse.rewriteTable]]); Nil
+  *                 for DELETE and UPDATE
   */
 private[graft] final case class Mutation(op: String, planned: TableSnapshot,
                                          touched: Mutation.Touched,
-                                         kinds: Set[String], joined: Boolean,
-                                         whole: Option[Seq[String]])(
+                                         kinds: Set[String], addStats: Seq[String])(
     val classify: (DataFrame, Boolean) => DataFrame)
 
 private[graft] object Mutation {
@@ -46,7 +42,11 @@ private[graft] object Mutation {
     * merge-on-read scans the snapshot with the predicate pushed down.
     */
   final case class Matching(claims: Column) extends Touched
-  /** These files (absolute paths): a merge's key-range split. */
+  /** These files (absolute paths): a merge's key-range split. A merge
+    * ([[Files]] or [[All]]) classifies through a join (window
+    * tie-breaks), so two evaluations of its frame may disagree, and a
+    * copy-on-write merge touching every file rewrites the table whole.
+    */
   final case class Files(paths: Seq[String]) extends Touched
   /** Every file, rewritten whole whatever the deletion-vector property:
     * a by-source clause (it can claim any row), a target without a

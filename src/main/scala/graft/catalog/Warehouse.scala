@@ -2150,7 +2150,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     val snap = snapshot(ref).getOrElse(throw new IllegalArgumentException(
       s"$ref has no committed version"))
     mutate(Mutation("DELETE", snap, Mutation.Matching(matched), Set(Mutation.Delete),
-        joined = false, whole = None) { (target, onRead) =>
+        Nil) { (target, onRead) =>
       Mutation.classified(if (onRead) target.filter(matched) else target,
         when(matched, Mutation.Delete).otherwise(Mutation.Keep), Map.empty)
     })
@@ -2286,7 +2286,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     val genX = features.generatedRecomputes(decl, set.map(_._1.toLowerCase).toSet)
     val updated = col(Mutation.KindCol) === Mutation.Update
     mutate(Mutation("UPDATE", snap, Mutation.Matching(matched), Set(Mutation.Update),
-        joined = false, whole = None) { (target, onRead) =>
+        Nil) { (target, onRead) =>
       // stage 1: the user SET over the pre-image; stage 2: generations
       // over the post-SET image (references renamed onto the post
       // columns), gated on the SAME classification — re-evaluating the
@@ -2312,7 +2312,7 @@ final class Warehouse(spark: SparkSession, val root: String,
     * Merge-on-read: the touched files' claimed rows supersede by
     * position and the updated and inserted rows land as one small
     * append ([[dvReplace]]); unmatched bytes never move. A frame the
-    * append reads (or a joined one the change feed reads too) is pinned
+    * append reads (or a merge's that the change feed reads too) is pinned
     * first — the positions, the appended rows and the change rows come
     * from separate actions and must be one classification.
     *
@@ -2321,16 +2321,17 @@ final class Warehouse(spark: SparkSession, val root: String,
     * through the committed layout); a pure delete retires the files
     * whose every live row it claims as metadata ([[retireDataFiles]]),
     * and a merge touching every file rewrites the table whole
-    * ([[rewriteTable]]). A joined frame the change feed also reads is
+    * ([[rewriteTable]]). A merge's frame that the change feed also reads is
     * pinned.
     *
     * Every read applies live deletion vectors, so files that carry
     * them need no routing of their own. Either arm commits ONCE, with
     * the change rows ([[Mutation.changeRows]]) when the change data feed
     * is on — except a pure retirement, whose rows the feed derives from
-    * the retired files. Returns the number of claimed target rows a
-    * [[Mutation.Matching]] producer asked for (0 for the others
-    * copy-on-write).
+    * the retired files; with the feed on, a retirement of files that
+    * carry vectors rewrites instead, so its change rows are committed.
+    * Returns the number of claimed target rows a [[Mutation.Matching]]
+    * producer asked for (0 for the others copy-on-write).
     */
   private[graft] def mutate(m: Mutation): Long = {
     import Mutation._
@@ -2339,22 +2340,22 @@ final class Warehouse(spark: SparkSession, val root: String,
     val meta = Map(Warehouse.OpMeta -> m.op)
     val cdfOn = cdfEnabled(ref)
     val appends = m.kinds(Update) || m.kinds(Insert)
+    // a merge classifies through a join: two evaluations may disagree
+    val merge = !m.touched.isInstanceOf[Matching]
     def rows(rels: Seq[String], onRead: Boolean) =
       m.classify(readRows(snap, rels, onRead), onRead)
     def pinned(frame: DataFrame, pin: Boolean) =
       if (pin) graft.util.Scratch.transientCheckpoint(frame.localCheckpoint()) else frame
     def changes(frame: => DataFrame) = Option.when(cdfOn)(changeRows(frame, m.kinds))
     def rewrite(rels: Seq[String], gone: Set[String], claimed: Long): Long = {
-      val frame = pinned(rows(rels, onRead = false), m.joined && cdfOn)
+      val frame = pinned(rows(rels, onRead = false), merge && cdfOn)
       val kept = if (gone.isEmpty) frame else rows(rels.filterNot(gone), onRead = false)
       val after = postRows(kept, Keep, Update, Insert)
-      m.whole.filter(_ => rels.size == snap.files.size) match {
-        case Some(stats) =>
-          rewriteTable(ref, Some(snap.version), after, meta, changes(frame), stats)
-        case None =>
-          replaceDataFiles(ref, rels.map(r => new Path(path(ref), r).toString), after,
-            meta = meta, changes = changes(frame))
-      }
+      if (merge && rels.size == snap.files.size)
+        rewriteTable(ref, Some(snap.version), after, meta, changes(frame), m.addStats)
+      else
+        replaceDataFiles(ref, rels.map(r => new Path(path(ref), r).toString), after,
+          meta = meta, changes = changes(frame))
       claimed
     }
     m.touched match {
@@ -2364,7 +2365,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           case Files(paths) => paths.map(relKey(ref))
           case _ => snap.files // the predicate pushes into the scan
         }
-        val pin = appends || (m.joined && cdfOn)
+        val pin = appends || (merge && cdfOn)
         val frame = pinned(rows(rels, onRead = true), pin)
         val sup = DeletionVectors.build(frame.filter(kindIn(Update, Delete))
           .select(col("__gdv_file").as("file"), col("__gdv_pos").as("pos")))
@@ -2386,7 +2387,10 @@ final class Warehouse(spark: SparkSession, val root: String,
             perFile.collect { case (f, n) if n >= physical(f) -
               carried.get(f).fold(0L)(DeletionVectors.cardinality) => f }.toSet
           }
-        if (rels.forall(gone)) {
+        // the change feed derives a retirement's rows from the whole
+        // retired files, which would re-report a vector's dead rows: a
+        // retired file carrying one rewrites instead, with change rows
+        if (rels.forall(gone) && !(cdfOn && rels.exists(snap.dvMap.contains))) {
           retireDataFiles(ref, rels.map(r => new Path(path(ref), r).toString), meta)
           claimed
         } else rewrite(rels, gone, claimed)

@@ -453,7 +453,7 @@ final class MergeTable(spark: SparkSession, warehouse: Warehouse, ref: TableRef,
     val cl = declaredClauses(decl, clauses.getOrElse(Merge.UpsertAll))
     def route(touched: Mutation.Touched, widened: Boolean): Unit =
       warehouse.mutate(Mutation("MERGE", snap, touched, Merge.kinds(cl),
-          joined = true, whole = Some(bootstrapStats)) { (target, onRead) =>
+          bootstrapStats) { (target, onRead) =>
         if (!widened) Merge.classified(target, source, keys, cl, tsField, onRead)
         else {
           val wTarget = widen(target, source)

@@ -163,6 +163,23 @@ class DeletionVectorSpec extends SparkSpec {
     assert(wh3.read(ref3).filter(col("k") <= 20).count() === 0L)
     assert(wh3.deleteWhere(ref3, col("k") > 0) === 80L)
     assert(wh3.read(ref3).count() === 0L)
+    // ... and with the change data feed on, a DELETE emptying files
+    // that carry vectors commits its change rows: the `.changes`
+    // table renders that version as exactly the live rows it deleted
+    val (wh4, ref4) = freshTable("dvoffcdf")
+    val cat = "graftdvoffcdf"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", wh4.root)
+    wh4.setChangeDataFeed(ref4, enabled = true)
+    wh4.deleteWhere(ref4, col("k") <= 10)
+    wh4.setDeletionVectors(ref4, enabled = false)
+    assert(wh4.snapshot(ref4).get.dvMap.nonEmpty)
+    assert(wh4.deleteWhere(ref4, col("k") > 0) === 90L)
+    assert(wh4.read(ref4).count() === 0L)
+    val v = wh4.snapshot(ref4).get.version
+    assert(spark.sql(s"SELECT k, _change_type FROM $cat.silver.dv.dvoffcdf.changes " +
+        s"WHERE _commit_version = $v").as[(Long, String)].collect().toSet ===
+      (11L to 100L).map(_ -> "delete").toSet)
   }
 
   test("DV-mode UPDATE is merge-on-read: positions + one small append, zero rewrite of unmatched bytes") {
