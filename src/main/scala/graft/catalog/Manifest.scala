@@ -878,12 +878,6 @@ private[catalog] object Manifest {
   def in(column: String, values: Seq[Any]): Expression =
     In(attr(column), values.map(v => Literal(v)))
 
-  def isNull(column: String, isNull: Boolean): Expression =
-    if (isNull) IsNull(attr(column)) else IsNotNull(attr(column))
-
-  def startsWith(column: String, prefix: String): Expression =
-    StartsWith(attr(column), Literal(prefix))
-
   private def attr(column: String) = AttributeReference(column, NullType)()
 
   /** `column op literal`, literal on either side and non-null: the

@@ -2331,7 +2331,9 @@ final class Warehouse(spark: SparkSession, val root: String,
     * the retired files; with the feed on, a retirement of files that
     * carry vectors rewrites instead, so its change rows are committed.
     * Returns the number of claimed target rows a [[Mutation.Matching]]
-    * producer asked for (0 for the others copy-on-write).
+    * producer asked for (0 for the others copy-on-write). A pinned
+    * frame is dead once the commit lands (or fails), and is released
+    * then, not left to the collector.
     */
   private[graft] def mutate(m: Mutation): Long = {
     import Mutation._
@@ -2344,8 +2346,9 @@ final class Warehouse(spark: SparkSession, val root: String,
     val merge = !m.touched.isInstanceOf[Matching]
     def rows(rels: Seq[String], onRead: Boolean) =
       m.classify(readRows(snap, rels, onRead), onRead)
+    val pins = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def pinned(frame: DataFrame, pin: Boolean) =
-      if (pin) graft.util.Scratch.transientCheckpoint(frame.localCheckpoint()) else frame
+      if (pin) { pins += frame.localCheckpoint(); pins.last } else frame
     def changes(frame: => DataFrame) = Option.when(cdfOn)(changeRows(frame, m.kinds))
     def rewrite(rels: Seq[String], gone: Set[String], claimed: Long): Long = {
       val frame = pinned(rows(rels, onRead = false), merge && cdfOn)
@@ -2358,7 +2361,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           meta = meta, changes = changes(frame))
       claimed
     }
-    m.touched match {
+    try m.touched match {
       case All => rewrite(snap.files, Set.empty, 0L)
       case touched if dvEnabled(ref) =>
         val rels = touched match {
@@ -2394,7 +2397,7 @@ final class Warehouse(spark: SparkSession, val root: String,
           retireDataFiles(ref, rels.map(r => new Path(path(ref), r).toString), meta)
           claimed
         } else rewrite(rels, gone, claimed)
-    }
+    } finally graft.util.Scratch.release(pins)
   }
 
   /** THE full-table copy-on-write rewrite — a merge's fallback and the
@@ -2626,20 +2629,6 @@ final class Warehouse(spark: SparkSession, val root: String,
   def excludedByValues(ref: TableRef, column: String,
                        values: Seq[Any]): Option[Set[String]] =
     manifest.excluded(ref, Manifest.in(column, values))
-
-  /** Manifest keys provably excluded for `column IS NULL` (`isNull`) or
-    * `column IS NOT NULL`, by the per-file null counts.
-    */
-  def excludedByNull(ref: TableRef, column: String,
-                     isNull: Boolean): Option[Set[String]] =
-    manifest.excluded(ref, Manifest.isNull(column, isNull))
-
-  /** Manifest keys provably excluded for `column LIKE 'prefix%'` on a
-    * string stats column (None for other types).
-    */
-  def excludedByPrefix(ref: TableRef, column: String,
-                       prefix: String): Option[Set[String]] =
-    manifest.excluded(ref, Manifest.startsWith(column, prefix))
 
   /** Metadata-only COUNT / MIN / MAX over a snapshot's files, from the
     * stats manifest alone ([[Manifest.metadataAggregateGrouped]]).

@@ -145,15 +145,14 @@ object Dedup {
 
     // guard: cap bucket size before the quadratic self-join. The
     // histogram (one thin row per shared (band, bucket)) is eagerly
-    // materialized so the dropped-bucket diagnostic costs one count on
-    // already-aggregated rows, not a signature recompute.
+    // materialized, and the dropped-bucket diagnostic is observed in
+    // that same job — no signature recompute, no second action.
     val hist = graft.util.Scratch.transientCheckpoint(
-      exploded.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1)
-        .localCheckpoint())
-    graft.util.CapCounters.set("minhash.dropped_buckets",
-      hist.filter(col("n") > maxBucket).count())
+      graft.util.CapCounters.checkpointCounting("minhash.dropped_buckets",
+        exploded.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("n"))
+          .filter(col("n") > 1),
+        col("n") > maxBucket))
     val bucketCounts = hist.filter(col("n") <= maxBucket)
     val bounded = exploded.join(bucketCounts, Seq("band", "bucket"), "left_semi")
 
@@ -266,22 +265,19 @@ object Dedup {
     // nothing; re-measured r22: a checkpointed batch base cost MORE
     // per micro-batch than the saved tokenize pass)
     val batchBands = minhashBandTable(batch, idCol, textCol, k, numHashes, bands)
-    // shared-bucket histogram materialized (thin, aggregated) so the
-    // dropped-cap diagnostic costs one count, not a batch re-hash;
-    // singleton buckets filter out (a one-member bucket cannot produce
-    // a batch×kept pair) — recorded per run/per micro-batch like every
-    // recall cap (graft.util.CapCounters, last-run-wins)
-    val widths = {
-      val hist = graft.util.Scratch.transientCheckpoint(
+    // shared-bucket histogram materialized (thin, aggregated) with the
+    // dropped-cap diagnostic observed in the same job, not a batch
+    // re-hash; singleton buckets filter out (a one-member bucket cannot
+    // produce a batch×kept pair) — recorded per run/per micro-batch like
+    // every recall cap (graft.util.CapCounters, last-run-wins)
+    val widths = graft.util.Scratch.transientCheckpoint(
+      graft.util.CapCounters.checkpointCounting("minhash_against.dropped_buckets",
         batchBands.select("band", "bucket")
           .union(keptBands.select("band", "bucket"))
           .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)
-          .localCheckpoint())
-      graft.util.CapCounters.set("minhash_against.dropped_buckets",
-        hist.filter(col("n") > maxBucket).count())
-      hist.filter(col("n") <= maxBucket)
-    }
+          .filter(col("n") > 1),
+        col("n") > maxBucket))
+      .filter(col("n") <= maxBucket)
     val bb = batchBands.join(widths, Seq("band", "bucket"), "left_semi")
     val kb = keptBands.join(widths, Seq("band", "bucket"), "left_semi")
     val cands = bb.as("l").join(kb.as("r"),
@@ -329,8 +325,8 @@ object Dedup {
     // left side), and exchange reuse only dedups the shuffle write —
     // each consumer would re-run the post-shuffle min_by aggregation.
     // Measured 2× on the full near-dedup composition at sf0.1.
-    // transient: the checkpoint feeds the returned lazy plan, so only
-    // the bench drain (after the caller's action) may release it
+    // transient: the checkpoint feeds the returned lazy plan, so it
+    // lives as long as that plan
     val exact = graft.util.Scratch.transientCheckpoint(
       exactDedupAgainst(batch, kept, textCol, idCol).localCheckpoint())
     val near = minhashCandidatesAgainst(exact, kept, keptBands, idCol, textCol,
@@ -362,12 +358,15 @@ object Dedup {
     // full LSH candidate generation) must not re-execute inside every
     // iteration's join and convergence check. Both directions come from
     // ONE scan of `pairs` (a union would plan the pair query twice — a
-    // lazy quadratic join like semDedup's cluster pairs would run twice)
+    // lazy quadratic join like semDedup's cluster pairs would run twice).
+    // The edge count is observed inside the checkpoint's own job.
+    val edgeCount = org.apache.spark.sql.Observation()
     val edgesRaw = pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select("e.*")
+      .observe(edgeCount, count(lit(1)).as("n"))
       .localCheckpoint()
     // Small-graph fast path: below `smallGraphEdges` undirected edges
     // (a BOUNDED driver collect — ≤ ~3 MB of long pairs) the iterative
@@ -378,7 +377,7 @@ object Dedup {
     // path on random graphs). Long ids only — other key types keep the
     // type-generic distributed path; pass smallGraphEdges = 0 to force
     // it. Production crawls exceed the cap and never come here.
-    val nEdges = edgesRaw.count()
+    val nEdges = edgeCount.get("n").asInstanceOf[Long]
     val longIds = edgesRaw.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (longIds && nEdges <= 2 * smallGraphEdges) {
@@ -451,7 +450,7 @@ object Dedup {
       i += 1
     }
     // edges are consumed; the FINAL label snapshot feeds the returned
-    // lazy plan, so only the bench drain may release it
+    // lazy plan, so it lives as long as that plan
     graft.util.Scratch.release(edges)
     graft.util.Scratch.transientCheckpoint(labelsCp)
     // pointer jumping converges in O(log diameter) so this should never
@@ -558,26 +557,24 @@ object Dedup {
                        maxPostings: Int = 1000): DataFrame = {
     import graft.util.PhaseTimer.time
     val spread = spreadThin(df, idCol, textCol)
+    // sh, hist and pairs are consumed by the eager verify checkpoint
+    // below, which this call releases them after
     val sh = time("containment.shingles") {
-      graft.util.Scratch.transientCheckpoint(
-        spread.select(col(idCol).as("id"),
+      spread.select(col(idCol).as("id"),
           transform(
             Shingles.shingles(TextFunctions.tokens(col(textCol)), k),
             s => xxhash64(s)).as("sh"))
-          .localCheckpoint())
+        .localCheckpoint()
     }
     val postings = sh.select(col("id"), explode(col("sh")).as("g"))
     // posting-list histogram with singletons dropped (useless both as
     // candidates and as cap diagnostics) — thin (g, n), one row per
     // shared shingle
     val hist = time("containment.postings") {
-      val h = graft.util.Scratch.transientCheckpoint(
+      graft.util.CapCounters.checkpointCounting("containment.dropped_shingles",
         postings.groupBy("g").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)
-          .localCheckpoint())
-      graft.util.CapCounters.set("containment.dropped_shingles",
-        h.filter(col("n") > maxPostings).count())
-      h
+          .filter(col("n") > 1),
+        col("n") > maxPostings)
     }
     // SIZE-BOUND pre-filter (guide §3.2 shape — drop provably
     // non-matching pairs before anything expensive): containment
@@ -596,7 +593,7 @@ object Dedup {
         hist.filter(col("n") <= maxPostings).select("g"), Seq("g"), "left_semi")
       .join(sizes, Seq("id"))
     val pairs = time("containment.pairs") {
-      graft.util.Scratch.transientCheckpoint(graft.util.StagePlans.dump(
+      graft.util.StagePlans.dump(
         "containment.pairs (size-bound prefilter inside the self-join)",
         bounded.as("l")
           .join(bounded.as("r"),
@@ -608,7 +605,7 @@ object Dedup {
                 >= threshold))
           .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
           .distinct())
-        .localCheckpoint())
+        .localCheckpoint()
     }
     val plausible = pairs
     // exact verify, materialized under its own phase: the candidate
@@ -620,7 +617,7 @@ object Dedup {
     // streams through the intersect expression without storing.
     // Attribution inside the phase comes from the per-query A/B
     // recorded in BASELINE.md, not from a barrier.
-    time("containment.verify") {
+    try time("containment.verify") {
       graft.util.Scratch.transientCheckpoint(graft.util.StagePlans.dump(
         "containment.verify (size-bound prefilter + array join)",
         plausible
@@ -631,7 +628,7 @@ object Dedup {
           .filter(col("containment") >= threshold)
           .select("id_a", "id_b", "containment"))
         .localCheckpoint())
-    }
+    } finally graft.util.Scratch.release((sh, hist, pairs))
   }
 
   // -------------------------------------------------------------- simhash
@@ -701,17 +698,16 @@ object Dedup {
         shiftrightunsigned(col("sig"), i * width).bitwiseAND(lit((1L << width) - 1))
       }: _*)).as(Seq("chunk_ix", "chunk_val")))
     // tiny frame (surviving (chunk_ix, chunk_val) keys only) — eager so
-    // the bucket-count phase is timed apart from the pair join, and so
-    // the dropped-cap diagnostic costs one count on aggregated rows
+    // the bucket-count phase is timed apart from the pair join; the
+    // dropped-cap diagnostic is observed in the same job
     val bucketCounts = time("simhash.buckets") {
-      val hist = graft.util.Scratch.transientCheckpoint(
-        chunked.groupBy("chunk_ix", "chunk_val")
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)
-          .localCheckpoint())
-      graft.util.CapCounters.set("simhash.dropped_buckets",
-        hist.filter(col("n") > maxBucket).count())
-      hist.filter(col("n") <= maxBucket)
+      graft.util.Scratch.transientCheckpoint(
+        graft.util.CapCounters.checkpointCounting("simhash.dropped_buckets",
+          chunked.groupBy("chunk_ix", "chunk_val")
+            .agg(count(lit(1)).as("n"))
+            .filter(col("n") > 1),
+          col("n") > maxBucket))
+        .filter(col("n") <= maxBucket)
     }
     val bounded = chunked.join(bucketCounts, Seq("chunk_ix", "chunk_val"), "left_semi")
     bounded.as("l")

@@ -182,17 +182,18 @@ object MultimodalQueries {
     // the full corpus, mapPartitions-justified) — without the phase the
     // bench artifact reads its warm seconds as unexplained drift. The
     // checkpoint is thin (id pairs) and dupGroups re-reads it instead
-    // of re-planning the decode.
+    // of re-planning the decode; dupGroups consumes it eagerly, so it
+    // is released once the groups are resolved.
     val pairs = graft.util.PhaseTimer.time("mmdedup.hash") {
-      graft.util.Scratch.transientCheckpoint(
-        Multimodal.imageDupPairs(Multimodal.dhashImages(media))
-          .unionByName(Multimodal.audioDupPairs(Multimodal.ahashAudio(media)))
-          .filter($"id_b" % 10000000L === $"id_a" % 10000000L)
-          .localCheckpoint())
+      Multimodal.imageDupPairs(Multimodal.dhashImages(media))
+        .unionByName(Multimodal.audioDupPairs(Multimodal.ahashAudio(media)))
+        .filter($"id_b" % 10000000L === $"id_a" % 10000000L)
+        .localCheckpoint()
     }
     // families are direct cliques: 4 propagation rounds cover 16-hop
     // chains, far beyond the 3-member diameter here
-    val groups = Dedup.dupGroups(pairs, maxIters = 4)
+    val groups = try Dedup.dupGroups(pairs, maxIters = 4)
+      finally graft.util.Scratch.release(pairs)
     Dedup.keepBest(mat.select($"media_id", $"kind"), "media_id", groups,
         $"media_id")
       .select($"media_id", $"kind")

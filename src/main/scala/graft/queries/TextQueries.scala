@@ -679,12 +679,11 @@ object TextQueries {
     // `curate.score` (per-row langid/quality/repetition + gates) is
     // the PII-redact projection and result emit. Values are
     // unchanged; the checkpoints are barriers, not transforms.
+    // consumed by the eager scoring checkpoint, which releases it
     val deduped = graft.util.PhaseTimer.time("curate.dedup") {
-      graft.util.Scratch.transientCheckpoint(
-        graft.dedup.Dedup.exactDedup(docs, "text", "doc_id")
-          .localCheckpoint())
+      graft.dedup.Dedup.exactDedup(docs, "text", "doc_id").localCheckpoint()
     }
-    val kept = graft.util.PhaseTimer.time("curate.score") {
+    val kept = try graft.util.PhaseTimer.time("curate.score") {
       // tokenize ONCE into a column and score over the attribute: the
       // HOF-based scores evaluate interpreted, so inline `tokens(text)`
       // arguments re-run the regex split per reference (langId alone
@@ -706,7 +705,7 @@ object TextQueries {
           .withColumn("top_token_frac", TextFunctions.topTokenFracOf($"__toks"))
           .drop("__toks"))
         .localCheckpoint())
-    }
+    } finally graft.util.Scratch.release(deduped)
     kept.filter($"lang_pred" === "en" && $"quality" >= 0.9 &&
         $"dup_token_frac" <= 0.6 && $"top_token_frac" <= 0.12)
       .select($"doc_id", $"quality", $"n_tokens",

@@ -301,18 +301,17 @@ object Similarity {
                          planes: Int, bands: Int, dim: Int,
                          maxBucket: Int): DataFrame = {
     val keyed = signBandTable(df, idCol, vecCol, planes, bands, dim)
-    // shared-bucket histogram materialized (thin, aggregated) so the
-    // dropped-cap diagnostic below costs one count, not a re-hash of
+    // shared-bucket histogram materialized (thin, aggregated) with the
+    // dropped-cap diagnostic observed in the same job, not a re-hash of
     // every vector; recorded per run like every recall cap
     // (graft.util.CapCounters — the all-zero-embedding degenerate
     // bucket is exactly the silent drop a caller must be able to see)
     val hist = graft.util.Scratch.transientCheckpoint(
-      keyed.groupBy("band", "bits")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1)
-        .localCheckpoint())
-    graft.util.CapCounters.set("embed_lsh.dropped_buckets",
-      hist.filter(col("n") > maxBucket).count())
+      graft.util.CapCounters.checkpointCounting("embed_lsh.dropped_buckets",
+        keyed.groupBy("band", "bits")
+          .agg(count(lit(1)).as("n"))
+          .filter(col("n") > 1),
+        col("n") > maxBucket))
     val bucketCounts = hist.filter(col("n") <= maxBucket)
     val bounded = keyed.join(bucketCounts, Seq("band", "bits"), "left_semi")
     bounded.as("l").join(bounded.as("r"),
@@ -360,17 +359,14 @@ object Similarity {
     val batchBands = signBandTable(batch, idCol, vecCol, planes, bands, dim)
     // same materialized-histogram + dropped-cap pattern as the batch
     // path (singleton buckets cannot produce a batch×kept pair)
-    val widths = {
-      val hist = graft.util.Scratch.transientCheckpoint(
+    val widths = graft.util.Scratch.transientCheckpoint(
+      graft.util.CapCounters.checkpointCounting("embed_lsh_against.dropped_buckets",
         batchBands.select("band", "bits")
           .union(keptBands.select("band", "bits"))
           .groupBy("band", "bits").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)
-          .localCheckpoint())
-      graft.util.CapCounters.set("embed_lsh_against.dropped_buckets",
-        hist.filter(col("n") > maxBucket).count())
-      hist.filter(col("n") <= maxBucket)
-    }
+          .filter(col("n") > 1),
+        col("n") > maxBucket))
+      .filter(col("n") <= maxBucket)
     val bb = batchBands.join(widths, Seq("band", "bits"), "left_semi")
     val kb = keptBands.join(widths, Seq("band", "bits"), "left_semi")
     val cands = bb.as("l").join(kb.as("r"),

@@ -86,9 +86,9 @@ object Decontaminate {
     val cpost = docs.select(col(docId).as("doc_id"),
       explode(array_distinct(grams(col(docText), n))).as("gram"))
     val hist = graft.util.Scratch.transientCheckpoint(
-      cpost.groupBy("gram").agg(count(lit(1)).as("__n")).localCheckpoint())
-    graft.util.CapCounters.set("decontam.dropped_grams",
-      hist.filter(col("__n") > maxPostings).count())
+      graft.util.CapCounters.checkpointCounting("decontam.dropped_grams",
+        cpost.groupBy("gram").agg(count(lit(1)).as("__n")),
+        col("__n") > maxPostings))
     val epost = prompts.select(col(promptId).as("eval_id"),
         array_distinct(grams(col(promptText), n)).as("__es"))
       .withColumn("__esize", size(col("__es")))

@@ -110,9 +110,10 @@ object NgramLm {
         sum(col("__unats")).as("logprob_unats"))
       .select(col("__doc").as(idCol), col("n_bigrams"), col("logprob_unats"))
 
-  /** One-shot convenience: train + score. The transient model is
-    * registered for bench-drain release; callers that reuse a model
-    * across queries (or across micro-batches) should hold
+  /** One-shot convenience: train + score. The transient model lives as
+    * long as the returned plan (Spark reclaims it once the plan is
+    * dropped; the bench drain releases it eagerly). Callers that reuse
+    * a model across queries (or across micro-batches) should hold
     * [[train]]'s result themselves — typically under a
     * `Scratch.once` memo so eviction stays use-counted.
     */

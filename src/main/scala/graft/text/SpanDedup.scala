@@ -73,7 +73,7 @@ object SpanDedup {
     require(minDocs >= 2, s"minDocs below 2 flags within-doc repeats: $minDocs")
     // one materialization feeds the dup-gram aggregate AND the
     // position join — the corpus explodes exactly once; transient: the
-    // returned lazy plan reads it, so the bench drain releases it
+    // returned lazy plan reads it, so it lives as long as that plan
     val grams = graft.util.Scratch.transientCheckpoint(
       positionalGrams(docs, idCol, textCol, n).localCheckpoint())
     val dupGrams = grams.select("__doc", "__h").distinct()

@@ -1,5 +1,8 @@
 package graft.util
 
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, when}
+
 /** Per-JVM observability counters for recall-affecting caps.
   *
   * Every banded/bucketed candidate generator in this engine bounds its
@@ -14,10 +17,12 @@ package graft.util
   * [[snapshot]] after a run (or watch the log) before trusting the
   * output as "deduplicated".
   *
-  * Driver-side only (the counts come from driver-executed aggregate
-  * actions on already-thin histogram frames); thread-safe; `set`
-  * overwrites so concurrent pipelines should read promptly or scope a
-  * JVM per run, like [[PhaseTimer]].
+  * The counts cost no job of their own: [[checkpointCounting]]
+  * materializes an operator's cap histogram and counts the keys over
+  * the cap in the same job, as a `Dataset.observe` metric, and the
+  * driver records the observed value. Thread-safe; `set` overwrites so
+  * concurrent pipelines should read promptly or scope a JVM per run,
+  * like [[PhaseTimer]].
   */
 object CapCounters {
   private val buf = scala.collection.concurrent.TrieMap[String, Long]()
@@ -32,6 +37,19 @@ object CapCounters {
       log.warn(
         s"cap $name dropped $dropped keys this run - recall is bounded; " +
           "inspect the operator's histogram before trusting dedup output")
+  }
+
+  /** `localCheckpoint` a cap histogram and [[set]] `name` to the number
+    * of its rows where `over` holds, observed inside the checkpoint's
+    * own job rather than by a second count action. The observation
+    * completes when the eager checkpoint's job does, empty input
+    * included (a count over no rows is 0).
+    */
+  def checkpointCounting(name: String, hist: DataFrame, over: Column): DataFrame = {
+    val obs = Observation()
+    val cp = hist.observe(obs, count(when(over, 1)).as("over")).localCheckpoint()
+    set(name, obs.get("over").asInstanceOf[Long])
+    cp
   }
 
   def get(name: String): Option[Long] = buf.get(name)

@@ -1,9 +1,10 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Per-JVM memoized gate fixtures.
+/** Per-JVM memoized gate fixtures, and who releases a scratch frame.
   *
   * Gate queries are self-contained: each builds its own input fixture
   * (raw files in a scratch dir, a seeded warehouse, a synthesized media
@@ -39,6 +40,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * by N gate queries declares `uses = N` and survives exactly until
   * its last consumer has run. Verify and the specs never drain, so
   * they see the old build-once-per-JVM behavior unchanged.
+  *
+  * SCRATCH FRAMES (an operator's own `localCheckpoint`s, not fixtures)
+  * have one of two owners, and nothing here holds one for the life of
+  * the JVM. A frame consumed entirely inside the call is released by
+  * the call, in a `finally` ([[release]]). A frame the call's RETURNED
+  * lazy plan still reads belongs to the caller's plan: Spark's
+  * ContextCleaner unpersists it once the caller drops that plan and a
+  * collection has run. [[transientCheckpoint]] marks such a frame
+  * weakly so the bench can release it between gate queries.
   */
 object Scratch {
 
@@ -46,13 +56,14 @@ object Scratch {
 
   private val memo = scala.collection.concurrent.TrieMap[String, Entry]()
   private val touched = scala.collection.concurrent.TrieMap[String, Unit]()
-  // Strong refs on purpose: the block-manager storage of a
-  // localCheckpointed frame is pinned by SparkContext.persistentRdds,
-  // not by the Dataset object, so a weak ref could be GC-cleared while
-  // the blocks live on. The queue is emptied at every drain, so it
-  // holds at most one query slot's worth of frames.
-  private val transients =
-    new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+  // Weak on purpose: Spark's ContextCleaner unpersists a checkpoint's
+  // blocks once its RDD is unreachable (SparkContext.persistentRdds is
+  // weak-valued), so these references never extend a frame's life; they
+  // only let the bench release the still-reachable ones eagerly at a
+  // drain. Cleared references leave the set at the next registration.
+  private val scratchRdds = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[java.lang.ref.WeakReference[RDD[_]]]()
+  private val collected = new java.lang.ref.ReferenceQueue[RDD[_]]()
 
   /** Build-once fixture: `build` runs on the first call per
     * (session, dir, key), timed under phase `key`; later calls return
@@ -103,21 +114,23 @@ object Scratch {
     }
   }
 
-  /** Register a per-invocation materialized frame (or any structure of
-    * them) for release at the NEXT bench drain. Operators that
-    * localCheckpoint an intermediate feeding their RETURNED lazy plan
-    * cannot release it themselves — the consumer hasn't run yet — but
-    * the frame is dead once the caller's action completes. Without
-    * registration each invocation leaks resident RDD blocks for the
-    * rest of the JVM: across a 100+-query bench the accumulation
-    * starved late-alphabet queries' execution memory (BENCH_r10's
-    * q_stream_lm warm pass ran 6× its cold — round-10 verdict, What's
-    * wrong #1-2). Verify and the specs never drain, so there the
-    * registration is a bounded no-op (one invocation per query per
-    * JVM). Returns its argument for expression-position use.
+  /** Mark a per-invocation materialized frame (or any structure of
+    * them) that an operator's RETURNED lazy plan still reads. The
+    * operator cannot release it itself (the consumer has not run yet),
+    * and it needs no owner: once the caller drops the returned plan the
+    * checkpoint's RDD becomes unreachable and Spark's ContextCleaner
+    * unpersists its blocks. The mark is a weak reference that keeps
+    * nothing alive; it only lets the bench's [[drainTouched]] release
+    * the frames still reachable between gate queries, so a late gate
+    * never runs under storage an earlier one left to the collector.
+    * Frames an operator consumes entirely inside the call are not
+    * marked: their owner passes them to [[release]] in a `finally`.
+    * Returns its argument for expression-position use.
     */
   def transientCheckpoint[T](v: T): T = {
-    transients.add(v)
+    var gone = collected.poll()
+    while (gone != null) { scratchRdds.remove(gone); gone = collected.poll() }
+    checkpointRdds(v).foreach(r => scratchRdds.add(new java.lang.ref.WeakReference(r, collected)))
     v
   }
 
@@ -140,46 +153,49 @@ object Scratch {
       }
     }
     touched.clear()
-    drainTransients()
+    releaseMarked()
   }
 
   /** Evict everything regardless of remaining uses (end-of-bench). */
   def drainAll(): Unit = {
     memo.keySet.foreach(k => memo.remove(k).foreach(e => free(e.value)))
     touched.clear()
-    drainTransients()
+    releaseMarked()
   }
 
-  private def drainTransients(): Unit = {
-    var v = transients.poll()
-    while (v != null) {
-      free(v)
-      v = transients.poll()
+  private def releaseMarked(): Unit =
+    scratchRdds.removeIf { ref =>
+      Option(ref.get).foreach(_.unpersist(blocking = false))
+      true
     }
-  }
 
-  /** Release block-manager storage reachable from a value (public: any
-    * operator that materializes a transient frame via localCheckpoint —
-    * e.g. the checker's scorecard aggregate — must release it the same
-    * way the memo does, or each invocation leaks checkpointed RDD
-    * blocks for the rest of the JVM). `Dataset.unpersist` only drops
-    * CacheManager entries; a localCheckpointed frame's data lives as
-    * RDD blocks referenced by the plan's LogicalRDD leaf, so unpersist
-    * THAT rdd directly. Non-blocking: the caller overlaps the release
-    * with its next work.
+  /** Release block-manager storage reachable from a value. The owner of
+    * a frame it materializes and consumes inside one call (an operator's
+    * intermediate, the mutation router's pin) calls this in a `finally`
+    * once the consumer has run; the memo evicts through it too.
+    * `Dataset.unpersist` only drops CacheManager entries; a
+    * localCheckpointed frame's data lives as RDD blocks referenced by
+    * the plan's LogicalRDD leaf, so unpersist THAT rdd directly.
+    * Non-blocking: the caller overlaps the release with its next work.
     */
   def release(v: Any): Unit = free(v)
 
-  private def free(v: Any): Unit = v match {
-    case ds: Dataset[_] =>
-      ds.queryExecution.analyzed.foreach {
-        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-        case _              => ()
-      }
-      ds.unpersist()
-    case p: Product     => p.productIterator.foreach(free)
-    case i: Iterable[_] => i.foreach(free)
-    case a: Array[_]    => a.foreach(free)
-    case _              => ()
+  private def free(v: Any): Unit = {
+    checkpointRdds(v).foreach(_.unpersist(blocking = false))
+    datasets(v).foreach(_.unpersist())
+  }
+
+  /** The RDDs behind the LogicalRDD leaves of every Dataset reachable
+    * through Product/Iterable/Array nesting of a value.
+    */
+  private def checkpointRdds(v: Any): Seq[RDD[_]] =
+    datasets(v).flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd })
+
+  private def datasets(v: Any): Seq[Dataset[_]] = v match {
+    case ds: Dataset[_] => Seq(ds)
+    case p: Product     => p.productIterator.flatMap(datasets).toSeq
+    case i: Iterable[_] => i.flatMap(datasets).toSeq
+    case a: Array[_]    => a.toSeq.flatMap(datasets)
+    case _              => Nil
   }
 }
