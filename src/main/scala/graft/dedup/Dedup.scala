@@ -557,8 +557,8 @@ object Dedup {
                        maxPostings: Int = 1000): DataFrame = {
     import graft.util.PhaseTimer.time
     val spread = spreadThin(df, idCol, textCol)
-    // sh, hist and pairs are consumed by the eager verify checkpoint
-    // below, which this call releases them after
+    // sh, hist and pairs are dead once the eager verify checkpoint
+    // below has materialized; this call releases them then
     val sh = time("containment.shingles") {
       spread.select(col(idCol).as("id"),
           transform(

@@ -679,7 +679,7 @@ object TextQueries {
     // `curate.score` (per-row langid/quality/repetition + gates) is
     // the PII-redact projection and result emit. Values are
     // unchanged; the checkpoints are barriers, not transforms.
-    // consumed by the eager scoring checkpoint, which releases it
+    // dead once the eager scoring checkpoint has materialized; released then
     val deduped = graft.util.PhaseTimer.time("curate.dedup") {
       graft.dedup.Dedup.exactDedup(docs, "text", "doc_id").localCheckpoint()
     }

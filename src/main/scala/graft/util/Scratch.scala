@@ -148,7 +148,7 @@ object Scratch {
         e.remainingUses -= 1
         if (e.remainingUses <= 0) {
           memo.remove(k)
-          free(e.value)
+          release(e.value)
         }
       }
     }
@@ -158,7 +158,7 @@ object Scratch {
 
   /** Evict everything regardless of remaining uses (end-of-bench). */
   def drainAll(): Unit = {
-    memo.keySet.foreach(k => memo.remove(k).foreach(e => free(e.value)))
+    memo.keySet.foreach(k => memo.remove(k).foreach(e => release(e.value)))
     touched.clear()
     releaseMarked()
   }
@@ -178,9 +178,7 @@ object Scratch {
     * the plan's LogicalRDD leaf, so unpersist THAT rdd directly.
     * Non-blocking: the caller overlaps the release with its next work.
     */
-  def release(v: Any): Unit = free(v)
-
-  private def free(v: Any): Unit = {
+  def release(v: Any): Unit = {
     checkpointRdds(v).foreach(_.unpersist(blocking = false))
     datasets(v).foreach(_.unpersist())
   }
